@@ -64,18 +64,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb one-time JVM/codegen-infra warmup so per-query numbers
-    // measure the engine, not Janino bootstrap on whichever query
-    // happens to iterate first
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
     // A crashing query must surface as a failure, not a bogus timing: a
     // regression could otherwise read as a speedup. Failed runs report
     // -1 and are excluded from the totals; the `failed` list is the

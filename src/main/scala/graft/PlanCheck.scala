@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Harness.timed
 /** Dev tool: steady-state timing (2nd run) or --plan to dump executedPlan. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val (flags, names0) = args.partition(_.startsWith("--"))
     val plan = flags.contains("--plan") || flags.contains("--plan-exec")
     val exec = flags.contains("--plan-exec") // materialize first: AQE final plan incl. stage reuse
@@ -45,9 +41,8 @@ object PlanCheck {
         println(s"===== $n ====="); println(df.queryExecution.executedPlan.toString.take(8000))
       } else {
         fn(spark, sfDir).count(); Caching.release()
-        val t0 = System.nanoTime(); fn(spark, sfDir).count()
-        println(f"STEADY $n%-22s ${(System.nanoTime()-t0)/1e9}%8.3f s")
-        Caching.release()
+        val (_, t) = timed(fn(spark, sfDir).count())
+        println(f"STEADY $n%-22s $t%8.3f s")
       }
     }
     spark.stop()

@@ -20,12 +20,13 @@ object BasketQueries {
     // ESERCIZIO 1. Plan: scan(2 cols) → hash agg (1 shuffle) → native
     // two-phase bounded-heap top-k (1 shuffle of O(groups·k), NO sorts).
     // Adopted over the window/WindowGroupLimit formulation on measured
-    // wins at every shape (TopKBench sf0.1 steady: this exact input
-    // 1.32→0.96 s; RefScaleBench 1M lines: 1.10→0.82 s) — the window
-    // path sorts each map partition AND re-sorts after the exchange,
-    // the heap path sorts nothing. Row sets are identical (same total
-    // tie-break); the positional rank column is dropped on both sides
-    // (top-5 SET semantics, matching the reference's unranked output —
+    // wins at every shape (SURVEY.md §8 addendum — round 4, sf0.1
+    // steady: this exact input 1.32→0.96 s; RefScaleBench 1M lines:
+    // 1.10→0.82 s) — the window path sorts each map partition AND
+    // re-sorts after the exchange, the heap path sorts nothing. Row
+    // sets are identical (same total tie-break); the positional rank
+    // column is dropped on both sides (top-5 SET semantics, matching
+    // the reference's unranked output —
     // rank itself stays exercised by q_topk_native/q_window_rankings).
     "q_top5_month" -> QueryDef(
       (s, dir) => {

@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off generator for [[graft.functions.BpeMerges]]: trains a real
@@ -38,10 +37,8 @@ object FreezeBpeMerges {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val numMerges = args.lift(1).map(_.toInt).getOrElse(96)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[8]: the printed constants depend on partitioning and were frozen at 8 cores
+    val spark = graft.Harness.session(cpus = 8)
 
     // Frequency-weighted word dictionary of BPE pre-tokens. Collecting
     // here is fine: this is the offline training tool, not a data path.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off generator for [[graft.operators.IvfCentroids]]: trains the
@@ -15,10 +14,8 @@ object FreezeCentroids {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[8]: the printed constants depend on partitioning and were frozen at 8 cores
+    val spark = graft.Harness.session(cpus = 8)
     val train = graft.Tables.embeddings(spark, dir)
       .select(array_to_vector(col("embedding")).as("features"))
     val model = new KMeans().setK(16).setSeed(42L).setMaxIter(5).fit(train)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off generator for [[graft.operators.PqCodebooks]]: trains one
@@ -17,10 +16,8 @@ object FreezePqCodebooks {
     import org.apache.spark.ml.functions.array_to_vector
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val numSub = 4; val subDim = 16
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[8]: the printed constants depend on partitioning and were frozen at 8 cores
+    val spark = graft.Harness.session(cpus = 8)
     val emb = graft.Tables.embeddings(spark, dir)
     (0 until numSub).foreach { m =>
       val train = emb

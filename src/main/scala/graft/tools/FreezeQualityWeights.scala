@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,10 +30,8 @@ object FreezeQualityWeights {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val D = args.lift(1).map(_.toInt).getOrElse(256)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[8]: the printed constants depend on partitioning and were frozen at 8 cores
+    val spark = graft.Harness.session(cpus = 8)
 
     // collect (doc_id, tokens) — offline training tool, not a data path
     val docs: Array[(Long, Seq[String])] = graft.Tables.documents(spark, dir)

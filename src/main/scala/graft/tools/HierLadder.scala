@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{exponent, num, timed}
 import graft.operators.{SemDedup, Similarity}
 
 /** End-to-end scale ladder for [[SemDedup.dedupAuto]]'s HIERARCHICAL
@@ -15,13 +16,10 @@ import graft.operators.{SemDedup, Similarity}
   * reports per-phase wall so a super-linear phase is attributable, not
   * just detectable.
   *
-  * Corpus: the [[ScaleLadder]] replica-disjoint embedding construction
-  * (sign-flip diagonal orthogonal transforms — more data, same
-  * statistics) at N× of sf0.1's 2k vectors, generated embeddings-ONLY
-  * via a crossJoin against a replica range (the reduce(unionAll) shape
-  * would plan an N-branch union; at N = 1000 that is all analysis
-  * overhead for the same rows). Sign function is bit-identical to
-  * ScaleLadder's. N = 300 → 600k (k = 4688, just past the flat
+  * Corpus: the ladders' replica-disjoint embedding construction
+  * ([[embeddingReplicas]]: sign-flip diagonal orthogonal transforms —
+  * more data, same statistics) at N× of sf0.1's 2k vectors, generated
+  * embeddings-ONLY. N = 300 → 600k (k = 4688, just past the flat
   * ceiling); N = 1000 → 2M (k = 15625, mid-tier). Within-tier exponent
   * = log(steady ratio)/log(N₂/N₁).
   *
@@ -49,15 +47,7 @@ object HierLadder {
     // flat-vs-hier training comparison. Θ(k²) expected; run it on the
     // smaller points unless you have minutes to burn.
     val flatMode = args.lift(3).contains("flat")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    val spark = graft.Harness.session()
 
     if (flatMode) {
       points.foreach { n =>
@@ -69,10 +59,7 @@ object HierLadder {
         val k = SemDedup.cellsFor(cnt)
         val frac = math.min(1.0, 64.0 * k / cnt.toDouble)
         val trainDf = if (frac >= 1.0) emb else emb.sample(frac, 42L)
-        val t0 = System.nanoTime()
-        Similarity.trainCentroids(trainDf, "embedding", k, 42L)
-        val tFlat = (System.nanoTime() - t0) / 1e9
-        graft.Caching.release()
+        val (_, tFlat) = timed(Similarity.trainCentroids(trainDf, "embedding", k, 42L))
         println(s"""{"point":"${n}x","n_vec":$cnt,"k":$k,"t_train_flat":${num(tFlat)}}""")
       }
       spark.stop()
@@ -109,17 +96,10 @@ object HierLadder {
         val srpShape = routed.schema("cell").dataType ==
           org.apache.spark.sql.types.IntegerType &&
           routed.queryExecution.analyzed.toString.contains("srp_code")
-        val t0 = System.nanoTime()
-        val keptN = routed.count()
-        val tE2e = (System.nanoTime() - t0) / 1e9
-        graft.Caching.release()
+        val (keptN, tE2e) = timed(routed.count())
         if (dispatchSteady) {
-          def run(): Double = {
-            val t = System.nanoTime()
-            SemDedup.dedupAuto(emb, "vec_id", "embedding", threshold = 0.4).count()
-            val s = (System.nanoTime() - t) / 1e9
-            graft.Caching.release(); s
-          }
+          def run(): Double =
+            timed(SemDedup.dedupAuto(emb, "vec_id", "embedding", threshold = 0.4).count())._2
           val steady = math.min(run(), run())
           println(s"""{"point":"${n}x","n_vec":$cnt,"k_wanted":$k,"srp_tier_engaged":$srpShape,"cold_s":${num(tE2e)},"steady_s":${num(steady)},"kept":$keptN}""")
         } else {
@@ -143,19 +123,8 @@ object HierLadder {
       generateEmbeddings(spark, base, dir, n)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select("vec_id", "embedding")
-
-      def timed[A](body: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      def e2e(): Double = {
-        val (_, t) = timed {
-          SemDedup.dedupAuto(emb, "vec_id", "embedding", threshold = 0.4).count()
-        }
-        graft.Caching.release()
-        t
-      }
+      def e2e(): Double =
+        timed(SemDedup.dedupAuto(emb, "vec_id", "embedding", threshold = 0.4).count())._2
 
       // ---- phase attribution (one pass, cold-ish): replays dedupAuto's
       // big-k stages with the same inputs so a regression names its phase
@@ -164,17 +133,13 @@ object HierLadder {
       val frac = math.min(1.0, 64.0 * k / cnt.toDouble)
       val trainDf = if (frac >= 1.0) emb else emb.sample(frac, 42L)
       val (cents, tTrain) = timed {
-        val c =
-          if (k > SemDedup.FlatAssignCeiling)
-            Similarity.trainCentroidsHier(trainDf, "embedding", k, 42L)
-          else Similarity.trainCentroids(trainDf, "embedding", k, 42L)
-        graft.Caching.release() // training's own tracked persists
-        c
+        if (k > SemDedup.FlatAssignCeiling)
+          Similarity.trainCentroidsHier(trainDf, "embedding", k, 42L)
+        else Similarity.trainCentroids(trainDf, "embedding", k, 42L)
       }
       val (_, tDedup) = timed {
         SemDedup.dedupHier(emb, "vec_id", "embedding", 0.4, cents).count()
       }
-      graft.Caching.release()
 
       // ---- end-to-end protocol: cold + min-of-2 steady (training runs
       // in-path every time — that IS the ingest cost being laddered)
@@ -204,47 +169,52 @@ object HierLadder {
     rows.sliding(2).foreach {
       case Seq((n1, _, _, _, s1, t1, d1, _), (n2, _, _, _, s2, t2, d2, _)) =>
         val f = n2.toDouble / n1
-        def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
         println(s"within-tier ${n1}x -> ${n2}x (factor ${num(f)}): " +
-          s"e2e exponent ${expo(s1, s2)}, train ${expo(t1, t2)}, assign+dedup ${expo(d1, d2)}")
+          s"e2e exponent ${num(exponent(s2 / s1, f))}, train ${num(exponent(t2 / t1, f))}, " +
+          s"assign+dedup ${num(exponent(d2 / d1, f))}")
       case _ => ()
     }
     spark.stop()
   }
 
-  /** N× embeddings via ONE crossJoin against a replica range — row-wise
-    * identical to [[ScaleLadder.generate]]'s union-of-replicas
-    * construction (same sign function, same id offsets), but the plan
-    * is a single narrow join instead of an N-branch union. Replica r
-    * applies a deterministic ±1 per dimension (diagonal orthogonal
-    * transform): within-replica cosines/norms exactly preserved,
-    * cross-replica structure decorrelated. Idempotent per (base, N). */
+  /** N× embeddings under `out`, idempotent per (base, N). The replica
+    * id offsets reach r·10⁸ + 2000 and the planted-dup probe in main()
+    * offsets by 10¹², so n beyond 9999 would collide replica ids with
+    * planted ids and corrupt the recall metric. */
   def generateEmbeddings(spark: SparkSession, base: String, out: String, n: Int): Unit = {
-    // r12 review: two bounds, both LOUD. (a) the sign-hash product
-    // (r·1000003 + i)·2654435761 overflows Long at r = 3475 (ANSI
-    // arithmetic would throw mid-generation; ScaleLadder's driver-side
-    // copy would silently wrap and diverge) — replicas PAST that bound
-    // (r14: the >65536-cell dispatch rung needs 4200×) switch to an
-    // xxhash64 sign, equally deterministic, so r ≤ 3474 replicas stay
-    // bit-identical to every prior ladder dir and ScaleLadder. (b)
-    // replica id offsets reach r·10⁸ + 2000, and the planted-dup probe
-    // in main() offsets by 10¹² — n beyond 9999 would collide replica
-    // ids with planted ids and corrupt the recall metric.
     require(n >= 1 && n <= 9999,
       s"replication factor must be in [1, 9999] (planted-id offset bound), got $n")
     val done = new java.io.File(s"$out/_EMB_OK")
     val stamp = s"$base|$n"
     if (done.exists() &&
         new String(java.nio.file.Files.readAllBytes(done.toPath)) == stamp) return
+    embeddingReplicas(spark.read.parquet(s"$base/embeddings.parquet"), n)
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    done.getParentFile.mkdirs()
+    java.nio.file.Files.write(done.toPath, stamp.getBytes)
+    ()
+  }
+
+  /** The ladders' one N× embedding construction: replica r of `emb`
+    * (other columns kept as they are) shifts vec_id by r·10⁸ and applies a deterministic ±1 per
+    * dimension (a diagonal orthogonal transform): within-replica
+    * cosines/norms exactly preserved, cross-replica structure
+    * decorrelated; replica 0 is the original. ONE crossJoin against a
+    * replica range, so the plan is a single narrow join instead of an
+    * N-branch union. */
+  def embeddingReplicas(emb: DataFrame, n: Int): DataFrame = {
     val off = 100000000L
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
-    val reps = spark.range(0, n.toLong).select(col("id").cast("int").as("_r"))
-    // sign(r, i) = +1 if bit 16 of (r·1000003 + i)·2654435761 is 0 —
-    // ScaleLadder's exact function; products stay < 2^63 for r ≤ 3474,
-    // and bigger replicas take the xxhash64 branch (ANSI-safe)
+    val reps = emb.sparkSession.range(0, n.toLong).select(col("id").cast("int").as("_r"))
+    // sign(r, i) = +1 if bit 16 of (r·1000003 + i)·2654435761 is 0. The
+    // product overflows Long at r = 3475 (ANSI arithmetic would throw
+    // mid-generation), so replicas past r = 3474 (the >65536-cell
+    // dispatch rung needs 4200×) take an xxhash64 sign instead, equally
+    // deterministic; r ≤ 3474 replicas stay bit-identical to every
+    // prior ladder dir
     emb.crossJoin(reps)
-      .select(
-        (col("vec_id") + col("_r").cast("long") * lit(off)).as("vec_id"),
+      .withColumn("vec_id", col("vec_id") + col("_r").cast("long") * lit(off))
+      .withColumn("embedding",
         when(col("_r") === 0, col("embedding")) // replica 0 = the original, untouched
           .otherwise(zip_with(col("embedding"),
             sequence(lit(0), lit(63)), // driver embeddings are 64-dim (TESTDATA.md)
@@ -254,11 +224,7 @@ object HierLadder {
               val hashSign = xxhash64(col("_r"), i).bitwiseAND(lit(1L)) === 0L
               when(when(col("_r") <= 3474, legacySign).otherwise(hashSign), x)
                 .otherwise(-x)
-            })).as("embedding"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    done.getParentFile.mkdirs()
-    java.nio.file.Files.write(done.toPath, stamp.getBytes)
-    ()
+            })))
+      .drop("_r")
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{exponentLines, num, timed}
 import graft.operators.{SemDedup, Similarity}
 
 /** Measures the semantic tier's INGEST claim ([[SemDedup.dedupIngest]]
@@ -108,20 +108,7 @@ object IngestLadder {
         else if (streamMode) "3,30" else "30,100,200")
       .split(",").toSeq.map(_.trim.toInt)
     val localMode = args.lift(3).contains("local")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    def timed(body: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val r = try body finally graft.Caching.release()
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = graft.Harness.session()
 
     if (streamMode) {
       import spark.implicits._
@@ -278,14 +265,7 @@ object IngestLadder {
         rmStore()
         (n, perRound.map(_._2).max, tVacuum)
       }
-      rows.sliding(2).foreach {
-        case Seq((n1, s1, v1), (n2, s2, v2)) =>
-          val f = n2.toDouble / n1
-          def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
-          println(s"${n1}x -> ${n2}x (factor ${num(f)}): tombed-count exponent " +
-            s"${expo(s1, s2)}, vacuum exponent ${expo(v1, v2)}")
-        case _ => ()
-      }
+      exponentLines(rows, "tombed-count", "vacuum").foreach(println)
       spark.stop()
       return
     }
@@ -324,14 +304,7 @@ object IngestLadder {
         println(s"""{"point":"${n}x","mode":"rebuild","n_standing":$nVec,"planes_old":${mOld.planes},"planes_new":${Similarity.srpPlanesFor(nVec, 128)},"t_rebuild_s":${num(tRebuild)},"t_full_rededup_s":${num(tFull)},"index_rows":$idxRows,"full_pairs":$fullPairs}""")
         (n, tRebuild, tFull)
       }
-      rows.sliding(2).foreach {
-        case Seq((n1, i1, f1), (n2, i2, f2)) =>
-          val f = n2.toDouble / n1
-          def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
-          println(s"${n1}x -> ${n2}x (factor ${num(f)}): rebuild exponent " +
-            s"${expo(i1, i2)}, full-rededup exponent ${expo(f1, f2)}")
-        case _ => ()
-      }
+      exponentLines(rows, "rebuild", "full-rededup").foreach(println)
       spark.stop()
       return
     }
@@ -380,14 +353,7 @@ object IngestLadder {
         println(s"""{"point":"${n}x","mode":"srp","n_standing":$nVec,"planes":$planes,"n_batch":$nBatch,"t_ingest_s":${num(tIngest)},"t_full_neardup_s":${num(tFull)},"ingest_pairs":$pairsN,"full_pairs":$fullPairs}""")
         (n, tIngest, tFull)
       }
-      rows.sliding(2).foreach {
-        case Seq((n1, i1, f1), (n2, i2, f2)) =>
-          val f = n2.toDouble / n1
-          def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
-          println(s"${n1}x -> ${n2}x (factor ${num(f)}): srp ingest exponent " +
-            s"${expo(i1, i2)}, full-neardup exponent ${expo(f1, f2)}")
-        case _ => ()
-      }
+      exponentLines(rows, "srp ingest", "full-neardup").foreach(println)
       spark.stop()
       return
     }
@@ -449,14 +415,7 @@ object IngestLadder {
       println(s"""{"point":"${n}x","mode":"$mode","n_standing":$nVec,"k":$k,"n_batch":$nBatch,"t_ingest_s":${num(tIngest)},"t_full_rededup_s":${num(tFull)},"full_kept":$fullKept}""")
       (n, tIngest, tFull)
     }
-    rows.sliding(2).foreach {
-      case Seq((n1, i1, f1), (n2, i2, f2)) =>
-        val f = n2.toDouble / n1
-        def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
-        println(s"${n1}x -> ${n2}x (factor ${num(f)}): ingest exponent " +
-          s"${expo(i1, i2)}, full-rededup exponent ${expo(f1, f2)}")
-      case _ => ()
-    }
+    exponentLines(rows, "ingest", "full-rededup").foreach(println)
     spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness.{exponentLines, num, timed}
 import graft.operators.Dedup
 
 /** Measures the deletion path's headline claim at ladder scale:
@@ -32,20 +32,7 @@ object RemoveLadder {
     val workRoot = args.lift(1).getOrElse("/tmp")
     val points = args.lift(2).getOrElse("30,100")
       .split(",").toSeq.map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    def timed(body: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val r = try body finally graft.Caching.release()
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = graft.Harness.session()
 
     val rows = points.map { n =>
       val dir = s"$workRoot/graft_remove${n}x"
@@ -101,14 +88,7 @@ object RemoveLadder {
       println(s"""{"point":"${n}x","n_docs":$nDocs,"n_edges":$nEdges,"removed":$nRemoved,"touched_components":$nTouchedComp,"touched_members":$nTouchedMembers,"t_remove_s":${num(tRemove)},"t_scratch_cc_s":${num(tScratch)},"out_rows":$outRows}""")
       (n, tRemove, tScratch)
     }
-    rows.sliding(2).foreach {
-      case Seq((n1, r1, s1), (n2, r2, s2)) =>
-        val f = n2.toDouble / n1
-        def expo(a: Double, b: Double): String = num(math.log(b / a) / math.log(f))
-        println(s"${n1}x -> ${n2}x (factor ${num(f)}): removeDocs exponent " +
-          s"${expo(r1, r2)}, from-scratch CC exponent ${expo(s1, s2)}")
-      case _ => ()
-    }
+    exponentLines(rows, "removeDocs", "from-scratch CC").foreach(println)
     spark.stop()
   }
 }

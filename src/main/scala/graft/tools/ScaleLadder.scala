@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{exponent, num, timed}
 
 /** Scale-ladder measurement for the expensive dedup / graph / ANN
   * queries: generate an N× corpus from sf0.1 (default 10×), run each
@@ -52,13 +54,7 @@ object ScaleLadder {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_scale10x")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     // skew mode only reads documents — generating 60M lineitem rows for
     // a documents-only rung (the 300× point) would be pure waste. An
     // explicit `tables=a,b` 5th arg lets a query-list run reuse (or
@@ -74,17 +70,6 @@ object ScaleLadder {
       case None     => generate(spark, base, out, n)
     }
 
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma decimal separator would corrupt the JSON lines below
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    def time(name: String, dir: String): Double = {
-      val fn = graft.SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-      finally graft.Caching.release()
-    }
     // mode: "all" (default) = full sweep + tuned points; "tuned" = only
     // the auto-sized near-dup points; a comma-separated query list =
     // EXACTLY that subset, tuned points skipped (the untuned quadratic
@@ -98,58 +83,44 @@ object ScaleLadder {
     }
     val wantTuned = mode == "all" || mode == "tuned"
 
+    // one ladder row from the two steady times; prints its JSON line
+    def row(name: String, b: Double, s: Double, extra: String = ""): (String, Double, Double) = {
+      println(s"""{"query":"$name","base_s":${num(b)},"scaled_s":${num(s)},"ratio":${num(s / b)},"exponent":${num(exponent(s / b, n))}$extra}""")
+      (name, b, s)
+    }
+
     // mode "skew": the budget-window family under a dominant source —
     // 90% of docs (≈90% of token mass; docs are homogeneous) remapped
     // onto ONE source value, at base and N×. Measures the plain
     // per-group window (whole dominant group sorts in one task) against
     // capTokenBudgetSalted's range-bucketed decomposition — the caveat
     // SCALE.md round 12 (cont. 2) recorded as unmeasured.
-    if (mode == "skew") {
+    val skewRows = if (mode != "skew") Seq.empty else {
       def skewed(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
         .withColumn("source",
           when(pmod(col("doc_id"), lit(10)) < 9, lit("dominant"))
             .otherwise(col("source")))
         .select(col("doc_id"), col("source"), col("text"))
-      def timeOp(label: String, dir: String,
-                 op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Double = {
-        def run(): Double = {
-          val t0 = System.nanoTime()
-          try { op(skewed(dir)).count(); (System.nanoTime() - t0) / 1e9 }
-          finally graft.Caching.release()
-        }
+      def timeOp(dir: String, op: DataFrame => DataFrame): Double = {
+        def run(): Double = timed(op(skewed(dir)).count())._2
         run() // cold
         math.min(run(), run())
       }
-      val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
         "budget_plain_skew" -> (d => graft.operators.TextPipeline
           .capTokenBudget(d, "doc_id", "source", "text", 800L, "graft-v1")),
         "budget_salted_skew" -> (d => graft.operators.TextPipeline
           .capTokenBudgetSalted(d, "doc_id", "source", "text", 800L, "graft-v1", 32)))
-      val skewRows = ops.map { case (name, op) =>
-        val b = timeOp(name, base, op)
-        val s = timeOp(name, out, op)
-        val ratio = s / b
-        val expo = math.log(ratio) / math.log(n.toDouble)
-        println(s"""{"query":"$name","base_s":${num(b)},"scaled_s":${num(s)},"ratio":${num(ratio)},"exponent":${num(expo)}}""")
-        (name, b, s, ratio, expo)
-      }
-      println(s"| query | base steady (s) | ${n}x steady (s) | ratio | exponent |")
-      println("|---|---|---|---|---|")
-      skewRows.foreach { case (q, b, s, r, e) =>
-        println(s"| $q | ${num(b)} | ${num(s)} | ${num(r)} | ${num(e)} |")
-      }
-      spark.stop()
-      return
+      ops.map { case (name, op) => row(name, timeOp(base, op), timeOp(out, op)) }
     }
+    def queryTime(name: String, dir: String): Double =
+      timed(graft.SparkEntry.queries(name)(spark, dir).count())._2
     val rows = selected.map { q =>
-      val bCold = time(q, base)
-      val bSteady = math.min(time(q, base), time(q, base))
-      val sCold = time(q, out)
-      val sSteady = math.min(time(q, out), time(q, out))
-      val ratio = sSteady / bSteady
-      val expo = math.log(ratio) / math.log(n.toDouble)
-      println(s"""{"query":"$q","base_s":${num(bSteady)},"scaled_s":${num(sSteady)},"ratio":${num(ratio)},"exponent":${num(expo)},"base_cold":${num(bCold)},"scaled_cold":${num(sCold)}}""")
-      (q, bSteady, sSteady, ratio, expo)
+      val bCold = queryTime(q, base)
+      val bSteady = math.min(queryTime(q, base), queryTime(q, base))
+      val sCold = queryTime(q, out)
+      val sSteady = math.min(queryTime(q, out), queryTime(q, out))
+      row(q, bSteady, sSteady, s""","base_cold":${num(bCold)},"scaled_cold":${num(sCold)}""")
     }
     // The auto-tuned points: registered queries pin their frozen-oracle
     // operating points (q_embed_neardup planes=4, q_semdedup 16 cells) —
@@ -157,19 +128,12 @@ object ScaleLadder {
     // (r10: SRP exponent 2.28; r11: semdedup exponent 1.42). These rows
     // show the sizing rules (srpPlanesFor / cellsFor) restoring ~linear
     // cost on the SAME corpus pairs.
-    def tunedRow(name: String)(body: String => Unit): (String, Double, Double, Double, Double) = {
-      def run(dir: String): Double = {
-        val t0 = System.nanoTime()
-        try { body(dir); (System.nanoTime() - t0) / 1e9 }
-        finally graft.Caching.release()
-      }
+    def tunedRow(name: String)(body: String => Long): (String, Double, Double) = {
+      def run(dir: String): Double = timed(body(dir))._2
       run(base); run(out) // cold
       val b = math.min(run(base), run(base))
       val s = math.min(run(out), run(out))
-      val ratio = s / b
-      val expo = math.log(ratio) / math.log(n.toDouble)
-      println(s"""{"query":"$name","base_s":${num(b)},"scaled_s":${num(s)},"ratio":${num(ratio)},"exponent":${num(expo)}}""")
-      (name, b, s, ratio, expo)
+      row(name, b, s)
     }
     val tuned = if (!wantTuned) Seq.empty else Seq(
       tunedRow("q_embed_neardup_auto") { dir =>
@@ -177,19 +141,16 @@ object ScaleLadder {
           spark.read.parquet(s"$dir/embeddings.parquet"),
           "vec_id", "embedding", dim = 64, threshold = 0.4,
           tables = 16, maxBucketSize = Some(100000)).count()
-        ()
       },
       tunedRow("q_semdedup_auto") { dir =>
         graft.operators.SemDedup.dedupAuto(
           spark.read.parquet(s"$dir/embeddings.parquet"),
           "vec_id", "embedding", threshold = 0.4).count()
-        ()
       })
-    val allRows = rows ++ tuned
     println(s"| query | base steady (s) | ${n}x steady (s) | ratio | exponent |")
     println("|---|---|---|---|---|")
-    allRows.foreach { case (q, b, s, r, e) =>
-      println(s"| $q | ${num(b)} | ${num(s)} | ${num(r)} | ${num(e)} |")
+    (skewRows ++ rows ++ tuned).foreach { case (q, b, s) =>
+      println(s"| $q | ${num(b)} | ${num(s)} | ${num(s / b)} | ${num(exponent(s / b, n))} |")
     }
     spark.stop()
   }
@@ -252,25 +213,10 @@ object ScaleLadder {
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     }
 
-    if (tables.contains("embeddings")) {
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
-    (0 until n).map { r =>
-      // deterministic ±1 per (replica, dim): a diagonal orthogonal
-      // transform — norms and within-replica dot products are exactly
-      // preserved, cross-replica structure decorrelates
-      val signs = Array.tabulate(64) { i =>
-        val h = (r * 1000003L + i) * 2654435761L
-        if (((h >>> 16) & 1L) == 0L) 1.0f else -1.0f
-      }
-      val flipped =
-        if (r == 0) emb
-        else emb.withColumn("embedding",
-          zip_with(col("embedding"), typedLit(signs.toSeq), (x, s) => x * s))
-      flipped.withColumn("vec_id", col("vec_id") + lit(r * off))
-    }.reduce(_ unionAll _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    }
+    if (tables.contains("embeddings"))
+      HierLadder.embeddingReplicas(spark.read.parquet(s"$base/embeddings.parquet"), n)
+        .repartition(32)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     if (tables.contains("customer")) {
     val cust = spark.read.parquet(s"$base/customer.parquet")

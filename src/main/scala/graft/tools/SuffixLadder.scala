@@ -2,7 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+
+import graft.Harness.{num, timed}
 
 /** Measures what the PPJoin suffix filter buys at ladder scale: the
   * pre-distinct candidate row count (the stream whose distinct-exchange
@@ -23,13 +24,7 @@ object SuffixLadder {
     val out = args.lift(1).getOrElse("/tmp/graft_suffix100x")
     val n = args.lift(2).map(_.toInt).getOrElse(100)
     val mode = args.lift(3).getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     ScaleLadder.generate(spark, base, out, n, Seq("documents"))
 
     val shufWrite = new AtomicLong; val diskSpill = new AtomicLong
@@ -45,14 +40,10 @@ object SuffixLadder {
         }
       }
     })
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     def gb(b: Long): String = num(b.toDouble / (1L << 30))
     def measure(label: String)(body: => Long): Unit = {
       shufWrite.set(0); diskSpill.set(0); memSpill.set(0)
-      val t0 = System.nanoTime()
-      val rows = try body finally graft.Caching.release()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (rows, secs) = timed(body)
       // listener events drain async (listenerBus is private[spark]) —
       // a short settle keeps the byte counters honest; task-end events
       // for a completed job land within milliseconds on local mode

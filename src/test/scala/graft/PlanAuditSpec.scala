@@ -17,8 +17,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_top5_month: native two-phase heap top-k, no sorts after the agg") {
-    // adopted over window/WindowGroupLimit on measured wins (TopKBench
-    // sf0.1 steady 1.32→0.96 s; RefScaleBench 1M lines 1.10→0.82 s)
+    // adopted over window/WindowGroupLimit on measured wins (SURVEY.md
+    // §8 addendum — round 4: sf0.1 steady 1.32→0.96 s; RefScaleBench 1M
+    // lines 1.10→0.82 s)
     val p = planOf("q_top5_month")
     assert(p.contains("TopKPerKeyExec(partial"), p)
     assert(p.contains("TopKPerKeyExec(final"), p)
