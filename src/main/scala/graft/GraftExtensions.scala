@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSimilarity, PairsGenerator, PortableHash60, SketchAggs}

@@ -89,7 +89,7 @@ object SparkEntry {
     }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry.collect { case (n, QueryDef(_, Some(sql))) => n -> sql }.toMap
+    registry.map { case (n, d) => n -> d.oracle }.toMap
 }

@@ -69,11 +69,4 @@ object BloomJoin {
     prefilter(big, bigKey, small, smallKey, expectedItems)
       .join(small.select(smallKey.as("_bj_key")),
         bigKey === col("_bj_key"), "left_semi")
-
-  /** Exact inner join with a bloom prefilter on the probe side.
-    * Result ≡ `big.join(small, bigKey === smallKey)`. */
-  def innerJoin(big: DataFrame, bigKey: Column, small: DataFrame,
-                smallKey: Column, expectedItems: Long = 1000000L): DataFrame =
-    prefilter(big, bigKey, small, smallKey, expectedItems)
-      .join(small, bigKey === smallKey)
 }

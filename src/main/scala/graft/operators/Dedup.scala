@@ -297,7 +297,7 @@ object Dedup {
     * build via [[srpIndexBuild]] (stores the sizing manifest), gate
     * ingest on [[requireFreshSrpIndex]], re-encode via
     * [[srpIndexRebuild]] when the corpus outgrows the frozen sizing;
-    * delete rows via [[removeFromIndex]]. This is the
+    * delete rows with a left-anti join on the id. This is the
     * >[[SemDedup.HierAssignCeiling]] tier's standing artifact — the
     * tier a billion-vector corpus actually lives in. */
   def srpIndex(emb: DataFrame, idCol: String, vecCol: String,
@@ -311,8 +311,7 @@ object Dedup {
     * ("rebuild on a corpus resize") DETECTABLE instead of a scaladoc
     * promise: the index stores what n the plane count was sized for,
     * and [[srpIndexStale]] re-evaluates the sizing rule at the current
-    * corpus size. Persist it beside the codes (one row —
-    * [[srpManifestDF]]/[[srpManifestOf]]). */
+    * corpus size. Persist it beside the codes. */
   final case class SrpManifest(builtN: Long, planes: Int, tables: Int,
                                targetBucketSize: Int)
 
@@ -375,21 +374,6 @@ object Dedup {
         "re-encode the corpus for nothing; pass force=true to do it anyway")
     srpIndexBuild(emb, idCol, vecCol, dim, m.targetBucketSize, m.tables,
       knownCount = Some(currentN))
-  }
-
-  /** One-row persistence form of a [[SrpManifest]] (write beside the
-    * code rows; read back with [[srpManifestOf]]). */
-  def srpManifestDF(spark: org.apache.spark.sql.SparkSession,
-                    m: SrpManifest): DataFrame = {
-    import spark.implicits._
-    Seq((m.builtN, m.planes, m.tables, m.targetBucketSize))
-      .toDF("built_n", "planes", "tables", "target_bucket_size")
-  }
-
-  def srpManifestOf(df: DataFrame): SrpManifest = {
-    val r = df.select(col("built_n").cast("long"), col("planes").cast("int"),
-      col("tables").cast("int"), col("target_bucket_size").cast("int")).head()
-    SrpManifest(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
 
   /** Batch-vs-standing embedding near-dup pairs over a stored
@@ -1086,7 +1070,8 @@ object Dedup {
     * converges in O(log n) rounds on any graph (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14). Same
     * output contract as [[connectedComponents]]: (idCol, cluster_id =
-    * min reachable id), singletons included.
+    * min reachable id), singletons included, and edge endpoints absent
+    * from `nodes` are not label carriers.
     *
     * Both operations are expressed per-EDGE, never per-node-with-
     * neighbor-list (no collect_list — a hub node's adjacency never
@@ -1108,10 +1093,17 @@ object Dedup {
     */
   def connectedComponentsStar(edges: DataFrame, nodes: DataFrame, idCol: String,
                               maxRounds: Int = 30): DataFrame = {
+    // confinement to `nodes`, once before the loop: an edge with an
+    // endpoint outside the node set is dropped, so such an endpoint
+    // neither appears in the output nor joins its neighbors — the
+    // connectedComponents contract (its in-agg _old filter)
+    def inNodes(c: String): DataFrame = nodes.select(col(idCol).as(c))
     var e = edges.select(
         least(col("id1"), col("id2")).as("u"), greatest(col("id1"), col("id2")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
+      .join(inNodes("u"), Seq("u"), "left_semi")
+      .join(inNodes("v"), Seq("v"), "left_semi")
       .localCheckpoint(true)
     var round = 0
     var converged = e.isEmpty
@@ -1233,8 +1225,8 @@ object Dedup {
     * that too).
     *
     * The signature/gram/sketch INDEX side of a deletion is a plain
-    * anti-join — [[removeFromIndex]]; this operator owns the one part
-    * that is not.
+    * left-anti join on the id; this operator owns the one part that is
+    * not.
     *
     * @param labels  standing assignment (idCol, cluster_id) — a prior
     *                CC output over the corpus
@@ -1269,13 +1261,6 @@ object Dedup {
       .select(col("nid").as(idCol), col("label").as("cluster_id"))
       .unionByName(recomputed.select(col("nid").as(idCol), col("cluster_id")))
   }
-
-  /** The trivial half of a corpus deletion: drop a removed doc's rows
-    * from any standing per-doc index frame (MinHash signatures, gram
-    * postings, embeddings, SimHash codes — anything keyed by `idCol`).
-    * One anti-join; the non-trivial half is [[removeDocs]]. */
-  def removeFromIndex(index: DataFrame, removed: DataFrame, idCol: String): DataFrame =
-    index.join(removed.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Exact substring-containment pairs — the news-wire/boilerplate case
     * Jaccard under-scores (a 50-token article inside a 5000-token page
@@ -1363,7 +1348,6 @@ object Dedup {
   def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
                      gramN: Int = 5, minSpanTokens: Int = 8,
                      maxGramFreq: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(gramN >= 2, s"gramN must be >= 2, got $gramN")
     require(minSpanTokens >= gramN,
       s"minSpanTokens $minSpanTokens must cover one $gramN-gram")
@@ -1398,7 +1382,6 @@ object Dedup {
                             idCol: String, textCol: String,
                             gramN: Int = 5, minSpanTokens: Int = 8,
                             maxGramFreq: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(gramN >= 2, s"gramN must be >= 2, got $gramN")
     require(minSpanTokens >= gramN,
       s"minSpanTokens $minSpanTokens must cover one $gramN-gram")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-
 /** Output file sizing — the small-files problem is the classic 100 TB
   * self-inflicted wound: a 2000-task job writing a 10 GB result emits
   * 2000 × 5 MB files, and every downstream scan pays 2000 opens, 2000
@@ -9,14 +7,11 @@ import org.apache.spark.sql.DataFrame
   * shape: choose the partition count from the DATA SIZE, not from the
   * task count the upstream shuffle happened to have.
   *
-  * Parquet size is compression-dependent, so a schema-derived estimate
-  * (`DataType.defaultSize`) can be off by 5-20×. [[calibrate]] measures
-  * the real on-disk bytes/row from a bounded sample write once (the
-  * stats job a lakehouse runs per table, not per write), and
-  * [[writeSized]] repartitions to hit `targetBytes` per file using that
-  * measured rate. One `count()` action per write — the same class as
-  * the CC convergence probe, and unavoidable: the row count IS the
-  * sizing input.
+  * [[sizedPartitions]] is that choice. The caller supplies a MEASURED
+  * bytes/row rate — parquet size is compression-dependent, so a
+  * schema-derived estimate (`DataType.defaultSize`) can be off by
+  * 5-20× — as the streaming store's compaction does from the on-disk
+  * bytes and row count of the files it rewrites.
   */
 object FileLayout {
 
@@ -25,45 +20,5 @@ object FileLayout {
     require(bytesPerRow > 0 && targetBytes > 0,
       s"positive sizes required: bytesPerRow=$bytesPerRow targetBytes=$targetBytes")
     math.max(1, math.ceil(rowCount * bytesPerRow / targetBytes)).toInt
-  }
-
-  /** Measured parquet bytes/row from a bounded sample write (deleted
-    * afterwards). Deterministic: takes the FIRST `sampleRows` in the
-    * frame's order via limit, not a random sample. */
-  def calibrate(df: DataFrame, sampleRows: Int = 10000): Double = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-calibrate")
-    def walked[A](f: java.util.stream.Stream[java.nio.file.Path] => A): A = {
-      val s = java.nio.file.Files.walk(dir)
-      try f(s) finally s.close()
-    }
-    try {
-      val path = dir.resolve("sample").toString
-      df.limit(sampleRows).write.mode("overwrite").parquet(path)
-      // count the WRITTEN rows: limit() picks a nondeterministic subset,
-      // so a second action over it could count rows other than the ones
-      // on disk — bytes and n must come from the same materialization
-      val n = df.sparkSession.read.parquet(path).count()
-      val bytes = walked(_.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p))
-        .map(java.nio.file.Files.size).sum)
-      require(n > 0, "calibrate needs a non-empty frame")
-      bytes.toDouble / n
-    } finally {
-      // the sample dir must go even when the write/read throws (the
-      // q_stream_cdc tmp-leak lesson)
-      walked(_.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
-    }
-  }
-
-  /** Write `df` as parquet with files sized near `targetBytes`, using a
-    * measured (or caller-cached) bytes/row rate. Returns the partition
-    * count used. */
-  def writeSized(df: DataFrame, path: String, targetBytes: Long,
-                 bytesPerRow: Option[Double] = None): Int = {
-    val rate = bytesPerRow.getOrElse(calibrate(df))
-    val parts = sizedPartitions(df.count(), rate, targetBytes)
-    df.repartition(parts).write.mode("overwrite").parquet(path)
-    parts
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over item-relation graphs (co-purchase, co-occurrence,
@@ -103,26 +102,20 @@ object Graph {
     * (key (0, label) > every real key (−cnt, ·), cnt ≥ 1) keeps
     * isolated nodes at their own label without a left join.
     *
-    * checkpointInterval DEFAULTS TO 1 and must stay there for any real
-    * round count: each round references the previous `labels` TWICE
-    * (neighbor join + sentinel union), so an uncheckpointed chain
-    * doubles the plan per round — measured 1.9/2.8/5.5/14.1 s for
-    * rounds 1–4 at sf0.1 before, linear 2.7 s (4 rounds) after. The
-    * lazy localCheckpoint makes both references share one RDD with no
-    * extra driver action (the CC loop discipline).
+    * Every round but the last checkpoints its labels: each round
+    * references the previous `labels` TWICE (neighbor join + sentinel
+    * union), so an uncheckpointed chain doubles the plan per round —
+    * measured 1.9/2.8/5.5/14.1 s for rounds 1–4 at sf0.1 before,
+    * linear 2.7 s (4 rounds) after. The lazy localCheckpoint makes both
+    * references share one RDD with no extra driver action (the CC loop
+    * discipline).
     *
     * @return (idCol, label BIGINT) — community = shared label
     */
   def labelPropagation(edges: DataFrame, nodes: DataFrame, idCol: String,
-                       iterations: Int = 4,
-                       checkpointInterval: Int = 1): DataFrame = {
+                       iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    // 0 would crash `i % checkpointInterval`; a negative value would
-    // silently disable checkpointing and resurrect the measured
-    // exponential plan-doubling (1.9/2.8/5.5/14.1 s for rounds 1-4)
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1, got $checkpointInterval")
     require(idCol != "label", "idCol 'label' collides with the output column")
     // labels ARE node ids cast to the BIGINT label domain (the output
     // contract and the (−cnt, label) vote ordering need it): on a
@@ -150,11 +143,14 @@ object Graph {
           struct(lit(0L).as("nc"), col("label").as("lb")).as("key")))
       labels = withSentinel.groupBy(col("nid"))
         .agg(min_by(col("label"), col("key")).as("label"))
-      if (i % checkpointInterval == 0 && i < iterations)
+      if (i < iterations)
         labels = labels.localCheckpoint(false)
     }
     labels.select(col("nid").as(idCol), col("label"))
   }
+
+  /** Rounds between [[pageRank]]'s plan-truncating checkpoints. */
+  private val PageRankCheckpointRounds = 8
 
   /** PageRank over an UNDIRECTED edge set, fixed iteration count,
     * fixed-point integer arithmetic (bit-exact on any engine):
@@ -186,8 +182,8 @@ object Graph {
     * only shuffle of node-cardinality data. The degree-annotated
     * out-edge list and the sentinel frame are LAZY
     * `localCheckpoint(false)` (materialized once inside the caller's
-    * action, reused by every round); `checkpointInterval` bounds plan
-    * depth for long runs.
+    * action, reused by every round); a lazy checkpoint every 8th
+    * round bounds plan depth for long runs.
     *
     * @param edges canonical undirected pairs (`src`, `dst`)
     * @param nodes one row per node id; MUST cover every edge endpoint
@@ -204,12 +200,10 @@ object Graph {
     * @return (idCol, rank_fp BIGINT) — rank scaled by `scale`
     */
   def pageRank(edges: DataFrame, nodes: DataFrame, idCol: String,
-               iterations: Int = 5, checkpointInterval: Int = 8,
+               iterations: Int = 5,
                scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1, got $checkpointInterval")
     require(idCol != "rank_fp", "idCol 'rank_fp' collides with the output column")
     // n is not knowable here without an extra driver action, so the
     // guard bounds what IS checkable: scale ≥ 100 keeps the div-100
@@ -240,7 +234,7 @@ object Graph {
           // overflow-safe (85·m) div 100: see the scaladoc headroom note
           (lit(15L * scale / 100L) +
             expr("(mass div 100) * 85 + ((mass % 100) * 85) div 100")).as("rank_fp"))
-      if (i % checkpointInterval == 0 && i < iterations)
+      if (i % PageRankCheckpointRounds == 0 && i < iterations)
         ranks = ranks.localCheckpoint(false)
     }
     ranks.select(col("nid").as(idCol), col("rank_fp"))

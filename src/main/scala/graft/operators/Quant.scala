@@ -32,16 +32,6 @@ object Quant {
         transform(col("v"), x => floor(x * col("scale") + lit(0.5)).cast("long")).as("q"))
   }
 
-  /** Quantization summary a calibration pass would persist: the scale
-    * plus exact integer code stats (sum, L1 mass, peak magnitude). All
-    * BIGINT except the one-division scale — fully oracle-portable. */
-  def int8Stats(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    int8Codes(df, idCol, vecCol).select(
-      col(idCol), col("scale"),
-      aggregate(col("q"), lit(0L), (a, b) => a + b).as("sum_q"),
-      aggregate(col("q"), lit(0L), (a, b) => a + abs(b)).as("sum_abs_q"),
-      array_max(transform(col("q"), x => abs(x))).as("max_abs_q"))
-
   /** Dequantized dot product of two int8-coded vectors given their
     * scales: the integer code dot folds exactly (BIGINT), ONE float
     * multiply by 1/(scale_a·scale_b) recovers the approximate float

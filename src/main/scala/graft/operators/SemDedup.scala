@@ -236,8 +236,8 @@ object SemDedup {
     * embeddings) and reuses for every arriving batch, so ingest never
     * re-assigns the standing corpus. Rank 1 is [[assign]]'s cell;
     * rank ≤ probes are the boundary-recovery probes ([[dedupProbed]]).
-    * Refresh on centroid retrain; delete rows via
-    * [[Dedup.removeFromIndex]]. The resize lifecycle is first-class:
+    * Refresh on centroid retrain; delete rows with a left-anti join on
+    * the id. The resize lifecycle is first-class:
     * build via [[probedIndexBuild]] (stores the sizing manifest), gate
     * ingest on [[requireFreshQuantizer]], retrain + re-assign via
     * [[probedIndexRebuild]] when the corpus leaves the sizing band. */
@@ -337,20 +337,6 @@ object SemDedup {
     val (idx, _) = probedIndexBuild(emb, idCol, vecCol, centroids, m.probes,
       m.targetCellSize, knownCount = Some(currentN))
     (idx, centroids, QuantizerManifest(currentN, kNew, m.probes, m.targetCellSize))
-  }
-
-  /** One-row persistence form of a [[QuantizerManifest]]. */
-  def quantizerManifestDF(spark: org.apache.spark.sql.SparkSession,
-                          m: QuantizerManifest): DataFrame = {
-    import spark.implicits._
-    Seq((m.builtN, m.k, m.probes, m.targetCellSize))
-      .toDF("built_n", "k", "probes", "target_cell_size")
-  }
-
-  def quantizerManifestOf(df: DataFrame): QuantizerManifest = {
-    val r = df.select(col("built_n").cast("long"), col("k").cast("int"),
-      col("probes").cast("int"), col("target_cell_size").cast("int")).head()
-    QuantizerManifest(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
 
   /** Batch-vs-standing near-dup edges over shared probed cells: the

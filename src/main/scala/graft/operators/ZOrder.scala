@@ -1,15 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) clustering key — the physical-layout operator behind
-  * multi-dimensional data skipping: rows sorted by the interleaved-bit
-  * key land so that ANY rectangular predicate on the two source columns
-  * touches a contiguous-ish band of files, and per-file min/max stats
-  * prune the rest. At 100 TB this is how a `(part, supplier)` range
-  * query avoids reading the whole fact table when the layout can only
-  * be sorted once.
+/** Z-order (Morton) clustering key — the key behind multi-dimensional
+  * data skipping: rows range-partitioned and sorted by the
+  * interleaved-bit key land so that ANY rectangular predicate on the two
+  * source columns touches a contiguous-ish band of files, and per-file
+  * min/max stats prune the rest. At 100 TB this is how a
+  * `(part, supplier)` range query avoids reading the whole fact table
+  * when the layout can only be sorted once.
   *
   * The key is pure integer bit-math (mask → spread → interleave), so it
   * is engine-portable: the DuckDB oracle replays the identical
@@ -44,15 +44,4 @@ object ZOrder {
   /** DuckDB replay of [[zkey2]]. */
   def zkey2Sql(a: String, b: String): String =
     s"(${spread16Sql(a)} | (${spread16Sql(b)} << 1))"
-
-  /** Rewrite `df` into `numPartitions` z-clustered partitions: range
-    * partition by the Morton key, sort within each partition. After a
-    * write, per-file (aCol, bCol) min/max ranges tile the 2-D space
-    * instead of striping it — the data-skipping property ZOrderSpec
-    * pins (disjoint per-partition zkey ranges). */
-  def cluster(df: DataFrame, aCol: String, bCol: String,
-              numPartitions: Int): DataFrame =
-    df.withColumn("zkey", zkey2(col(aCol), col(bCol)))
-      .repartitionByRange(numPartitions, col("zkey"))
-      .sortWithinPartitions("zkey")
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.{BpeMerges, TextFns}
 import graft.operators.Bpe

@@ -64,10 +64,9 @@ object ProfileQueries {
         |FROM bk GROUP BY bucket, mn, mx"""),
 
     // Z-order (Morton) clustering key over (l_partkey, l_suppkey) — the
-    // layout op behind 2-D data skipping (operators/ZOrder; the
-    // repartitionByRange+sort side is pinned in ZOrderSpec, since a
-    // partitioning property is invisible to a row hash). Pure integer
-    // bit math, replayed shift-for-shift by the oracle.
+    // key behind 2-D data skipping (operators/ZOrder; a layout then
+    // range-partitions and sorts by it). Pure integer bit math,
+    // replayed shift-for-shift by the oracle.
     "q_zorder" -> QueryDef(
       (s, dir) => Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.{QueryDef, Tables}
 
 /** Queries expressed through the `spark.sql` text interface (the engine's

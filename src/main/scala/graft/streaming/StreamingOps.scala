@@ -148,64 +148,6 @@ object StreamingOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Streaming ingest dedup against a STATIC historical corpus — the
-    * streaming twin of `Dedup.ngramJaccardAgainst`'s posture: incoming
-    * documents are admitted only if their content fingerprint matches
-    * nothing in the historical index (stream-static left-anti join; the
-    * static side is planned per micro-batch, broadcast when small) AND
-    * nothing already admitted this stream within the watermark horizon
-    * (keyed state, watermark-evicted). Exactly the two dup classes a
-    * continuous crawl ingest faces: re-crawls of historical pages and
-    * repeats inside the firehose.
-    *
-    * @param docs   streaming (id, text, ts) frame
-    * @param corpusFingerprints static frame with a `fingerprint` column
-    *                           (build with md5(text) — `q_fingerprint`)
-    */
-  def dedupAgainstCorpus(docs: DataFrame, corpusFingerprints: DataFrame,
-                         textCol: String = "text", tsCol: String = "ts",
-                         watermark: String = "1 hour"): DataFrame =
-    docs.withColumn("fingerprint", md5(col(textCol)))
-      .join(corpusFingerprints.select("fingerprint"), Seq("fingerprint"), "left_anti")
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(Seq("fingerprint"))
-
-  final case class RunningTotal(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Per-key running totals on the modern `transformWithState` API
-    * (Spark 4 arbitrary-state operator, the successor to
-    * flatMapGroupsWithState): typed ValueState in the RocksDB state
-    * store, one updated (n, total) row per key per micro-batch in
-    * Update mode. State is O(keys); the processor surface also carries
-    * timers and TTL for eviction policies, which the GroupState API
-    * lacks. Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (asserted by the runtime). */
-  class RunningTotalProcessor extends StatefulProcessor[Long, Ev, RunningTotal] {
-    @transient private var state: ValueState[(Long, Double)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Double)](
-        "totals", Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-                                 timerValues: TimerValues): Iterator[RunningTotal] = {
-      val (n0, t0) = Option(state.get()).getOrElse((0L, 0.0))
-      var n = n0; var t = t0
-      rows.foreach { e => n += 1; t += e.value }
-      state.update((n, t))
-      Iterator.single(RunningTotal(key, n, t))
-    }
-  }
-
-  def runningTotalsWithState(events: Dataset[Ev]): Dataset[RunningTotal] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-
   // ------------------------- custom state: flatMapGroupsWithState -----
 
   final case class Ev(user_id: Long, ts: java.sql.Timestamp,

@@ -56,14 +56,6 @@ class BloomJoinSpec extends SparkSpec {
       s"bloom probe not below the join:\n$plan")
   }
 
-  test("innerJoin is exact") {
-    val got = BloomJoin.innerJoin(Tables.lineitem(spark, sf001), col("l_suppkey"),
-      nationSuppliers, col("s_suppkey"), expectedItems = 1000L)
-    val want = Tables.lineitem(spark, sf001)
-      .join(nationSuppliers, col("l_suppkey") === col("s_suppkey"))
-    assert(got.count() == want.count())
-  }
-
   test("SQL surface: bloom_filter_agg + bloom_might_contain round-trip") {
     GraftExtensions.registerOn(spark)
     Tables.supplier(spark, sf001).createOrReplaceTempView("bj_supplier")

@@ -450,7 +450,16 @@ class DedupSpec extends SparkSpec {
       val nodes = (0L until n.toLong)
       assert(ccStar(edges, nodes) == cc(edges, nodes),
         s"star != min-label for seed=$seed n=$n m=$m")
+      // node sets that omit edge endpoints: the omitted ids are not
+      // label carriers on either path
+      for (drop <- Seq(3, 5)) {
+        val partial = nodes.filter(_ % drop != 1)
+        assert(ccStar(edges, partial) == cc(edges, partial),
+          s"star != min-label for seed=$seed n=$n m=$m, nodes without id % $drop == 1")
+      }
     }
+    // the smallest case: 2 is not a node, so 1-2-3 does not connect 1 and 3
+    assert(ccStar(Seq((1L, 2L), (2L, 3L)), Seq(1L, 3L)) == Map(1L -> 1L, 3L -> 3L))
   }
 
   test("star contraction collapses a chain deeper than min-label's round budget") {

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.FileLayout
 
-/** Output file sizing (operators/FileLayout): the partition-count math,
-  * the measured calibration, and a REAL write landing near the target
-  * file size. */
+/** Output file sizing (operators/FileLayout): the partition-count math. */
 class FileLayoutSpec extends SparkSpec {
 
   test("sizedPartitions math: ceil(rows·rate/target), floor 1") {
@@ -14,32 +11,5 @@ class FileLayoutSpec extends SparkSpec {
     assert(FileLayout.sizedPartitions(1001, 100.0, 100000) == 2) // ceil
     assert(FileLayout.sizedPartitions(0, 100.0, 100000) == 1)
     intercept[IllegalArgumentException](FileLayout.sizedPartitions(1, -1.0, 1))
-  }
-
-  test("writeSized lands real files near the target size") {
-    val df = Tables.lineitem(spark, sf001)
-    val target = 64L * 1024 // 64 KiB files from ~60k rows
-    val out = java.nio.file.Files.createTempDirectory("graft-sized").resolve("t").toString
-    val parts = FileLayout.writeSized(df, out, target)
-    assert(parts > 1, "sf0.001 lineitem at a 64 KiB target must split")
-    val sizes = java.nio.file.Files.list(java.nio.file.Paths.get(out)).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.toString.endsWith(".parquet"))
-      .map(java.nio.file.Files.size)
-    assert(sizes.length == parts)
-    // calibration is approximate (sample compresses differently than the
-    // full frame) — files must land within 3x of target on both sides
-    val mean = sizes.sum.toDouble / sizes.length
-    assert(mean > target / 3.0 && mean < target * 3.0,
-      s"mean file size $mean vs target $target (parts=$parts, sizes=${sizes.toSeq})")
-  }
-
-  test("caller-cached rate skips calibration and is honored exactly") {
-    val df = Tables.region(spark, sf001) // 5 rows
-    val out = java.nio.file.Files.createTempDirectory("graft-sized2").resolve("t").toString
-    // rate chosen so 5 rows / target => exactly 5 partitions
-    val parts = FileLayout.writeSized(df, out, targetBytes = 10L,
-      bytesPerRow = Some(10.0))
-    assert(parts == 5)
   }
 }

@@ -45,7 +45,7 @@ class QuantSpec extends SparkSpec {
   }
 
   test("quantization is a narrow projection — no exchange in the plan") {
-    val p = Quant.int8Stats(vecs, "vec_id", "embedding")
+    val p = Quant.int8Codes(vecs, "vec_id", "embedding")
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"int8 quantization must not shuffle:\n$p")
   }

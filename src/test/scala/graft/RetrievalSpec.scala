@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
 
 /** Pins [[Retrieval.rrfFuse]] against the textbook RRF definition

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.SeqPack
 
 /** Sequence packing: the distributed two-level prefix scan must equal

@@ -323,7 +323,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("int8 quantization: all-zero vector quantizes to zeros, not NaN") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val z = Seq((1L, Array.fill(4)(0.0f))).toDF("vec_id", "embedding")
     val row = Similarity.quantizeInt8(z, "vec_id", "embedding").collect().head
     assert(row.getAs[Double]("maxabs") == 0.0)

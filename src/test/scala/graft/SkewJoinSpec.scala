@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class SkewJoinSpec extends SparkSpec {
 
   test("AQE splits a skewed join partition (plan shows skewed AQEShuffleRead)") {
-    import spark.implicits._
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.enabled",

@@ -68,8 +68,6 @@ class SrpSpec extends SparkSpec {
   }
 
   test("SrpCode validates the hyperplane matrix size") {
-    import spark.implicits._
-    val df = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "v")
     intercept[IllegalArgumentException] {
       graft.functions.SrpCode(col("v"), Array(0.5), dim = 2, planes = 2, tables = 2)
     }

@@ -60,8 +60,6 @@ class StalenessSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
     // the rebuilt index is fresh at its new size
     assert(!Dedup.srpIndexStale(m2, 1600))
-    // manifest round-trips through its one-row persistence form
-    assert(Dedup.srpManifestOf(Dedup.srpManifestDF(spark, m2)) == m2)
     assert(codes.columns.toSeq == rebuilt.columns.toSeq)
   }
 
@@ -109,8 +107,6 @@ class StalenessSpec extends SparkSpec {
     assert(idx2.collect().map(_.toSeq).toSet ==
       freshIdx.collect().map(_.toSeq).toSet)
     assert(!SemDedup.quantizerStale(m2, 2048))
-    assert(SemDedup.quantizerManifestOf(
-      SemDedup.quantizerManifestDF(spark, m2)) == m2)
     assert(idx.columns.toSeq == idx2.columns.toSeq)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** DataFrame stat surface: seeded stratified sampling and heavy-hitter
   * detection — the profile-pass tools a curation pipeline runs before
   * committing to full scans. */

@@ -1080,32 +1080,6 @@ class StreamingSpec extends SparkSpec {
       ("latte", "pane") -> 2L, ("latte", "uova") -> 1L, ("pane", "uova") -> 1L))
   }
 
-  test("transformWithState maintains running totals across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val saved = util.Try(spark.conf.get("spark.sql.streaming.stateStore.providerClass")).toOption
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[Ev]
-      val q = StreamingOps.runningTotalsWithState(ms.toDS())
-        .writeStream.format("memory").queryName("totals").outputMode("update").start()
-      ms.addData(Ev(1, ts(0), "a", 2.0), Ev(1, ts(1), "b", 3.0), Ev(2, ts(0), "c", 7.0))
-      q.processAllAvailable()
-      ms.addData(Ev(1, ts(2), "d", 5.0)) // state must survive the batch boundary
-      q.processAllAvailable()
-      q.stop()
-      // update mode re-emits per batch; last row per key is the total
-      val got = spark.table("totals")
-        .groupBy("user_id").agg(max("n_events").as("n"), max("total_value").as("t"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == Set((1L, 3L, 10.0), (2L, 1L, 7.0)))
-    } finally saved match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming HLL: streamed registers agree EXACTLY with the batch sketch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1259,30 +1233,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     // first arrival per (user, type) wins; later duplicates dropped
     assert(got == Set((1L, "click", 1.0), (1L, "view", 4.0)))
-  }
-
-  test("stream-static ingest dedup admits only docs novel to corpus AND stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq("old doc one", "old doc two").toDF("text")
-      .select(md5(col("text")).as("fingerprint"))
-    val ms = MemoryStream[(Long, String, Timestamp)]
-    val q = StreamingOps.dedupAgainstCorpus(
-        ms.toDF().toDF("doc_id", "text", "ts"), corpus, watermark = "60 minutes")
-      .writeStream.format("memory").queryName("ingest").outputMode("append").start()
-    ms.addData(
-      (10L, "old doc one", ts(0)),   // re-crawl of historical page → dropped
-      (11L, "fresh doc a", ts(1)),   // novel → admitted
-      (12L, "fresh doc a", ts(2)))   // in-batch repeat → dropped
-    q.processAllAvailable()
-    ms.addData(
-      (13L, "fresh doc a", ts(10)),  // cross-batch repeat → dropped
-      (14L, "fresh doc b", ts(11)),  // novel → admitted
-      (15L, "old doc two", ts(12)))  // historical → dropped
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("ingest").select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == Set(11L, 14L))
   }
 
   test("session boundary: exactly-gap-apart events share a session; gap+1us splits") {

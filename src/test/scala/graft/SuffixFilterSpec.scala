@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions._
 import graft.functions.SuffixFilter
 import graft.operators.Dedup
 

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.ZOrder
 
-/** Z-order key: bit-exact vs a direct per-bit reference interleave, and
-  * the clustering property (disjoint per-partition key ranges) that
-  * makes the layout skippable. */
+/** Z-order key: bit-exact vs a direct per-bit reference interleave. */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,24 +32,5 @@ class ZOrderSpec extends SparkSpec {
   test("zkey is monotone-compatible: equal inputs collide, adjacent cells stay local") {
     val z00 = mortonRef(0, 0); val z10 = mortonRef(1, 0); val z01 = mortonRef(0, 1)
     assert(z00 == 0L && z10 == 1L && z01 == 2L) // interleave order a-even b-odd
-  }
-
-  test("cluster: per-partition zkey ranges are disjoint and sorted within") {
-    val li = Tables.lineitem(spark, sf001)
-    val clustered = ZOrder.cluster(li, "l_partkey", "l_suppkey", numPartitions = 8)
-    import spark.implicits._
-    val ranges = clustered.select(col("zkey")).mapPartitions { it =>
-      val xs = it.map(_.getLong(0)).toArray
-      if (xs.isEmpty) Iterator.empty
-      else {
-        // sortWithinPartitions must hold inside the partition
-        assert(xs.zip(xs.tail).forall { case (p, q) => p <= q })
-        Iterator((xs.head, xs.last))
-      }
-    }.collect().sortBy(_._1)
-    assert(ranges.nonEmpty)
-    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
-      assert(hi <= lo, "partition zkey ranges must not overlap")
-    }
   }
 }
