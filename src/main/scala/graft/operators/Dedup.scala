@@ -649,16 +649,9 @@ object Dedup {
     * d² pair rows) — the standard precision-neutral guard for near-dup
     * detection at corpus scale (keep None for exact semantics).
     */
-  /** @param sizePrune add a size-ratio prefilter before the co-count:
-    *        jaccard(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so size-mismatched
-    *        pairs can be dropped early without changing results. Worth it
-    *        on corpora with heterogeneous doc lengths (web crawls);
-    *        measured a net LOSS on uniform-length corpora (the extra
-    *        sizes join outweighs zero pruned pairs) — hence opt-in. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, minJaccard: Double = 0.0,
-                        maxShingleDf: Option[Int] = None,
-                        sizePrune: Boolean = false): DataFrame = {
+                        maxShingleDf: Option[Int] = None): DataFrame = {
     // shingles hashed to longs before the distinct/self-join — same
     // rationale and same exact-up-to-xxhash64-collisions contract as
     // [[prefixJaccardPairs]] (the cluster-family oracles all replay the
@@ -674,21 +667,10 @@ object Dedup {
       case None => sh
     })
     val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val pairStream =
-      if (sizePrune && minJaccard > 0.0) {
-        val posting = filtered.join(sizes, Seq("id"))
-        posting.select(col("id").as("id1"), col("sz").as("_sz1"), col("shingle"))
-          .join(posting.select(col("id").as("id2"), col("sz").as("_sz2"), col("shingle")), Seq("shingle"))
-          .filter(col("id1") < col("id2"))
-          .filter(least(col("_sz1"), col("_sz2")).cast("double") >=
-            greatest(col("_sz1"), col("_sz2")) * lit(minJaccard))
-          .select(col("id1"), col("id2"))
-      } else {
-        filtered.select(col("id").as("id1"), col("shingle"))
-          .join(filtered.select(col("id").as("id2"), col("shingle")), Seq("shingle"))
-          .filter(col("id1") < col("id2"))
-          .select(col("id1"), col("id2"))
-      }
+    val pairStream = filtered.select(col("id").as("id1"), col("shingle"))
+      .join(filtered.select(col("id").as("id2"), col("shingle")), Seq("shingle"))
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"))
     val co = pairStream.groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("common"))
     co.join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
       .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))

@@ -2,11 +2,14 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.{QueryDef, Tables}
-import graft.streaming.StreamingOps
+import graft.streaming.{SemDedupIngest, StreamingOps}
 import graft.streaming.StreamingOps.Ev
 
 /** CORRECTNESS rows for the Structured Streaming family — the last
@@ -28,7 +31,19 @@ import graft.streaming.StreamingOps.Ev
   *    the COMPLETE input, so the oracle needs no sealing predicate);
   *  - per-session double sums are NOT emitted (micro-batch fold order
   *    is not an oracle contract — the moneySum/decimal rule's streaming
-  *    face); counts, bounds, and integer register state are.
+  *    face); counts, bounds, and integer register state are;
+  *  - every gate's stream runs through one driver, [[replay]]: it holds
+  *    the replay confs (shuffle partitions while the stream plans, the
+  *    RocksDB provider for the whole run where a sketch needs it),
+  *    creates the run's scratch dir (checkpoint, CDC snapshot space or
+  *    ingest store copy) inside the try whose finally deletes it,
+  *    drains each fed micro-batch with `processAllAvailable`, stops the
+  *    query in a finally and reads back before the scratch goes. A
+  *    failing start or batch therefore leaks neither a dir nor a conf,
+  *    and a gate states only what it feeds and what it reads back;
+  *  - the ingest gates share one fold on top of it ([[ingestReplay]]:
+  *    the vec_id % 10 = 8 then = 9 micro-batches against a seeded store
+  *    copy) and one oracle twin of that fold ([[ingestFoldCtes]]).
   *
   * The driver-side collect feeding the memory source is replay harness,
   * not operator: the operators under test consume an unbounded
@@ -61,42 +76,103 @@ object StreamQueries {
       (ph >>> (11 * i)) % graft.operators.Cms.W)
   }
 
-  /** Plan the enclosed stream with few shuffle partitions: stateful
-    * exec cost on a few-MB replay is FIXED state-store machinery — one
+  /** Shuffle partitions a stateful replay plans with: stateful exec
+    * cost on a few-MB replay is FIXED state-store machinery — one
     * open/commit per partition per store per micro-batch (a
     * stream-stream join carries 4 stores/partition), so 32 partitions
     * pay 100+ store commits per batch for kilobytes of state. 4
     * partitions cut the replay queries 1.5–4× (measured); production
-    * sizes the same knob to its real state volume. The conf is
-    * restored immediately after `.start()` — shuffle partitions bind at
-    * stream plan time. */
-  private def withReplayPartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    // dev-only env override for sizing experiments (the driver never
-    // sets it); 4 is the measured operating point for the gate SFs
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_REPLAY_PARTITIONS", "4"))
-    try body finally s.conf.set(key, saved)
+    * sizes the same knob to its real state volume. */
+  private val ReplayPartitions = 4
+
+  /** What a replayed stream keeps between micro-batches: the one
+    * setting of [[replay]], because it fixes which confs the run holds.
+    *  - [[Stateless]]: a foreachBatch fold (the CDC merge, the ingest
+    *    store). It has no state store for the partition count to size,
+    *    and holding that count at `start()` would bind it into the
+    *    stream's session clone, under which every batch's fold plans —
+    *    so the session confs stay as the caller set them.
+    *  - [[HdfsState]]: a stateful operator on the default provider,
+    *    planned under [[ReplayPartitions]].
+    *  - [[RocksDbState]]: the transformWithState sketches, which need
+    *    the RocksDB provider for the whole run; also planned under
+    *    [[ReplayPartitions]]. */
+  private[graft] sealed trait ReplayState
+  private[graft] case object Stateless extends ReplayState
+  private[graft] case object HdfsState extends ReplayState
+  private[graft] case object RocksDbState extends ReplayState
+
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with session conf `key` set to `value` (None: untouched),
+    * restoring the caller's value — or its absence — in a finally. */
+  private def withConf[T](s: SparkSession, key: String,
+      value: Option[String])(body: => T): T = value match {
+    case None => body
+    case Some(v) =>
+      val saved = s.conf.getOption(key)
+      s.conf.set(key, v)
+      try body finally saved match {
+        case Some(o) => s.conf.set(key, o)
+        case None    => s.conf.unset(key)
+      }
   }
 
-  /** Checkpoint location for a stateful replay, on tmpfs when the box
-    * has one: the multi-batch stream-stream join replays commit 4 state
-    * stores × partitions × ~6 micro-batches of delta files, and with
-    * the default temp checkpoint (java.io.tmpdir = /tmp, disk-backed
-    * here) that commit IO is the single biggest NON-join cost of the
-    * replay — measured on q_stream_outer: 4.7 → 4.0 s steady just by
-    * moving the checkpoint to /dev/shm. Durability is a non-goal for a
-    * verification replay (the source is a driver-held memory stream;
-    * production sizes durable checkpoints to its own volume), so tmpfs
-    * is the honest operating point. Callers MUST delete the dir in the
-    * same finally that stops the query ([[cleanupCheckpoint]]) —
-    * explicit checkpoint locations are never auto-deleted. */
-  private def replayCheckpointDir(): String = replayTmpDir("graft_ckpt_")
+  /** The replay driver: every gate's stream runs through it, so each
+    * replay rule lives here once. In order, it
+    *  1. holds the RocksDB provider conf for the whole run
+    *     ([[RocksDbState]] only);
+    *  2. creates the run's scratch dir with `scratch` (an empty tmpfs
+    *     dir by default, a seeded store copy for the ingest gates)
+    *     inside the try whose finally deletes it — explicit checkpoint
+    *     locations and parquet scratch are never auto-deleted;
+    *  3. starts the query with `start(scratch dir)` — the dir is the
+    *     gate's checkpoint, CDC snapshot space or ingest store —
+    *     holding [[ReplayPartitions]] while it plans (not for
+    *     [[Stateless]]) and restoring the session value right after
+    *     `start()`: shuffle partitions bind at stream plan time;
+    *  4. runs each feed, then drains it with `processAllAvailable`;
+    *  5. stops the query in a finally, then hands the stopped query to
+    *     `read` while the scratch dir still exists, and returns what
+    *     `read` returns.
+    * `read` also runs when a batch failed, so a gate can inspect what a
+    * refused batch left behind (q_stream_rebuild's kill phase); the
+    * batch failure is then rethrown, carrying any failure of `read` as
+    * suppressed. */
+  private[graft] def replay[T](s: SparkSession, state: ReplayState,
+      scratch: () => String = () => replayTmpDir("graft_replay_"))(
+      start: String => StreamingQuery)(feeds: (() => Unit)*)(
+      read: StreamingQuery => T): T =
+    withConf(s, ProviderKey,
+        Some(RocksDbProvider).filter(_ => state == RocksDbState)) {
+      var dir: Option[String] = None
+      try {
+        dir = Some(scratch())
+        val q = withConf(s, PartitionsKey,
+          Some(ReplayPartitions.toString).filter(_ => state != Stateless))(
+          start(dir.get))
+        val drained =
+          try Try(feeds.foreach { feed => feed(); q.processAllAvailable() })
+          finally q.stop()
+        val out = Try(read(q))
+        drained.failed.foreach { e => out.failed.foreach(e.addSuppressed); throw e }
+        out.get
+      } finally dir.foreach(deleteTree)
+    }
 
   /** tmpfs-preferring temp dir for replay scratch (checkpoints, the CDC
-    * snapshot fold, the ingest store): same durability-is-a-non-goal
-    * argument as [[replayCheckpointDir]] — the replay's parquet scratch
-    * round-trips within one invocation and is deleted in its finally. */
+    * snapshot fold, the ingest store). Durability is a non-goal for a
+    * verification replay — the source is a driver-held memory stream,
+    * and production sizes durable checkpoints to its own volume — so
+    * tmpfs is the honest operating point: the multi-batch stream-stream
+    * join replays commit 4 state stores × partitions × ~6 micro-batches
+    * of delta files, and on the disk-backed default temp dir that
+    * commit IO was the single biggest NON-join cost of the replay
+    * (measured on q_stream_outer: 4.7 → 4.0 s steady just by moving the
+    * checkpoint to /dev/shm). */
   private def replayTmpDir(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base = if (java.nio.file.Files.isDirectory(shm)) shm
@@ -104,7 +180,7 @@ object StreamQueries {
     java.nio.file.Files.createTempDirectory(base, prefix).toString
   }
 
-  private def cleanupCheckpoint(dir: String): Unit = {
+  private def deleteTree(dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val p = java.nio.file.Paths.get(dir)
     if (java.nio.file.Files.exists(p))
@@ -128,7 +204,7 @@ object StreamQueries {
     * parquet), not operator work — the per-batch folds, the joins, and
     * the sentinel seals still run on every invocation. Template dirs
     * live until JVM exit (one shutdown hook); per-invocation copies are
-    * deleted in each gate's own finally, as before. */
+    * each run's scratch dir, deleted by [[replay]]. */
   private[graft] object ReplayShared {
     private val memos = scala.collection.mutable.HashMap.empty[String, Any]
     // get/put, NOT getOrElseUpdate: a build that itself calls memo (a
@@ -155,7 +231,7 @@ object StreamQueries {
             stale.foreach { k =>
               (memos.remove(k), k.startsWith("tpl:")) match {
                 case (Some(d: String), true) =>
-                  try cleanupCheckpoint(d) catch { case _: Throwable => () }
+                  try deleteTree(d) catch { case _: Throwable => () }
                 case _ => ()
               }
             }
@@ -166,7 +242,7 @@ object StreamQueries {
 
     private lazy val templateRoot: java.nio.file.Path = {
       val r = java.nio.file.Paths.get(replayTmpDir("graft_tpl_"))
-      sys.addShutdownHook(cleanupCheckpoint(r.toString))
+      sys.addShutdownHook(deleteTree(r.toString))
       r
     }
     /** Build-once seeded store template under the JVM-lifetime root;
@@ -179,8 +255,7 @@ object StreamQueries {
       }
     /** Fresh working copy of a template tree (tmpfs file copy —
       * milliseconds for the gate-SF seed trees): the per-gate store the
-      * stream mutates. The caller deletes it in its finally, exactly as
-      * it deleted the store it used to seed from scratch. */
+      * stream mutates; [[replay]] deletes it as the run's scratch dir. */
     def storeCopy(template: String): String = {
       import scala.jdk.CollectionConverters._
       val dst = java.nio.file.Paths.get(replayTmpDir("graft_store_"))
@@ -199,7 +274,7 @@ object StreamQueries {
         }
       } catch {
         case t: Throwable =>
-          try cleanupCheckpoint(dst.toString)
+          try deleteTree(dst.toString)
           catch { case c: Throwable => t.addSuppressed(c) }
           throw t
       }
@@ -260,17 +335,18 @@ object StreamQueries {
 
   /** The semantic-tier ingest gates' shared survivor read: the
     * store's admitted (id, rank-1 cell) set through the loud
-    * [[collectReplay]] fence — ONE definition so the four gates that
-    * emit this shape can never drift apart. */
+    * [[collectReplay]] fence, as (vec_id, cell) rows — ONE definition
+    * so the four gates that emit this shape can never drift apart. */
   private def survivorCells(s: SparkSession,
-      store: graft.streaming.SemDedupIngest.Store): Array[(Long, Long)] = {
+      store: SemDedupIngest.Store): DataFrame = {
     import s.implicits._
-    collectReplay(store.ingested
+    val cells = collectReplay(store.ingested
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .as[(Long, Long)], "ingest gate survivor read")
+    s.createDataset(cells.toIndexedSeq).toDF("vec_id", "cell")
   }
 
-  /** The four ingest gates' shared replay slice: embeddings %10>=8 as
+  /** The ingest gates' shared replay slice: embeddings %10>=8 as
     * (id, vector) rows, collected once per sf dir. */
   private def ingestSlice(s: SparkSession, dir: String): Array[(Long, Array[Float])] =
     ReplayShared.memo(sfKey("ingest_slice", dir)) {
@@ -280,6 +356,72 @@ object StreamQueries {
           .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])],
         "streaming ingest replay slice")
     }
+
+  /** One ingest gate's stream (q_stream_ingest, _hier, _srp, _remove and
+    * both phases of q_stream_rebuild): a working copy of the seeded
+    * `template` is the run's scratch and the store `fold` writes to; the
+    * memory source delivers the slice's vec_id % 10 = 8 rows, then its
+    * % 10 = 9 rows, as two micro-batches; `between` runs on the store
+    * after the first batch drained (the takedown); `read` gets the
+    * store after stop(), before the copy is deleted. The oracle twin is
+    * [[ingestFoldCtes]]. */
+  private def ingestReplay[T](s: SparkSession, dir: String, template: String,
+      indexCols: Seq[String] = Seq("cell", "rank"),
+      between: SemDedupIngest.Store => Unit = _ => ())(
+      fold: (DataFrame, SemDedupIngest.Store) => DataStreamWriter[Row])(
+      read: SemDedupIngest.Store => T): T = {
+    import s.implicits._
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val rows = ingestSlice(s, dir)
+    val ms = MemoryStream[(Long, Array[Float])]
+    // built by `start` on the scratch copy, shared by the feeds and read
+    var store: SemDedupIngest.Store = null
+    replay(s, Stateless, () => ReplayShared.storeCopy(template)) { tmp =>
+      store = new SemDedupIngest.Store(s, tmp, "vec_id", "embedding", indexCols)
+      fold(ms.toDF().toDF("vec_id", "embedding"), store).start()
+    }(() => ms.addData(rows.filter(_._1 % 10 == 8).toIndexedSeq: _*),
+      () => {
+        between(store)
+        ms.addData(rows.filter(_._1 % 10 == 9).toIndexedSeq: _*)
+      })(_ => read(store))
+  }
+
+  /** The cell-assigned ingest oracles' candidate edges: pairs sharing a
+    * probed `asgn` cell at cosine ≥ 0.4. */
+  private val cellEdgesCte =
+    """edges AS MATERIALIZED (
+      |  SELECT a.vec_id AS id1, b.vec_id AS id2
+      |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
+      |  JOIN e qe ON qe.vec_id = a.vec_id
+      |  JOIN e ce ON ce.vec_id = b.vec_id
+      |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)""".stripMargin
+
+  /** The ingest oracles' chained two-round fold over their `edges`
+    * CTE, the SQL twin of [[ingestReplay]]: round 1 (surv1) admits the
+    * vec_id % 10 = 8 batch against the standing % 10 < 8 corpus and
+    * itself; round 2 (surv2) admits the % 10 = 9 batch against standing
+    * ∪ surv1 and itself. `liveCorpusEdge`, when set, further restricts
+    * the corpus edges round 2 dedups against (q_stream_ingest_remove:
+    * an edge from a removed id died with it). */
+  private def ingestFoldCtes(liveCorpusEdge: String = ""): String = {
+    val live =
+      if (liveCorpusEdge.isEmpty) ""
+      else s"\n      |                         AND $liveCorpusEdge"
+    s"""surv1 AS MATERIALIZED (
+      |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
+      |    AND vec_id NOT IN (SELECT id2 FROM edges
+      |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
+      |    AND vec_id NOT IN (SELECT id2 FROM edges
+      |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
+      |surv2 AS (
+      |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
+      |    AND vec_id NOT IN (SELECT id2 FROM edges
+      |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
+      |    AND vec_id NOT IN (SELECT id2 FROM edges
+      |                       WHERE id2 % 10 = 9$live
+      |                         AND (id1 % 10 < 8
+      |                              OR id1 IN (SELECT vec_id FROM surv1))))""".stripMargin
+  }
 
   /** The event-replay gates' shared slice: the full events table as
     * [[Ev]] rows, collected once per sf dir (seven gates replay exactly
@@ -291,6 +433,15 @@ object StreamQueries {
         .select(col("user_id"), col("ts"), col("event_type"), col("value"))
         .as[Ev], "events replay slice")
     }
+
+  /** The event gates' two sealing sentinels (user_id -1, event_type
+    * "sentinel"; the read-backs filter them out): A lands `headroomS`
+    * seconds past the newest event in `evs`, B one second after A. */
+  private def evSentinels(evs: Array[Ev], headroomS: Long): (Ev, Ev) = {
+    val maxTsMs = evs.iterator.map(_.ts.getTime).max
+    val a = Ev(-1L, new Timestamp(maxTsMs + headroomS * 1000L), "sentinel", 0.0)
+    (a, a.copy(ts = new Timestamp(a.ts.getTime + 1000L)))
+  }
 
   /** The three stream-stream join gates' shared replay slice: the
     * user_id%4=0 quarter of events, collected once per sf dir. */
@@ -356,7 +507,6 @@ object StreamQueries {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val evs: Array[Ev] = evSlice(s, dir)
-        val maxTsMs = evs.iterator.map(_.ts.getTime).max
         // TWO sentinels: A rides the DATA batch (batch 1) and pushes
         // the max event time past every real end + gap + watermark; the
         // watermark computed from it takes effect at the NEXT batch —
@@ -367,33 +517,26 @@ object StreamQueries {
         // data batch, which processAllAvailable provably drains;
         // expired timers for ALL keys fire in any batch whose watermark
         // passed them.
-        val sentinelA = Ev(-1L, new Timestamp(maxTsMs + (3600L + 1800L + 60L) * 1000L),
-          "sentinel", 0.0)
-        val sentinelB = Ev(-1L, new Timestamp(sentinelA.ts.getTime + 1000L),
-          "sentinel", 0.0)
+        val (sentinelA, sentinelB) = evSentinels(evs, 3600L + 1800L + 60L)
         val ms = MemoryStream[Ev]
-        val q = withReplayPartitions(s) {
+        // sentinel A rides the data batch (r17, the q_stream_outer
+        // argument): the watermark during batch 1 is 0 either way, so
+        // nothing seals or drops early, and the post-batch watermark
+        // jumps past every session end + gap in one step; sentinel B's
+        // batch then fires ALL the expired timers — a data batch
+        // processAllAvailable provably drains. Emitted set unchanged.
+        replay(s, HdfsState)(_ =>
           StreamingOps.sessionizeWithState(ms.toDS(), gapMinutes = 30,
               watermark = "1 hour")
             .writeStream.format("memory").queryName("graft_stream_sessions")
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => { ms.addData(evs.toIndexedSeq: _*); ms.addData(sentinelA) },
+          () => ms.addData(sentinelB)) { _ =>
+          s.table("graft_stream_sessions")
+            .filter(col("user_id") >= 0)
+            .select(col("user_id"), col("session_start_us"),
+              col("session_end_us"), col("n_events"))
         }
-        try {
-          // sentinel A rides the data batch (r17, the q_stream_outer
-          // argument): the watermark during batch 1 is 0 either way, so
-          // nothing seals or drops early, and the post-batch watermark
-          // jumps past every session end + gap in one step; sentinel B's
-          // batch then fires ALL the expired timers — a data batch
-          // processAllAvailable provably drains. Emitted set unchanged.
-          ms.addData(evs.toIndexedSeq: _*); ms.addData(sentinelA)
-          q.processAllAvailable()
-          ms.addData(sentinelB)
-          q.processAllAvailable()
-        } finally q.stop()
-        s.table("graft_stream_sessions")
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"), col("session_start_us"),
-            col("session_end_us"), col("n_events"))
       },
       s"""WITH flagged AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -425,26 +568,16 @@ object StreamQueries {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val evs: Array[Ev] = evSlice(s, dir)
-        val confKey = "spark.sql.streaming.stateStore.providerClass"
-        val saved = scala.util.Try(s.conf.get(confKey)).toOption
-        s.conf.set(confKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val ms = MemoryStream[Ev]
-          val q = withReplayPartitions(s) {
-            StreamingOps.distinctUsersSketch(ms.toDS())
-              .writeStream.format("memory").queryName("graft_stream_hll")
-              .outputMode("update").start()
-          }
-          try { ms.addData(evs.toIndexedSeq: _*); q.processAllAvailable() }
-          finally q.stop()
-        } finally saved match {
-          case Some(v) => s.conf.set(confKey, v)
-          case None    => s.conf.unset(confKey)
+        val ms = MemoryStream[Ev]
+        replay(s, RocksDbState)(_ =>
+          StreamingOps.distinctUsersSketch(ms.toDS())
+            .writeStream.format("memory").queryName("graft_stream_hll")
+            .outputMode("update").start())(
+          () => ms.addData(evs.toIndexedSeq: _*)) { _ =>
+          s.table("graft_stream_hll")
+            .select(col("event_type"), col("regs_hit"), col("harmonic"),
+              col("hll_estimate"))
         }
-        s.table("graft_stream_hll")
-          .select(col("event_type"), col("regs_hit"), col("harmonic"),
-            col("hll_estimate"))
       },
       s"""WITH h AS (
         |  SELECT event_type,
@@ -479,26 +612,16 @@ object StreamQueries {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val evs: Array[Ev] = evSlice(s, dir)
-        val confKey = "spark.sql.streaming.stateStore.providerClass"
-        val saved = scala.util.Try(s.conf.get(confKey)).toOption
-        s.conf.set(confKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val ms = MemoryStream[Ev]
-          val q = withReplayPartitions(s) {
-            StreamingOps.frequencySketch(ms.toDS(), CmsProbeId)
-              .writeStream.format("memory").queryName("graft_stream_cms")
-              .outputMode("update").start()
-          }
-          try { ms.addData(evs.toIndexedSeq: _*); q.processAllAvailable() }
-          finally q.stop()
-        } finally saved match {
-          case Some(v) => s.conf.set(confKey, v)
-          case None    => s.conf.unset(confKey)
+        val ms = MemoryStream[Ev]
+        replay(s, RocksDbState)(_ =>
+          StreamingOps.frequencySketch(ms.toDS(), CmsProbeId)
+            .writeStream.format("memory").queryName("graft_stream_cms")
+            .outputMode("update").start())(
+          () => ms.addData(evs.toIndexedSeq: _*)) { _ =>
+          s.table("graft_stream_cms")
+            .select(col("event_type"), col("n"), col("nonzero"),
+              col("max_c"), col("probe_est"))
         }
-        s.table("graft_stream_cms")
-          .select(col("event_type"), col("n"), col("nonzero"),
-            col("max_c"), col("probe_est"))
       },
       s"""WITH h AS (
         |  SELECT event_type,
@@ -537,31 +660,23 @@ object StreamQueries {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val evs: Array[Ev] = evSlice(s, dir)
-        val maxTsMs = evs.iterator.map(_.ts.getTime).max
-        val sentinelA = Ev(-1L, new Timestamp(maxTsMs + (3600L + 3600L + 60L) * 1000L),
-          "sentinel", 0.0)
-        val sentinelB = Ev(-1L, new Timestamp(sentinelA.ts.getTime + 1000L),
-          "sentinel", 0.0)
+        val (sentinelA, sentinelB) = evSentinels(evs, 3600L + 3600L + 60L)
         val ms = MemoryStream[Ev]
-        val q = withReplayPartitions(s) {
+        // sentinel A rides the data batch — same argument as
+        // q_stream_sessionize: watermark 0 during batch 1, then one
+        // jump past every real bucket end; sentinel B's data batch
+        // emits the closed buckets
+        replay(s, HdfsState)(_ =>
           StreamingOps.hourlyEventCounts(ms.toDF(), watermark = "1 hour")
             .writeStream.format("memory").queryName("graft_stream_hourly")
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => { ms.addData(evs.toIndexedSeq: _*); ms.addData(sentinelA) },
+          () => ms.addData(sentinelB)) { _ =>
+          s.table("graft_stream_hourly")
+            .filter(col("event_type") =!= "sentinel")
+            .select(date_format(col("bucket_start"), "yyyy-MM-dd HH").as("hour"),
+              col("event_type"), col("n_events"), col("total_value"))
         }
-        try {
-          // sentinel A rides the data batch — same argument as
-          // q_stream_sessionize: watermark 0 during batch 1, then one
-          // jump past every real bucket end; sentinel B's data batch
-          // emits the closed buckets
-          ms.addData(evs.toIndexedSeq: _*); ms.addData(sentinelA)
-          q.processAllAvailable()
-          ms.addData(sentinelB)
-          q.processAllAvailable()
-        } finally q.stop()
-        s.table("graft_stream_hourly")
-          .filter(col("event_type") =!= "sentinel")
-          .select(date_format(col("bucket_start"), "yyyy-MM-dd HH").as("hour"),
-            col("event_type"), col("n_events"), col("total_value"))
       },
       """SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
         |       count(*) AS n_events,
@@ -596,34 +711,23 @@ object StreamQueries {
         val all: Array[Ev] = evSlice(s, dir)
         val onTime = all.filter(_.user_id % 7 != 0)
         val late = all.filter(_.user_id % 7 == 0)
-        val maxTsMs = all.iterator.map(_.ts.getTime).max
-        val sentinelA = Ev(-1L, new Timestamp(maxTsMs + (3600L + 3600L + 60L) * 1000L),
-          "sentinel", 0.0)
-        val sentinelB = Ev(-1L, new Timestamp(sentinelA.ts.getTime + 1000L),
-          "sentinel", 0.0)
+        val (sentinelA, sentinelB) = evSentinels(all, 3600L + 3600L + 60L)
         val ms = MemoryStream[Ev]
-        val q = withReplayPartitions(s) {
+        // the engine's own account of the drop — summed across batches
+        // and state operators from the stopped query's progress log
+        // (only the late batch can drop: batch 1 runs at watermark 0,
+        // sentinels are newest)
+        val droppedN = replay(s, HdfsState)(_ =>
           StreamingOps.hourlyEventCounts(ms.toDF(), watermark = "1 hour")
             .writeStream.format("memory").queryName("graft_stream_late")
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => ms.addData(onTime.toIndexedSeq: _*), // watermark now = max(on-time) − 1 h
+          () => ms.addData(late.toIndexedSeq: _*), // the drop batch
+          () => ms.addData(sentinelA),
+          () => ms.addData(sentinelB)) { q =>
+          q.recentProgress.iterator.flatMap(_.stateOperators.iterator)
+            .map(_.numRowsDroppedByWatermark).sum
         }
-        try {
-          ms.addData(onTime.toIndexedSeq: _*)
-          q.processAllAvailable() // watermark now = max(on-time) − 1 h
-          ms.addData(late.toIndexedSeq: _*)
-          q.processAllAvailable() // the drop batch
-          ms.addData(sentinelA)
-          q.processAllAvailable()
-          ms.addData(sentinelB)
-          q.processAllAvailable()
-        } finally q.stop()
-        // the engine's own account of the drop — summed across batches
-        // and state operators from the progress log (only the late
-        // batch can drop: batch 1 runs at watermark 0, sentinels are
-        // newest)
-        val droppedN = q.recentProgress.iterator
-          .flatMap(_.stateOperators.iterator)
-          .map(_.numRowsDroppedByWatermark).sum
         s.table("graft_stream_late")
           .filter(col("event_type") =!= "sentinel")
           .select(date_format(col("bucket_start"), "yyyy-MM-dd HH").as("hour"),
@@ -673,22 +777,20 @@ object StreamQueries {
         val msR = MemoryStream[(Long, Timestamp, Long)]
         val left = msL.toDF().toDF("user_id", "l_ts", "l_event_id")
         val right = msR.toDF().toDF("user_id", "r_ts", "r_event_id")
-        val ckpt = replayCheckpointDir()
-        val q = withReplayPartitions(s) {
+        replay(s, HdfsState)(ckpt =>
           StreamingOps.joinWithinWatermark(left, right, "user_id",
               "l_ts", "r_ts", within = "30 minutes")
             .select(col("user_id"), col("l_event_id"), col("r_event_id"))
             .writeStream.format("memory").queryName("graft_stream_join")
             .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => {
+            msL.addData(rows.toIndexedSeq: _*)
+            msR.addData(rows.toIndexedSeq: _*)
+          }) { _ =>
+          s.table("graft_stream_join")
+            .select(col("user_id"), col("l_event_id"), col("r_event_id"))
         }
-        try {
-          msL.addData(rows.toIndexedSeq: _*)
-          msR.addData(rows.toIndexedSeq: _*)
-          q.processAllAvailable()
-        } finally { q.stop(); cleanupCheckpoint(ckpt) }
-        s.table("graft_stream_join")
-          .select(col("user_id"), col("l_event_id"), col("r_event_id"))
       },
       """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0)
         |SELECT l.user_id, l.event_id AS l_event_id, r.event_id AS r_event_id
@@ -742,31 +844,29 @@ object StreamQueries {
         val msR = MemoryStream[(Long, Timestamp, Long)]
         val left = msL.toDF().toDF("user_id", "l_ts", "l_event_id")
         val right = msR.toDF().toDF("user_id", "r_ts", "r_event_id")
-        val ckpt = replayCheckpointDir()
-        val q = withReplayPartitions(s) {
+        // sentA RIDES the data batch (r16 task 2 — one fewer sealing
+        // round): the watermark during batch 1 is still 0, so every
+        // match emits exactly as it did when sentA had its own round,
+        // and the post-batch watermark jumps past every window in one
+        // step; the emitted row SET is unchanged
+        replay(s, HdfsState)(ckpt =>
           StreamingOps.joinWithinWatermark(left, right, "user_id",
               "l_ts", "r_ts", within = "30 minutes", joinType = "left_outer")
             .select(col("user_id"), col("l_event_id"), col("r_event_id"))
             .writeStream.format("memory").queryName("graft_stream_outer")
             .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => { // matches emit; watermark jumps
+            msL.addData(rows.toIndexedSeq: _*); msL.addData(sentA)
+            msR.addData(rightRows.toIndexedSeq: _*); msR.addData(sentA)
+          },
+          // expiry emissions ride a DATA batch
+          () => { msL.addData(sentB); msR.addData(sentB) }) { _ =>
+          s.table("graft_stream_outer")
+            .filter(col("user_id") >= 0)
+            .select(col("user_id"), col("l_event_id"),
+              coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
         }
-        try {
-          // sentA RIDES the data batch (r16 task 2 — one fewer sealing
-          // round): the watermark during batch 1 is still 0, so every
-          // match emits exactly as it did when sentA had its own round,
-          // and the post-batch watermark jumps past every window in one
-          // step; the emitted row SET is unchanged
-          msL.addData(rows.toIndexedSeq: _*); msL.addData(sentA)
-          msR.addData(rightRows.toIndexedSeq: _*); msR.addData(sentA)
-          q.processAllAvailable() // matches emit; watermark jumps
-          msL.addData(sentB); msR.addData(sentB)
-          q.processAllAvailable() // expiry emissions ride a DATA batch
-        } finally { q.stop(); cleanupCheckpoint(ckpt) }
-        s.table("graft_stream_outer")
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"), col("l_event_id"),
-            coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
       },
       """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
         |clk AS (SELECT * FROM half WHERE event_id % 3 = 0)
@@ -801,29 +901,27 @@ object StreamQueries {
         val msR = MemoryStream[(Long, Timestamp, Long)]
         val left = msL.toDF().toDF("user_id", "l_ts", "l_event_id")
         val right = msR.toDF().toDF("user_id", "r_ts", "r_event_id")
-        val ckpt = replayCheckpointDir()
-        val q = withReplayPartitions(s) {
+        // sentA rides the data batch — same one-fewer-round argument
+        // as q_stream_outer, on both sides
+        replay(s, HdfsState)(ckpt =>
           StreamingOps.joinWithinWatermark(left, right, "user_id",
               "l_ts", "r_ts", within = "30 minutes", joinType = "full_outer")
             .select(col("user_id"), col("l_event_id"), col("r_event_id"))
             .writeStream.format("memory").queryName("graft_stream_full_outer")
             .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => { // matches emit; watermark jumps
+            msL.addData(leftRows.toIndexedSeq: _*); msL.addData(sentA)
+            msR.addData(rightRows.toIndexedSeq: _*); msR.addData(sentA)
+          },
+          // expiry emissions ride a DATA batch
+          () => { msL.addData(sentB); msR.addData(sentB) }) { _ =>
+          s.table("graft_stream_full_outer")
+            .filter(col("user_id") >= 0)
+            .select(col("user_id"),
+              coalesce(col("l_event_id"), lit(-1L)).as("l_event_id"),
+              coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
         }
-        try {
-          // sentA rides the data batch — same one-fewer-round argument
-          // as q_stream_outer, on both sides
-          msL.addData(leftRows.toIndexedSeq: _*); msL.addData(sentA)
-          msR.addData(rightRows.toIndexedSeq: _*); msR.addData(sentA)
-          q.processAllAvailable() // matches emit; watermark jumps
-          msL.addData(sentB); msR.addData(sentB)
-          q.processAllAvailable() // expiry emissions ride a DATA batch
-        } finally { q.stop(); cleanupCheckpoint(ckpt) }
-        s.table("graft_stream_full_outer")
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"),
-            coalesce(col("l_event_id"), lit(-1L)).as("l_event_id"),
-            coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
       },
       """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
         |l AS (SELECT * FROM half WHERE event_id % 2 = 0),
@@ -848,15 +946,14 @@ object StreamQueries {
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val evs: Array[Ev] = evSlice(s, dir)
         val ms = MemoryStream[Ev]
-        val q = withReplayPartitions(s) {
+        replay(s, HdfsState)(_ =>
           StreamingOps.dedupWithinWatermark(ms.toDF(),
               Seq("user_id", "event_type"), "ts", "1 hour")
             .writeStream.format("memory").queryName("graft_stream_dedup")
-            .outputMode("append").start()
+            .outputMode("append").start())(
+          () => ms.addData(evs.toIndexedSeq: _*)) { _ =>
+          s.table("graft_stream_dedup").select(col("user_id"), col("event_type"))
         }
-        try { ms.addData(evs.toIndexedSeq: _*); q.processAllAvailable() }
-        finally q.stop()
-        s.table("graft_stream_dedup").select(col("user_id"), col("event_type"))
       },
       """SELECT DISTINCT user_id, event_type FROM events"""),
 
@@ -878,23 +975,12 @@ object StreamQueries {
           // the MG item is user_id: collapse 2/3 of rows onto sentinel
           // -7 so each event_type has one genuinely heavy item
           .map(e => if (e.user_id % 3 != 0) e.copy(user_id = -7L) else e)
-        val confKey = "spark.sql.streaming.stateStore.providerClass"
-        val saved = scala.util.Try(s.conf.get(confKey)).toOption
-        s.conf.set(confKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val ms = MemoryStream[Ev]
-          val q = withReplayPartitions(s) {
-            StreamingOps.heavyHittersSketch(ms.toDS(), k = mgK)
-              .writeStream.format("memory").queryName("graft_stream_mg")
-              .outputMode("update").start()
-          }
-          try { ms.addData(evs.toIndexedSeq: _*); q.processAllAvailable() }
-          finally q.stop()
-        } finally saved match {
-          case Some(v) => s.conf.set(confKey, v)
-          case None    => s.conf.unset(confKey)
-        }
+        val ms = MemoryStream[Ev]
+        replay(s, RocksDbState)(_ =>
+          StreamingOps.heavyHittersSketch(ms.toDS(), k = mgK)
+            .writeStream.format("memory").queryName("graft_stream_mg")
+            .outputMode("update").start())(
+          () => ms.addData(evs.toIndexedSeq: _*))(_ => ())
         // exact per-(key, item) counts over the SAME collapsed stream
         val exact = s.createDataset(evs.toIndexedSeq).toDF()
           .groupBy(col("event_type"), col("user_id"))
@@ -959,7 +1045,6 @@ object StreamQueries {
           .as[Chg], "CDC change replay slice")
           .sortBy(c => (c.ts_us, c.event_id))
         val slices = changes.grouped(math.max(1, (changes.length + 2) / 3)).toSeq
-        val tmp = replayTmpDir("graft_stream_cdc")
         // written from the stream-execution thread, read from this one
         // after stop() — needs the fence an unsynchronized var lacks
         val snapDir = new java.util.concurrent.atomic.AtomicReference[Option[String]](None)
@@ -967,8 +1052,13 @@ object StreamQueries {
           "event_id" -> col("chg.event_id"), "ts_us" -> col("chg.ts_us"),
           "event_type" -> col("chg.event_type"), "value" -> col("chg.value"))
         val ms = MemoryStream[Chg]
-        val q = ms.toDS().writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Chg], id: Long) =>
+        // the snapshots live in the run's scratch dir, so the final one
+        // is materialized locally (one row per surviving key — small by
+        // construction) before the driver deletes them: leaving them
+        // would leak 3 parquet dirs per invocation across every Verify
+        // dump and Bench run
+        val out = replay(s, Stateless)(tmp => ms.toDS().writeStream
+          .foreachBatch { (batch: Dataset[Chg], id: Long) =>
             val base = snapDir.get().map(p => s.read.parquet(p))
               .getOrElse(s.emptyDataset[Snap].toDF())
             val next = graft.operators.Cdc.applyChanges(
@@ -977,24 +1067,14 @@ object StreamQueries {
             next.write.mode("overwrite").parquet(out)
             snapDir.set(Some(out))
           }
-          .start()
-        try slices.foreach { sl => ms.addData(sl.toIndexedSeq: _*); q.processAllAvailable() }
-        finally q.stop()
-        // materialize the final snapshot locally (one row per surviving
-        // key — small by construction) and DELETE the temp snapshots:
-        // leaving them would leak 3 parquet dirs per invocation across
-        // every Verify dump and Bench run
-        val out =
-          try s.read.parquet(snapDir.get().getOrElse(
+          .start())(
+          slices.map[() => Unit](sl => () => ms.addData(sl.toIndexedSeq: _*)): _*) { _ =>
+          s.read.parquet(snapDir.get().getOrElse(
               sys.error("q_stream_cdc: no micro-batch ran")))
             .select(col("user_id"), col("event_id"), col("ts_us"),
               col("event_type"), col("value"))
             .as[Snap].collect()
-          finally {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-              .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+        }
         s.createDataset(out.toIndexedSeq).toDF()
           .select(col("user_id"), col("event_id"), col("ts_us"),
             col("event_type"), col("value"))
@@ -1028,42 +1108,15 @@ object StreamQueries {
     // cells only (the replay-discipline contract above).
     "q_stream_ingest" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val emb = Tables.embeddings(s, dir)
-        val standing = emb.filter(col("vec_id") % 10 < 8)
-        val rows = ingestSlice(s, dir)
-        val batch1 = rows.filter(_._1 % 10 == 8)
-        val batch2 = rows.filter(_._1 % 10 == 9)
+        val standing = Tables.embeddings(s, dir).filter(col("vec_id") % 10 < 8)
         val cents = graft.operators.IvfCentroids.cells
         // seeded-store TEMPLATE built once per sf dir (standing corpus
         // + frozen quantizer are deterministic, so the seed trees are
         // byte-identical every time); shared with q_stream_ingest_remove,
         // which replays the same fold before its takedown
-        val tmp = ReplayShared.storeCopy(flatIngestTemplate(s, dir, standing))
-        // the WHOLE stream body owns the tmp store's deletion: a failure
-        // inside addData/processAllAvailable must not leak the RAM-backed
-        // /dev/shm dirs across Verify/Bench runs (r15 ADVICE; the
-        // q_stream_cdc pattern)
-        val out =
-          try {
-            val store = new graft.streaming.SemDedupIngest.Store(
-              s, tmp, "vec_id", "embedding")
-            val ms = MemoryStream[(Long, Array[Float])]
-            val q = graft.streaming.SemDedupIngest.dedupIngestStream(
-              ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              threshold = 0.4, cents, store).start()
-            try {
-              ms.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-              ms.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-            } finally q.stop()
-            survivorCells(s, store)
-          } finally {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-              .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        s.createDataset(out.toIndexedSeq).toDF("vec_id", "cell")
+        ingestReplay(s, dir, flatIngestTemplate(s, dir, standing))(
+          SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
+            threshold = 0.4, cents, _))(survivorCells(s, _))
       },
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
@@ -1075,26 +1128,8 @@ object StreamQueries {
         |             cents.cell) AS crank
         |    FROM e CROSS JOIN cents)
         |  WHERE crank <= 2),
-        |edges AS MATERIALIZED (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |surv1 AS MATERIALIZED (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
-        |surv2 AS (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id2 % 10 = 9
-        |                         AND (id1 % 10 < 8
-        |                              OR id1 IN (SELECT vec_id FROM surv1))))
+        |$cellEdgesCte,
+        |${ingestFoldCtes()}
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE crank = 1
@@ -1115,65 +1150,23 @@ object StreamQueries {
     // (q_stream_ingest's surv1/surv2 CTEs on the hier assignment).
     "q_stream_ingest_hier" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val emb = Tables.embeddings(s, dir)
-        val standing = emb.filter(col("vec_id") % 10 < 8)
+        val standing = Tables.embeddings(s, dir).filter(col("vec_id") % 10 < 8)
         val cents = SimilarityQueries.HierCentroids
-        val rows = ingestSlice(s, dir)
-        val batch1 = rows.filter(_._1 % 10 == 8)
-        val batch2 = rows.filter(_._1 % 10 == 9)
         val tpl = ReplayShared.seededTemplate(
             sfKey("ingest_hier", dir) + "#" + centsToken(cents)) { d =>
           val idx = graft.operators.SemDedup.probedIndexHier(
             standing, "vec_id", "embedding", cents)
-          new graft.streaming.SemDedupIngest.Store(
-            s, d, "vec_id", "embedding").seed(standing, idx)
+          new SemDedupIngest.Store(s, d, "vec_id", "embedding").seed(standing, idx)
         }
-        val tmp = ReplayShared.storeCopy(tpl)
-        val out =
-          try {
-            val store = new graft.streaming.SemDedupIngest.Store(
-              s, tmp, "vec_id", "embedding")
-            val ms = MemoryStream[(Long, Array[Float])]
-            val q = graft.streaming.SemDedupIngest.dedupIngestStream(
-              ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              threshold = 0.4, cents, store).start()
-            try {
-              ms.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-              ms.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-            } finally q.stop()
-            survivorCells(s, store)
-          } finally {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-              .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        s.createDataset(out.toIndexedSeq).toDF("vec_id", "cell")
+        ingestReplay(s, dir, tpl)(
+          SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
+            threshold = 0.4, cents, _))(survivorCells(s, _))
       },
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |${SimilarityQueries.hierQuantizerCtes(4100, 64, 8, "hc")},
         |${SimilarityQueries.hierAssignCtes("", "", 2, 2, 8, keepRank = true)},
-        |edges AS MATERIALIZED (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |surv1 AS MATERIALIZED (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
-        |surv2 AS (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id2 % 10 = 9
-        |                         AND (id1 % 10 < 8
-        |                              OR id1 IN (SELECT vec_id FROM surv1))))
+        |$cellEdgesCte,
+        |${ingestFoldCtes()}
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE rank = 1
@@ -1197,43 +1190,22 @@ object StreamQueries {
     "q_stream_ingest_srp" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val emb = Tables.embeddings(s, dir)
-        val standing = emb.filter(col("vec_id") % 10 < 8)
+        val standing = Tables.embeddings(s, dir).filter(col("vec_id") % 10 < 8)
         val n = ReplayShared.memo(sfKey("standing_n", dir))(standing.count())
         val m = graft.operators.Dedup.SrpManifest(n,
           graft.operators.Similarity.srpPlanesFor(n, 128), 16, 128)
-        val rows = ingestSlice(s, dir)
-        val batch1 = rows.filter(_._1 % 10 == 8)
-        val batch2 = rows.filter(_._1 % 10 == 9)
+        val srpCols = Seq("table", "bucket")
         val tpl = ReplayShared.seededTemplate(
             sfKey("ingest_srp", dir) + "#" + m.toString) { d =>
           val codes = graft.operators.Dedup.srpIndex(standing, "vec_id",
             "embedding", dim = 64, planes = m.planes, tables = m.tables)
-          new graft.streaming.SemDedupIngest.Store(s, d, "vec_id",
-            "embedding", indexCols = Seq("table", "bucket"))
+          new SemDedupIngest.Store(s, d, "vec_id", "embedding", indexCols = srpCols)
             .seed(standing, codes)
         }
-        val tmp = ReplayShared.storeCopy(tpl)
-        val out =
-          try {
-            val store = new graft.streaming.SemDedupIngest.Store(
-              s, tmp, "vec_id", "embedding", indexCols = Seq("table", "bucket"))
-            val ms = MemoryStream[(Long, Array[Float])]
-            val q = graft.streaming.SemDedupIngest.srpIngestStream(
-              ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              dim = 64, threshold = 0.4, m, store).start()
-            try {
-              ms.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-              ms.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-            } finally q.stop()
-            collectReplay(store.ingestedIds.as[Long],
-              "srp ingest gate survivor read")
-          } finally {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-              .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+        val out = ingestReplay(s, dir, tpl, indexCols = srpCols)(
+          SemDedupIngest.srpIngestStream(_, "vec_id", "embedding",
+            dim = 64, threshold = 0.4, m, _))(store =>
+          collectReplay(store.ingestedIds.as[Long], "srp ingest gate survivor read"))
         s.createDataset(out.toIndexedSeq).toDF("vec_id")
           .withColumn("planes", lit(m.planes.toLong))
       },
@@ -1255,20 +1227,7 @@ object StreamQueries {
         |  JOIN e qe ON qe.vec_id = a.vec_id
         |  JOIN e ce ON ce.vec_id = b2.vec_id
         |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |surv1 AS MATERIALIZED (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
-        |surv2 AS (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id2 % 10 = 9
-        |                         AND (id1 % 10 < 8
-        |                              OR id1 IN (SELECT vec_id FROM surv1))))
+        |${ingestFoldCtes()}
         |SELECT vec_id, CAST((SELECT p FROM pl) AS BIGINT) AS planes
         |FROM e
         |WHERE vec_id IN (SELECT vec_id FROM surv1)
@@ -1288,38 +1247,17 @@ object StreamQueries {
     // survivor set and hash-mismatches here.
     "q_stream_ingest_remove" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val emb = Tables.embeddings(s, dir)
         val standing = emb.filter(col("vec_id") % 10 < 8)
-        val rows = ingestSlice(s, dir)
-        val batch1 = rows.filter(_._1 % 10 == 8)
-        val batch2 = rows.filter(_._1 % 10 == 9)
         val cents = graft.operators.IvfCentroids.cells
         // SAME template as q_stream_ingest (same corpus, same quantizer)
-        val tmp = ReplayShared.storeCopy(flatIngestTemplate(s, dir, standing))
-        val out =
-          try {
-            val store = new graft.streaming.SemDedupIngest.Store(
-              s, tmp, "vec_id", "embedding")
-            val ms = MemoryStream[(Long, Array[Float])]
-            val q = graft.streaming.SemDedupIngest.dedupIngestStream(
-              ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              threshold = 0.4, cents, store).start()
-            try {
-              ms.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-              store.remove(emb.filter(col("vec_id") % 20 === 0
-                || col("vec_id") % 20 === 8).select(col("vec_id")))
-              store.vacuum(upToExclusive = 1)
-              ms.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-            } finally q.stop()
-            survivorCells(s, store)
-          } finally {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-              .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        s.createDataset(out.toIndexedSeq).toDF("vec_id", "cell")
+        ingestReplay(s, dir, flatIngestTemplate(s, dir, standing),
+          between = { store =>
+            store.remove(emb.filter(col("vec_id") % 20 === 0
+              || col("vec_id") % 20 === 8).select(col("vec_id")))
+            store.vacuum(upToExclusive = 1)
+          })(SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
+            threshold = 0.4, cents, _))(survivorCells(s, _))
       },
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
@@ -1331,27 +1269,8 @@ object StreamQueries {
         |             cents.cell) AS crank
         |    FROM e CROSS JOIN cents)
         |  WHERE crank <= 2),
-        |edges AS MATERIALIZED (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |surv1 AS MATERIALIZED (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
-        |surv2 AS (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id2 % 10 = 9
-        |                         AND id1 % 20 <> 0 AND id1 % 20 <> 8
-        |                         AND (id1 % 10 < 8
-        |                              OR id1 IN (SELECT vec_id FROM surv1))))
+        |$cellEdgesCte,
+        |${ingestFoldCtes("id1 % 20 <> 0 AND id1 % 20 <> 8")}
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE crank = 1
@@ -1380,18 +1299,11 @@ object StreamQueries {
     // or a fold that lost the recovery handoff each hash-mismatch.
     "q_stream_rebuild" -> QueryDef(
       (s, dir) => {
-        import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         import graft.operators.{SemDedup, Similarity}
-        import graft.streaming.SemDedupIngest
-        val emb = Tables.embeddings(s, dir)
-        val standing = emb.filter(col("vec_id") % 10 < 8)
+        val standing = Tables.embeddings(s, dir).filter(col("vec_id") % 10 < 8)
         val n = ReplayShared.memo(sfKey("standing_n", dir))(standing.count())
         val mOld = SemDedup.QuantizerManifest(n / 8,
           SemDedup.cellsFor(n / 8), 2, 128)
-        val rows = ingestSlice(s, dir)
-        val batch1 = rows.filter(_._1 % 10 == 8)
-        val batch2 = rows.filter(_._1 % 10 == 9)
         def messages(t: Throwable): Seq[String] =
           Option(t).toSeq.flatMap(x =>
             Option(x.getMessage).toSeq ++ messages(x.getCause))
@@ -1405,28 +1317,23 @@ object StreamQueries {
               .seed(standing, SemDedup.probedIndex(
                 standing, "vec_id", "embedding", centsOld))
           }
-          val tmpStale = ReplayShared.storeCopy(tplStale)
-          try {
-            val staleStore = new SemDedupIngest.Store(
-              s, tmpStale, "vec_id", "embedding")
-            val msS = MemoryStream[(Long, Array[Float])]
-            val qS = SemDedupIngest.dedupIngestStream(
-              msS.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              threshold = 0.4, centsOld, staleStore,
-              manifest = Some(mOld)).start()
-            val killed =
-              try {
-                msS.addData(batch1.toIndexedSeq: _*)
-                try { qS.processAllAvailable(); None }
-                catch { case e: Exception => Some(e) }
-              } finally qS.stop()
-            require(killed.exists(e => messages(e).exists(m =>
-              m.contains("STALE") && m.contains("probedIndexRebuild"))),
-              "q_stream_rebuild: the staleness gate did not kill the " +
-                s"stale stream — got ${killed.map(messages)}")
-            require(staleStore.ingestedIds.count() == 0L,
-              "q_stream_rebuild: the refused batch landed in the stale store")
-          } finally cleanupCheckpoint(tmpStale)
+          // the first batch's drain dies, so the second is never fed;
+          // the read still sees the stale store the refused batch hit
+          var landed = -1L
+          val killed =
+            try {
+              ingestReplay(s, dir, tplStale)(
+                SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
+                  threshold = 0.4, centsOld, _, manifest = Some(mOld)))(
+                store => landed = store.ingestedIds.count())
+              None
+            } catch { case e: Exception => Some(e) }
+          require(killed.exists(e => messages(e).exists(m =>
+            m.contains("STALE") && m.contains("probedIndexRebuild"))),
+            "q_stream_rebuild: the staleness gate did not kill the " +
+              s"stale stream — got ${killed.map(messages)}")
+          require(landed == 0L, "q_stream_rebuild: the refused batch landed " +
+            s"in the stale store (ingested rows: $landed, -1 = unreadable)")
         }
         // phase 2: rebuild whenever the sizing rule's k moved at all —
         // the oracle ALWAYS codes at (n+127)//128, and inside the 2x
@@ -1457,21 +1364,9 @@ object StreamQueries {
           new SemDedupIngest.Store(s, d, "vec_id", "embedding")
             .seed(standing, idx2)
         }
-        val tmp = ReplayShared.storeCopy(tpl2)
-        val out =
-          try {
-            val store = new SemDedupIngest.Store(s, tmp, "vec_id", "embedding")
-            val ms = MemoryStream[(Long, Array[Float])]
-            val q = SemDedupIngest.dedupIngestStream(
-              ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              threshold = 0.4, cents2, store, manifest = Some(m2)).start()
-            try {
-              ms.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-              ms.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-            } finally q.stop()
-            survivorCells(s, store)
-          } finally cleanupCheckpoint(tmp)
-        s.createDataset(out.toIndexedSeq).toDF("vec_id", "cell")
+        ingestReplay(s, dir, tpl2)(
+          SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
+            threshold = 0.4, cents2, _, manifest = Some(m2)))(survivorCells(s, _))
           .unionByName(s.range(1).select(
             lit(-1L).as("vec_id"), lit(m2.k.toLong).as("cell")))
       },
@@ -1493,26 +1388,8 @@ object StreamQueries {
         |             fc.c) AS crank
         |    FROM e CROSS JOIN fc)
         |  WHERE crank <= 2),
-        |edges AS MATERIALIZED (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |surv1 AS MATERIALIZED (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 < 8 AND id2 % 10 = 8)),
-        |surv2 AS (
-        |  SELECT vec_id FROM e WHERE vec_id % 10 = 9
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id1 % 10 = 9 AND id2 % 10 = 9 AND id1 < id2)
-        |    AND vec_id NOT IN (SELECT id2 FROM edges
-        |                       WHERE id2 % 10 = 9
-        |                         AND (id1 % 10 < 8
-        |                              OR id1 IN (SELECT vec_id FROM surv1))))
+        |$cellEdgesCte,
+        |${ingestFoldCtes()}
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE crank = 1

@@ -40,13 +40,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("size-ratio prune is exact: pruned path == default path") {
-    val pruned = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
-      minJaccard = 0.5, sizePrune = true)
-    val default = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, minJaccard = 0.5)
-    assert(pruned.exceptAll(default).isEmpty && default.exceptAll(pruned).isEmpty)
-  }
-
   test("signatures are stable across partitionings (determinism)") {
     val s1 = Dedup.minhashSignatures(docs, "doc_id", "text")
     val s4 = Dedup.minhashSignatures(docs.repartition(7), "doc_id", "text")

@@ -344,6 +344,60 @@ class StreamQueriesSpec extends SparkSpec {
     }
   }
 
+  test("the replay driver deletes its scratch dir and restores its confs when start or a fed batch fails") {
+    import graft.queries.StreamQueries
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val partitionsKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    def confs() = (spark.conf.get(partitionsKey), spark.conf.get(providerKey))
+    val sessionPartitions = spark.conf.get(partitionsKey)
+    // a value the driver's own replay partition count cannot mask
+    spark.conf.set(partitionsKey, "7")
+    try {
+      val before = confs()
+      assert(!before._2.contains("RocksDB"))
+      var scratch = ""
+      var held = ("", "")
+      // 1. start() throws: nothing was fed, the scratch dir still goes
+      val e1 = intercept[IllegalStateException](
+        StreamQueries.replay(spark, StreamQueries.RocksDbState) { dir =>
+          scratch = dir
+          held = confs()
+          throw new IllegalStateException("start refused")
+        }()(_ => ()))
+      assert(e1.getMessage == "start refused")
+      assert(held._1 == "4" && held._2.contains("RocksDB"),
+        s"confs while the stream plans: $held")
+      assert(scratch.nonEmpty && !Files.exists(Paths.get(scratch)),
+        s"a failed start leaked its scratch dir $scratch")
+      assert(confs() == before)
+
+      // 2. a fed micro-batch fails: the drain rethrows it after stop(),
+      // read still sees the stopped query and the live scratch dir,
+      // which holds the checkpoint the batch wrote — then both go
+      val ms = MemoryStream[Long]
+      var readSaw: Option[(Boolean, Boolean)] = None
+      val e2 = intercept[StreamingQueryException](
+        StreamQueries.replay(spark, StreamQueries.RocksDbState) { dir =>
+          scratch = dir
+          ms.toDS().map(v => if (v == 13L) sys.error("poisoned row") else v)
+            .writeStream.format("memory").queryName("spec_replay_fail")
+            .option("checkpointLocation", dir).outputMode("append").start()
+        }(() => ms.addData(1L, 13L)) { q =>
+          readSaw = Some((q.isActive, Files.isDirectory(Paths.get(scratch, "offsets"))))
+        })
+      assert(e2.getMessage.contains("poisoned row"))
+      assert(readSaw.contains((false, true)), s"read saw (active, offsets dir): $readSaw")
+      assert(!Files.exists(Paths.get(scratch)),
+        s"a failed batch leaked its scratch dir $scratch")
+      assert(confs() == before)
+    } finally spark.conf.set(partitionsKey, sessionPartitions)
+  }
+
   test("ReplayShared.storeCopy cleans up the partial destination on a mid-copy failure") {
     import scala.jdk.CollectionConverters._
     val base = {
