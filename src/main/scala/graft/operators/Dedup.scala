@@ -233,9 +233,6 @@ object Dedup {
       .select(col(idCol), coalesce(col("simhash"), lit(0L)).as("simhash"))
   }
 
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   // ------------------------------------------- embedding-cosine near-dups
 
   /** Embedding-space near-duplicate pairs: SRP-LSH candidate generation

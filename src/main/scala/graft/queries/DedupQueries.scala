@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.operators.Dedup
+import OracleSql._
 
 /** Near-duplicate detection over `documents`. Every query here is
   * DuckDB-oracle-verified: the sketch queries run with
@@ -17,18 +18,13 @@ object DedupQueries {
 
   private val P = graft.functions.SketchAggs.MersenneP // 2^31 − 1
 
-  /** Shared CTE prefix: tokens → 3-gram shingles → distinct (id, shingle)
-    * — identical to the q_ngram_jaccard oracle so the two stay in sync. */
+  /** The 3-gram shingles per document as `sh(id, shingle)`. */
+  private val Shingles = shingleCtes("doc_id AS id")
+
+  /** Shared CTE prefix of the sketch oracles: [[Shingles]] plus each
+    * shingle's md5-derived portable base hash `hm`. */
   private val ShingleCtes =
-    """toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-      |  FROM documents
-      |), sh0 AS (
-      |  SELECT doc_id, CASE WHEN len(t) >= 3
-      |    THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in generate_series(1, len(t)-2)])
-      |    ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks
-      |), sh AS (SELECT DISTINCT doc_id AS id, unnest(s) AS shingle FROM sh0),
+    s"""$Shingles,
       |hm AS (SELECT id, CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) % 2147483647 AS hm FROM sh)"""
       .stripMargin
 
@@ -47,6 +43,77 @@ object DedupQueries {
       s"a.sig[$lo:$hi] = b.sig[$lo:$hi]"
     }.mkString("(", " OR ", ")")
 
+  /** Per-document min-hash signatures over `hm`. */
+  private val SigsCte = s"sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id)"
+
+  /** The estimated Jaccard of a signature pair (a, b): matching slots
+    * over 64. */
+  private val EstJaccard =
+    """CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
+      |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64""".stripMargin
+
+  /** The LSH pair rule on (a, b): some band matches and the estimated
+    * Jaccard is ≥ 0.5. */
+  private val LshMatch = s"$AnyBandEqual\n    AND $EstJaccard >= 0.5"
+
+  /** [[SigsCte]] and the LSH pairs `pairs(id1 < id2)` that
+    * [[LshMatch]] keeps. */
+  private val LshPairsCtes =
+    s"""$SigsCte,
+      |pairs AS (
+      |  SELECT a.id AS id1, b.id AS id2
+      |  FROM sigs a JOIN sigs b ON a.id < b.id
+      |  WHERE $LshMatch)""".stripMargin
+
+  /** The LSH pairs' min-id clusters over all documents, shared by the
+    * min-label (q_lsh_clusters) and star-contraction (q_star_clusters)
+    * engine paths: one oracle, two algorithms. */
+  private val LshClustersSql =
+    s"""WITH RECURSIVE $ShingleCtes,
+      |$LshPairsCtes,
+      |${closureCtes("pairs", "doc_id", "documents")}
+      |${clusterIds("doc_id")}""".stripMargin
+
+  /** Per-pair shingle overlap over `src(id, shingle)`: `sizes(id, sz)`
+    * and `co(id1 < id2, common)`. */
+  private def jaccardCoCtes(src: String): String =
+    s"""sizes AS (SELECT id, count(*) AS sz FROM $src GROUP BY 1),
+      |co AS (
+      |  SELECT a.id AS id1, b.id AS id2, count(*) AS common
+      |  FROM $src a JOIN $src b ON a.shingle = b.shingle AND a.id < b.id
+      |  GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** The prefix-filtered Jaccard join's textbook twin over `src`: all
+    * pairs at Jaccard ≥ 1/2 by integer cross-multiplication, the output
+    * jaccard one IEEE division. */
+  private def prefixJaccardSql(src: String): String =
+    s"""${jaccardCoCtes(src)}
+      |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
+      |       CAST(common AS DOUBLE) / (s1.sz + s2.sz - common) AS jaccard
+      |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
+      |WHERE common * 3 >= s1.sz + s2.sz""".stripMargin
+
+  /** The curation oracles' output: one representative per exact text,
+    * minus the `losers` CTE's ids, at ≥ 30 tokens. */
+  private val CurationTail =
+    """reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
+      |SELECT d.doc_id, CAST(len(t.t) AS BIGINT) AS n_tokens
+      |FROM documents d
+      |JOIN toks t ON t.doc_id = d.doc_id
+      |WHERE d.doc_id IN (SELECT doc_id FROM reps)
+      |  AND d.doc_id NOT IN (SELECT doc_id FROM losers)
+      |  AND len(t.t) >= 30""".stripMargin
+
+  /** Positional `n`-grams per document, `g(doc_id, pos, gram)`, over
+    * documents of at least n tokens. */
+  private def gramCtes(n: Int): String =
+    s"""$ToksCte, g0 AS (
+      |  SELECT doc_id, [{'pos': i, 'gram': array_to_string(t[i:i+${n - 1}], ' ')}
+      |                  for i in generate_series(1, len(t) - ${n - 1})] AS gs
+      |  FROM toks WHERE len(t) >= $n
+      |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0)""".stripMargin
+
   /** SimHash bit-packing: per bit, the sign of the ±1 vote sum; the
     * portable base hash has 60 bits, so bits 60–63 are always 0 votes
     * (vote −1 per token) and never set — packing 0..59 is exact. */
@@ -59,14 +126,7 @@ object DedupQueries {
     * 5-grams, occurrence cap 50, diagonal runs, min span 8) — shared by
     * q_dup_spans and q_span_coverage so the two stay in sync. */
   private val DupSpanCtes =
-    """toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-      |  FROM documents
-      |), g0 AS (
-      |  SELECT doc_id, [{'pos': i, 'gram': array_to_string(t[i:i+4], ' ')}
-      |                  for i in generate_series(1, len(t) - 4)] AS gs
-      |  FROM toks WHERE len(t) >= 5
-      |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0),
+    s"""${gramCtes(5)},
       |freq AS (SELECT gram FROM g GROUP BY gram HAVING count(*) <= 50),
       |gc AS (SELECT g.* FROM g JOIN freq USING (gram)),
       |m AS (
@@ -90,21 +150,8 @@ object DedupQueries {
     "q_ngram_jaccard" -> QueryDef(
       (s, dir) => Dedup.ngramJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text", shingleN = 3, minJaccard = 0.5),
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), sh0 AS (
-        |  SELECT doc_id, CASE WHEN len(t) >= 3
-        |    THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in generate_series(1, len(t)-2)])
-        |    ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks
-        |), sh AS (SELECT DISTINCT doc_id AS id, unnest(s) AS shingle FROM sh0),
-        |sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY 1),
-        |co AS (
-        |  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
+      s"""WITH $Shingles,
+        |${jaccardCoCtes("sh")}
         |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
         |       common / (s1.sz + s2.sz - common) AS jaccard
         |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
@@ -120,16 +167,7 @@ object DedupQueries {
         Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, tauNum = 1, tauDen = 2),
       s"""WITH $ShingleCtes,
-        |sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY 1),
-        |co AS (
-        |  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
-        |       CAST(common AS DOUBLE) / (s1.sz + s2.sz - common) AS jaccard
-        |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
-        |WHERE common * 3 >= s1.sz + s2.sz"""),
+        |${prefixJaccardSql("sh")}"""),
 
     // The CAPPED PPJoin path: maxShingleDf drops stop-shingles from the
     // universe FIRST, then the exact threshold join runs over what
@@ -147,16 +185,7 @@ object DedupQueries {
       s"""WITH $ShingleCtes,
         |dfq AS (SELECT shingle, count(*) AS c FROM sh GROUP BY 1),
         |shc AS (SELECT s.id, s.shingle FROM sh s JOIN dfq ON s.shingle = dfq.shingle WHERE dfq.c <= 2),
-        |sizes AS (SELECT id, count(*) AS sz FROM shc GROUP BY 1),
-        |co AS (
-        |  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-        |  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.id < b.id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
-        |       CAST(common AS DOUBLE) / (s1.sz + s2.sz - common) AS jaccard
-        |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
-        |WHERE common * 3 >= s1.sz + s2.sz"""),
+        |${prefixJaccardSql("shc")}"""),
 
     // Sorted-neighborhood dedup (merge/purge): rank every doc by a
     // 12-char normalized text prefix, candidate-pair each doc with its
@@ -232,15 +261,7 @@ object DedupQueries {
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
           .filter(col("n_tokens") >= 30)
       },
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), sh0 AS (
-        |  SELECT doc_id, CASE WHEN len(t) >= 3
-        |    THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in generate_series(1, len(t)-2)])
-        |    ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks
-        |), sh AS (SELECT DISTINCT doc_id AS id, unnest(s) AS shingle FROM sh0),
+      s"""WITH $Shingles,
         |sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY 1),
         |co AS (SELECT a.id AS id1, b.id AS id2, count(*) AS common
         |       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id GROUP BY 1, 2),
@@ -248,13 +269,7 @@ object DedupQueries {
         |  SELECT DISTINCT co.id2 AS doc_id
         |  FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
         |  WHERE common / (s1.sz + s2.sz - common) >= 0.5),
-        |reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
-        |SELECT d.doc_id, CAST(len(t.t) AS BIGINT) AS n_tokens
-        |FROM documents d
-        |JOIN toks t ON t.doc_id = d.doc_id
-        |WHERE d.doc_id IN (SELECT doc_id FROM reps)
-        |  AND d.doc_id NOT IN (SELECT doc_id FROM losers)
-        |  AND len(t.t) >= 30"""),
+        |$CurationTail"""),
 
     // The SAME curation pipeline with the 100 TB near-dup stage swapped
     // in: banded MinHash LSH (portable hash family) instead of the
@@ -278,21 +293,13 @@ object DedupQueries {
           .filter(col("n_tokens") >= 30)
       },
       s"""WITH $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id),
+        |$SigsCte,
         |losers AS (
         |  SELECT DISTINCT b.id AS doc_id
         |  FROM sigs a JOIN sigs b ON a.id < b.id
-        |  WHERE $AnyBandEqual
-        |    AND CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64 >= 0.5
+        |  WHERE $LshMatch
         |),
-        |reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
-        |SELECT d.doc_id, CAST(len(t.t) AS BIGINT) AS n_tokens
-        |FROM documents d
-        |JOIN toks t ON t.doc_id = d.doc_id
-        |WHERE d.doc_id IN (SELECT doc_id FROM reps)
-        |  AND d.doc_id NOT IN (SELECT doc_id FROM losers)
-        |  AND len(t.t) >= 30"""),
+        |$CurationTail"""),
 
     // MinHash signatures (64 hashes, 3-gram shingles), portable hash
     // family so the oracle reproduces the signature bit for bit. The
@@ -318,10 +325,9 @@ object DedupQueries {
           portable = true),
         "doc_id", bands = 16, rowsPerBand = 4),
       s"""WITH $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id)
+        |$SigsCte
         |SELECT a.id AS id1, b.id AS id2,
-        |       CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                      for i in generate_series(1, 64)]) AS DOUBLE) / 64 AS est_jaccard
+        |       $EstJaccard AS est_jaccard
         |FROM sigs a JOIN sigs b ON a.id < b.id
         |WHERE $AnyBandEqual"""),
 
@@ -344,14 +350,11 @@ object DedupQueries {
           .filter(col("est_jaccard") >= 0.5)
       },
       s"""WITH $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id)
+        |$SigsCte
         |SELECT a.id AS corpus_id, b.id AS new_id,
-        |       CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                      for i in generate_series(1, 64)]) AS DOUBLE) / 64 AS est_jaccard
+        |       $EstJaccard AS est_jaccard
         |FROM sigs a JOIN sigs b ON a.id % 10 < 8 AND b.id % 10 >= 8
-        |WHERE $AnyBandEqual
-        |  AND CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                     for i in generate_series(1, 64)]) AS DOUBLE) / 64 >= 0.5"""),
+        |WHERE $LshMatch"""),
 
     // The 100 TB dedup scale path closed end to end, hash-verified:
     // portable MinHash signatures → banded LSH candidates (est_jaccard
@@ -369,22 +372,7 @@ object DedupQueries {
           .select(col("id1"), col("id2"))
         Dedup.connectedComponents(pairs, docs.select(col("doc_id")), "doc_id")
       },
-      s"""WITH RECURSIVE $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2
-        |  FROM sigs a JOIN sigs b ON a.id < b.id
-        |  WHERE $AnyBandEqual
-        |    AND CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64 >= 0.5),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |          UNION ALL SELECT id2, id1 FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b)
-        |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id"""),
+      LshClustersSql),
 
     // Same LSH pair graph, clustered by alternating large-star /
     // small-star contraction instead of min-label propagation — the
@@ -401,22 +389,7 @@ object DedupQueries {
           .select(col("id1"), col("id2"))
         Dedup.connectedComponentsStar(pairs, docs.select(col("doc_id")), "doc_id")
       },
-      s"""WITH RECURSIVE $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2
-        |  FROM sigs a JOIN sigs b ON a.id < b.id
-        |  WHERE $AnyBandEqual
-        |    AND CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64 >= 0.5),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |          UNION ALL SELECT id2, id1 FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b)
-        |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id"""),
+      LshClustersSql),
 
     // Standing-index DELETION (r13 verdict task 5): take down the
     // doc_id % 17 = 3 slice of the corpus and maintain the q_lsh_clusters
@@ -446,32 +419,17 @@ object DedupQueries {
           docs.filter(col("doc_id") % 17 === 3).select(col("doc_id")), "doc_id")
       },
       s"""WITH RECURSIVE $ShingleCtes,
-        |sigs AS (SELECT id, $SigList AS sig FROM hm GROUP BY id),
-        |pairs AS (
-        |  SELECT a.id AS id1, b.id AS id2
-        |  FROM sigs a JOIN sigs b ON a.id < b.id
-        |  WHERE $AnyBandEqual
-        |    AND CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-        |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64 >= 0.5),
+        |$LshPairsCtes,
         |surv AS (SELECT id1, id2 FROM pairs WHERE id1 % 17 <> 3 AND id2 % 17 <> 3),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM surv
-        |          UNION ALL SELECT id2, id1 FROM surv),
-        |reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents WHERE doc_id % 17 <> 3
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b)
-        |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id"""),
+        |${closureCtes("surv", "doc_id", "documents WHERE doc_id % 17 <> 3")}
+        |${clusterIds("doc_id")}"""),
 
     // 64-bit SimHash per document (portable hash family; the oracle
     // recomputes the per-bit vote sums and packs the sign bits).
     "q_simhash" -> QueryDef(
       (s, dir) => Dedup.simhash(Tables.documents(s, dir), "doc_id", "text",
         portable = true),
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
+      s"""WITH $ToksCte, tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
         |h AS (SELECT doc_id, CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) AS h FROM tok),
         |sig AS (SELECT doc_id, $SimhashPack AS simhash FROM h GROUP BY doc_id)
         |-- left join from DISTINCT ids: zero-token docs must not vanish
@@ -492,10 +450,7 @@ object DedupQueries {
     "q_containment" -> QueryDef(
       (s, dir) => Dedup.containmentPairs(
         Tables.documents(s, dir), "doc_id", "text", anchorN = 10),
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), canon AS (
+      s"""WITH $ToksCte, canon AS (
         |  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n, array_to_string(t, ' ') AS c FROM toks
         |), anch AS (
         |  SELECT doc_id AS in_id, n AS in_n, array_to_string(t[1:10], ' ') AS shingle
@@ -541,14 +496,7 @@ object DedupQueries {
           docs.filter(col("doc_id") % 13 === 0),
           "doc_id", "text", gramN = 5, minSpanTokens = 8, maxGramFreq = 50)
       },
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), g0 AS (
-        |  SELECT doc_id, [{'pos': i, 'gram': array_to_string(t[i:i+4], ' ')}
-        |                  for i in generate_series(1, len(t) - 4)] AS gs
-        |  FROM toks WHERE len(t) >= 5
-        |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0),
+      s"""WITH ${gramCtes(5)},
         |cg AS (SELECT * FROM g WHERE doc_id % 13 <> 0),
         |bg AS (SELECT * FROM g WHERE doc_id % 13 = 0),
         |freq AS (SELECT gram FROM cg GROUP BY gram HAVING count(*) <= 50),
@@ -576,14 +524,7 @@ object DedupQueries {
       (s, dir) => Dedup.selfRepetitionProfile(
         Tables.documents(s, dir), "doc_id", "text",
         gramN = 2, minSpanTokens = 2, maxGramFreqInDoc = 20),
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), g0 AS (
-        |  SELECT doc_id, [{'pos': i, 'gram': array_to_string(t[i:i+1], ' ')}
-        |                  for i in generate_series(1, len(t) - 1)] AS gs
-        |  FROM toks WHERE len(t) >= 2
-        |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0),
+      s"""WITH ${gramCtes(2)},
         |pf AS (SELECT doc_id, gram, count(*) AS f FROM g GROUP BY 1, 2),
         |gm AS (SELECT doc_id, CAST(max(f) AS BIGINT) AS mgf FROM pf GROUP BY 1),
         |gc AS (SELECT g.doc_id, g.pos, g.gram FROM g JOIN pf USING (doc_id, gram) WHERE pf.f <= 20),

@@ -199,20 +199,14 @@ object JoinQueries {
         graft.operators.Dedup.connectedComponents(
           pairs, cust.select(col("c_custkey")), "c_custkey")
       },
-      """WITH RECURSIVE pairs AS (
+      s"""WITH RECURSIVE pairs AS (
         |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
         |  FROM customer a JOIN customer b
         |    ON substr(a.c_name, 1, length(a.c_name) - 2) = substr(b.c_name, 1, length(b.c_name) - 2)
         |   AND a.c_name < b.c_name
         |  WHERE levenshtein(a.c_name, b.c_name) <= 1),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |          UNION ALL SELECT id2, id1 FROM pairs),
-        |reach AS (
-        |  SELECT c_custkey AS id, c_custkey AS r FROM customer
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b)
-        |SELECT id AS c_custkey, CAST(min(r) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY id"""),
+        |${OracleSql.closureCtes("pairs", "c_custkey", "customer")}
+        |${OracleSql.clusterIds("c_custkey")}"""),
 
     // Bloom-prefiltered semi join (operators/BloomJoin): lineitems of
     // one nation's suppliers, aggregated per returnflag. The bloom over

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.operators.{Redact, Splits, TextPipeline}
+import OracleSql._
 
 /** Training-data curation surface over `documents`: benchmark
   * decontamination, passage-level boilerplate dedup, repetition quality
@@ -17,21 +18,8 @@ object PipelineQueries {
   // see CLAUDE.md: a val referenced before initialization interpolates
   // null into the SQL).
 
-  /** tokens CTE — identical to the TextQueries/DedupQueries tokenizer. */
-  private val ToksCte =
-    """toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-      |  FROM documents
-      |)""".stripMargin
-
-  /** 3-gram shingle CTEs (shared shape with DedupQueries.ShingleCtes). */
-  private val Shingle3Ctes =
-    s"""$ToksCte, sh0 AS (
-      |  SELECT doc_id, CASE WHEN len(t) >= 3
-      |    THEN list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in generate_series(1, len(t)-2)])
-      |    ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks
-      |), sh AS (SELECT DISTINCT doc_id, unnest(s) AS shingle FROM sh0)""".stripMargin
+  /** 3-gram shingle CTEs, `sh(doc_id, shingle)`. */
+  private val Shingle3Ctes = shingleCtes("doc_id")
 
   /** Positional passage/chunk CTE: non-overlapping `n`-token windows
     * with a 1-based pos (Spark's posexplode is 0-based; pos is only an
@@ -43,13 +31,10 @@ object PipelineQueries {
       |  FROM toks
       |), p AS (SELECT doc_id, unnest(ps, recursive := true) FROM p0)""".stripMargin
 
-  /** From-scratch recursive-closure CC over the full ≥0.5-Jaccard pair
-    * graph — shared verbatim by q_dedup_clusters (engine: fixpoint
-    * min-label) and q_incremental_cc (engine: contracted-graph
-    * maintenance): one oracle, two engine paths, each hash match an
-    * equivalence proof. */
-  private val DedupClustersSql =
-    s"""WITH RECURSIVE $Shingle3Ctes,
+  /** The ≥0.5-Jaccard 3-gram pair graph and its min-id closure over all
+    * documents (needs `WITH RECURSIVE`). */
+  private val JaccardClosureCtes =
+    s"""$Shingle3Ctes,
       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
       |co AS (
       |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
@@ -59,14 +44,54 @@ object PipelineQueries {
       |  SELECT id1, id2 FROM co
       |  JOIN sizes s1 ON s1.doc_id = co.id1 JOIN sizes s2 ON s2.doc_id = co.id2
       |  WHERE common / (s1.sz + s2.sz - common) >= 0.5),
-      |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-      |          UNION ALL SELECT id2, id1 FROM pairs),
-      |reach AS (
-      |  SELECT doc_id AS id, doc_id AS r FROM documents
-      |  UNION
-      |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b)
-      |SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-      |FROM reach GROUP BY id""".stripMargin
+      |${closureCtes("pairs", "doc_id", "documents")}""".stripMargin
+
+  /** The per-source token budget's oracle: documents in portable-hash
+    * order (doc_id tie-break) while the running token sum stays within
+    * 800 — shared by the plain and the salted engine paths. */
+  private val TokenBudgetSql =
+    s"""WITH $ToksCte,
+      |n AS (
+      |  SELECT d.doc_id, d.source, CAST(len(t.t) AS BIGINT) AS n_tokens,
+      |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id),
+      |c AS (
+      |  SELECT doc_id, source, n_tokens,
+      |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS cum_tokens
+      |  FROM n)
+      |SELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 800""".stripMargin
+
+  /** The packed token stream's per-document offsets,
+    * `c(doc_id, n_tokens, tok_start)`: non-empty documents laid end to
+    * end in doc_id order (an exclusive running sum). */
+  private val PackedCtes =
+    s"""$ToksCte,
+      |n AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks WHERE len(t) > 0),
+      |c AS (
+      |  SELECT doc_id, n_tokens,
+      |         CAST(sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens AS BIGINT) AS tok_start
+      |  FROM n)""".stripMargin
+
+  /** Decontamination against the `doc_id % mod = 0` reference slice:
+    * each other document's shared 3-grams and the reference documents
+    * they hit (column `refCol`). */
+  private def decontamSql(mod: Int, refCol: String): String =
+    s"""WITH $Shingle3Ctes
+      |SELECT a.doc_id,
+      |       count(DISTINCT a.shingle) AS n_shared_ngrams,
+      |       count(DISTINCT e.doc_id) AS $refCol
+      |FROM sh a JOIN sh e ON a.shingle = e.shingle
+      |WHERE a.doc_id % $mod <> 0 AND e.doc_id % $mod = 0
+      |GROUP BY a.doc_id""".stripMargin
+
+  /** From-scratch recursive-closure CC over the full ≥0.5-Jaccard pair
+    * graph — shared verbatim by q_dedup_clusters (engine: fixpoint
+    * min-label) and q_incremental_cc (engine: contracted-graph
+    * maintenance): one oracle, two engine paths, each hash match an
+    * equivalence proof. */
+  private val DedupClustersSql =
+    s"""WITH RECURSIVE $JaccardClosureCtes
+      |${clusterIds("doc_id")}""".stripMargin
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -82,13 +107,7 @@ object PipelineQueries {
           docs.filter(col("doc_id") % 97 === 0),
           "doc_id", "text", shingleN = 3)
       },
-      s"""WITH $Shingle3Ctes
-        |SELECT a.doc_id,
-        |       count(DISTINCT a.shingle) AS n_shared_ngrams,
-        |       count(DISTINCT e.doc_id) AS n_eval_docs
-        |FROM sh a JOIN sh e ON a.shingle = e.shingle
-        |WHERE a.doc_id % 97 <> 0 AND e.doc_id % 97 = 0
-        |GROUP BY a.doc_id"""),
+      decontamSql(97, "n_eval_docs")),
 
     // Passage-level corpus dedup: every copy of any 10-token passage
     // occurring more than once corpus-wide is dropped; survivors are
@@ -247,16 +266,7 @@ object PipelineQueries {
           Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")),
           "doc_id", "source", "text", budget = 800L, salt = "graft-v1")
         .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens")),
-      s"""WITH $ToksCte,
-        |n AS (
-        |  SELECT d.doc_id, d.source, CAST(len(t.t) AS BIGINT) AS n_tokens,
-        |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS cum_tokens
-        |  FROM n)
-        |SELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 800"""),
+      TokenBudgetSql),
 
     // The SKEW-parallel budget path (r12 verdict task 4): the same
     // mixture through capTokenBudgetSalted's range-bucketed two-pass
@@ -271,16 +281,7 @@ object PipelineQueries {
           "doc_id", "source", "text", budget = 800L, salt = "graft-v1",
           subKeys = 32)
         .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_tokens")),
-      s"""WITH $ToksCte,
-        |n AS (
-        |  SELECT d.doc_id, d.source, CAST(len(t.t) AS BIGINT) AS n_tokens,
-        |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS cum_tokens
-        |  FROM n)
-        |SELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 800"""),
+      TokenBudgetSql),
 
     // PPS systematic sampling: exactly 25 weighted draws per source,
     // inclusion probability proportional to token count — the weighted
@@ -443,13 +444,7 @@ object PipelineQueries {
           docs.filter(col("doc_id") % 11 === 0),
           "doc_id", "text", shingleN = 3, expectedItems = 100000L)
       },
-      s"""WITH $Shingle3Ctes
-        |SELECT a.doc_id,
-        |       count(DISTINCT a.shingle) AS n_shared_ngrams,
-        |       count(DISTINCT e.doc_id) AS n_ref_docs
-        |FROM sh a JOIN sh e ON a.shingle = e.shingle
-        |WHERE a.doc_id % 11 <> 0 AND e.doc_id % 11 = 0
-        |GROUP BY a.doc_id"""),
+      decontamSql(11, "n_ref_docs")),
 
     // Sequential token packing per language stratum: concatenate docs
     // in id order, cut every 512 tokens; bin = where the doc's first
@@ -488,25 +483,9 @@ object PipelineQueries {
           pairs, docs.select(col("doc_id")), "doc_id")
         Splits.assign(clusters, "cluster_id", salt = "graft-v1")
       },
-      s"""WITH RECURSIVE $Shingle3Ctes,
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |co AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id1, id2 FROM co
-        |  JOIN sizes s1 ON s1.doc_id = co.id1 JOIN sizes s2 ON s2.doc_id = co.id2
-        |  WHERE common / (s1.sz + s2.sz - common) >= 0.5),
-        |edges AS (SELECT id1 AS a, id2 AS b FROM pairs
-        |          UNION ALL SELECT id2, id1 FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b),
+      s"""WITH RECURSIVE $JaccardClosureCtes,
         |clusters AS (
-        |  SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-        |  FROM reach GROUP BY id)
+        |  ${clusterIds("doc_id")})
         |SELECT doc_id, cluster_id, bucket,
         |       CASE WHEN bucket < 80 THEN 'train'
         |            WHEN bucket < 90 THEN 'valid'
@@ -640,12 +619,7 @@ object PipelineQueries {
           Tables.documents(s, dir).select(col("doc_id"),
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
           "doc_id", "n_tokens", seqLen = 512L),
-      s"""WITH $ToksCte,
-        |n AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks WHERE len(t) > 0),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens AS BIGINT) AS tok_start
-        |  FROM n)
+      s"""WITH $PackedCtes
         |SELECT doc_id, n_tokens, tok_start,
         |       tok_start // 512 AS seq_first,
         |       (tok_start + n_tokens - 1) // 512 AS seq_last,
@@ -661,12 +635,7 @@ object PipelineQueries {
           Tables.documents(s, dir).select(col("doc_id"),
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
           "doc_id", "n_tokens", seqLen = 512L)),
-      s"""WITH $ToksCte,
-        |n AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks WHERE len(t) > 0),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |         CAST(sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens AS BIGINT) AS tok_start
-        |  FROM n),
+      s"""WITH $PackedCtes,
         |e AS (
         |  SELECT CAST(unnest(generate_series(tok_start // 512, (tok_start + n_tokens - 1) // 512)) AS BIGINT) AS seq_id,
         |         (tok_start + n_tokens - 1) // 512 > tok_start // 512 AS spans
@@ -723,7 +692,7 @@ object PipelineQueries {
         |       FROM s2
         |       WHERE lang IN ('en', 'de')),
         |tk AS (SELECT doc_id, source, n_redactions,
-        |              CAST(len(list_filter(string_split_regex(trim(lower(clean)), '\\s+'), t -> t <> '')) AS BIGINT) AS n_toks
+        |              CAST(len(${OracleSql.tokens("clean")}) AS BIGINT) AS n_toks
         |       FROM s3),
         |q AS (SELECT * FROM tk WHERE n_toks >= 30),
         |h AS (SELECT *, CAST(concat('0x', substr(md5('graft-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hh FROM q),

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.operators.Similarity
+import graft.operators.{IvfCentroids, PqCodebooks, Similarity}
+import OracleSql._
 
 /** ANN search over the `embeddings` table (64-dim float vectors).
   * Queries = every 50th vector; k = 10.
@@ -18,68 +19,43 @@ import graft.operators.Similarity
   */
 object SimilarityQueries {
 
-  /** Render one SRP code array as DuckDB SQL over a DOUBLE[] column
-    * `v`: element t = the `planes`-bit sign code of table t, exactly
-    * [[graft.functions.SrpCode]]'s fold (ascending index, double
-    * accumulate, `>= 0` sign test). Scala's Double.toString is
-    * shortest-round-trip, so DuckDB parses back the identical bits. */
-  private[queries] def srpCodesSql(dim: Int, planes: Int, tables: Int): String = {
-    val hp = Similarity.hyperplanes(dim, planes, tables)
-    (0 until tables).map { t =>
-      (0 until planes).map { p =>
-        val plane = hp(t)(p).mkString("[", ", ", "]")
-        s"(CASE WHEN list_dot_product(v, $plane) >= 0 THEN ${1L << p} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
-    }.mkString("[", ", ", "]")
-  }
+  /** `<p>scored(query_id, neighbor_id, cos_sim)`: the exact cosine of
+    * each candidate pair of `cand` (a `cand`-aliased relation). */
+  private def scoredCte(p: String, cand: String): String =
+    s"""${p}scored AS (
+      |  SELECT query_id, neighbor_id, ${cosine("qe.v", "ce.v")} AS cos_sim
+      |  FROM $cand JOIN ${p}e qe ON qe.vec_id = cand.query_id
+      |            JOIN ${p}e ce ON ce.vec_id = cand.neighbor_id)""".stripMargin
 
-  private val CosineSql =
-    "list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v)))"
+  /** The frozen [[graft.operators.IvfCentroids]] assignment of both
+    * search sides over `src` (an `e` and a `cents` relation): corpus
+    * rows to their rank-1 cell (`<p>casgn`), query rows (every 50th) to
+    * their top-`nprobe` cells (`<p>qasgn`). */
+  private def ivfAsgnCtes(p: String, nprobe: Int, src: String): String =
+    s"""${p}cents AS (${IvfCentroids.duckdbValues}),
+      |${p}casgn AS ${cellRank("vec_id AS neighbor_id, cell", "<= 1", src)},
+      |${p}qasgn AS ${cellRank("vec_id AS query_id, cell", s"<= $nprobe", s"$src WHERE e.vec_id % 50 = 0")}""".stripMargin
 
   /** IVF-search CTE chain, parameterized by nprobe — replays the frozen
-    * [[graft.operators.IvfCentroids]] assignment (rank over cosine to
-    * each centroid, cell tie-break) and the cell-keyed candidate join.
-    * Every CTE name carries prefix `p` so two chains (or this plus the
-    * brute chain) compose in ONE oracle without collisions
+    * centroid assignment ([[ivfAsgnCtes]]) and the cell-keyed candidate
+    * join. Every CTE name carries prefix `p` so two chains (or this plus
+    * the brute chain) compose in ONE oracle without collisions
     * (q_ann_recall); the chain ends in `${p}topk` with
     * (query_id, neighbor_id, cos_sim, rank ≤ 10). */
   private def ivfTopkCtes(nprobe: Int, p: String): String =
-    s"""${p}e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |${p}cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-      |${p}casgn AS (
-      |  SELECT vec_id AS neighbor_id, cell FROM (
-      |    SELECT e.vec_id, cents.cell,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-      |             cents.cell) AS crank
-      |    FROM ${p}e e CROSS JOIN ${p}cents cents)
-      |  WHERE crank <= 1),
-      |${p}qasgn AS (
-      |  SELECT vec_id AS query_id, cell FROM (
-      |    SELECT e.vec_id, cents.cell,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-      |             cents.cell) AS crank
-      |    FROM ${p}e e CROSS JOIN ${p}cents cents WHERE e.vec_id % 50 = 0)
-      |  WHERE crank <= $nprobe),
+    s"""${embCte(p)},
+      |${ivfAsgnCtes(p, nprobe, s"${p}e e CROSS JOIN ${p}cents cents")},
       |${p}cand AS (
       |  SELECT DISTINCT q.query_id, c.neighbor_id
       |  FROM ${p}qasgn q JOIN ${p}casgn c ON q.cell = c.cell
       |  WHERE q.query_id <> c.neighbor_id),
-      |${p}scored AS (
-      |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-      |  FROM ${p}cand cand JOIN ${p}e qe ON qe.vec_id = cand.query_id
-      |            JOIN ${p}e ce ON ce.vec_id = cand.neighbor_id),
+      |${scoredCte(p, s"${p}cand cand")},
       |${p}topk AS (
-      |  SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      |    SELECT query_id, neighbor_id, cos_sim,
-      |           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-      |    FROM ${p}scored)
-      |  WHERE rank <= 10)"""
+      |  ${topK(s"${p}scored")})""".stripMargin
 
   private def ivfOracleSql(nprobe: Int): String =
     s"""WITH ${ivfTopkCtes(nprobe, "")}
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM topk"""
+      |SELECT query_id, neighbor_id, cos_sim, rank FROM topk""".stripMargin
 
   /** Brute-force top-10 CTE chain (the q_ann_brute query body), prefix
     * `p` as in [[ivfTopkCtes]]; ends in `${p}topk`. */
@@ -89,15 +65,51 @@ object SimilarityQueries {
       |${p}c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
       |${p}scored AS (
       |  SELECT query_id, neighbor_id,
-      |         list_dot_product(qv, cv) /
-      |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos_sim
+      |         ${cosine("qv", "cv")} AS cos_sim
       |  FROM ${p}q, ${p}c WHERE query_id <> neighbor_id),
       |${p}topk AS (
-      |  SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      |    SELECT query_id, neighbor_id, cos_sim,
-      |           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-      |    FROM ${p}scored)
-      |  WHERE rank <= 10)"""
+      |  ${topK(s"${p}scored")})""".stripMargin
+
+  /** SRP-LSH candidate chain over `tables` tables of 4-plane codes,
+    * prefix `p`: the query rows (every 50th) join the corpus on any
+    * shared (table, bucket) and the candidates are scored exactly; ends
+    * in `<p>scored`. `multiprobe` also probes each query's 4 codes one
+    * bit away (xor over the same interpolated hyperplanes). */
+  private def lshScoredCtes(p: String, tables: Int, multiprobe: Boolean = false): String = {
+    val (qb, qSrc, qFilter) =
+      if (multiprobe) (
+        """qb AS (SELECT vec_id, tbl,
+          |         unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4), xor(bucket, 8)]) AS bucket
+          |       FROM b WHERE vec_id % 50 = 0),
+          |""".stripMargin, "qb", "")
+      else ("", s"${p}b", "q.vec_id % 50 = 0 AND ")
+    s"""${embCte(p)},
+      |${srpBucketCtes(srpCodes(4, tables), tables, p)},
+      |$qb${p}cand AS (
+      |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+      |  FROM $qSrc q JOIN ${p}b c ON q.tbl = c.tbl AND q.bucket = c.bucket
+      |  WHERE ${qFilter}q.vec_id <> c.vec_id),
+      |${scoredCte(p, if (p.isEmpty) "cand" else s"${p}cand cand")}""".stripMargin
+  }
+
+  /** SRP near-dup pairs over `b`: pairs sharing a (table, bucket) at
+    * exact cosine ≥ 0.4, as (id1 < id2) pairs or, for `ingest`, as
+    * (corpus_id, new_id) pairs across the standing (vec_id % 10 < 8) and
+    * batch sides. */
+  private def srpPairsSql(ingest: Boolean): String = {
+    val (id1, id2, pair) =
+      if (ingest) ("corpus_id", "new_id", "\n  WHERE a.vec_id % 10 < 8 AND b2.vec_id % 10 >= 8")
+      else ("id1", "id2", " AND a.vec_id < b2.vec_id")
+    s"""cand AS (
+      |  SELECT DISTINCT a.vec_id AS $id1, b2.vec_id AS $id2
+      |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket$pair)
+      |SELECT $id1, $id2, cos_sim FROM (
+      |  SELECT $id1, $id2,
+      |         ${cosine("qe.v", "ce.v")} AS cos_sim
+      |  FROM cand JOIN e qe ON qe.vec_id = cand.$id1
+      |            JOIN e ce ON ce.vec_id = cand.$id2)
+      |WHERE cos_sim >= 0.4""".stripMargin
+  }
 
   /** Shared PQ oracle CTEs: frozen-codebook assignment (score =
     * list_dot_product − half_cc, lowest-code tie-break) folded to one
@@ -105,8 +117,8 @@ object SimilarityQueries {
     * sums in FIXED subspace order — the same ((cc0+cc1)+cc2)+cc3 fold
     * [[graft.operators.Pq.encode]] runs. */
   private val PqCtes =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |cb AS (${graft.operators.PqCodebooks.duckdbValues}),
+    s"""${embCte()},
+      |cb AS (${PqCodebooks.duckdbValues}),
       |sub AS (SELECT e.vec_id, t.m, list_slice(e.v, t.m*16+1, t.m*16+16) AS sv
       |        FROM e CROSS JOIN (VALUES (0), (1), (2), (3)) t(m)),
       |asgn AS (
@@ -124,50 +136,90 @@ object SimilarityQueries {
       |         CAST(max(CASE WHEN m = 3 THEN code END) AS BIGINT) AS code_3,
       |         sqrt(((max(CASE WHEN m = 0 THEN cc END) + max(CASE WHEN m = 1 THEN cc END))
       |               + max(CASE WHEN m = 2 THEN cc END)) + max(CASE WHEN m = 3 THEN cc END)) AS recon_norm
-      |  FROM asgn GROUP BY vec_id)"""
+      |  FROM asgn GROUP BY vec_id)""".stripMargin
 
-  /** ADC scoring CTEs on top of [[PqCtes]]: per-query norm + the
-    * 4-lookup fixed-order score — list_dot_product(q_sub, centroid)
-    * replays the engine's per-query LUT entries exactly. */
-  private val PqAdcCtes =
-    s"""$PqCtes,
-      |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
-      |      FROM e WHERE vec_id % 50 = 0),
+  /** ADC scoring CTEs on top of [[PqCtes]]: the norm of the `qFilter`
+    * query rows (q) and the 4-lookup fixed-order score of every code row
+    * `join`ed to a query `qa` and kept by `where` (adc) —
+    * list_dot_product(q_sub, centroid) replays the engine's per-query
+    * LUT entries exactly. */
+  private def pqAdcCtes(qFilter: String, join: String, where: String,
+                        qa: String = "q"): String =
+    s"""q AS (SELECT vec_id AS query_id, v AS qv, ${norm("v")} AS qnorm
+      |      FROM e WHERE $qFilter),
       |adc AS (
-      |  SELECT q.query_id, x.vec_id AS neighbor_id,
+      |  SELECT $qa.query_id, x.vec_id AS neighbor_id,
       |         (((list_dot_product(list_slice(q.qv, 1, 16), b0.c)
       |            + list_dot_product(list_slice(q.qv, 17, 32), b1.c))
       |            + list_dot_product(list_slice(q.qv, 33, 48), b2.c))
       |            + list_dot_product(list_slice(q.qv, 49, 64), b3.c))
       |           / (q.qnorm * x.recon_norm) AS adc_sim
-      |  FROM pqcodes x CROSS JOIN q
+      |  FROM pqcodes x$join
       |  JOIN cb b0 ON b0.m = 0 AND b0.code = x.code_0
       |  JOIN cb b1 ON b1.m = 1 AND b1.code = x.code_1
       |  JOIN cb b2 ON b2.m = 2 AND b2.code = x.code_2
       |  JOIN cb b3 ON b3.m = 3 AND b3.code = x.code_3
-      |  WHERE x.vec_id <> q.query_id)"""
+      |  WHERE $where)""".stripMargin
 
-  /** [[PqAdcCtes]] for the INGEST posture: queries = the new batch
-    * (vec_id % 13 = 0), ADC candidates restricted to the standing
-    * corpus (vec_id % 13 ≠ 0) — no corpus×corpus and no batch×batch
-    * pairs, mirroring Pq.adcIngestTopK's stored-index search. */
-  private val PqIngestAdcCtes =
+  /** [[PqCtes]] and the ADC score of every (query, other vector) pair. */
+  private val PqSearchCtes =
     s"""$PqCtes,
-      |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
-      |      FROM e WHERE vec_id % 13 = 0),
-      |adc AS (
-      |  SELECT q.query_id, x.vec_id AS neighbor_id,
-      |         (((list_dot_product(list_slice(q.qv, 1, 16), b0.c)
-      |            + list_dot_product(list_slice(q.qv, 17, 32), b1.c))
-      |            + list_dot_product(list_slice(q.qv, 33, 48), b2.c))
-      |            + list_dot_product(list_slice(q.qv, 49, 64), b3.c))
-      |           / (q.qnorm * x.recon_norm) AS adc_sim
-      |  FROM pqcodes x CROSS JOIN q
-      |  JOIN cb b0 ON b0.m = 0 AND b0.code = x.code_0
-      |  JOIN cb b1 ON b1.m = 1 AND b1.code = x.code_1
-      |  JOIN cb b2 ON b2.m = 2 AND b2.code = x.code_2
-      |  JOIN cb b3 ON b3.m = 3 AND b3.code = x.code_3
-      |  WHERE x.vec_id % 13 <> 0)"""
+      |${pqAdcCtes("vec_id % 50 = 0", " CROSS JOIN q", "x.vec_id <> q.query_id")}""".stripMargin
+
+  /** The ADC shortlist (top `shortlist` per query by adc_sim) re-ranked
+    * by exact cosine to the top 10. */
+  private def pqRerankSql(shortlist: Int): String =
+    s"""short AS (
+      |  SELECT query_id, neighbor_id FROM (
+      |    SELECT query_id, neighbor_id,
+      |           row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS rk
+      |    FROM adc)
+      |  WHERE rk <= $shortlist),
+      |rescored AS (
+      |  SELECT s.query_id, s.neighbor_id, ${cosine("qe.v", "ce.v")} AS cos_sim
+      |  FROM short s JOIN e qe ON qe.vec_id = s.query_id
+      |               JOIN e ce ON ce.vec_id = s.neighbor_id)
+      |${topK("rescored")}""".stripMargin
+
+  /** KMeansOps.lloydStep's fixed-point-exact per-dimension mean: integer
+    * sums of floor(x · 2^30), then ONE IEEE division. */
+  private val FixedPointMean =
+    """CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
+      |         / (CAST(count(*) AS DOUBLE) * 1073741824.0)""".stripMargin
+
+  /** `rounds` Lloyd updates from the frozen IVF centroids, unrolled one
+    * round builder per round (KMeansOps.lloydIterate): round r assigns
+    * each vector its rank-1 cell under `cents<tag(r-1)>` and explodes it
+    * per dimension (`ex<tag(r)>`); every round but the last folds the
+    * means into the next centroid table. The output is the last round's
+    * means with their member counts. */
+  private def lloydOracleSql(rounds: Int, tag: Int => String): String = {
+    val steps = (1 to rounds).map { r =>
+      val (cents, t) = (s"cents${tag(r - 1)}", tag(r))
+      val round =
+        s"""asgn$t AS ${cellRank("vec_id, v, cell", "= 1", s"e CROSS JOIN $cents", cents, carryV = true)},
+          |ex$t AS (
+          |  SELECT cell,
+          |         unnest([{'pos': i - 1, 'x': v[i]} for i in generate_series(1, 64)],
+          |                recursive := true)
+          |  FROM asgn$t)""".stripMargin
+      if (r == rounds) round
+      else
+        s"""$round,
+          |upd$t AS (
+          |  SELECT cell, pos,
+          |         $FixedPointMean AS c
+          |  FROM ex$t GROUP BY cell, pos),
+          |cents$t AS (SELECT cell, list(c ORDER BY pos) AS c FROM upd$t GROUP BY cell)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH ${embCte()},
+      |cents${tag(0)} AS (${IvfCentroids.duckdbValues}),
+      |$steps
+      |SELECT CAST(cell AS BIGINT) AS cell, CAST(pos AS BIGINT) AS pos,
+      |       $FixedPointMean AS c_new,
+      |       CAST(count(*) AS BIGINT) AS n
+      |FROM ex${tag(rounds)} GROUP BY cell, pos""".stripMargin
+  }
 
   /** The frozen >FlatAssignCeiling operating point for q_semdedup_hier:
     * hash-derived deterministic quantizer (k = 4100 > 4096 forces the
@@ -175,171 +227,87 @@ object SimilarityQueries {
     * gate, not a sizing claim — SCALE.md carries the sizing evidence).
     * Lazy: 262k driver-side md5 calls, computed once per JVM. */
   private[queries] lazy val HierCentroids =
-    graft.operators.Similarity.hashCentroids(4100, 64)
+    Similarity.hashCentroids(HierK, 64)
+
+  /** The single-batch survivor rule over `asgn`: the rows `rank`
+    * admits, minus the higher id of every intra-cell edge. A pair is a
+    * candidate when ANY probed cell is shared; the duplicate pair a
+    * shared-both-cells twin generates is absorbed by NOT IN. */
+  private def survivorSql(rank: String): String =
+    s"""edges AS ${cellEdges(" AND a.vec_id < b.vec_id")}
+      |SELECT vec_id, CAST(cell AS BIGINT) AS cell
+      |FROM asgn
+      |WHERE ${rank}vec_id NOT IN (SELECT id2 FROM edges)""".stripMargin
+
+  /** The ingest survivor rule on the batch side (vec_id % 10 >= 8) of a
+    * probed `asgn`, ranked by column `rank`: a batch id is dropped on an
+    * edge to ANY standing id or to a SMALLER batch id. */
+  private def ingestSurvivorSql(rank: String): String = {
+    val intra = cellEdges(" AND a.vec_id < b.vec_id",
+      "a.vec_id % 10 >= 8 AND b.vec_id % 10 >= 8\n    AND ")
+    val cross = cellEdges("", "a.vec_id % 10 < 8 AND b.vec_id % 10 >= 8\n    AND ",
+      "a.vec_id AS corpus_id, b.vec_id AS new_id")
+    s"""edges_int AS $intra,
+      |edges_corpus AS $cross
+      |SELECT vec_id, CAST(cell AS BIGINT) AS cell
+      |FROM asgn
+      |WHERE $rank = 1 AND vec_id % 10 >= 8
+      |  AND vec_id NOT IN (SELECT id2 FROM edges_int)
+      |  AND vec_id NOT IN (SELECT new_id FROM edges_corpus)""".stripMargin
+  }
 
   /** DuckDB replay of the FULL hierarchical semantic-dedup chain:
     * [[Similarity.hashCentroids]] (md5 + integer arithmetic — the
     * portable-hash family) → [[Similarity.coarsen]]'s driver Lloyd
-    * (`rounds` unrolled MATERIALIZED CTE pairs, the q_bpe_train
-    * pattern) → two-level coarse→fine assignment → intra-cell dup
-    * edges → min-id survivor rule. Bit-exactness rests on two pillars:
-    * every hashCentroids component is a dyadic rational, so Lloyd's
-    * per-round means (always recomputed from the ORIGINALS) are
-    * order-independent exact under plain `sum()`; and every cosine is
-    * a sequential ascending-index fold on both engines
+    * (8 unrolled MATERIALIZED CTE pairs, the q_bpe_train pattern) →
+    * two-level coarse→fine assignment → intra-cell dup edges → min-id
+    * survivor rule, all from [[OracleSql.HierProbedCtes]]. Bit-exactness
+    * rests on two pillars: every hashCentroids component is a dyadic
+    * rational, so Lloyd's per-round means (always recomputed from the
+    * ORIGINALS) are order-independent exact under plain `sum()`; and
+    * every cosine is a sequential ascending-index fold on both engines
     * (list_dot_product ≡ the fused CosineSimilarity loop). Faithful
     * corners: coarsen's `dot/sqrt/sqrt` two-division form with the
-    * −2.0 zero-norm guard vs CosineSimilarity's `dot/(sqrt·sqrt)`;
-    * the returned grouping is the LAST round's assignment (computed
-    * against round R−1 means) while the returned coarse centers are
-    * the round-R means, float32-rounded. */
-  /** Quantizer-rebuild CTE chain shared by the two hierarchical oracles
-    * (q_semdedup_hier, q_ann_ivf_hier): hashCentroids reconstruction
-    * from md5 + integer arithmetic (fcv/fc), [[Similarity.coarsen]]'s
-    * driver Lloyd as `rounds` unrolled MATERIALIZED CTE pairs
-    * (a1..aR / m1..mR), and the float32-rounded coarse centers (gc).
-    * Needs an upstream `e(vec_id, v)` CTE; the LAST round's assignment
-    * aR is the cell→group map (coarsen returns round-R means but the
-    * round-R assignment computed against round R−1 means — replayed
-    * faithfully). */
-  private[queries] def hierQuantizerCtes(k: Int, dim: Int, rounds: Int, tag: String): String = {
-    val g = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val roundCtes = (1 to rounds).map { r =>
-      s"""a$r AS MATERIALIZED (
-        |  SELECT c, j FROM (
-        |    SELECT c, j, row_number() OVER (PARTITION BY c ORDER BY s DESC, j) AS rn
-        |    FROM (SELECT fc.c, m.j,
-        |            CASE WHEN list_dot_product(m.m, m.m) = 0 OR list_dot_product(fc.ctr, fc.ctr) = 0
-        |                 THEN CAST('-2.0' AS DOUBLE)
-        |                 ELSE list_dot_product(m.m, fc.ctr) / sqrt(list_dot_product(m.m, m.m)) / sqrt(list_dot_product(fc.ctr, fc.ctr)) END AS s
-        |          FROM fc CROSS JOIN m${r - 1} m))
-        |  WHERE rn = 1),
-        |m$r AS MATERIALIZED (
-        |  SELECT mp.j, coalesce(nm.m, mp.m) AS m
-        |  FROM m${r - 1} mp LEFT JOIN (
-        |    SELECT j, list(mx ORDER BY d) AS m
-        |    FROM (SELECT a.j, fcv.d, sum(fcv.x) / count(*) AS mx
-        |          FROM a$r a JOIN fcv ON fcv.c = a.c GROUP BY a.j, fcv.d)
-        |    GROUP BY j) nm ON nm.j = mp.j)""".stripMargin
-    }.mkString(",\n")
-    s"""fcv AS MATERIALIZED (
-      |  SELECT cd // $dim AS c, cd % $dim AS d,
-      |         (CAST(CAST(concat('0x', substr(md5('$tag:' || CAST(cd // $dim AS VARCHAR) || ':' || CAST(cd % $dim AS VARCHAR)), 1, 15)) AS BIGINT) % 256 AS DOUBLE)
-      |          - CAST('127.5' AS DOUBLE)) / CAST('128.0' AS DOUBLE) AS x
-      |  FROM generate_series(0, ${k * dim - 1}) AS t(cd)),
-      |fc AS MATERIALIZED (SELECT c, list(x ORDER BY d) AS ctr FROM fcv GROUP BY c),
-      |m0 AS MATERIALIZED (SELECT j, (SELECT ctr FROM fc WHERE c = least($k - 1, (j * $k) // $g)) AS m
-      |       FROM generate_series(0, ${g - 1}) AS t(j)),
-      |$roundCtes,
-      |gc AS (SELECT j, list_transform(m, x -> CAST(CAST(x AS REAL) AS DOUBLE)) AS gm FROM m$rounds)""".stripMargin
-  }
-
-  /** Two-level (coarse→fine) assignment CTE pair on top of
-    * [[hierQuantizerCtes]] — [[Similarity.assignCellsHierarchical]]'s
-    * probe path: rank the coarse groups (top `coarseProbes`, group-id
-    * tie-break), then rank ONLY the probed groups' fine centroids (top
-    * `fineProbes`, cell tie-break). `srcFilter` restricts the assigned
-    * rows (the ANN query side); CTE names carry prefix `p` so corpus
-    * and query chains compose in one oracle. */
-  private[queries] def hierAssignCtes(p: String, srcFilter: String, coarseProbes: Int,
-                             fineProbes: Int, rounds: Int,
-                             keepRank: Boolean = false): String = {
-    val rankCol = if (keepRank) ", CAST(rn AS BIGINT) AS rank" else ""
-    s"""${p}pg AS (SELECT vec_id, j FROM (
-      |    SELECT e.vec_id, gc.j,
-      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |        list_dot_product(e.v, gc.gm) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(gc.gm, gc.gm))) DESC, gc.j) AS rn
-      |    FROM e CROSS JOIN gc$srcFilter) WHERE rn <= $coarseProbes),
-      |${p}asgn AS MATERIALIZED (SELECT vec_id, cell$rankCol FROM (
-      |    SELECT pg.vec_id, fc.c AS cell,
-      |      row_number() OVER (PARTITION BY pg.vec_id ORDER BY
-      |        list_dot_product(e.v, fc.ctr) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(fc.ctr, fc.ctr))) DESC, fc.c) AS rn
-      |    FROM ${p}pg pg JOIN a$rounds cg ON cg.j = pg.j JOIN fc ON fc.c = cg.c JOIN e ON e.vec_id = pg.vec_id)
-      |  WHERE rn <= $fineProbes)""".stripMargin
-  }
-
-  /** The two-probe boundary-pair rule ([[SemDedup.dedupHier]] default,
-    * r13 verdict task 1): each id probes its top-`fineProbes` fine
-    * cells; a pair is a candidate when ANY probed cell is shared; the
-    * survivor output is the rank-1 assignment minus distinct higher-ids
-    * of qualifying pairs. The duplicate pair a shared-both-cells twin
-    * generates is absorbed by NOT IN. */
-  private def hierOracleSql(k: Int, dim: Int, rounds: Int,
-                            coarseProbes: Int, tag: String,
-                            fineProbes: Int = 2): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |${hierQuantizerCtes(k, dim, rounds, tag)},
-      |${hierAssignCtes("", "", coarseProbes, fineProbes, rounds, keepRank = true)},
-      |edges AS (
-      |  SELECT a.vec_id AS id1, b.vec_id AS id2
-      |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      |  JOIN e qe ON qe.vec_id = a.vec_id
-      |  JOIN e ce ON ce.vec_id = b.vec_id
-      |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
-      |SELECT vec_id, CAST(cell AS BIGINT) AS cell
-      |FROM asgn
-      |WHERE rank = 1 AND vec_id NOT IN (SELECT id2 FROM edges)""".stripMargin
+    * −2.0 zero-norm guard vs CosineSimilarity's `dot/(sqrt·sqrt)`; the
+    * returned grouping is the LAST round's assignment (computed against
+    * round R−1 means) while the returned coarse centers are the round-R
+    * means, float32-rounded. The candidate rule is the two-probe
+    * boundary-pair rule ([[SemDedup.dedupHier]] default, r13 verdict
+    * task 1): each id probes its top-2 fine cells and the survivor
+    * output is the rank-1 assignment ([[survivorSql]]). */
+  private val hierOracleSql =
+    s"""WITH $HierProbedCtes,
+      |${survivorSql("rank = 1 AND ")}""".stripMargin
 
   /** The hierarchical INGEST rule ([[SemDedup.dedupIngestHier]]): the
-    * same quantizer-rebuild + two-level probed assignment as
+    * same quantizer rebuild + two-level probed assignment as
     * [[hierOracleSql]] over ALL ids (assignment is per-row against the
     * centroids alone, so assigning the sides separately ≡ restricting
     * one full assignment), then the ingest survivor rule on the batch
-    * side: drop on an edge to ANY standing id or a SMALLER batch id. */
-  private def hierIngestOracleSql(k: Int, dim: Int, rounds: Int,
-                                  coarseProbes: Int, tag: String,
-                                  fineProbes: Int = 2): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |${hierQuantizerCtes(k, dim, rounds, tag)},
-      |${hierAssignCtes("", "", coarseProbes, fineProbes, rounds, keepRank = true)},
-      |edges_int AS (
-      |  SELECT a.vec_id AS id1, b.vec_id AS id2
-      |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      |  JOIN e qe ON qe.vec_id = a.vec_id
-      |  JOIN e ce ON ce.vec_id = b.vec_id
-      |  WHERE a.vec_id % 10 >= 8 AND b.vec_id % 10 >= 8
-      |    AND list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-      |edges_corpus AS (
-      |  SELECT a.vec_id AS corpus_id, b.vec_id AS new_id
-      |  FROM asgn a JOIN asgn b ON a.cell = b.cell
-      |  JOIN e qe ON qe.vec_id = a.vec_id
-      |  JOIN e ce ON ce.vec_id = b.vec_id
-      |  WHERE a.vec_id % 10 < 8 AND b.vec_id % 10 >= 8
-      |    AND list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
-      |SELECT vec_id, CAST(cell AS BIGINT) AS cell
-      |FROM asgn
-      |WHERE rank = 1 AND vec_id % 10 >= 8
-      |  AND vec_id NOT IN (SELECT id2 FROM edges_int)
-      |  AND vec_id NOT IN (SELECT new_id FROM edges_corpus)""".stripMargin
+    * side ([[ingestSurvivorSql]]). */
+  private val hierIngestOracleSql =
+    s"""WITH $HierProbedCtes,
+      |${ingestSurvivorSql("rank")}""".stripMargin
 
   /** DuckDB replay of the FROZEN hierarchical ANN SERVING path
     * (q_ann_ivf_hier — [[Similarity.ivfTopKFrozenHier]]): the same
-    * quantizer-rebuild + two-level assignment as [[hierOracleSql]], but
+    * quantizer rebuild + two-level assignment as [[hierOracleSql]], but
     * run on BOTH sides of the search — corpus rank-1 cells, query
     * top-`nprobe` cells — then the cell-keyed candidate join, exact
     * cosine, and the q_ann_ivf top-10 rank (cos DESC, neighbor
     * tie-break). The assignment CTEs are the exactness-critical part
     * and they are shared verbatim with the dedup-side oracle. */
-  private def hierAnnOracleSql(k: Int, dim: Int, rounds: Int,
-                               coarseProbes: Int, tag: String,
-                               nprobe: Int): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |${hierQuantizerCtes(k, dim, rounds, tag)},
-      |${hierAssignCtes("c", "", coarseProbes, 1, rounds)},
-      |${hierAssignCtes("q", " WHERE e.vec_id % 50 = 0", coarseProbes, nprobe, rounds)},
+  private def hierAnnOracleSql(nprobe: Int): String =
+    s"""WITH ${embCte()},
+      |$HierQuantizerCtes,
+      |${hierAssignCtes("c", "", 1)},
+      |${hierAssignCtes("q", " WHERE e.vec_id % 50 = 0", nprobe)},
       |cand AS (
       |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
       |  FROM qasgn q JOIN casgn c ON q.cell = c.cell
       |  WHERE q.vec_id <> c.vec_id),
-      |scored AS (
-      |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-      |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
-      |            JOIN e ce ON ce.vec_id = cand.neighbor_id)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-      |  SELECT query_id, neighbor_id, cos_sim,
-      |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-      |  FROM scored)
-      |WHERE rank <= 10""".stripMargin
+      |${scoredCte("", "cand")}
+      |${topK("scored")}""".stripMargin
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -348,7 +316,9 @@ object SimilarityQueries {
     // once at the corpus's own ingest), shortlist 50, exact cosine
     // re-rank on the shortlist only — the semantic-novelty gate a
     // 100 TB pipeline runs per arriving batch. Oracle replays encode +
-    // ADC + shortlist + re-rank restricted to batch×corpus.
+    // ADC + shortlist + re-rank restricted to batch×corpus: no
+    // corpus×corpus and no batch×batch pairs, mirroring
+    // Pq.adcIngestTopK's stored-index search.
     "q_ann_ingest" -> QueryDef(
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
@@ -358,22 +328,9 @@ object SimilarityQueries {
           storedCodes, corpus, emb.filter(col("vec_id") % 13 === 0),
           "vec_id", "embedding", k = 10, shortlist = 50)
       },
-      s"""WITH $PqIngestAdcCtes,
-        |short AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS rk
-        |    FROM adc)
-        |  WHERE rk <= 50),
-        |rescored AS (
-        |  SELECT s.query_id, s.neighbor_id, $CosineSql AS cos_sim
-        |  FROM short s JOIN e qe ON qe.vec_id = s.query_id
-        |               JOIN e ce ON ce.vec_id = s.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM rescored)
-        |WHERE rank <= 10"""),
+      s"""WITH $PqCtes,
+        |${pqAdcCtes("vec_id % 13 = 0", " CROSS JOIN q", "x.vec_id % 13 <> 0")},
+        |${pqRerankSql(50)}"""),
 
     // PQ codes for every vector — 64-dim float (256 B) → 4 nibbles
     // (2 B packed) + the reconstruction norm ADC needs. Pure narrow
@@ -402,12 +359,8 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10)
       },
-      s"""WITH $PqAdcCtes
-        |SELECT query_id, neighbor_id, adc_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, adc_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM adc)
-        |WHERE rank <= 10"""),
+      s"""WITH $PqSearchCtes
+        |${topK("adc", "adc_sim")}"""),
 
     // ADC shortlist-100 + exact cosine re-rank — the production IVFADC
     // posture (quantized scan nominates, exact scoring confirms):
@@ -419,22 +372,8 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10, shortlist = 100)
       },
-      s"""WITH $PqAdcCtes,
-        |short AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS rk
-        |    FROM adc)
-        |  WHERE rk <= 100),
-        |rescored AS (
-        |  SELECT s.query_id, s.neighbor_id, $CosineSql AS cos_sim
-        |  FROM short s JOIN e qe ON qe.vec_id = s.query_id
-        |               JOIN e ce ON ce.vec_id = s.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM rescored)
-        |WHERE rank <= 10"""),
+      s"""WITH $PqSearchCtes,
+        |${pqRerankSql(100)}"""),
 
     // IVFADC — the production composition (FAISS's default server
     // architecture): frozen coarse cells prune WHICH vectors a query
@@ -449,57 +388,16 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10, nprobe = 8, shortlist = 100)
       },
-      s"""WITH $PqCtes,
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |casgn AS (
-        |  SELECT vec_id AS neighbor_id, cell FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank <= 1),
-        |qasgn AS (
-        |  SELECT vec_id AS query_id, cell FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents WHERE e.vec_id % 50 = 0)
-        |  WHERE crank <= 8),
-        |q AS (SELECT vec_id AS query_id, v AS qv, sqrt(list_dot_product(v, v)) AS qnorm
-        |      FROM e WHERE vec_id % 50 = 0),
-        |adc AS (
-        |  SELECT qa.query_id, x.vec_id AS neighbor_id,
-        |         (((list_dot_product(list_slice(q.qv, 1, 16), b0.c)
-        |            + list_dot_product(list_slice(q.qv, 17, 32), b1.c))
-        |            + list_dot_product(list_slice(q.qv, 33, 48), b2.c))
-        |            + list_dot_product(list_slice(q.qv, 49, 64), b3.c))
-        |           / (q.qnorm * x.recon_norm) AS adc_sim
-        |  FROM pqcodes x
-        |  JOIN casgn c ON c.neighbor_id = x.vec_id
-        |  JOIN qasgn qa ON qa.cell = c.cell
-        |  JOIN q ON q.query_id = qa.query_id
-        |  JOIN cb b0 ON b0.m = 0 AND b0.code = x.code_0
-        |  JOIN cb b1 ON b1.m = 1 AND b1.code = x.code_1
-        |  JOIN cb b2 ON b2.m = 2 AND b2.code = x.code_2
-        |  JOIN cb b3 ON b3.m = 3 AND b3.code = x.code_3
-        |  WHERE x.vec_id <> qa.query_id),
-        |short AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT query_id, neighbor_id,
-        |           row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS rk
-        |    FROM adc)
-        |  WHERE rk <= 100),
-        |rescored AS (
-        |  SELECT s.query_id, s.neighbor_id, $CosineSql AS cos_sim
-        |  FROM short s JOIN e qe ON qe.vec_id = s.query_id
-        |               JOIN e ce ON ce.vec_id = s.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM rescored)
-        |WHERE rank <= 10"""),
+      {
+        val cells = """
+          |  JOIN casgn c ON c.neighbor_id = x.vec_id
+          |  JOIN qasgn qa ON qa.cell = c.cell
+          |  JOIN q ON q.query_id = qa.query_id""".stripMargin
+        s"""WITH $PqCtes,
+          |${ivfAsgnCtes("", 8, "e CROSS JOIN cents")},
+          |${pqAdcCtes("vec_id % 50 = 0", cells, "x.vec_id <> qa.query_id", "qa")},
+          |${pqRerankSql(100)}"""
+      }),
 
     // Symmetric int8 quantization (see Similarity.quantizeInt8) — the
     // typed ARRAY<LONG> stays on the operator API; the registry projects
@@ -619,19 +517,9 @@ object SimilarityQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding", dim = 64,
         threshold = 0.4, planes = 4, tables = 16,
         maxBucketSize = Some(100000)),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 16)} AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b2.vec_id AS id2
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-        |SELECT id1, id2, cos_sim FROM (
-        |  SELECT id1, id2,
-        |         list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.id1
-        |            JOIN e ce ON ce.vec_id = cand.id2)
-        |WHERE cos_sim >= 0.4"""),
+      s"""WITH ${embCte()},
+        |${srpBucketCtes(srpCodes(4, 16), 16)},
+        |${srpPairsSql(ingest = false)}"""),
 
     // The SRP tier's INGEST gate (Dedup.embeddingNearDupsAgainst):
     // standing corpus (vec_id%10<8) carries its STORED srpIndex (tables
@@ -656,20 +544,9 @@ object SimilarityQueries {
           batch, "vec_id", "embedding", dim = 64, threshold = 0.4,
           planes = 4, maxBucketSize = Some(100000))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 16)} AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS corpus_id, b2.vec_id AS new_id
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-        |  WHERE a.vec_id % 10 < 8 AND b2.vec_id % 10 >= 8)
-        |SELECT corpus_id, new_id, cos_sim FROM (
-        |  SELECT corpus_id, new_id,
-        |         list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.corpus_id
-        |            JOIN e ce ON ce.vec_id = cand.new_id)
-        |WHERE cos_sim >= 0.4"""),
+      s"""WITH ${embCte()},
+        |${srpBucketCtes(srpCodes(4, 16), 16)},
+        |${srpPairsSql(ingest = true)}"""),
 
     // The standing-index RESIZE LIFECYCLE, end to end as one hash gate
     // (r14 verdict task 2): the SRP index's manifest says it was sized
@@ -710,29 +587,12 @@ object SimilarityQueries {
             lit(-1L).as("corpus_id"), lit(m2.planes.toLong).as("new_id"),
             lit(mOld.planes.toDouble).as("cos_sim")))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT count(*) AS n FROM e WHERE vec_id % 10 < 8),
-        |pold AS (SELECT min(i) AS p FROM generate_series(1, 62) AS g(i), st
-        |         WHERE (st.n // 4) // (1::BIGINT << i) <= 128),
-        |pnew AS (SELECT min(i) AS p FROM generate_series(1, 62) AS g(i), st
-        |         WHERE st.n // (1::BIGINT << i) <= 128),
-        |codes AS (SELECT vec_id, CASE (SELECT p FROM pnew)
-        |    WHEN 2 THEN ${srpCodesSql(64, 2, 16)}
-        |    WHEN 3 THEN ${srpCodesSql(64, 3, 16)}
-        |    WHEN 4 THEN ${srpCodesSql(64, 4, 16)}
-        |    END AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS corpus_id, b2.vec_id AS new_id
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
-        |  WHERE a.vec_id % 10 < 8 AND b2.vec_id % 10 >= 8)
-        |SELECT corpus_id, new_id, cos_sim FROM (
-        |  SELECT corpus_id, new_id,
-        |         list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.corpus_id
-        |            JOIN e ce ON ce.vec_id = cand.new_id)
-        |WHERE cos_sim >= 0.4
+      s"""WITH ${embCte()},
+        |$StandingCountCte,
+        |${srpPlanesCte("pold", "(st.n // 4)")},
+        |${srpPlanesCte("pnew")},
+        |${srpBucketCtes(srpCodesSized("pnew"), 16)},
+        |${srpPairsSql(ingest = true)}
         |UNION ALL
         |SELECT CAST(-1 AS BIGINT) AS corpus_id,
         |       CAST(CASE WHEN (SELECT p FROM pnew) IN (2, 3, 4)
@@ -751,7 +611,7 @@ object SimilarityQueries {
     // standing corpus (label migration), and ingest serves from the
     // REBUILT index. The oracle replays the sizing rule from COUNT(*)
     // ((n+127)//128), reconstructs hashCentroids at that RUNTIME k from
-    // md5 integer arithmetic (the hierQuantizerCtes fcv pattern over an
+    // md5 integer arithmetic (the OracleSql hashCentroids fcv pattern over an
     // oversized constant series, filtered to k·64 — k > 64 maps the
     // sentinel to NULL so truncation can never pass silently), and
     // re-derives the full ingest rule. Hash match = stale-gate +
@@ -781,30 +641,7 @@ object SimilarityQueries {
           .unionByName(s.range(1).select(
             lit(-1L).as("vec_id"), lit(m2.k.toLong).as("cell")))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT count(*) AS n FROM e WHERE vec_id % 10 < 8),
-        |kk AS (SELECT (n + 127) // 128 AS k FROM st),
-        |fcv AS MATERIALIZED (
-        |  SELECT cd // 64 AS c, cd % 64 AS d,
-        |         (CAST(CAST(concat('0x', substr(md5('hc:' || CAST(cd // 64 AS VARCHAR) || ':' || CAST(cd % 64 AS VARCHAR)), 1, 15)) AS BIGINT) % 256 AS DOUBLE)
-        |          - CAST('127.5' AS DOUBLE)) / CAST('128.0' AS DOUBLE) AS x
-        |  FROM generate_series(0, 4095) AS t(cd)
-        |  WHERE cd < (SELECT k FROM kk) * 64),
-        |fc AS MATERIALIZED (SELECT c, list(x ORDER BY d) AS ctr FROM fcv GROUP BY c),
-        |asgn AS MATERIALIZED (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, fc.c AS cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, fc.ctr) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(fc.ctr, fc.ctr))) DESC,
-        |             fc.c) AS crank
-        |    FROM e CROSS JOIN fc)
-        |  WHERE crank <= 2),
-        |edges AS MATERIALIZED (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
+      s"""WITH $SizedQuantizerCtes
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE crank = 1 AND vec_id % 10 >= 8
@@ -812,10 +649,7 @@ object SimilarityQueries {
         |                     WHERE id1 % 10 >= 8 AND id2 % 10 >= 8 AND id1 < id2)
         |  AND vec_id NOT IN (SELECT id2 FROM edges
         |                     WHERE id1 % 10 < 8 AND id2 % 10 >= 8)
-        |UNION ALL
-        |SELECT CAST(-1 AS BIGINT) AS vec_id,
-        |       CAST(CASE WHEN (SELECT k FROM kk) <= 64
-        |                 THEN (SELECT k FROM kk) END AS BIGINT) AS cell"""),
+        |$SizedKSentinel"""),
 
     // The AUTO-SIZED near-dup path — the round-10 scale ladder's headline
     // fix graduated to a CORRECTNESS row: the engine learns n with one
@@ -850,25 +684,11 @@ object SimilarityQueries {
             lit(-1L).as("id1"), lit(p.toLong).as("id2"),
             lit(n.toDouble).as("cos_sim")))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${embCte()},
         |pp AS (SELECT min(i) AS p FROM generate_series(1, 32) AS g(i)
         |       WHERE (SELECT count(*) FROM e) // (1::BIGINT << i) <= 128),
-        |codes AS (SELECT vec_id, CASE (SELECT p FROM pp)
-        |    WHEN 2 THEN ${srpCodesSql(64, 2, 16)}
-        |    WHEN 3 THEN ${srpCodesSql(64, 3, 16)}
-        |    WHEN 4 THEN ${srpCodesSql(64, 4, 16)}
-        |    END AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b2.vec_id AS id2
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-        |SELECT id1, id2, cos_sim FROM (
-        |  SELECT id1, id2,
-        |         list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.id1
-        |            JOIN e ce ON ce.vec_id = cand.id2)
-        |WHERE cos_sim >= 0.4
+        |${srpBucketCtes(srpCodesSized("pp"), 16)},
+        |${srpPairsSql(ingest = false)}
         |UNION ALL
         |SELECT CAST(-1 AS BIGINT) AS id1,
         |       CAST(CASE WHEN (SELECT p FROM pp) IN (2, 3, 4)
@@ -882,23 +702,8 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", dim = 64, k = 10, planes = 4)
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 8)} AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 8) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |  WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-        |scored AS (
-        |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
-        |            JOIN e ce ON ce.vec_id = cand.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10"""),
+      s"""WITH ${lshScoredCtes("", 8)}
+        |${topK("scored")}"""),
 
     // ANN ensemble fusion: the IVF(nprobe=4) and SRP-LSH(8 tables)
     // top-10 lists fused per query by reciprocal rank (Retrieval
@@ -927,24 +732,9 @@ object SimilarityQueries {
             col("rrf_score"))
       },
       s"""WITH ${ivfTopkCtes(4, "v_")},
-        |l_e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |l_codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 8)} AS codes FROM l_e),
-        |l_b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |        FROM l_codes CROSS JOIN generate_series(1, 8) AS g(i)),
-        |l_cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM l_b q JOIN l_b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |  WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-        |l_scored AS (
-        |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-        |  FROM l_cand cand JOIN l_e qe ON qe.vec_id = cand.query_id
-        |            JOIN l_e ce ON ce.vec_id = cand.neighbor_id),
+        |${lshScoredCtes("l_", 8)},
         |l_topk AS (
-        |  SELECT query_id, neighbor_id, rank FROM (
-        |    SELECT query_id, neighbor_id,
-        |           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |    FROM l_scored)
-        |  WHERE rank <= 10)
+        |  ${topK("l_scored", keepScore = false)})
         |SELECT coalesce(i.query_id, l.query_id) AS query_id,
         |       coalesce(i.neighbor_id, l.neighbor_id) AS neighbor_id,
         |       CAST(coalesce(i.rank, -1) AS BIGINT) AS ivf_rank,
@@ -969,23 +759,8 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", dim = 64, k = 10, planes = 4, tables = 16)
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 16)} AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |  WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-        |scored AS (
-        |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
-        |            JOIN e ce ON ce.vec_id = cand.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10"""),
+      s"""WITH ${lshScoredCtes("", 16)}
+        |${topK("scored")}"""),
 
     // The high-recall serving endpoint: 8 tables + Hamming-1 multiprobe
     // (recall 1.00 measured on this corpus, floor 0.9 pinned in
@@ -1002,26 +777,8 @@ object SimilarityQueries {
           "vec_id", "embedding", dim = 64, k = 10,
           planes = 4, tables = 8, probes = 4)
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |codes AS (SELECT vec_id, ${srpCodesSql(64, 4, 8)} AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 8) AS g(i)),
-        |qb AS (SELECT vec_id, tbl,
-        |         unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4), xor(bucket, 8)]) AS bucket
-        |       FROM b WHERE vec_id % 50 = 0),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM qb q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |  WHERE q.vec_id <> c.vec_id),
-        |scored AS (
-        |  SELECT query_id, neighbor_id, $CosineSql AS cos_sim
-        |  FROM cand JOIN e qe ON qe.vec_id = cand.query_id
-        |            JOIN e ce ON ce.vec_id = cand.neighbor_id)
-        |SELECT query_id, neighbor_id, cos_sim, rank FROM (
-        |  SELECT query_id, neighbor_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10"""),
+      s"""WITH ${lshScoredCtes("", 8, multiprobe = true)}
+        |${topK("scored")}"""),
 
     // One Lloyd update step from the frozen quantizer — the TRAINING
     // side of the IVF story, in-engine and hash-verified: assignment
@@ -1033,26 +790,7 @@ object SimilarityQueries {
         graft.operators.KMeansOps.lloydStep(
           Tables.embeddings(s, dir), "vec_id", "embedding",
           graft.operators.IvfCentroids.cells),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, v, cell FROM (
-        |    SELECT e.vec_id, e.v, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank = 1),
-        |ex AS (
-        |  SELECT cell,
-        |         unnest([{'pos': i - 1, 'x': v[i]} for i in generate_series(1, 64)],
-        |                recursive := true)
-        |  FROM asgn)
-        |SELECT CAST(cell AS BIGINT) AS cell, CAST(pos AS BIGINT) AS pos,
-        |       CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
-        |         / (CAST(count(*) AS DOUBLE) * 1073741824.0) AS c_new,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM ex GROUP BY cell, pos"""),
+      lloydOracleSql(1, _ => "")),
 
     // Multi-round Lloyd fit (2 rounds from the frozen seed) — the full
     // in-engine training loop, hash-verified end to end. Round 2's
@@ -1068,45 +806,7 @@ object SimilarityQueries {
         graft.operators.KMeansOps.lloydIterate(
           Tables.embeddings(s, dir), "vec_id", "embedding",
           graft.operators.IvfCentroids.cells, rounds = 2),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents0 AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn1 AS (
-        |  SELECT vec_id, v, cell FROM (
-        |    SELECT e.vec_id, e.v, cents0.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents0.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents0.c, cents0.c))) DESC,
-        |             cents0.cell) AS crank
-        |    FROM e CROSS JOIN cents0)
-        |  WHERE crank = 1),
-        |ex1 AS (
-        |  SELECT cell,
-        |         unnest([{'pos': i - 1, 'x': v[i]} for i in generate_series(1, 64)],
-        |                recursive := true)
-        |  FROM asgn1),
-        |upd1 AS (
-        |  SELECT cell, pos,
-        |         CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
-        |           / (CAST(count(*) AS DOUBLE) * 1073741824.0) AS c
-        |  FROM ex1 GROUP BY cell, pos),
-        |cents1 AS (SELECT cell, list(c ORDER BY pos) AS c FROM upd1 GROUP BY cell),
-        |asgn2 AS (
-        |  SELECT vec_id, v, cell FROM (
-        |    SELECT e.vec_id, e.v, cents1.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents1.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents1.c, cents1.c))) DESC,
-        |             cents1.cell) AS crank
-        |    FROM e CROSS JOIN cents1)
-        |  WHERE crank = 1),
-        |ex2 AS (
-        |  SELECT cell,
-        |         unnest([{'pos': i - 1, 'x': v[i]} for i in generate_series(1, 64)],
-        |                recursive := true)
-        |  FROM asgn2)
-        |SELECT CAST(cell AS BIGINT) AS cell, CAST(pos AS BIGINT) AS pos,
-        |       CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
-        |         / (CAST(count(*) AS DOUBLE) * 1073741824.0) AS c_new,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM ex2 GROUP BY cell, pos"""),
+      lloydOracleSql(2, _.toString)),
 
     // SemDeDup (Abbas et al. 2023): semantic near-dup removal bounded
     // by the frozen IVF cells — candidates only WITHIN a cell (Σ|cell|²
@@ -1119,25 +819,10 @@ object SimilarityQueries {
       (s, dir) => graft.operators.SemDedup.dedup(
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, cell FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank = 1),
-        |edges AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
-        |SELECT vec_id, CAST(cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE vec_id NOT IN (SELECT id2 FROM edges)"""),
+      s"""WITH ${embCte()},
+        |cents AS (${IvfCentroids.duckdbValues}),
+        |asgn AS ${cellRank("vec_id, cell", "= 1")},
+        |${survivorSql("")}"""),
 
     // SemDedup.dedupProbed — the FLAT quantizer tier's boundary-pair
     // rule (r13 verdict task 1), hash-gated on the frozen IvfCentroids
@@ -1151,25 +836,8 @@ object SimilarityQueries {
       (s, dir) => graft.operators.SemDedup.dedupProbed(
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank <= 2),
-        |edges AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
-        |SELECT vec_id, CAST(cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE crank = 1 AND vec_id NOT IN (SELECT id2 FROM edges)"""),
+      s"""WITH $FlatProbedCtes,
+        |${survivorSql("crank = 1 AND ")}"""),
 
     // SemDedup.dedupIngest — the semantic tier's batch-vs-standing
     // entry point (the lshCandidatesAgainst shape): standing corpus =
@@ -1191,35 +859,8 @@ object SimilarityQueries {
             batch, "vec_id", "embedding", threshold = 0.4)
           .select(col("vec_id"), col("cell").cast("long").as("cell"))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank <= 2),
-        |edges_int AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE a.vec_id % 10 >= 8 AND b.vec_id % 10 >= 8
-        |    AND list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
-        |edges_corpus AS (
-        |  SELECT a.vec_id AS corpus_id, b.vec_id AS new_id
-        |  FROM asgn a JOIN asgn b ON a.cell = b.cell
-        |  JOIN e qe ON qe.vec_id = a.vec_id
-        |  JOIN e ce ON ce.vec_id = b.vec_id
-        |  WHERE a.vec_id % 10 < 8 AND b.vec_id % 10 >= 8
-        |    AND list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)
-        |SELECT vec_id, CAST(cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE crank = 1 AND vec_id % 10 >= 8
-        |  AND vec_id NOT IN (SELECT id2 FROM edges_int)
-        |  AND vec_id NOT IN (SELECT new_id FROM edges_corpus)"""),
+      s"""WITH $FlatProbedCtes,
+        |${ingestSurvivorSql("crank")}"""),
 
     // The >FlatAssignCeiling tier of semantic dedup, hash-gated end to
     // end (r11 verdict task 2): the engine path is SemDedup.dedupHier →
@@ -1238,7 +879,7 @@ object SimilarityQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4,
         centroids = HierCentroids)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      hierOracleSql(k = 4100, dim = 64, rounds = 8, coarseProbes = 2, tag = "hc")),
+      hierOracleSql),
 
     // The hierarchical tier's INGEST gate: SemDedup.dedupIngestHier on
     // the same frozen k = 4100 > FlatAssignCeiling quantizer as
@@ -1264,8 +905,7 @@ object SimilarityQueries {
             batch, "vec_id", "embedding", threshold = 0.4, HierCentroids)
           .select(col("vec_id"), col("cell").cast("long").as("cell"))
       },
-      hierIngestOracleSql(k = 4100, dim = 64, rounds = 8, coarseProbes = 2,
-        tag = "hc")),
+      hierIngestOracleSql),
 
     // The hierarchical ANN SERVING branch's driver gate (r12 verdict
     // task 1): ivfTopKFrozenHier routes BOTH corpus and query sides
@@ -1285,8 +925,7 @@ object SimilarityQueries {
           "vec_id", "embedding", k = 10, nprobe = 64,
           centroids = HierCentroids)
       },
-      hierAnnOracleSql(k = 4100, dim = 64, rounds = 8, coarseProbes = 2,
-        tag = "hc", nprobe = 64)),
+      hierAnnOracleSql(nprobe = 64)),
 
     // Scalar int8 quantization with per-vector abs-max calibration (the
     // faiss/llama.cpp Q8 shape, the MEMORY lever beside PQ): 4 B float →

@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.{QueryDef, Tables}
 import graft.streaming.{SemDedupIngest, StreamingOps}
 import graft.streaming.StreamingOps.Ev
+import OracleSql._
 
 /** CORRECTNESS rows for the Structured Streaming family — the last
   * operator family that was spec-only (r10 verdict task 3). Each query
@@ -386,16 +387,6 @@ object StreamQueries {
       })(_ => read(store))
   }
 
-  /** The cell-assigned ingest oracles' candidate edges: pairs sharing a
-    * probed `asgn` cell at cosine ≥ 0.4. */
-  private val cellEdgesCte =
-    """edges AS MATERIALIZED (
-      |  SELECT a.vec_id AS id1, b.vec_id AS id2
-      |  FROM asgn a JOIN asgn b ON a.cell = b.cell AND a.vec_id <> b.vec_id
-      |  JOIN e qe ON qe.vec_id = a.vec_id
-      |  JOIN e ce ON ce.vec_id = b.vec_id
-      |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4)""".stripMargin
-
   /** The ingest oracles' chained two-round fold over their `edges`
     * CTE, the SQL twin of [[ingestReplay]]: round 1 (surv1) admits the
     * vec_id % 10 = 8 batch against the standing % 10 < 8 corpus and
@@ -422,6 +413,16 @@ object StreamQueries {
       |                         AND (id1 % 10 < 8
       |                              OR id1 IN (SELECT vec_id FROM surv1))))""".stripMargin
   }
+
+  /** The cell-assigned ingest gates' emitted rows: the admitted ids of
+    * [[ingestFoldCtes]] with their rank-1 cell (`rank` names the probed
+    * assignment's rank column), less any row `drop` removes. */
+  private def admittedSql(rank: String, drop: String = ""): String =
+    s"""SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
+      |FROM asgn
+      |WHERE $rank = 1$drop
+      |  AND (vec_id IN (SELECT vec_id FROM surv1)
+      |       OR vec_id IN (SELECT vec_id FROM surv2))""".stripMargin
 
   /** The event-replay gates' shared slice: the full events table as
     * [[Ev]] rows, collected once per sf dir (seven gates replay exactly
@@ -1118,23 +1119,10 @@ object StreamQueries {
           SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank <= 2),
-        |$cellEdgesCte,
+      s"""WITH $FlatProbedCtes,
+        |$CellEdgesCte,
         |${ingestFoldCtes()}
-        |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE crank = 1
-        |  AND (vec_id IN (SELECT vec_id FROM surv1)
-        |       OR vec_id IN (SELECT vec_id FROM surv2))"""),
+        |${admittedSql("crank")}"""),
 
     // The HIERARCHICAL tier's streaming ingest (r15 verdict task 3):
     // the same two-micro-batch fold as q_stream_ingest, but the
@@ -1144,7 +1132,7 @@ object StreamQueries {
     // two-level assigner (dedupIngestProbedHier) — the >4096-cell
     // corpus can now ingest as a stream, which r15 couldn't. The
     // oracle rebuilds the coarse Lloyd from scratch (8 unrolled
-    // MATERIALIZED rounds — hierQuantizerCtes), assigns ALL ids once
+    // MATERIALIZED rounds — OracleSql.HierQuantizerCtes), assigns ALL ids once
     // (per-row vs centroids, so split assignment ≡ restricted full
     // assignment), and replays the chained two-round fold
     // (q_stream_ingest's surv1/surv2 CTEs on the hier assignment).
@@ -1162,16 +1150,10 @@ object StreamQueries {
           SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |${SimilarityQueries.hierQuantizerCtes(4100, 64, 8, "hc")},
-        |${SimilarityQueries.hierAssignCtes("", "", 2, 2, 8, keepRank = true)},
-        |$cellEdgesCte,
+      s"""WITH $HierProbedCtes,
+        |$CellEdgesCte,
         |${ingestFoldCtes()}
-        |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE rank = 1
-        |  AND (vec_id IN (SELECT vec_id FROM surv1)
-        |       OR vec_id IN (SELECT vec_id FROM surv2))"""),
+        |${admittedSql("rank")}"""),
 
     // The SRP tier's streaming ingest — the third quantizer tier's
     // fold (beyond the 65536-cell ceiling, where a billion-vector
@@ -1209,24 +1191,17 @@ object StreamQueries {
         s.createDataset(out.toIndexedSeq).toDF("vec_id")
           .withColumn("planes", lit(m.planes.toLong))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT count(*) AS n FROM e WHERE vec_id % 10 < 8),
-        |pl AS (SELECT min(i) AS p FROM generate_series(1, 62) AS g(i), st
-        |       WHERE st.n // (1::BIGINT << i) <= 128),
-        |codes AS (SELECT vec_id, CASE (SELECT p FROM pl)
-        |    WHEN 2 THEN ${SimilarityQueries.srpCodesSql(64, 2, 16)}
-        |    WHEN 3 THEN ${SimilarityQueries.srpCodesSql(64, 3, 16)}
-        |    WHEN 4 THEN ${SimilarityQueries.srpCodesSql(64, 4, 16)}
-        |    END AS codes FROM e),
-        |b AS (SELECT vec_id, i AS tbl, codes[i] AS bucket
-        |      FROM codes CROSS JOIN generate_series(1, 16) AS g(i)),
+      s"""WITH ${embCte()},
+        |$StandingCountCte,
+        |${srpPlanesCte("pl")},
+        |${srpBucketCtes(srpCodesSized("pl"), 16)},
         |edges AS MATERIALIZED (
         |  SELECT DISTINCT a.vec_id AS id1, b2.vec_id AS id2
         |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket
         |                    AND a.vec_id <> b2.vec_id
         |  JOIN e qe ON qe.vec_id = a.vec_id
         |  JOIN e ce ON ce.vec_id = b2.vec_id
-        |  WHERE list_dot_product(qe.v, ce.v) / (sqrt(list_dot_product(qe.v, qe.v)) * sqrt(list_dot_product(ce.v, ce.v))) >= 0.4),
+        |  WHERE ${cosine("qe.v", "ce.v")} >= 0.4),
         |${ingestFoldCtes()}
         |SELECT vec_id, CAST((SELECT p FROM pl) AS BIGINT) AS planes
         |FROM e
@@ -1259,24 +1234,10 @@ object StreamQueries {
           })(SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |cents AS (${graft.operators.IvfCentroids.duckdbValues}),
-        |asgn AS (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, cents.cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, cents.c) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(cents.c, cents.c))) DESC,
-        |             cents.cell) AS crank
-        |    FROM e CROSS JOIN cents)
-        |  WHERE crank <= 2),
-        |$cellEdgesCte,
+      s"""WITH $FlatProbedCtes,
+        |$CellEdgesCte,
         |${ingestFoldCtes("id1 % 20 <> 0 AND id1 % 20 <> 8")}
-        |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE crank = 1
-        |  AND asgn.vec_id % 20 <> 0 AND asgn.vec_id % 20 <> 8
-        |  AND (vec_id IN (SELECT vec_id FROM surv1)
-        |       OR vec_id IN (SELECT vec_id FROM surv2))"""),
+        |${admittedSql("crank", "\n  AND asgn.vec_id % 20 <> 0 AND asgn.vec_id % 20 <> 8")}"""),
 
     // The IN-STREAM REBUILD RECOVERY, end to end as one hash gate
     // (r16 verdict task 3 — the 3am path the scaladocs document,
@@ -1370,34 +1331,9 @@ object StreamQueries {
           .unionByName(s.range(1).select(
             lit(-1L).as("vec_id"), lit(m2.k.toLong).as("cell")))
       },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |st AS (SELECT count(*) AS n FROM e WHERE vec_id % 10 < 8),
-        |kk AS (SELECT (n + 127) // 128 AS k FROM st),
-        |fcv AS MATERIALIZED (
-        |  SELECT cd // 64 AS c, cd % 64 AS d,
-        |         (CAST(CAST(concat('0x', substr(md5('hc:' || CAST(cd // 64 AS VARCHAR) || ':' || CAST(cd % 64 AS VARCHAR)), 1, 15)) AS BIGINT) % 256 AS DOUBLE)
-        |          - CAST('127.5' AS DOUBLE)) / CAST('128.0' AS DOUBLE) AS x
-        |  FROM generate_series(0, 4095) AS t(cd)
-        |  WHERE cd < (SELECT k FROM kk) * 64),
-        |fc AS MATERIALIZED (SELECT c, list(x ORDER BY d) AS ctr FROM fcv GROUP BY c),
-        |asgn AS MATERIALIZED (
-        |  SELECT vec_id, cell, crank FROM (
-        |    SELECT e.vec_id, fc.c AS cell,
-        |           row_number() OVER (PARTITION BY e.vec_id
-        |             ORDER BY list_dot_product(e.v, fc.ctr) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(fc.ctr, fc.ctr))) DESC,
-        |             fc.c) AS crank
-        |    FROM e CROSS JOIN fc)
-        |  WHERE crank <= 2),
-        |$cellEdgesCte,
+      s"""WITH $SizedQuantizerCtes,
         |${ingestFoldCtes()}
-        |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
-        |FROM asgn
-        |WHERE crank = 1
-        |  AND (vec_id IN (SELECT vec_id FROM surv1)
-        |       OR vec_id IN (SELECT vec_id FROM surv2))
-        |UNION ALL
-        |SELECT CAST(-1 AS BIGINT) AS vec_id,
-        |       CAST(CASE WHEN (SELECT k FROM kk) <= 64
-        |                 THEN (SELECT k FROM kk) END AS BIGINT) AS cell""")
+        |${admittedSql("crank")}
+        |$SizedKSentinel""")
   )
 }

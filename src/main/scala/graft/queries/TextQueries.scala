@@ -65,10 +65,7 @@ object TextQueries {
   // n_terms) — shared by q_bm25 and q_hybrid_rrf so the two gates
   // replay ONE definition of the ranking function.
   private val Bm25CtesSql =
-    s"""toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '') AS t
-      |  FROM documents
-      |), dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+    s"""${OracleSql.ToksCte}, dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
       |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
       |tf AS (
       |  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
@@ -116,8 +113,8 @@ object TextQueries {
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
         .groupBy(col("token"))
         .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("n_docs")),
-      """SELECT token, count(*) AS cnt, count(DISTINCT doc_id) AS n_docs
-        |FROM (SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS token
+      s"""SELECT token, count(*) AS cnt, count(DISTINCT doc_id) AS n_docs
+        |FROM (SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS token
         |      FROM documents)
         |GROUP BY token"""),
 
@@ -126,8 +123,8 @@ object TextQueries {
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"),
           size(TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
-      """SELECT doc_id,
-        |       CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS BIGINT) AS n_tokens
+      s"""SELECT doc_id,
+        |       CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_tokens
         |FROM documents"""),
 
     // BPE-style regex pre-tokenization (the split a byte-pair tokenizer
@@ -175,7 +172,7 @@ object TextQueries {
          |       length(regexp_replace(text, '\\s', '', 'g')) / len(toks) AS avg_token_len,
          |       ${sqlHits(TextFns.EnStop)} / len(toks) AS stopword_ratio
          |FROM (SELECT doc_id, text,
-         |             list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '') AS toks
+         |             ${OracleSql.tokens("text")} AS toks
          |      FROM documents)"""),
 
     // Model-based quality gate beside the heuristic above: the frozen
@@ -190,7 +187,7 @@ object TextQueries {
       (s, dir) => graft.operators.TextPipeline.qualityClassifier(
         Tables.documents(s, dir)),
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '')) AS token
+         |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS token
          |  FROM documents),
          |w AS (SELECT $QwListSql AS wl),
          |scored AS (
@@ -235,7 +232,7 @@ object TextQueries {
          |       ${langCase(sqlHits(TextFns.EnStop), sqlHits(TextFns.DeStop),
                             sqlHits(TextFns.EsStop), sqlHits(TextFns.FrStop))} AS pred_lang,
          |       CAST(${sqlHits(TextFns.EnStop)} AS BIGINT) AS en_hits
-         |FROM (SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '') AS toks
+         |FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
          |      FROM documents)"""),
 
     // Classifier evaluation at corpus scale: the q_lang_id heuristic
@@ -272,7 +269,7 @@ object TextQueries {
          |  SELECT lang,
          |         ${langCase(sqlHits(TextFns.EnStop), sqlHits(TextFns.DeStop),
                               sqlHits(TextFns.EsStop), sqlHits(TextFns.FrStop))} AS pred_lang
-         |  FROM (SELECT doc_id, lang, list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '') AS toks
+         |  FROM (SELECT doc_id, lang, ${OracleSql.tokens("text")} AS toks
          |        FROM documents)),
          |cells AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
          |          FROM pred GROUP BY 1, 2),
@@ -309,10 +306,7 @@ object TextQueries {
           .select(col("w1"), col("w2"), col("cnt"),
             (col("cnt").cast("double") / col("w1_total")).as("p_cond"))
       },
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), bg AS (
+      s"""WITH ${OracleSql.ToksCte}, bg AS (
         |  SELECT b[1] AS w1, b[2] AS w2
         |  FROM (SELECT unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
         |        FROM toks WHERE len(t) >= 2)
@@ -359,10 +353,7 @@ object TextQueries {
             ((col("n_xy") * col("n_total")).cast("double") /
               (col("n_x") * col("n_y")).cast("double")).as("lift"))
       },
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), uni AS (SELECT unnest(t) AS w FROM toks),
+      s"""WITH ${OracleSql.ToksCte}, uni AS (SELECT unnest(t) AS w FROM toks),
         |ucnt AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM uni GROUP BY w),
         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM uni),
         |bg AS (
@@ -414,10 +405,7 @@ object TextQueries {
             (col("pair_mass").cast("double") / col("prefix_mass").cast("double"))
               .as("lm_score"))
       },
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS t
-        |  FROM documents
-        |), bg AS (
+      s"""WITH ${OracleSql.ToksCte}, bg AS (
         |  SELECT doc_id, b[1] AS w1, b[2] AS w2
         |  FROM (SELECT doc_id, unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
         |        FROM toks WHERE len(t) >= 2)
@@ -455,9 +443,9 @@ object TextQueries {
           .filter(col("df") <= lit(0.9) * col("_n"))
           .drop("_n")
       },
-      """SELECT token AS term, count(*) AS df,
+      s"""SELECT token AS term, count(*) AS df,
         |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-        |FROM (SELECT DISTINCT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS token
+        |FROM (SELECT DISTINCT doc_id, unnest(${OracleSql.tokens("text")}) AS token
         |      FROM documents)
         |GROUP BY token HAVING count(*) <= 0.9 * (SELECT count(*) FROM documents)"""),
 
@@ -511,8 +499,8 @@ object TextQueries {
               (((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
                 (col("df").cast("double") + lit(0.5)))).as("tfidf"))
       },
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS term
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS term
         |  FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
         |tfdf AS (SELECT doc_id, term, tf, count(*) OVER (PARTITION BY term) AS df FROM tf),
@@ -586,8 +574,7 @@ object TextQueries {
         |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
         |dscored AS (
         |  SELECT vec_id AS doc_id,
-        |         list_dot_product(qv, cv) /
-        |           (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos_sim
+        |         ${OracleSql.cosine("qv", "cv")} AS cos_sim
         |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings WHERE vec_id <> 0)
         |  CROSS JOIN qv),
         |vec AS (
@@ -641,8 +628,8 @@ object TextQueries {
           .filter(col("cnt") * 30 > col("n"))
           .select(col("token"), col("cnt"))
       },
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS token
+      s"""WITH tok AS (
+        |  SELECT unnest(${OracleSql.tokens("text")}) AS token
         |  FROM documents),
         |tot AS (SELECT count(*) AS n FROM tok)
         |SELECT token, CAST(count(*) AS BIGINT) AS cnt
@@ -672,8 +659,8 @@ object TextQueries {
           .filter(col("cnt") * 30 > col("n"))
           .select(col("lang"), col("token"), col("cnt"))
       },
-      """WITH tok AS (
-        |  SELECT lang, unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS token
+      s"""WITH tok AS (
+        |  SELECT lang, unnest(${OracleSql.tokens("text")}) AS token
         |  FROM documents),
         |tot AS (SELECT lang, count(*) AS n FROM tok GROUP BY lang)
         |SELECT tok.lang, token, CAST(count(*) AS BIGINT) AS cnt

@@ -52,13 +52,14 @@ class DedupSpec extends SparkSpec {
     val b = sh.withColumnRenamed("doc_id", "id2").withColumnRenamed("simhash", "h2")
     import spark.implicits._
     val truePairsDf = truePairs.toSeq.toDF("id1", "id2")
+    val hamming = bit_count(col("h1").bitwiseXOR(col("h2")))
     val dists = truePairsDf.join(a, "id1").join(b, "id2")
-      .select(Dedup.hamming(col("h1"), col("h2")).as("d"))
+      .select(hamming.as("d"))
       .collect().map(_.getInt(0))
     assert(dists.forall(_ <= 16), s"near-dup hamming too large: ${dists.mkString(",")}")
     // random (non-dup) baseline: expect ~32 bit flips on 64 bits
     val rand = a.filter(col("id1") < 20).join(b.filter(col("id2").between(200, 220)), lit(true))
-      .select(avg(Dedup.hamming(col("h1"), col("h2")))).collect().head.getDouble(0)
+      .select(avg(hamming)).collect().head.getDouble(0)
     assert(rand > 16.0, s"random-pair hamming unexpectedly low: $rand")
   }
 

@@ -1,7 +1,13 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate (dev tool only; the
 shipped engine is pure Scala/Spark). Usage:
-  python3 tools/check.py <verifyOutDir> <sfDir>
+  python3 tools/check.py <verifyOutDir> <sfDir> [nameRegex]
+
+nameRegex (default: every name) selects the oracle names expected to
+have a Spark output directory; each selected name without one FAILs
+("no Spark output"), because Verify logs a throwing query and writes
+no directory for it. Pass the same regex Verify was given when it
+dumped a subset.
 
 Mimics the driver faithfully (lesson of round 1, where Python `==`
 passed 99111 == 99111.0 but the driver's dtype-sensitive hash failed):
@@ -18,7 +24,7 @@ silently widens it to float64 and the driver hash can never match.
 Rows-only outputs (no oracle) are still canonicalized, so a
 driver-crashing column type fails here first.
 """
-import sys, os, json
+import sys, os, json, re
 import duckdb
 
 TABLES = ["region","nation","customer","supplier","part","orders",
@@ -51,7 +57,7 @@ def diff_rows(g, e):
             return i, gr, er
     return None
 
-def main(outdir, sfdir):
+def main(outdir, sfdir, name_re=""):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -59,6 +65,10 @@ def main(outdir, sfdir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(n for n in oracles if re.search(name_re, n)):
+        if not os.path.isdir(os.path.join(outdir, name)):
+            print(f"FAIL {name}: no Spark output")
+            n_fail += 1
     for name in sorted(os.listdir(outdir)):
         d = os.path.join(outdir, name)
         if not os.path.isdir(d):
@@ -124,4 +134,4 @@ def main(outdir, sfdir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
