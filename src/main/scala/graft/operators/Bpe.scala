@@ -297,66 +297,4 @@ object Bpe {
       }
       .toDF("rank", "left_code", "right_code", "merged_code", "cnt")
   }
-
-  // ---- DuckDB oracle SQL generators ------------------------------------
-
-  /** The full training loop as unrolled DuckDB CTE rounds (the
-    * q_pagerank pattern at 96 rounds): per round, a pair-count CTE over
-    * the current dictionary, a 1-row argmax (ORDER BY cnt DESC, l, r
-    * LIMIT 1 — binary string order ≡ codepoint order for 1-char BMP
-    * symbols), and the applied `replace`. Dictionary and argmax CTEs
-    * are MATERIALIZED — each is referenced twice, and DuckDB's default
-    * inlining would expand the round chain exponentially. Verified to
-    * reproduce [[graft.functions.BpeMerges]] bit-for-bit on its
-    * training corpus (96 rounds, 2.6 s). */
-  def duckTrainSql(numMerges: Int): String = {
-    val rounds = (0 until numMerges).map { i =>
-      s"""p$i AS (SELECT substr(w, j, 1) AS l, substr(w, j + 1, 1) AS r, n FROM (
-         |  SELECT w, n, unnest([{'j': jj} for jj in generate_series(1, length(w) - 1)],
-         |                      recursive := true) FROM w$i)),
-         |b$i AS MATERIALIZED (SELECT l, r, CAST(sum(n) AS BIGINT) AS cnt
-         |  FROM p$i GROUP BY l, r ORDER BY cnt DESC, l, r LIMIT 1),
-         |w${i + 1} AS MATERIALIZED (SELECT replace(w$i.w, b$i.l || b$i.r, chr(${0xE000 + i})) AS w, n
-         |  FROM w$i, b$i)""".stripMargin
-    }.mkString(",\n")
-    val union = (0 until numMerges)
-      .map(i => s"SELECT $i AS rank, l, r, cnt FROM b$i")
-      .mkString("\nUNION ALL ")
-    s"""WITH pre AS (SELECT unnest(regexp_extract_all(lower(text), '${TextFns.BpePattern}')) AS w
-       |  FROM documents),
-       |w0 AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n FROM pre GROUP BY w),
-       |$rounds,
-       |merges AS ($union)
-       |SELECT CAST(rank AS BIGINT) AS rank, CAST(unicode(l) AS BIGINT) AS left_code,
-       |       CAST(unicode(r) AS BIGINT) AS right_code,
-       |       CAST(${0xE000} + rank AS BIGINT) AS merged_code, cnt
-       |FROM merges""".stripMargin
-  }
-
-
-  /** `replace`-chain CTE stages over `srcCte(srcCol)`, ≤32 merges per
-    * stage so DuckDB's 128-deep expression binder never trips. Emits
-    * `stages` CTE text; the final stage is named `bpe_enc` with
-    * columns (passCols..., s). Search/replacement chars are spelled
-    * `chr(n)` so quoting never matters. */
-  def duckEncodeCtes(srcCte: String, srcCol: String, passCols: Seq[String]): String = {
-    val stages = BpeMerges.merges.grouped(32).toSeq
-    val keep = passCols.mkString(", ")
-    stages.zipWithIndex.map { case (ms, i) =>
-      val in = if (i == 0) srcCol else "s"
-      val from = if (i == 0) srcCte else s"bpe_e${i - 1}"
-      val chain = ms.foldLeft(in) { case (e, (a, b, m, _)) =>
-        s"replace($e, chr($a)||chr($b), chr($m))"
-      }
-      val name = if (i == stages.size - 1) "bpe_enc" else s"bpe_e$i"
-      s"$name AS (SELECT $keep, $chain AS s FROM $from)"
-    }.mkString(",\n")
-  }
-
-  /** The decode table as an inline DuckDB relation (sym, token). */
-  def duckVocabValues: String =
-    BpeMerges.vocab.map { case (sym, tok) =>
-      val symSql = s"chr(${sym.codePointAt(0)})"
-      s"($symSql, '${tok.replace("'", "''")}')"
-    }.mkString("(VALUES ", ", ", ") AS v(sym, token)")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
 import graft.operators.{AssocRules, TopK}
+import OracleSql.decimalSum
 
 /** The reference's three analytics queries (SURVEY §0), re-expressed on
   * the driver's star schema: an order is the "billing" (basket), a part
@@ -14,6 +15,24 @@ import graft.operators.{AssocRules, TopK}
   *  - q_assoc_rules   ← ESERCIZIO 3 (support/confidence item→item)
   */
 object BasketQueries {
+
+  /** Support and confidence of every directed item pair that shares an
+    * order (ESERCIZIO 3): one oracle for both engine formulations.
+    * Declared before `defs` (init order). */
+  private val AssocRulesSql =
+    sql"""WITH items AS (SELECT DISTINCT l_orderkey AS bid, l_partkey AS item FROM lineitem),
+      |tot AS (SELECT count(DISTINCT bid) AS total_baskets FROM items),
+      |ic AS (SELECT item, count(*) AS antecedent_cnt FROM items GROUP BY 1),
+      |pc AS (SELECT a.item AS x, b.item AS y, count(*) AS pair_cnt
+      |       FROM items a JOIN items b ON a.bid = b.bid AND a.item < b.item
+      |       GROUP BY 1, 2),
+      |dir AS (SELECT x AS antecedent, y AS consequent, pair_cnt FROM pc
+      |        UNION ALL
+      |        SELECT y AS antecedent, x AS consequent, pair_cnt FROM pc)
+      |SELECT d.antecedent, d.consequent, d.pair_cnt,
+      |       d.pair_cnt / (SELECT total_baskets FROM tot) AS support,
+      |       d.pair_cnt / ic.antecedent_cnt AS confidence
+      |FROM dir d JOIN ic ON ic.item = d.antecedent"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -37,7 +56,7 @@ object BasketQueries {
         TopK.perGroupNative(monthly, Seq("month"), "cnt",
           Seq("l_partkey"), k = 5)
       },
-      """SELECT month, l_partkey, cnt FROM (
+      sql"""SELECT month, l_partkey, cnt FROM (
         |  SELECT month, l_partkey, cnt,
         |         row_number() OVER (PARTITION BY month ORDER BY cnt DESC, l_partkey) AS rn
         |  FROM (SELECT strftime(l_shipdate, '%Y-%m') AS month, l_partkey, count(*) AS cnt
@@ -54,8 +73,8 @@ object BasketQueries {
         .groupBy(col("l_partkey"), col("month"))
         .agg(moneySum(col("disc_price"), 4).as("revenue"),
           sum(col("l_quantity")).as("sum_qty")),
-      """SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS month,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS month,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         |       sum(l_quantity) AS sum_qty
         |FROM lineitem GROUP BY 1, 2"""),
 
@@ -67,37 +86,13 @@ object BasketQueries {
         Tables.lineitem(s, dir).groupBy(col("l_orderkey"))
           .agg(collect_set(col("l_partkey")).as("items")),
         "items"),
-      """WITH items AS (SELECT DISTINCT l_orderkey AS bid, l_partkey AS item FROM lineitem),
-        |tot AS (SELECT count(DISTINCT bid) AS total_baskets FROM items),
-        |ic AS (SELECT item, count(*) AS antecedent_cnt FROM items GROUP BY 1),
-        |pc AS (SELECT a.item AS x, b.item AS y, count(*) AS pair_cnt
-        |       FROM items a JOIN items b ON a.bid = b.bid AND a.item < b.item
-        |       GROUP BY 1, 2),
-        |dir AS (SELECT x AS antecedent, y AS consequent, pair_cnt FROM pc
-        |        UNION ALL
-        |        SELECT y AS antecedent, x AS consequent, pair_cnt FROM pc)
-        |SELECT d.antecedent, d.consequent, d.pair_cnt,
-        |       d.pair_cnt / (SELECT total_baskets FROM tot) AS support,
-        |       d.pair_cnt / ic.antecedent_cnt AS confidence
-        |FROM dir d JOIN ic ON ic.item = d.antecedent"""),
+      AssocRulesSql),
 
     // ESERCIZIO 3 on order/part baskets. See AssocRules for the plan.
     "q_assoc_rules" -> QueryDef(
       (s, dir) => AssocRules.rules(
         Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")),
         basketCol = "l_orderkey", itemCol = "l_partkey"),
-      """WITH items AS (SELECT DISTINCT l_orderkey AS bid, l_partkey AS item FROM lineitem),
-        |tot AS (SELECT count(DISTINCT bid) AS total_baskets FROM items),
-        |ic AS (SELECT item, count(*) AS antecedent_cnt FROM items GROUP BY 1),
-        |pc AS (SELECT a.item AS x, b.item AS y, count(*) AS pair_cnt
-        |       FROM items a JOIN items b ON a.bid = b.bid AND a.item < b.item
-        |       GROUP BY 1, 2),
-        |dir AS (SELECT x AS antecedent, y AS consequent, pair_cnt FROM pc
-        |        UNION ALL
-        |        SELECT y AS antecedent, x AS consequent, pair_cnt FROM pc)
-        |SELECT d.antecedent, d.consequent, d.pair_cnt,
-        |       d.pair_cnt / (SELECT total_baskets FROM tot) AS support,
-        |       d.pair_cnt / ic.antecedent_cnt AS confidence
-        |FROM dir d JOIN ic ON ic.item = d.antecedent""")
+      AssocRulesSql)
   )
 }

@@ -37,7 +37,7 @@ object CdcQueries {
           .withColumn("c_nationkey",
             coalesce(col("c_nationkey"), lit(-1)).cast("int"))
       },
-      """WITH chg AS (
+      sql"""WITH chg AS (
         |  SELECT user_id * 12 AS k, ts, event_id, event_type, value,
         |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op
         |  FROM events),
@@ -75,7 +75,7 @@ object CdcQueries {
             lit("9999-12-31")).as("valid_to"),
           col("is_current"))
       },
-      """SELECT o_custkey, o_orderkey, o_totalprice,
+      sql"""SELECT o_custkey, o_orderkey, o_totalprice,
         |       strftime(o_orderdate, '%Y-%m-%d') AS valid_from,
         |       COALESCE(strftime(lead(o_orderdate) OVER w, '%Y-%m-%d'),
         |                '9999-12-31') AS valid_to,

@@ -24,9 +24,8 @@ object DedupQueries {
   /** Shared CTE prefix of the sketch oracles: [[Shingles]] plus each
     * shingle's md5-derived portable base hash `hm`. */
   private val ShingleCtes =
-    s"""$Shingles,
-      |hm AS (SELECT id, CAST(concat('0x', substr(md5(shingle), 1, 15)) AS BIGINT) % 2147483647 AS hm FROM sh)"""
-      .stripMargin
+    sql"""$Shingles,
+      |hm AS (SELECT id, ${hash60("shingle")} % 2147483647 AS hm FROM sh)"""
 
   /** The 64 affine min-hashes as DuckDB aggregate expressions, constants
     * lifted from the exact family MinHashAgg uses. */
@@ -49,8 +48,8 @@ object DedupQueries {
   /** The estimated Jaccard of a signature pair (a, b): matching slots
     * over 64. */
   private val EstJaccard =
-    """CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
-      |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64""".stripMargin
+    sql"""CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
+      |                       for i in generate_series(1, 64)]) AS DOUBLE) / 64"""
 
   /** The LSH pair rule on (a, b): some band matches and the estimated
     * Jaccard is ≥ 0.5. */
@@ -59,60 +58,60 @@ object DedupQueries {
   /** [[SigsCte]] and the LSH pairs `pairs(id1 < id2)` that
     * [[LshMatch]] keeps. */
   private val LshPairsCtes =
-    s"""$SigsCte,
+    sql"""$SigsCte,
       |pairs AS (
       |  SELECT a.id AS id1, b.id AS id2
       |  FROM sigs a JOIN sigs b ON a.id < b.id
-      |  WHERE $LshMatch)""".stripMargin
+      |  WHERE $LshMatch)"""
 
   /** The LSH pairs' min-id clusters over all documents, shared by the
     * min-label (q_lsh_clusters) and star-contraction (q_star_clusters)
     * engine paths: one oracle, two algorithms. */
   private val LshClustersSql =
-    s"""WITH RECURSIVE $ShingleCtes,
+    sql"""WITH RECURSIVE $ShingleCtes,
       |$LshPairsCtes,
       |${closureCtes("pairs", "doc_id", "documents")}
-      |${clusterIds("doc_id")}""".stripMargin
+      |${clusterIds("doc_id")}"""
 
   /** Per-pair shingle overlap over `src(id, shingle)`: `sizes(id, sz)`
     * and `co(id1 < id2, common)`. */
-  private def jaccardCoCtes(src: String): String =
-    s"""sizes AS (SELECT id, count(*) AS sz FROM $src GROUP BY 1),
+  private def jaccardCoCtes(src: String): Sql =
+    sql"""sizes AS (SELECT id, count(*) AS sz FROM $src GROUP BY 1),
       |co AS (
       |  SELECT a.id AS id1, b.id AS id2, count(*) AS common
       |  FROM $src a JOIN $src b ON a.shingle = b.shingle AND a.id < b.id
       |  GROUP BY 1, 2
-      |)""".stripMargin
+      |)"""
 
   /** The prefix-filtered Jaccard join's textbook twin over `src`: all
     * pairs at Jaccard ≥ 1/2 by integer cross-multiplication, the output
     * jaccard one IEEE division. */
-  private def prefixJaccardSql(src: String): String =
-    s"""${jaccardCoCtes(src)}
+  private def prefixJaccardSql(src: String): Sql =
+    sql"""${jaccardCoCtes(src)}
       |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
       |       CAST(common AS DOUBLE) / (s1.sz + s2.sz - common) AS jaccard
       |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
-      |WHERE common * 3 >= s1.sz + s2.sz""".stripMargin
+      |WHERE common * 3 >= s1.sz + s2.sz"""
 
   /** The curation oracles' output: one representative per exact text,
     * minus the `losers` CTE's ids, at ≥ 30 tokens. */
   private val CurationTail =
-    """reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
+    sql"""reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text)
       |SELECT d.doc_id, CAST(len(t.t) AS BIGINT) AS n_tokens
       |FROM documents d
       |JOIN toks t ON t.doc_id = d.doc_id
       |WHERE d.doc_id IN (SELECT doc_id FROM reps)
       |  AND d.doc_id NOT IN (SELECT doc_id FROM losers)
-      |  AND len(t.t) >= 30""".stripMargin
+      |  AND len(t.t) >= 30"""
 
   /** Positional `n`-grams per document, `g(doc_id, pos, gram)`, over
     * documents of at least n tokens. */
-  private def gramCtes(n: Int): String =
-    s"""$ToksCte, g0 AS (
+  private def gramCtes(n: Int): Sql =
+    sql"""$ToksCte, g0 AS (
       |  SELECT doc_id, [{'pos': i, 'gram': array_to_string(t[i:i+${n - 1}], ' ')}
       |                  for i in generate_series(1, len(t) - ${n - 1})] AS gs
       |  FROM toks WHERE len(t) >= $n
-      |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0)""".stripMargin
+      |), g AS (SELECT doc_id, unnest(gs, recursive := true) FROM g0)"""
 
   /** SimHash bit-packing: per bit, the sign of the ±1 vote sum; the
     * portable base hash has 60 bits, so bits 60–63 are always 0 votes
@@ -122,27 +121,37 @@ object DedupQueries {
       s"(CASE WHEN sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) >= 0 THEN ${1L << b} ELSE 0 END)"
     }.mkString(" + ")
 
+  /** The diagonal runs of matched 5-gram pairs `m(doc_a, doc_b, p1,
+    * p2, diag)`: `r` keys each run of consecutive positions on one
+    * diagonal, and [[SpanRunAgg]] turns each run into a span (start
+    * positions and length in tokens) of at least 8 tokens. */
+  private val SpanRunCte =
+    sql"""r AS (
+      |  SELECT doc_a, doc_b, diag, p1, p2,
+      |         p1 - row_number() OVER (PARTITION BY doc_a, doc_b, diag ORDER BY p1) AS runkey
+      |  FROM m)"""
+
+  private val SpanRunAgg =
+    sql"""SELECT doc_a, doc_b,
+      |       CAST(min(p1) AS BIGINT) AS a_start, CAST(min(p2) AS BIGINT) AS b_start,
+      |       CAST(count(*) + 4 AS BIGINT) AS span_tokens
+      |FROM r GROUP BY doc_a, doc_b, diag, runkey
+      |HAVING count(*) + 4 >= 8"""
+
   /** Exact duplicated-span CTEs (Dedup.duplicateSpans replay: positional
     * 5-grams, occurrence cap 50, diagonal runs, min span 8) — shared by
     * q_dup_spans and q_span_coverage so the two stay in sync. */
   private val DupSpanCtes =
-    s"""${gramCtes(5)},
+    sql"""${gramCtes(5)},
       |freq AS (SELECT gram FROM g GROUP BY gram HAVING count(*) <= 50),
       |gc AS (SELECT g.* FROM g JOIN freq USING (gram)),
       |m AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS p1, b.pos AS p2,
       |         a.pos - b.pos AS diag
       |  FROM gc a JOIN gc b ON a.gram = b.gram AND a.doc_id < b.doc_id),
-      |r AS (
-      |  SELECT doc_a, doc_b, diag, p1, p2,
-      |         p1 - row_number() OVER (PARTITION BY doc_a, doc_b, diag ORDER BY p1) AS runkey
-      |  FROM m),
+      |$SpanRunCte,
       |sp AS (
-      |  SELECT doc_a, doc_b,
-      |         CAST(min(p1) AS BIGINT) AS a_start, CAST(min(p2) AS BIGINT) AS b_start,
-      |         CAST(count(*) + 4 AS BIGINT) AS span_tokens
-      |  FROM r GROUP BY doc_a, doc_b, diag, runkey
-      |  HAVING count(*) + 4 >= 8)""".stripMargin
+      |$SpanRunAgg)"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -150,7 +159,7 @@ object DedupQueries {
     "q_ngram_jaccard" -> QueryDef(
       (s, dir) => Dedup.ngramJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text", shingleN = 3, minJaccard = 0.5),
-      s"""WITH $Shingles,
+      sql"""WITH $Shingles,
         |${jaccardCoCtes("sh")}
         |SELECT id1, id2, common, s1.sz AS sz1, s2.sz AS sz2,
         |       common / (s1.sz + s2.sz - common) AS jaccard
@@ -166,7 +175,7 @@ object DedupQueries {
       (s, dir) => Dedup.prefixJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, tauNum = 1, tauDen = 2),
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |${prefixJaccardSql("sh")}"""),
 
     // The CAPPED PPJoin path: maxShingleDf drops stop-shingles from the
@@ -182,7 +191,7 @@ object DedupQueries {
       (s, dir) => Dedup.prefixJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text",
         shingleN = 3, tauNum = 1, tauDen = 2, maxShingleDf = Some(2)),
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |dfq AS (SELECT shingle, count(*) AS c FROM sh GROUP BY 1),
         |shc AS (SELECT s.id, s.shingle FROM sh s JOIN dfq ON s.shingle = dfq.shingle WHERE dfq.c <= 2),
         |${prefixJaccardSql("shc")}"""),
@@ -223,7 +232,7 @@ object DedupQueries {
             (col("common").cast("double") / (col("sz1") + col("sz2") - col("common")))
               .as("jaccard"))
       },
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |rk AS (
         |  SELECT doc_id, CAST(row_number() OVER (ORDER BY coalesce(substr(trim(lower(text)), 1, 12), ''), doc_id) - 1 AS BIGINT) AS rank
         |  FROM documents),
@@ -239,7 +248,7 @@ object DedupQueries {
         |SELECT co.id1, co.id2, co.rank1, co.rank2, co.common, s1.sz AS sz1, s2.sz AS sz2,
         |       CAST(co.common AS DOUBLE) / (s1.sz + s2.sz - co.common) AS jaccard
         |FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
-        |WHERE co.common * 3 >= s1.sz + s2.sz"""),
+        |WHERE co.common * 3 >= s1.sz + s2.sz""", coalesceByBytes = true),
 
     // The composite curation pipeline — what this engine exists for:
     //   exact dedup (min-id representative per text)
@@ -261,10 +270,8 @@ object DedupQueries {
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
           .filter(col("n_tokens") >= 30)
       },
-      s"""WITH $Shingles,
-        |sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY 1),
-        |co AS (SELECT a.id AS id1, b.id AS id2, count(*) AS common
-        |       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id GROUP BY 1, 2),
+      sql"""WITH $Shingles,
+        |${jaccardCoCtes("sh")},
         |losers AS (
         |  SELECT DISTINCT co.id2 AS doc_id
         |  FROM co JOIN sizes s1 ON s1.id = co.id1 JOIN sizes s2 ON s2.id = co.id2
@@ -292,14 +299,14 @@ object DedupQueries {
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
           .filter(col("n_tokens") >= 30)
       },
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |$SigsCte,
         |losers AS (
         |  SELECT DISTINCT b.id AS doc_id
         |  FROM sigs a JOIN sigs b ON a.id < b.id
         |  WHERE $LshMatch
         |),
-        |$CurationTail"""),
+        |$CurationTail""", coalesceByBytes = true),
 
     // MinHash signatures (64 hashes, 3-gram shingles), portable hash
     // family so the oracle reproduces the signature bit for bit. The
@@ -311,7 +318,7 @@ object DedupQueries {
           portable = true)
         .select(col("doc_id"),
           array_join(transform(col("sig"), x => x.cast("string")), ",").as("sig")),
-      s"""WITH $ShingleCtes
+      sql"""WITH $ShingleCtes
         |SELECT id AS doc_id, array_to_string($SigList, ',') AS sig
         |FROM hm GROUP BY id"""),
 
@@ -324,7 +331,7 @@ object DedupQueries {
         Dedup.minhashSignatures(Tables.documents(s, dir), "doc_id", "text",
           portable = true),
         "doc_id", bands = 16, rowsPerBand = 4),
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |$SigsCte
         |SELECT a.id AS id1, b.id AS id2,
         |       $EstJaccard AS est_jaccard
@@ -349,7 +356,7 @@ object DedupQueries {
             "doc_id", bands = 16, rowsPerBand = 4)
           .filter(col("est_jaccard") >= 0.5)
       },
-      s"""WITH $ShingleCtes,
+      sql"""WITH $ShingleCtes,
         |$SigsCte
         |SELECT a.id AS corpus_id, b.id AS new_id,
         |       $EstJaccard AS est_jaccard
@@ -389,7 +396,7 @@ object DedupQueries {
           .select(col("id1"), col("id2"))
         Dedup.connectedComponentsStar(pairs, docs.select(col("doc_id")), "doc_id")
       },
-      LshClustersSql),
+      LshClustersSql, coalesceByBytes = true),
 
     // Standing-index DELETION (r13 verdict task 5): take down the
     // doc_id % 17 = 3 slice of the corpus and maintain the q_lsh_clusters
@@ -418,7 +425,7 @@ object DedupQueries {
         Dedup.removeDocs(labels, standingPairs,
           docs.filter(col("doc_id") % 17 === 3).select(col("doc_id")), "doc_id")
       },
-      s"""WITH RECURSIVE $ShingleCtes,
+      sql"""WITH RECURSIVE $ShingleCtes,
         |$LshPairsCtes,
         |surv AS (SELECT id1, id2 FROM pairs WHERE id1 % 17 <> 3 AND id2 % 17 <> 3),
         |${closureCtes("surv", "doc_id", "documents WHERE doc_id % 17 <> 3")}
@@ -429,8 +436,8 @@ object DedupQueries {
     "q_simhash" -> QueryDef(
       (s, dir) => Dedup.simhash(Tables.documents(s, dir), "doc_id", "text",
         portable = true),
-      s"""WITH $ToksCte, tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
-        |h AS (SELECT doc_id, CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) AS h FROM tok),
+      sql"""WITH $ToksCte, tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
+        |h AS (SELECT doc_id, ${hash60("token")} AS h FROM tok),
         |sig AS (SELECT doc_id, $SimhashPack AS simhash FROM h GROUP BY doc_id)
         |-- left join from DISTINCT ids: zero-token docs must not vanish
         |-- (engine contract, simhash 0 = "no votes cast") and the engine
@@ -450,7 +457,7 @@ object DedupQueries {
     "q_containment" -> QueryDef(
       (s, dir) => Dedup.containmentPairs(
         Tables.documents(s, dir), "doc_id", "text", anchorN = 10),
-      s"""WITH $ToksCte, canon AS (
+      sql"""WITH $ToksCte, canon AS (
         |  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n, array_to_string(t, ' ') AS c FROM toks
         |), anch AS (
         |  SELECT doc_id AS in_id, n AS in_n, array_to_string(t[1:10], ' ') AS shingle
@@ -482,7 +489,7 @@ object DedupQueries {
       (s, dir) => Dedup.duplicateSpans(
         Tables.documents(s, dir), "doc_id", "text",
         gramN = 5, minSpanTokens = 8, maxGramFreq = 50),
-      s"""WITH $DupSpanCtes
+      sql"""WITH $DupSpanCtes
         |SELECT doc_a, doc_b, a_start, b_start, span_tokens FROM sp"""),
 
     // Ingest-time duplicated spans: new batch (doc_id % 13 = 0) vs the
@@ -496,7 +503,7 @@ object DedupQueries {
           docs.filter(col("doc_id") % 13 === 0),
           "doc_id", "text", gramN = 5, minSpanTokens = 8, maxGramFreq = 50)
       },
-      s"""WITH ${gramCtes(5)},
+      sql"""WITH ${gramCtes(5)},
         |cg AS (SELECT * FROM g WHERE doc_id % 13 <> 0),
         |bg AS (SELECT * FROM g WHERE doc_id % 13 = 0),
         |freq AS (SELECT gram FROM cg GROUP BY gram HAVING count(*) <= 50),
@@ -505,15 +512,8 @@ object DedupQueries {
         |         a.pos - b.pos AS diag
         |  FROM cg a JOIN freq USING (gram) JOIN bg b ON a.gram = b.gram
         |  WHERE a.doc_id <> b.doc_id),
-        |r AS (
-        |  SELECT doc_a, doc_b, diag, p1, p2,
-        |         p1 - row_number() OVER (PARTITION BY doc_a, doc_b, diag ORDER BY p1) AS runkey
-        |  FROM m)
-        |SELECT doc_a, doc_b,
-        |       CAST(min(p1) AS BIGINT) AS a_start, CAST(min(p2) AS BIGINT) AS b_start,
-        |       CAST(count(*) + 4 AS BIGINT) AS span_tokens
-        |FROM r GROUP BY doc_a, doc_b, diag, runkey
-        |HAVING count(*) + 4 >= 8"""),
+        |$SpanRunCte
+        |$SpanRunAgg"""),
 
     // Intra-doc repetition profile: longest verbatim self-repeated
     // span per doc (positional 2-grams here — the synthetic docs are
@@ -524,7 +524,7 @@ object DedupQueries {
       (s, dir) => Dedup.selfRepetitionProfile(
         Tables.documents(s, dir), "doc_id", "text",
         gramN = 2, minSpanTokens = 2, maxGramFreqInDoc = 20),
-      s"""WITH ${gramCtes(2)},
+      sql"""WITH ${gramCtes(2)},
         |pf AS (SELECT doc_id, gram, count(*) AS f FROM g GROUP BY 1, 2),
         |gm AS (SELECT doc_id, CAST(max(f) AS BIGINT) AS mgf FROM pf GROUP BY 1),
         |gc AS (SELECT g.doc_id, g.pos, g.gram FROM g JOIN pf USING (doc_id, gram) WHERE pf.f <= 20),
@@ -557,7 +557,7 @@ object DedupQueries {
       (s, dir) => Dedup.spanCoverage(
         Tables.documents(s, dir), "doc_id", "text",
         gramN = 5, minSpanTokens = 8, maxGramFreq = 50),
-      s"""WITH $DupSpanCtes,
+      sql"""WITH $DupSpanCtes,
         |iv0 AS (
         |  SELECT doc_a AS doc_id, a_start AS s, a_start + span_tokens - 1 AS e FROM sp
         |  UNION ALL
@@ -580,6 +580,6 @@ object DedupQueries {
         |  GROUP BY doc_id)
         |SELECT c.doc_id, dup_tokens, CAST(len(t) AS BIGINT) AS n_tokens,
         |       CAST(dup_tokens AS DOUBLE) / CAST(len(t) AS DOUBLE) AS dup_frac
-        |FROM cov c JOIN toks ON toks.doc_id = c.doc_id""")
+        |FROM cov c JOIN toks ON toks.doc_id = c.doc_id""", coalesceByBytes = true)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.{decimalSum, sessionCtes}
 
 /** Event-stream analytics in batch form: tumbling time buckets and
   * gap-based sessionization (lag → boundary flag → running sum = session
@@ -40,6 +41,18 @@ object EventQueries {
           .otherwise(0L).as("stage"))
   }
 
+  /** The as-of join oracle: each event beside the latest (`cmp` is
+    * `>=`) or next (`<=`) order time of its user, with that time's
+    * largest order key — DuckDB's native ASOF LEFT JOIN. */
+  private def asofSql(cmp: String): Sql =
+    sql"""WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
+      |ords AS (SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS ots_us,
+      |                max(o_orderkey) AS last_orderkey
+      |         FROM orders GROUP BY 1, 2)
+      |SELECT e.event_id, e.user_id, e.ts_us,
+      |       o.ots_us AS r_ts_us, o.last_orderkey AS r_last_orderkey
+      |FROM ev e ASOF LEFT JOIN ords o ON e.user_id = o.user_id AND e.ts_us $cmp o.ots_us"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // Tumbling 1-hour buckets per event type.
@@ -50,9 +63,9 @@ object EventQueries {
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("user_id")).as("n_users"),
           moneySum(col("value"), 2).as("total_value")),
-      """SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
+      sql"""SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
         |       count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |       ${decimalSum("value", 2)} AS total_value
         |FROM events GROUP BY 1, 2"""),
 
     // Sketch-based distinct counting — the 100 TB posture for
@@ -86,7 +99,7 @@ object EventQueries {
           (abs(col("_approx") - col("n_users")).cast("double") <=
             greatest(lit(6.0), lit(0.20) * col("n_users").cast("double")))
             .as("hll_ok")),
-      """SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
+      sql"""SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
         |       count(*) AS n_events, count(DISTINCT user_id) AS n_users,
         |       true AS hll_ok
         |FROM events GROUP BY 1, 2"""),
@@ -118,7 +131,7 @@ object EventQueries {
         .select(col("event_type"), col("p50"), col("p95"), col("n"),
           (col("_a50") >= col("_p50_lo") && col("_a50") <= col("_p50_hi")).as("p50_ok"),
           (col("_a95") >= col("_p95_lo") && col("_a95") <= col("_p95_hi")).as("p95_ok")),
-      """SELECT event_type, quantile_cont(value, 0.5) AS p50,
+      sql"""SELECT event_type, quantile_cont(value, 0.5) AS p50,
         |       quantile_cont(value, 0.95) AS p95, count(*) AS n,
         |       true AS p50_ok, true AS p95_ok
         |FROM events GROUP BY 1"""),
@@ -143,7 +156,7 @@ object EventQueries {
           .filter(col("value") > col("fence"))
           .select(col("event_id"), col("event_type"), col("value"), col("fence"))
       },
-      """WITH f AS (
+      sql"""WITH f AS (
         |  SELECT event_type AS et,
         |         quantile_cont(value, 0.75) + CAST(1.5 AS DOUBLE) * (quantile_cont(value, 0.75) - quantile_cont(value, 0.25)) AS fence
         |  FROM events GROUP BY event_type)
@@ -174,7 +187,7 @@ object EventQueries {
             max_by(col("value"), okey).as("close"),
             count(lit(1)).as("n"))
       },
-      """SELECT event_type, strftime(ts, '%Y-%m-%d %H') AS hour,
+      sql"""SELECT event_type, strftime(ts, '%Y-%m-%d %H') AS hour,
         |       arg_min(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 20, '0')) AS open,
         |       max(value) AS high, min(value) AS low,
         |       arg_max(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 20, '0')) AS close,
@@ -196,7 +209,7 @@ object EventQueries {
             percentile(abs(col("value") - col("med")), lit(0.5)).as("mad"),
             count(lit(1)).as("n"))
       },
-      """WITH m AS (
+      sql"""WITH m AS (
         |  SELECT event_type AS et, quantile_cont(value, 0.5) AS med
         |  FROM events GROUP BY event_type)
         |SELECT event_type, max(med) AS med,
@@ -224,12 +237,12 @@ object EventQueries {
             moneySum(x * x, 4).as("sum_xx"),
             sum(y * y).as("sum_yy"))
       },
-      """SELECT event_type,
+      sql"""SELECT event_type,
         |       CAST(count(*) AS BIGINT) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_x,
+        |       ${decimalSum("value", 2)} AS sum_x,
         |       CAST(sum(hour(ts)) AS BIGINT) AS sum_y,
-        |       CAST(sum(CAST(value * hour(ts) AS DECIMAL(18,2))) AS DOUBLE) AS sum_xy,
-        |       CAST(sum(CAST(value * value AS DECIMAL(18,4))) AS DOUBLE) AS sum_xx,
+        |       ${decimalSum("value * hour(ts)", 2)} AS sum_xy,
+        |       ${decimalSum("value * value", 4)} AS sum_xx,
         |       CAST(sum(hour(ts) * hour(ts)) AS BIGINT) AS sum_yy
         |FROM events GROUP BY event_type"""),
 
@@ -257,7 +270,7 @@ object EventQueries {
           .select(col("from_type"), col("to_type"), col("n"), col("tot"),
             (col("n").cast("double") / col("tot").cast("double")).as("p"))
       },
-      """WITH steps AS (
+      sql"""WITH steps AS (
         |  SELECT event_type AS from_type,
         |         lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
         |  FROM events),
@@ -284,12 +297,12 @@ object EventQueries {
           .select(col("user_id"), col("event_id1"), col("event_id2"),
             expr("(_ts2 - _ts1) div 1000000").as("gap_secs"))
       },
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events)
+      sql"""WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events)
         |SELECT a.user_id, a.event_id AS event_id1, b.event_id AS event_id2,
         |       (b.ts_us - a.ts_us) // 1000000 AS gap_secs
         |FROM ev a JOIN ev b ON a.user_id = b.user_id
         |  AND (b.ts_us > a.ts_us OR (b.ts_us = a.ts_us AND b.event_id > a.event_id))
-        |  AND b.ts_us <= a.ts_us + 60000000"""),
+        |  AND b.ts_us <= a.ts_us + 60000000""", coalesceByBytes = true),
 
     // Per-event ML feature engineering: lag gap + rolling counts/sums
     // over a bounded row frame — the per-entity feature shape a training
@@ -310,7 +323,7 @@ object EventQueries {
           .select(col("event_id"), col("user_id"), col("ts_us"),
             col("prev_gap_secs"), col("n_prior_10"), col("val_prior_10"))
       },
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+      sql"""SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |       (epoch_us(ts) - lag(epoch_us(ts)) OVER w) // 1000000 AS prev_gap_secs,
         |       count(*) OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS n_prior_10,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS DOUBLE) AS val_prior_10
@@ -333,13 +346,7 @@ object EventQueries {
           .agg(max(col("o_orderkey")).as("last_orderkey"))
         graft.operators.AsOfJoin.backward(ev, ords, key = "user_id", ts = "ts_us")
       },
-      """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
-        |ords AS (SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS ots_us,
-        |                max(o_orderkey) AS last_orderkey
-        |         FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, e.ts_us,
-        |       o.ots_us AS r_ts_us, o.last_orderkey AS r_last_orderkey
-        |FROM ev e ASOF LEFT JOIN ords o ON e.user_id = o.user_id AND e.ts_us >= o.ots_us"""),
+      asofSql(">=")),
 
     // Forward as-of: each event matched to the user's NEXT order at or
     // after it (the "first following quote" direction; DuckDB's native
@@ -356,13 +363,7 @@ object EventQueries {
           .agg(max(col("o_orderkey")).as("last_orderkey"))
         graft.operators.AsOfJoin.forward(ev, ords, key = "user_id", ts = "ts_us")
       },
-      """WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
-        |ords AS (SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS ots_us,
-        |                max(o_orderkey) AS last_orderkey
-        |         FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, e.ts_us,
-        |       o.ots_us AS r_ts_us, o.last_orderkey AS r_last_orderkey
-        |FROM ev e ASOF LEFT JOIN ords o ON e.user_id = o.user_id AND e.ts_us <= o.ots_us"""),
+      asofSql("<=")),
 
     // Semi-structured payloads: JSON string column → typed extraction →
     // aggregate (the schema-on-read path for event property bags).
@@ -373,10 +374,10 @@ object EventQueries {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
           min(col("k")).as("min_k"), max(col("k")).as("max_k")),
-      """SELECT event_type, count(*) AS n,
-        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |       min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-        |       max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
+      sql"""SELECT event_type, count(*) AS n,
+        |       CAST(sum(CAST(json_extract_string(props, '$$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+        |       min(CAST(json_extract_string(props, '$$.k') AS BIGINT)) AS min_k,
+        |       max(CAST(json_extract_string(props, '$$.k') AS BIGINT)) AS max_k
         |FROM events GROUP BY event_type"""),
 
     // Gap-based sessionization: per user, a new session starts when the
@@ -405,25 +406,11 @@ object EventQueries {
           .withColumn("duration_secs",
             expr("(session_end_us - session_start_us) div 1000000"))
       },
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |              THEN 1 ELSE 0 END AS boundary
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), sessions AS (
-        |  SELECT user_id, ts_us,
-        |         -- DuckDB sum(int) is HUGEINT, which pandas reads as float64
-        |         -- and the driver hash is dtype-sensitive: cast back to BIGINT.
-        |         CAST(sum(boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-        |  FROM flagged
-        |)
+      sql"""WITH ${sessionCtes(SessionGapUs)}
         |SELECT user_id, session_idx, count(*) AS n_events,
         |       min(ts_us) AS session_start_us, max(ts_us) AS session_end_us,
         |       (max(ts_us) - min(ts_us)) // 1000000 AS duration_secs
-        |FROM sessions GROUP BY user_id, session_idx"""),
+        |FROM sessions GROUP BY user_id, session_idx""", coalesceByBytes = true),
 
     // The SAME session semantics via Spark's built-in session_window
     // (the streaming-capable formulation, run in batch) — verified
@@ -435,19 +422,7 @@ object EventQueries {
         .select(col("user_id"), col("n_events"),
           unix_micros(col("first_ts")).as("session_start_us"),
           unix_micros(col("last_ts")).as("session_end_us")),
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |              THEN 1 ELSE 0 END AS boundary
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), sessions AS (
-        |  SELECT user_id, ts_us,
-        |         sum(boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM flagged
-        |)
+      sql"""WITH ${sessionCtes(SessionGapUs)}
         |SELECT user_id, count(*) AS n_events,
         |       min(ts_us) AS session_start_us, max(ts_us) AS session_end_us
         |FROM sessions GROUP BY user_id, session_idx"""),
@@ -470,7 +445,7 @@ object EventQueries {
           .select(col("user_id"), col("day"),
             coalesce(col("n_events"), lit(0L)).as("n_events"))
       },
-      """WITH daily AS (
+      sql"""WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS n_events
         |  FROM events GROUP BY 1, 2),
         |axis AS (
@@ -493,10 +468,10 @@ object EventQueries {
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("window_start_us"),
           col("event_type"), col("n_events")),
-      """SELECT ((epoch_us(ts) // 900000000) - i) * 900000000 AS window_start_us,
+      sql"""SELECT ((epoch_us(ts) // 900000000) - i) * 900000000 AS window_start_us,
         |       event_type, count(*) AS n_events
         |FROM events CROSS JOIN generate_series(0, 3) AS g(i)
-        |GROUP BY 1, 2"""),
+        |GROUP BY 1, 2""", coalesceByBytes = true),
 
     // Ordered 3-step funnel (view → click → purchase): each stage's
     // timestamp is the min STRICTLY AFTER the previous stage — the
@@ -506,7 +481,7 @@ object EventQueries {
     "q_funnel" -> QueryDef(
       (s, dir) => funnel(Tables.events(s, dir).select(col("user_id"),
         col("event_type"), unix_micros(col("ts")).as("ts_us"))),
-      """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+      sql"""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
         |u AS (SELECT DISTINCT user_id FROM ev),
         |v AS (SELECT user_id, min(ts_us) AS view_us FROM ev
         |      WHERE event_type = 'view' GROUP BY 1),
@@ -535,7 +510,7 @@ object EventQueries {
             datediff(col("day"), col("cohort_day")).cast("long").as("day_offset"))
           .agg(countDistinct(col("user_id")).as("n_users"))
       },
-      """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+      sql"""WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |coh AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY 1)
         |SELECT cohort_day, CAST(date_diff('day', cohort_day, day) AS BIGINT) AS day_offset,
         |       count(DISTINCT ev.user_id) AS n_users

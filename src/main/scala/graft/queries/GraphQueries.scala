@@ -21,17 +21,17 @@ object GraphQueries {
   // SQL-fragment vals BEFORE the defs Seq that interpolates them
   // (object init order — see CLAUDE.md).
   private val EdgeCtes =
-    """b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
+    sql"""b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
       |e AS (SELECT a.i AS s, c.i AS t FROM b a JOIN b c ON a.o = c.o AND a.i < c.i
       |      GROUP BY 1, 2 HAVING count(*) >= 2),
       |sym AS (SELECT s AS src, t AS dst FROM e UNION ALL SELECT t, s FROM e),
-      |nodes AS (SELECT DISTINCT src AS n FROM sym)""".stripMargin
+      |nodes AS (SELECT DISTINCT src AS n FROM sym)"""
 
   /** Unrolled fixed-point PageRank rounds r1..r`iters` (DuckDB `//`
     * replays Spark's `div` exactly on non-negative BIGINTs). */
-  private def pageRankSql(iters: Int): String = {
+  private def pageRankSql(iters: Int): Sql = {
     val rounds = (1 to iters).map { i =>
-      s"""r$i AS (
+      sql"""r$i AS (
          |  SELECT nodes.n,
          |         CAST(150000000000 + (COALESCE(m.mass, 0) // 100) * 85
          |              + ((COALESCE(m.mass, 0) % 100) * 85) // 100 AS BIGINT) AS r
@@ -41,7 +41,7 @@ object GraphQueries {
          |             JOIN deg ON deg.n2 = sym.src
          |    GROUP BY 1) m ON m.n = nodes.n)"""
     }.mkString(",\n")
-    s"""WITH $EdgeCtes,
+    sql"""WITH $EdgeCtes,
        |deg AS (SELECT src AS n2, count(*) AS d FROM sym GROUP BY 1),
        |r0 AS (SELECT n, CAST(1000000000000 AS BIGINT) AS r FROM nodes),
        |$rounds
@@ -54,9 +54,9 @@ object GraphQueries {
     * (lexicographic), total over the full 64-bit label domain (the
     * former cnt·2³²−label packing mis-voted for labels ≥ 2³²). The
     * zero-count sentinel row keeps every node present. */
-  private def labelPropSql(iters: Int): String = {
+  private def labelPropSql(iters: Int): Sql = {
     val rounds = (1 to iters).map { i =>
-      s"""l$i AS (
+      sql"""l$i AS (
          |  SELECT t.n, CAST(min([t.k1, t.k2])[2] AS BIGINT) AS label FROM (
          |    SELECT sym.dst AS n, -CAST(count(*) AS BIGINT) AS k1, l${i - 1}.label AS k2
          |    FROM sym JOIN l${i - 1} ON l${i - 1}.n = sym.src
@@ -65,7 +65,7 @@ object GraphQueries {
          |    SELECT n, CAST(0 AS BIGINT), label FROM l${i - 1}
          |  ) t GROUP BY t.n)"""
     }.mkString(",\n")
-    s"""WITH $EdgeCtes,
+    sql"""WITH $EdgeCtes,
        |l0 AS (SELECT n, CAST(n AS BIGINT) AS label FROM nodes),
        |$rounds
        |SELECT n AS item, label FROM l$iters"""
@@ -75,9 +75,9 @@ object GraphQueries {
     * relaxes EVERY reached node (min of neighbor dist + 1 and own
     * dist) — deliberately the naive formulation the engine's frontier
     * expansion must equal. */
-  private def bfsSql(hops: Int): String = {
+  private def bfsSql(hops: Int): Sql = {
     val rounds = (1 to hops).map { i =>
-      s"""d$i AS (
+      sql"""d$i AS (
          |  SELECT nid, CAST(min(dist) AS BIGINT) AS dist FROM (
          |    SELECT sym.dst AS nid, d${i - 1}.dist + 1 AS dist
          |    FROM sym JOIN d${i - 1} ON d${i - 1}.nid = sym.src
@@ -85,7 +85,7 @@ object GraphQueries {
          |    SELECT nid, dist FROM d${i - 1}
          |  ) GROUP BY nid)"""
     }.mkString(",\n")
-    s"""WITH $EdgeCtes,
+    sql"""WITH $EdgeCtes,
        |d0 AS (SELECT n AS nid, CAST(0 AS BIGINT) AS dist FROM nodes WHERE n % 97 = 0),
        |$rounds
        |SELECT nid AS item, dist FROM d$hops"""
@@ -130,7 +130,7 @@ object GraphQueries {
         val e = edges(s, dir)
         Graph.triangleCounts(e, Graph.edgeNodes(e, "item"), "item")
       },
-      s"""WITH $EdgeCtes,
+      sql"""WITH $EdgeCtes,
         |tri AS (SELECT e1.s AS x, e1.t AS y, e2.t AS z
         |        FROM e e1 JOIN e e2 ON e1.t = e2.s
         |                  JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t),
@@ -155,7 +155,7 @@ object GraphQueries {
           .groupBy(col("degree"))
           .agg(count(lit(1)).as("n_nodes"))
       },
-      s"""WITH $EdgeCtes,
+      sql"""WITH $EdgeCtes,
         |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS degree FROM sym GROUP BY 1)
         |SELECT degree, CAST(count(*) AS BIGINT) AS n_nodes
         |FROM deg GROUP BY degree"""),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.decimalSum
 
 /** Join surface: broadcast star-join, shuffle fact-fact join, semi/anti
   * (EXISTS / NOT EXISTS), and union. The reference has exactly one join
@@ -10,6 +11,14 @@ import graft.functions.ColFns._
   * the general capability a user would expect, planned Spark-first.
   */
 object JoinQueries {
+
+  /** FuzzyJoin.selfJoin's replay over customer names (a, b): blocked
+    * on the name minus its last two chars, ordered, edit distance ≤ 1. */
+  private val FuzzyNameMatch =
+    sql"""FROM customer a JOIN customer b
+      |  ON substr(a.c_name, 1, length(a.c_name) - 2) = substr(b.c_name, 1, length(b.c_name) - 2)
+      | AND a.c_name < b.c_name
+      |WHERE levenshtein(a.c_name, b.c_name) <= 1"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -26,12 +35,12 @@ object JoinQueries {
           .agg(count(lit(1)).as("n_cust"),
             moneySum(col("c_acctbal"), 2).as("total_bal"))
       },
-      """SELECT r_name, n_name, count(*) AS n_cust,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+      sql"""SELECT r_name, n_name, count(*) AS n_cust,
+        |       ${decimalSum("c_acctbal", 2)} AS total_bal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name"""),
+        |GROUP BY r_name, n_name""", coalesceByBytes = true),
 
     // Fact-fact join: both sides shuffle on the join key; partial agg
     // happens below the join output's group-by. At 100 TB this is the
@@ -47,8 +56,8 @@ object JoinQueries {
             countDistinct(col("o_orderkey")).as("n_orders"),
             count(lit(1)).as("n_lines"))
       },
-      """SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS month,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT o_orderpriority, strftime(o_orderdate, '%Y-%m') AS month,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         |       count(DISTINCT o_orderkey) AS n_orders,
         |       count(*) AS n_lines
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -63,7 +72,7 @@ object JoinQueries {
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n_customers"))
       },
-      """SELECT c_mktsegment, count(*) AS n_customers
+      sql"""SELECT c_mktsegment, count(*) AS n_customers
         |FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
         |GROUP BY c_mktsegment"""),
@@ -77,7 +86,7 @@ object JoinQueries {
         o.join(li, o("o_orderkey") === li("l_orderkey"), "left_anti")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       },
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
+      sql"""SELECT o_orderkey, o_orderstatus, o_totalprice
         |FROM orders o
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)"""),
 
@@ -94,8 +103,8 @@ object JoinQueries {
           .agg(count(col("o_orderkey")).as("n_big_orders"),
             moneySum(col("o_totalprice"), 2).as("big_spend"))
       },
-      """SELECT c_custkey, c_name, count(o_orderkey) AS n_big_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS big_spend
+      sql"""SELECT c_custkey, c_name, count(o_orderkey) AS n_big_orders,
+        |       ${decimalSum("o_totalprice", 2)} AS big_spend
         |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 400000) o
         |  ON c_custkey = o_custkey
         |GROUP BY 1, 2"""),
@@ -116,9 +125,9 @@ object JoinQueries {
           .select(coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
             col("c_name"), col("n_big_orders"), col("big_spend"))
       },
-      """WITH hc AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 9000),
+      sql"""WITH hc AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 9000),
         |ho AS (SELECT o_custkey, count(*) AS n_big_orders,
-        |              CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS big_spend
+        |              ${decimalSum("o_totalprice", 2)} AS big_spend
         |       FROM orders WHERE o_totalprice > 400000 GROUP BY 1)
         |SELECT COALESCE(c_custkey, o_custkey) AS custkey, c_name, n_big_orders, big_spend
         |FROM hc FULL JOIN ho ON c_custkey = o_custkey"""),
@@ -133,7 +142,7 @@ object JoinQueries {
           .intersect(
             o.filter(year(col("o_orderdate")) === 1998).select(col("o_custkey").as("custkey")))
       },
-      """SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1997
+      sql"""SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1997
         |INTERSECT
         |SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1998"""),
 
@@ -145,7 +154,7 @@ object JoinQueries {
           .except(
             o.filter(year(col("o_orderdate")) === 1998).select(col("o_custkey").as("custkey")))
       },
-      """SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1997
+      sql"""SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1997
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1998"""),
 
@@ -160,7 +169,7 @@ object JoinQueries {
           col("s_name").as("name"), col("s_acctbal").as("acctbal"))
         c.unionAll(su)
       },
-      """SELECT 'customer' AS kind, c_custkey AS entity_key, c_name AS name, c_acctbal AS acctbal FROM customer
+      sql"""SELECT 'customer' AS kind, c_custkey AS entity_key, c_name AS name, c_acctbal AS acctbal FROM customer
         |UNION ALL
         |SELECT 'supplier' AS kind, s_suppkey AS entity_key, s_name AS name, s_acctbal AS acctbal FROM supplier"""),
 
@@ -175,13 +184,10 @@ object JoinQueries {
         blockKey = expr("substring(c_name, 1, length(c_name) - 2)"),
         maxDist = 1)
         .select(col("id1"), col("s1"), col("id2"), col("s2"), col("dist")),
-      """SELECT a.c_custkey AS id1, a.c_name AS s1,
+      sql"""SELECT a.c_custkey AS id1, a.c_name AS s1,
         |       b.c_custkey AS id2, b.c_name AS s2,
         |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b
-        |  ON substr(a.c_name, 1, length(a.c_name) - 2) = substr(b.c_name, 1, length(b.c_name) - 2)
-        | AND a.c_name < b.c_name
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1"""),
+        |$FuzzyNameMatch"""),
 
     // Entity resolution end to end: blocked fuzzy matches become edges,
     // connected components assigns each customer a canonical entity id
@@ -199,14 +205,11 @@ object JoinQueries {
         graft.operators.Dedup.connectedComponents(
           pairs, cust.select(col("c_custkey")), "c_custkey")
       },
-      s"""WITH RECURSIVE pairs AS (
+      sql"""WITH RECURSIVE pairs AS (
         |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
-        |  FROM customer a JOIN customer b
-        |    ON substr(a.c_name, 1, length(a.c_name) - 2) = substr(b.c_name, 1, length(b.c_name) - 2)
-        |   AND a.c_name < b.c_name
-        |  WHERE levenshtein(a.c_name, b.c_name) <= 1),
+        |  $FuzzyNameMatch),
         |${OracleSql.closureCtes("pairs", "c_custkey", "customer")}
-        |${OracleSql.clusterIds("c_custkey")}"""),
+        |${OracleSql.clusterIds("c_custkey")}""", coalesceByBytes = true),
 
     // Bloom-prefiltered semi join (operators/BloomJoin): lineitems of
     // one nation's suppliers, aggregated per returnflag. The bloom over
@@ -230,8 +233,8 @@ object JoinQueries {
             .as("revenue"),
             count(lit(1)).as("n_lines"))
       },
-      """SELECT l_returnflag,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT l_returnflag,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         |       CAST(count(*) AS BIGINT) AS n_lines
         |FROM lineitem
         |WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
@@ -257,7 +260,7 @@ object JoinQueries {
           .orderBy(col("out_rows").desc, col("key").asc)
           .limit(20)
       },
-      """WITH l AS (SELECT l_orderkey AS key, CAST(count(*) AS BIGINT) AS n_left
+      sql"""WITH l AS (SELECT l_orderkey AS key, CAST(count(*) AS BIGINT) AS n_left
         |           FROM lineitem GROUP BY 1),
         |r AS (SELECT o_orderkey AS key, CAST(count(*) AS BIGINT) AS n_right
         |      FROM orders GROUP BY 1)

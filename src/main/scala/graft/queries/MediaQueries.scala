@@ -10,6 +10,18 @@ import graft.operators.Multimodal
   */
 object MediaQueries {
 
+  /** The synthetic raster of media `doc_id` (Multimodal's generators):
+    * 16 + id % 48 pixels wide, 16 + 7·id % 32 high. */
+  private val ImgW = "CAST(16 + doc_id % 48 AS BIGINT)"
+  private val ImgH = "CAST(16 + (doc_id * 7) % 32 AS BIGINT)"
+  private val ImgDims = s"$ImgW AS width, $ImgH AS height"
+
+  /** The PNG subset's rasters, `m(media_id, w, h)`. */
+  private val PngDimsCte =
+    sql"""m AS (
+      |  SELECT doc_id AS media_id, $ImgW AS w, $ImgH AS h
+      |  FROM documents WHERE doc_id % 2 = 0)"""
+
   /** REAL visual features replayed in DuckDB: even ids are genuine JDK
     * PNGs, odd ids MJPEG AVIs — the generators' dims/frame counts are
     * id arithmetic, and extractFeatures reads them back from the ACTUAL
@@ -17,27 +29,21 @@ object MediaQueries {
     * write→parse round trip. byte_len is excluded: the JDK encoders
     * pick it, so it isn't generator-replayable. */
   private val FeaturesCte =
-    """SELECT doc_id AS media_id, 'png' AS format,
-      |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-      |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+    sql"""SELECT doc_id AS media_id, 'png' AS format,
+      |       $ImgDims,
       |       CAST(1 AS BIGINT) AS n_frames
       |FROM documents WHERE doc_id % 2 = 0
       |UNION ALL
       |SELECT doc_id AS media_id, 'avi' AS format,
-      |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-      |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+      |       $ImgDims,
       |       CAST(3 + doc_id % 6 AS BIGINT) AS n_frames
-      |FROM documents WHERE doc_id % 2 = 1""".stripMargin
+      |FROM documents WHERE doc_id % 2 = 1"""
 
   /** dHash oracle: PNG generator replayed through the 9×8 NN grid —
     * gv is the grayscale grid row-major (i = gy·9 + gx), bit k compares
     * grid[y·9+x+1] vs grid[y·9+x] (1-based list indexing). */
   private val PhashCte =
-    """m AS (
-      |  SELECT doc_id AS media_id,
-      |         CAST(16 + doc_id % 48 AS BIGINT) AS w,
-      |         CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS h
-      |  FROM documents WHERE doc_id % 2 = 0),
+    sql"""$PngDimsCte,
       |g AS (
       |  SELECT media_id,
       |    [ (media_id % 256 + 3 * (((i % 9) * w) // 9) + 5 * (((i // 9) * h) // 8)) % 256
@@ -51,7 +57,7 @@ object MediaQueries {
       |      for k in generate_series(0, 31) ]) AS BIGINT) AS dhash_lo,
       |    CAST(list_sum([ CASE WHEN gv[((k + 32) // 8) * 9 + ((k + 32) % 8) + 2] > gv[((k + 32) // 8) * 9 + ((k + 32) % 8) + 1] THEN 1::BIGINT << (k) ELSE 0 END
       |      for k in generate_series(0, 31) ]) AS BIGINT) AS dhash_hi
-      |  FROM g)""".stripMargin
+      |  FROM g)"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -61,7 +67,7 @@ object MediaQueries {
       (s, dir) => Multimodal.payloadMeta(
         Tables.documents(s, dir).select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
         "doc_id", "payload"),
-      """SELECT doc_id,
+      sql"""SELECT doc_id,
         |       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
         |       sha256(text) AS payload_sha256,
         |       CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT) AS n_chunks
@@ -76,7 +82,7 @@ object MediaQueries {
     "q_media_features" -> QueryDef(
       (s, dir) => features(s, dir)
         .select(col("media_id"), col("format"), col("width"), col("height"), col("n_frames")),
-      s"""WITH h AS ($FeaturesCte)
+      sql"""WITH h AS ($FeaturesCte)
         |SELECT media_id, format, width, height, n_frames FROM h"""),
 
     // Frame-sampling plumbing over the REALLY-decoded features: one row
@@ -85,7 +91,7 @@ object MediaQueries {
     // stage that then decodes a stride; stride 2 here matches it).
     "q_media_frames" -> QueryDef(
       (s, dir) => Multimodal.sampleFrames(features(s, dir), everyN = 2),
-      s"""WITH h AS ($FeaturesCte)
+      sql"""WITH h AS ($FeaturesCte)
         |SELECT media_id, n_frames,
         |       CAST(unnest(generate_series(0, n_frames - 1, 2)) AS BIGINT) AS frame_idx
         |FROM h"""),
@@ -97,7 +103,7 @@ object MediaQueries {
     // multiply, floor) is identical IEEE arithmetic on both engines.
     "q_media_resize" -> QueryDef(
       (s, dir) => Multimodal.resizePlan(features(s, dir), maxDim = 24),
-      s"""WITH h AS ($FeaturesCte),
+      sql"""WITH h AS ($FeaturesCte),
         |sc AS (SELECT media_id, width, height,
         |              least(CAST(24 AS DOUBLE) / width, CAST(24 AS DOUBLE) / height, CAST(1 AS DOUBLE)) AS scale
         |       FROM h)
@@ -116,10 +122,10 @@ object MediaQueries {
       (s, dir) => Multimodal.parseHeaders(
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """SELECT doc_id AS media_id,
+      sql"""SELECT doc_id AS media_id,
         |       CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'wav' END AS format,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(16 + doc_id % 48 AS BIGINT) END AS width,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(16 + (doc_id * 7) % 32 AS BIGINT) END AS height,
+        |       CASE WHEN doc_id % 2 = 0 THEN $ImgW END AS width,
+        |       CASE WHEN doc_id % 2 = 0 THEN $ImgH END AS height,
         |       CASE WHEN doc_id % 2 = 0 THEN CAST(8 AS BIGINT) END AS bit_depth,
         |       CASE WHEN doc_id % 2 = 0 THEN CAST(2 AS BIGINT) END AS color_type,
         |       CASE WHEN doc_id % 2 = 1 THEN CAST(1 + (doc_id // 2) % 2 AS BIGINT) END AS channels,
@@ -136,11 +142,7 @@ object MediaQueries {
       (s, dir) => Multimodal.decodePixels(
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(16 + doc_id % 48 AS BIGINT) AS w,
-        |         CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id % 2 = 0)
+      sql"""WITH $PngDimsCte
         |SELECT media_id, w AS width, h AS height,
         |  CAST(list_sum([ (media_id % 256 + 3 * (i % w) + 5 * (i // w)) % 256 for i in generate_series(0, w * h - 1) ]) AS BIGINT) AS sum_r,
         |  CAST(list_sum([ ((2 * media_id) % 256 + 2 * (i % w) + (i // w)) % 256 for i in generate_series(0, w * h - 1) ]) AS BIGINT) AS sum_g,
@@ -157,11 +159,7 @@ object MediaQueries {
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"),
           dstW = 16, dstH = 16)
         .toDF(),
-      """WITH m AS (
-        |  SELECT doc_id AS media_id,
-        |         CAST(16 + doc_id % 48 AS BIGINT) AS w,
-        |         CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS h
-        |  FROM documents WHERE doc_id % 2 = 0)
+      sql"""WITH $PngDimsCte
         |SELECT media_id, CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
         |  CAST(list_sum([ (media_id % 256 + 3 * (((i % 16) * w) // 16) + 5 * (((i // 16) * h) // 16)) % 256 for i in generate_series(0, 255) ]) AS BIGINT) AS sum_r,
         |  CAST(list_sum([ ((2 * media_id) % 256 + 2 * (((i % 16) * w) // 16) + (((i // 16) * h) // 16)) % 256 for i in generate_series(0, 255) ]) AS BIGINT) AS sum_g,
@@ -176,7 +174,7 @@ object MediaQueries {
       (s, dir) => Multimodal.decodeAudio(
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """WITH w AS (
+      sql"""WITH w AS (
         |  SELECT doc_id AS media_id,
         |         CAST(1 + (doc_id // 2) % 2 AS BIGINT) AS channels,
         |         CAST(8000 + 1000 * (doc_id % 8) AS BIGINT) AS sample_rate,
@@ -197,9 +195,8 @@ object MediaQueries {
       (s, dir) => Multimodal.parseHeaders(
           Multimodal.synthesizeJpeg(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """SELECT doc_id AS media_id, 'jpeg' AS format,
-        |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-        |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+      sql"""SELECT doc_id AS media_id, 'jpeg' AS format,
+        |       $ImgDims,
         |       CAST(8 AS BIGINT) AS bit_depth,
         |       CAST(NULL AS BIGINT) AS color_type,
         |       CAST(3 AS BIGINT) AS channels,
@@ -228,9 +225,8 @@ object MediaQueries {
           Multimodal.synthesizeJpeg(Tables.documents(s, dir), "doc_id"),
           maxMeanErr = 4.0)
         .toDF().select(col("media_id"), col("width"), col("height"), col("fidelity_ok")),
-      """SELECT doc_id AS media_id,
-        |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-        |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+      sql"""SELECT doc_id AS media_id,
+        |       $ImgDims,
         |       true AS fidelity_ok
         |FROM documents"""),
 
@@ -243,7 +239,7 @@ object MediaQueries {
       (s, dir) => Multimodal.audioDsp(
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """WITH w AS (
+      sql"""WITH w AS (
         |  SELECT doc_id AS media_id,
         |         CAST((500 + doc_id % 1000) * (1 + (doc_id // 2) % 2) AS BIGINT) AS n
         |  FROM documents WHERE doc_id % 2 = 1)
@@ -262,10 +258,9 @@ object MediaQueries {
       (s, dir) => Multimodal.parseVideoHeaders(
           Multimodal.synthesizeVideo(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      """SELECT doc_id AS media_id,
+      sql"""SELECT doc_id AS media_id,
         |       CAST(3 + doc_id % 6 AS BIGINT) AS n_frames,
-        |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-        |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+        |       $ImgDims,
         |       CAST(10 AS BIGINT) AS fps
         |FROM documents"""),
 
@@ -281,11 +276,10 @@ object MediaQueries {
           everyN = 2, maxMeanErr = 4.0)
         .toDF().select(col("media_id"), col("n_frames"), col("n_decoded"),
           col("width"), col("height"), col("fidelity_ok")),
-      """SELECT doc_id AS media_id,
+      sql"""SELECT doc_id AS media_id,
         |       CAST(3 + doc_id % 6 AS BIGINT) AS n_frames,
         |       CAST((3 + doc_id % 6 + 1) // 2 AS BIGINT) AS n_decoded,
-        |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-        |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+        |       $ImgDims,
         |       true AS fidelity_ok
         |FROM documents"""),
 
@@ -297,7 +291,7 @@ object MediaQueries {
       (s, dir) => Multimodal.perceptualHash(
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"))
         .toDF(),
-      s"""WITH $PhashCte
+      sql"""WITH $PhashCte
         |SELECT media_id, dhash_lo, dhash_hi FROM ph"""),
 
     // Exact perceptual-duplicate groups: images whose dHash collides
@@ -312,7 +306,7 @@ object MediaQueries {
           .agg(count(lit(1)).as("n_images"), min(col("media_id")).as("canonical_id"))
           .filter(col("n_images") > 1)
       },
-      s"""WITH $PhashCte
+      sql"""WITH $PhashCte
         |SELECT dhash_lo, dhash_hi, CAST(count(*) AS BIGINT) AS n_images,
         |       CAST(min(media_id) AS BIGINT) AS canonical_id
         |FROM ph GROUP BY 1, 2 HAVING count(*) > 1"""),
@@ -328,9 +322,8 @@ object MediaQueries {
           Multimodal.synthesizeMedia(Tables.documents(s, dir), "doc_id"),
           maxMeanErr = 16.0)
         .toDF().select(col("media_id"), col("width"), col("height"), col("fidelity_ok")),
-      """SELECT doc_id AS media_id,
-        |       CAST(16 + doc_id % 48 AS BIGINT) AS width,
-        |       CAST(16 + (doc_id * 7) % 32 AS BIGINT) AS height,
+      sql"""SELECT doc_id AS media_id,
+        |       $ImgDims,
         |       true AS fidelity_ok
         |FROM documents WHERE doc_id % 2 = 0""")
   )

@@ -25,16 +25,16 @@ object PipelineQueries {
     * with a 1-based pos (Spark's posexplode is 0-based; pos is only an
     * ordering key, never an output, except where re-based explicitly). */
   private def passageCtes(n: Int) =
-    s"""$ToksCte, p0 AS (
+    sql"""$ToksCte, p0 AS (
       |  SELECT doc_id, [{'pos': i, 'passage': array_to_string(t[(i-1)*$n+1:(i-1)*$n+$n], ' ')}
       |                  for i in generate_series(1, (len(t)+${n - 1})//$n)] AS ps
       |  FROM toks
-      |), p AS (SELECT doc_id, unnest(ps, recursive := true) FROM p0)""".stripMargin
+      |), p AS (SELECT doc_id, unnest(ps, recursive := true) FROM p0)"""
 
   /** The ≥0.5-Jaccard 3-gram pair graph and its min-id closure over all
     * documents (needs `WITH RECURSIVE`). */
   private val JaccardClosureCtes =
-    s"""$Shingle3Ctes,
+    sql"""$Shingle3Ctes,
       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
       |co AS (
       |  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
@@ -44,45 +44,45 @@ object PipelineQueries {
       |  SELECT id1, id2 FROM co
       |  JOIN sizes s1 ON s1.doc_id = co.id1 JOIN sizes s2 ON s2.doc_id = co.id2
       |  WHERE common / (s1.sz + s2.sz - common) >= 0.5),
-      |${closureCtes("pairs", "doc_id", "documents")}""".stripMargin
+      |${closureCtes("pairs", "doc_id", "documents")}"""
 
   /** The per-source token budget's oracle: documents in portable-hash
     * order (doc_id tie-break) while the running token sum stays within
     * 800 — shared by the plain and the salted engine paths. */
   private val TokenBudgetSql =
-    s"""WITH $ToksCte,
+    sql"""WITH $ToksCte,
       |n AS (
       |  SELECT d.doc_id, d.source, CAST(len(t.t) AS BIGINT) AS n_tokens,
-      |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+      |         ${hash60("'graft-v1:' || CAST(d.doc_id AS VARCHAR)")} AS h
       |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id),
       |c AS (
       |  SELECT doc_id, source, n_tokens,
       |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id) AS BIGINT) AS cum_tokens
       |  FROM n)
-      |SELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 800""".stripMargin
+      |SELECT doc_id, source, n_tokens, cum_tokens FROM c WHERE cum_tokens <= 800"""
 
   /** The packed token stream's per-document offsets,
     * `c(doc_id, n_tokens, tok_start)`: non-empty documents laid end to
     * end in doc_id order (an exclusive running sum). */
   private val PackedCtes =
-    s"""$ToksCte,
+    sql"""$ToksCte,
       |n AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks WHERE len(t) > 0),
       |c AS (
       |  SELECT doc_id, n_tokens,
       |         CAST(sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens AS BIGINT) AS tok_start
-      |  FROM n)""".stripMargin
+      |  FROM n)"""
 
   /** Decontamination against the `doc_id % mod = 0` reference slice:
     * each other document's shared 3-grams and the reference documents
     * they hit (column `refCol`). */
-  private def decontamSql(mod: Int, refCol: String): String =
-    s"""WITH $Shingle3Ctes
+  private def decontamSql(mod: Int, refCol: String): Sql =
+    sql"""WITH $Shingle3Ctes
       |SELECT a.doc_id,
       |       count(DISTINCT a.shingle) AS n_shared_ngrams,
       |       count(DISTINCT e.doc_id) AS $refCol
       |FROM sh a JOIN sh e ON a.shingle = e.shingle
       |WHERE a.doc_id % $mod <> 0 AND e.doc_id % $mod = 0
-      |GROUP BY a.doc_id""".stripMargin
+      |GROUP BY a.doc_id"""
 
   /** From-scratch recursive-closure CC over the full ≥0.5-Jaccard pair
     * graph — shared verbatim by q_dedup_clusters (engine: fixpoint
@@ -90,8 +90,8 @@ object PipelineQueries {
     * maintenance): one oracle, two engine paths, each hash match an
     * equivalence proof. */
   private val DedupClustersSql =
-    s"""WITH RECURSIVE $JaccardClosureCtes
-      |${clusterIds("doc_id")}""".stripMargin
+    sql"""WITH RECURSIVE $JaccardClosureCtes
+      |${clusterIds("doc_id")}"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -116,7 +116,7 @@ object PipelineQueries {
       (s, dir) => TextPipeline.passageDedup(
         Tables.documents(s, dir), "doc_id", "text",
         passageTokens = 10, maxOccur = 1),
-      s"""WITH ${passageCtes(10)},
+      sql"""WITH ${passageCtes(10)},
         |occ AS (SELECT passage, count(*) AS occ FROM p GROUP BY 1)
         |SELECT p.doc_id,
         |       count(*) AS n_passages,
@@ -129,7 +129,7 @@ object PipelineQueries {
     "q_repetition_score" -> QueryDef(
       (s, dir) => TextPipeline.repetitionSignals(
         Tables.documents(s, dir), "doc_id", "text"),
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |tc AS (SELECT doc_id, token, count(*) AS c
         |       FROM (SELECT doc_id, unnest(t) AS token FROM toks) GROUP BY 1, 2),
         |ts AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -156,7 +156,7 @@ object PipelineQueries {
     "q_seq_chunks" -> QueryDef(
       (s, dir) => TextPipeline.chunk(
         Tables.documents(s, dir), "doc_id", "text", chunkTokens = 32),
-      s"""WITH ${passageCtes(32)}
+      sql"""WITH ${passageCtes(32)}
         |SELECT doc_id,
         |       CAST(pos - 1 AS BIGINT) AS chunk_idx,
         |       CAST(least(32, len(t) - (pos-1)*32) AS BIGINT) AS n_tokens,
@@ -174,7 +174,7 @@ object PipelineQueries {
       (s, dir) => TextPipeline.slidingChunks(
         Tables.documents(s, dir), "doc_id", "text",
         windowTokens = 32, strideTokens = 16),
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |c0 AS (
         |  SELECT doc_id, [{'pos': i,
         |                   'start_tok': CAST((i-1)*16 AS BIGINT),
@@ -237,7 +237,7 @@ object PipelineQueries {
           pairs.filter(inBatch(col("id1")) || inBatch(col("id2"))),
           docs.filter(inBatch(col("doc_id"))).select(col("doc_id")), "doc_id")
       },
-      DedupClustersSql),
+      DedupClustersSql, coalesceByBytes = true),
 
     // Corpus-relative quality gate: keep docs at or above the corpus
     // 25th percentile of token count. The exact-percentile threshold is
@@ -252,7 +252,7 @@ object PipelineQueries {
           .filter(col("n_tokens") >= col("p25"))
           .select(col("doc_id"), col("n_tokens"), col("p25"))
       },
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |n AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks),
         |th AS (SELECT quantile_cont(n_tokens, 0.25) AS p25 FROM n)
         |SELECT doc_id, n_tokens, p25 FROM n CROSS JOIN th
@@ -297,10 +297,10 @@ object PipelineQueries {
           salt = "graft-v1")
         .select(col("doc_id"), col("source"),
           col("weight").as("n_tokens"), col("n_draws")),
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |n AS (
         |  SELECT d.doc_id, d.source, CAST(len(t.t) AS BIGINT) AS w,
-        |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |         ${hash60("'graft-v1:' || CAST(d.doc_id AS VARCHAR)")} AS h
         |  FROM documents d JOIN toks t ON d.doc_id = t.doc_id
         |  WHERE len(t.t) > 0),
         |c AS (
@@ -324,7 +324,7 @@ object PipelineQueries {
           docs.filter(col("doc_id") % 10 >= 8),
           "doc_id", "text", shingleN = 3, minJaccard = 0.5)
       },
-      s"""WITH $Shingle3Ctes,
+      sql"""WITH $Shingle3Ctes,
         |c AS (SELECT doc_id AS corpus_id, shingle FROM sh WHERE doc_id % 10 < 8),
         |nn AS (SELECT doc_id AS new_id, shingle FROM sh WHERE doc_id % 10 >= 8),
         |s1 AS (SELECT corpus_id, count(*) AS sz1 FROM c GROUP BY 1),
@@ -345,13 +345,13 @@ object PipelineQueries {
           weightsPermyriad = Map("src0" -> 25000, "src1" -> 5000),
           defaultPermyriad = 10000, salt = "graft-v1")
         .select(col("doc_id"), col("source"), col("copy_idx")),
-      """SELECT doc_id, source, unnest(generate_series(1, copies)) AS copy_idx
+      sql"""SELECT doc_id, source, unnest(generate_series(1, copies)) AS copy_idx
         |FROM (
         |  SELECT doc_id, source,
         |         w // 10000 + CASE WHEN h < w % 10000 THEN 1 ELSE 0 END AS copies
         |  FROM (
         |    SELECT doc_id, source,
-        |           CAST(concat('0x', substr(md5('graft-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10000 AS h,
+        |           ${hash60("'graft-v1:' || CAST(doc_id AS VARCHAR)")} % 10000 AS h,
         |           CASE source WHEN 'src0' THEN 25000 WHEN 'src1' THEN 5000 ELSE 10000 END AS w
         |    FROM documents))"""),
 
@@ -364,9 +364,9 @@ object PipelineQueries {
           ratesPermyriad = Map("en" -> 2000, "zh" -> 5000),
           defaultPermyriad = 8000, salt = "graft-v1")
         .select(col("doc_id"), col("lang")),
-      """SELECT doc_id, lang FROM (
+      sql"""SELECT doc_id, lang FROM (
         |  SELECT doc_id, lang,
-        |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10000 AS h
+        |         ${hash60("'graft-v1:' || CAST(doc_id AS VARCHAR)")} % 10000 AS h
         |  FROM documents)
         |WHERE h < CASE lang WHEN 'en' THEN 2000 WHEN 'zh' THEN 5000 ELSE 8000 END"""),
 
@@ -377,11 +377,11 @@ object PipelineQueries {
     "q_contrastive_negs" -> QueryDef(
       (s, dir) => Splits.negativeSample(
         Tables.documents(s, dir), "doc_id", k = 4, salt = "graft-v1"),
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+      sql"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |ranked AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS r FROM documents),
         |slots AS (
         |  SELECT d.doc_id AS anchor_id, i AS slot,
-        |         CAST(concat('0x', substr(md5('graft-v1:' || CAST(d.doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |         ${hash60("'graft-v1:' || CAST(d.doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)")} AS h
         |  FROM documents d CROSS JOIN generate_series(1, 4) AS g(i)),
         |cand AS (SELECT anchor_id, slot, (h % n) + 1 AS r FROM slots CROSS JOIN nn)
         |SELECT anchor_id, CAST(slot AS BIGINT) AS slot, ranked.doc_id AS neg_id
@@ -410,7 +410,7 @@ object PipelineQueries {
           Redact.scrub(col("_raw")).as("scrubbed"),
           nEmails.as("n_emails"), nIps.as("n_ips"), nPhones.as("n_phones"))
       },
-      s"""WITH raw AS (
+      sql"""WITH raw AS (
         |  SELECT c_custkey,
         |         c_name || ' <user' || CAST(c_custkey AS VARCHAR) || '@example.com> tel 555-' ||
         |         lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0') ||
@@ -444,7 +444,7 @@ object PipelineQueries {
           docs.filter(col("doc_id") % 11 === 0),
           "doc_id", "text", shingleN = 3, expectedItems = 100000L)
       },
-      decontamSql(11, "n_ref_docs")),
+      decontamSql(11, "n_ref_docs"), coalesceByBytes = true),
 
     // Sequential token packing per language stratum: concatenate docs
     // in id order, cut every 512 tokens; bin = where the doc's first
@@ -453,7 +453,7 @@ object PipelineQueries {
     "q_seq_pack" -> QueryDef(
       (s, dir) => TextPipeline.packSequences(
         Tables.documents(s, dir), "doc_id", "lang", "text", budget = 512L),
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |n AS (SELECT d.doc_id, d.lang, CAST(len(t.t) AS BIGINT) AS n_tokens
         |      FROM documents d JOIN toks t ON t.doc_id = d.doc_id),
         |offs AS (
@@ -483,7 +483,7 @@ object PipelineQueries {
           pairs, docs.select(col("doc_id")), "doc_id")
         Splits.assign(clusters, "cluster_id", salt = "graft-v1")
       },
-      s"""WITH RECURSIVE $JaccardClosureCtes,
+      sql"""WITH RECURSIVE $JaccardClosureCtes,
         |clusters AS (
         |  ${clusterIds("doc_id")})
         |SELECT doc_id, cluster_id, bucket,
@@ -491,7 +491,7 @@ object PipelineQueries {
         |            WHEN bucket < 90 THEN 'valid'
         |            ELSE 'test' END AS split
         |FROM (SELECT doc_id, cluster_id,
-        |             CAST(concat('0x', substr(md5('graft-v1:' || CAST(cluster_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
+        |             ${hash60("'graft-v1:' || CAST(cluster_id AS VARCHAR)")} % 100 AS bucket
         |      FROM clusters)"""),
 
     // Quota sampling: EXACTLY min(N, |stratum|) docs per language,
@@ -518,11 +518,11 @@ object PipelineQueries {
             rankName = "rk")
           .select(col("doc_id"), col("lang"), col("rk"))
       },
-      """SELECT doc_id, lang, rk FROM (
+      sql"""SELECT doc_id, lang, rk FROM (
         |  SELECT doc_id, lang,
         |         CAST(row_number() OVER (
         |           PARTITION BY lang
-        |           ORDER BY CAST(concat('0x', substr(md5('quota-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT), doc_id
+        |           ORDER BY ${hash60("'quota-v1:' || CAST(doc_id AS VARCHAR)")}, doc_id
         |         ) AS BIGINT) AS rk
         |  FROM documents)
         |WHERE rk <= 25"""),
@@ -550,7 +550,7 @@ object PipelineQueries {
             countDistinct(col("lang")).as("n_langs"),
             sum(when(col("n_tokens") >= 30, 1L).otherwise(0L)).as("n_pass_quality"))
       },
-      s"""WITH $ToksCte,
+      sql"""WITH $ToksCte,
         |n AS (SELECT d.doc_id, d.source, d.lang, d.text, CAST(len(t.t) AS BIGINT) AS n_tokens
         |      FROM documents d JOIN toks t ON t.doc_id = d.doc_id),
         |occ AS (SELECT text, count(*) AS occ FROM documents GROUP BY text)
@@ -586,7 +586,7 @@ object PipelineQueries {
           Checks.referentialCheck(li, o, "lineitem_fk_orders",
             "l_orderkey", "o_orderkey"))
       },
-      """WITH colchecks AS (
+      sql"""WITH colchecks AS (
         |  SELECT * FROM (VALUES
         |    ('lineitem_orderkey_complete', (SELECT CAST(coalesce(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) FROM lineitem)),
         |    ('lineitem_quantity_range',    (SELECT CAST(coalesce(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END), 0) AS BIGINT) FROM lineitem)),
@@ -605,7 +605,7 @@ object PipelineQueries {
         |  FROM lineitem li WHERE NOT EXISTS (
         |    SELECT 1 FROM orders o WHERE o.o_orderkey = li.l_orderkey))
         |SELECT chk AS "check", violations, violations = 0 AS passed
-        |FROM (SELECT * FROM colchecks UNION ALL SELECT * FROM uniq UNION ALL SELECT * FROM ri)"""),
+        |FROM (SELECT * FROM colchecks UNION ALL SELECT * FROM uniq UNION ALL SELECT * FROM ri)""", coalesceByBytes = true),
 
     // GPT-style sequence packing (concat-and-chop): every doc's tokens
     // laid end to end in doc_id order, the stream chopped every 512
@@ -619,7 +619,7 @@ object PipelineQueries {
           Tables.documents(s, dir).select(col("doc_id"),
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
           "doc_id", "n_tokens", seqLen = 512L),
-      s"""WITH $PackedCtes
+      sql"""WITH $PackedCtes
         |SELECT doc_id, n_tokens, tok_start,
         |       tok_start // 512 AS seq_first,
         |       (tok_start + n_tokens - 1) // 512 AS seq_last,
@@ -635,7 +635,7 @@ object PipelineQueries {
           Tables.documents(s, dir).select(col("doc_id"),
             size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
           "doc_id", "n_tokens", seqLen = 512L)),
-      s"""WITH $PackedCtes,
+      sql"""WITH $PackedCtes,
         |e AS (
         |  SELECT CAST(unnest(generate_series(tok_start // 512, (tok_start + n_tokens - 1) // 512)) AS BIGINT) AS seq_id,
         |         (tok_start + n_tokens - 1) // 512 > tok_start // 512 AS spans
@@ -676,7 +676,7 @@ object PipelineQueries {
           .select(col("doc_id"), col("source"), col("n_redactions"),
             col("n_tokens"), col("cum_tokens"))
       },
-      s"""WITH raw AS (
+      sql"""WITH raw AS (
         |  SELECT doc_id, source, lang,
         |         text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com 10.0.0.1 call 555-0042' AS r
         |  FROM documents),
@@ -695,11 +695,11 @@ object PipelineQueries {
         |              CAST(len(${OracleSql.tokens("clean")}) AS BIGINT) AS n_toks
         |       FROM s3),
         |q AS (SELECT * FROM tk WHERE n_toks >= 30),
-        |h AS (SELECT *, CAST(concat('0x', substr(md5('graft-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hh FROM q),
+        |h AS (SELECT *, ${hash60("'graft-v1:' || CAST(doc_id AS VARCHAR)")} AS hh FROM q),
         |c AS (SELECT doc_id, source, n_redactions, n_toks AS n_tokens,
         |             CAST(sum(n_toks) OVER (PARTITION BY source ORDER BY hh, doc_id) AS BIGINT) AS cum_tokens
         |      FROM h)
         |SELECT doc_id, source, n_redactions, n_tokens, cum_tokens
-        |FROM c WHERE cum_tokens <= 500""")
+        |FROM c WHERE cum_tokens <= 500""", coalesceByBytes = true)
   )
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.operators.{Cms, Hll, Kmv, Profile, ZOrder}
+import OracleSql._
 
 /** Table-profiling surface: one-scan per-column profile and equi-width
   * histogram over `lineitem`. The oracle SQL is GENERATED from the same
@@ -26,13 +27,27 @@ object ProfileQueries {
     "l_linestatus" -> "CAST(length(l_linestatus) AS DOUBLE)",
     "l_shipdate" -> "CAST(epoch_us(l_shipdate) AS DOUBLE)")
 
-  private val ProfileOracle = LineitemCols.map { case (c, nv) =>
-    s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
+  /** The KMV sketches of l_orderkey per returnflag: the k smallest
+    * portable hashes per `tag` (`sk`), with each sketch's size `n_sk`
+    * and largest kept hash `theta`. */
+  private val KmvCtes =
+    sql"""hv AS (
+      |  SELECT DISTINCT l_returnflag AS tag,
+      |         ${hash60("CAST(l_orderkey AS VARCHAR)")} AS h
+      |  FROM lineitem),
+      |sk AS (
+      |  SELECT tag, h FROM (
+      |    SELECT tag, h, row_number() OVER (PARTITION BY tag ORDER BY h) AS rn FROM hv)
+      |  WHERE rn <= ${Kmv.K}),
+      |thetas AS (SELECT tag, CAST(count(*) AS BIGINT) AS n_sk, max(h) AS theta FROM sk GROUP BY 1)"""
+
+  private val ProfileOracle = new Sql(LineitemCols.map { case (c, nv) =>
+    sql"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
        |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
        |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
        |  min($nv) AS min_num, max($nv) AS max_num
-       |FROM lineitem""".stripMargin
-  }.mkString("\nUNION ALL\n")
+       |FROM lineitem"""
+  }.mkString("\nUNION ALL\n"))
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -47,7 +62,7 @@ object ProfileQueries {
     "q_histogram" -> QueryDef(
       (s, dir) => Profile.histogram(
         Tables.lineitem(s, dir), "l_extendedprice", nBuckets = 20),
-      """WITH bounds AS (
+      sql"""WITH bounds AS (
         |  SELECT min(CAST(l_extendedprice AS DOUBLE)) AS mn,
         |         max(CAST(l_extendedprice AS DOUBLE)) AS mx
         |  FROM lineitem),
@@ -72,7 +87,7 @@ object ProfileQueries {
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey"),
           ZOrder.zkey2(col("l_partkey"), col("l_suppkey")).as("zkey")),
-      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+      sql"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         |       ${ZOrder.zkey2Sql("l_partkey", "l_suppkey")} AS zkey
         |FROM lineitem"""),
 
@@ -92,25 +107,17 @@ object ProfileQueries {
           .select(col("l_returnflag"), col("n_exact"), col("regs_hit"),
             col("harmonic"), col("hll_estimate"))
       },
-      s"""WITH h AS (
+      sql"""WITH h AS (
         |  SELECT l_returnflag,
-        |         CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |         ${hash60("CAST(l_orderkey AS VARCHAR)")} AS h
         |  FROM lineitem),
-        |r AS (
-        |  SELECT l_returnflag, h // 18014398509481984 AS reg,
-        |         CAST(CASE WHEN h % 18014398509481984 = 0 THEN 55
-        |              ELSE 55 - length(bin(h % 18014398509481984)) END AS BIGINT) AS rho
-        |  FROM h),
+        |${hllRegisterCte("l_returnflag")},
         |m AS (SELECT l_returnflag, reg, max(rho) AS mx FROM r GROUP BY 1, 2),
-        |s AS (
-        |  SELECT l_returnflag,
-        |         CAST(count(*) AS BIGINT) AS regs_hit,
-        |         CAST(sum(1::BIGINT << CAST(55 - mx AS INT)) + (64 - count(*)) * (1::BIGINT << 55) AS BIGINT) AS harmonic
-        |  FROM m GROUP BY 1),
+        |${hllHarmonicCte("l_returnflag")},
         |x AS (SELECT l_returnflag, CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_exact
         |      FROM lineitem GROUP BY 1)
         |SELECT s.l_returnflag, x.n_exact, s.regs_hit, s.harmonic,
-        |       CAST('${Hll.EstNumerator.toString}' AS DOUBLE) / CAST(s.harmonic AS DOUBLE) AS hll_estimate
+        |       ${hllEstimate("s.harmonic")}
         |FROM s JOIN x ON x.l_returnflag = s.l_returnflag"""),
 
     // Count-min point estimates for EVERY distinct partkey vs exact —
@@ -128,14 +135,14 @@ object ProfileQueries {
           .select(col("l_partkey"), col("n_exact"), col("cms_estimate"),
             (col("cms_estimate") - col("n_exact")).as("overcount"))
       },
-      s"""WITH seeds AS (SELECT unnest(generate_series(0, ${Cms.D - 1})) AS seed),
+      sql"""WITH seeds AS (SELECT unnest(generate_series(0, ${Cms.D - 1})) AS seed),
         |hv AS (
-        |  SELECT CAST(concat('0x', substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |  SELECT ${hash60("CAST(l_partkey AS VARCHAR)")} AS h
         |  FROM lineitem),
         |hx AS (SELECT seed, (h >> (seed * 11)) % ${Cms.W} AS bucket FROM hv CROSS JOIN seeds),
         |counters AS (SELECT seed, bucket, CAST(count(*) AS BIGINT) AS c FROM hx GROUP BY 1, 2),
         |items AS (SELECT DISTINCT l_partkey,
-        |          CAST(concat('0x', substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |          ${hash60("CAST(l_partkey AS VARCHAR)")} AS h
         |          FROM lineitem),
         |ib AS (SELECT l_partkey, seed, (h >> (seed * 11)) % ${Cms.W} AS bucket
         |       FROM items CROSS JOIN seeds),
@@ -166,26 +173,18 @@ object ProfileQueries {
           .select(col("event_type"), col("n_exact"), col("regs_hit"),
             col("harmonic"), col("hll_estimate"))
       },
-      s"""WITH h AS (
+      sql"""WITH h AS (
         |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        |         ${hash60("CAST(user_id AS VARCHAR)")} AS h
         |  FROM events),
-        |r AS (
-        |  SELECT event_type, day, h // 18014398509481984 AS reg,
-        |         CAST(CASE WHEN h % 18014398509481984 = 0 THEN 55
-        |              ELSE 55 - length(bin(h % 18014398509481984)) END AS BIGINT) AS rho
-        |  FROM h),
+        |${hllRegisterCte("event_type, day")},
         |daily AS (SELECT event_type, day, reg, max(rho) AS mx FROM r GROUP BY 1, 2, 3),
         |m AS (SELECT event_type, reg, max(mx) AS mx FROM daily GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |         CAST(count(*) AS BIGINT) AS regs_hit,
-        |         CAST(sum(1::BIGINT << CAST(55 - mx AS INT)) + (64 - count(*)) * (1::BIGINT << 55) AS BIGINT) AS harmonic
-        |  FROM m GROUP BY 1),
+        |${hllHarmonicCte("event_type")},
         |x AS (SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
         |      FROM events GROUP BY 1)
         |SELECT s.event_type, x.n_exact, s.regs_hit, s.harmonic,
-        |       CAST('${Hll.EstNumerator.toString}' AS DOUBLE) / CAST(s.harmonic AS DOUBLE) AS hll_estimate
+        |       ${hllEstimate("s.harmonic")}
         |FROM s JOIN x ON x.event_type = s.event_type"""),
 
     // KMV/theta distinct estimate per returnflag beside the exact
@@ -203,15 +202,7 @@ object ProfileQueries {
           .select(col("l_returnflag"), col("n_exact"), col("n_sk"),
             col("theta"), col("kmv_estimate"))
       },
-      s"""WITH hv AS (
-        |  SELECT DISTINCT l_returnflag AS tag,
-        |         CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM lineitem),
-        |sk AS (
-        |  SELECT tag, h FROM (
-        |    SELECT tag, h, row_number() OVER (PARTITION BY tag ORDER BY h) AS rn FROM hv)
-        |  WHERE rn <= ${Kmv.K}),
-        |thetas AS (SELECT tag, CAST(count(*) AS BIGINT) AS n_sk, max(h) AS theta FROM sk GROUP BY 1),
+      sql"""WITH $KmvCtes,
         |x AS (SELECT l_returnflag AS tag, CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_exact
         |      FROM lineitem GROUP BY 1)
         |SELECT x.tag AS l_returnflag, x.n_exact, t.n_sk, t.theta,
@@ -228,15 +219,7 @@ object ProfileQueries {
       (s, dir) => Kmv.overlap(
         Kmv.sketch(Tables.lineitem(s, dir), Seq("l_returnflag"), col("l_orderkey")),
         "l_returnflag"),
-      s"""WITH hv AS (
-        |  SELECT DISTINCT l_returnflag AS tag,
-        |         CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM lineitem),
-        |sk AS (
-        |  SELECT tag, h FROM (
-        |    SELECT tag, h, row_number() OVER (PARTITION BY tag ORDER BY h) AS rn FROM hv)
-        |  WHERE rn <= ${Kmv.K}),
-        |thetas AS (SELECT tag, CAST(count(*) AS BIGINT) AS n_sk, max(h) AS theta FROM sk GROUP BY 1),
+      sql"""WITH $KmvCtes,
         |pairs AS (
         |  SELECT a.tag AS tag_a, b.tag AS tag_b, least(a.theta, b.theta) AS theta_min
         |  FROM thetas a JOIN thetas b ON a.tag < b.tag),

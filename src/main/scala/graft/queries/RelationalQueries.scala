@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.decimalSum
 
 /** Core relational surface: scan → filter → aggregate, the pricing-summary
   * shape (TPC-H Q1-like) over the driver's `lineitem`.
@@ -31,16 +32,16 @@ object RelationalQueries {
           .withColumn("avg_qty", col("sum_qty") / col("count_order"))
           .withColumn("avg_price", col("sum_base_price") / col("count_order"))
       },
-      """SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price,
+      sql"""SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price,
         |       sum_charge, count_order,
         |       sum_qty / count_order AS avg_qty,
         |       sum_base_price / count_order AS avg_price
         |FROM (
         |  SELECT l_returnflag, l_linestatus,
         |         sum(l_quantity) AS sum_qty,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+        |         ${decimalSum("l_extendedprice", 2)} AS sum_base_price,
+        |         ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS sum_disc_price,
+        |         ${decimalSum("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)", 6)} AS sum_charge,
         |         count(*) AS count_order
         |  FROM lineitem
         |  WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'

@@ -21,20 +21,20 @@ object SimilarityQueries {
 
   /** `<p>scored(query_id, neighbor_id, cos_sim)`: the exact cosine of
     * each candidate pair of `cand` (a `cand`-aliased relation). */
-  private def scoredCte(p: String, cand: String): String =
-    s"""${p}scored AS (
+  private def scoredCte(p: String, cand: String): Sql =
+    sql"""${p}scored AS (
       |  SELECT query_id, neighbor_id, ${cosine("qe.v", "ce.v")} AS cos_sim
       |  FROM $cand JOIN ${p}e qe ON qe.vec_id = cand.query_id
-      |            JOIN ${p}e ce ON ce.vec_id = cand.neighbor_id)""".stripMargin
+      |            JOIN ${p}e ce ON ce.vec_id = cand.neighbor_id)"""
 
   /** The frozen [[graft.operators.IvfCentroids]] assignment of both
     * search sides over `src` (an `e` and a `cents` relation): corpus
     * rows to their rank-1 cell (`<p>casgn`), query rows (every 50th) to
     * their top-`nprobe` cells (`<p>qasgn`). */
-  private def ivfAsgnCtes(p: String, nprobe: Int, src: String): String =
-    s"""${p}cents AS (${IvfCentroids.duckdbValues}),
+  private def ivfAsgnCtes(p: String, nprobe: Int, src: String): Sql =
+    sql"""${p}cents AS (${IvfCentroids.duckdbValues}),
       |${p}casgn AS ${cellRank("vec_id AS neighbor_id, cell", "<= 1", src)},
-      |${p}qasgn AS ${cellRank("vec_id AS query_id, cell", s"<= $nprobe", s"$src WHERE e.vec_id % 50 = 0")}""".stripMargin
+      |${p}qasgn AS ${cellRank("vec_id AS query_id, cell", s"<= $nprobe", s"$src WHERE e.vec_id % 50 = 0")}"""
 
   /** IVF-search CTE chain, parameterized by nprobe — replays the frozen
     * centroid assignment ([[ivfAsgnCtes]]) and the cell-keyed candidate
@@ -42,8 +42,8 @@ object SimilarityQueries {
     * the brute chain) compose in ONE oracle without collisions
     * (q_ann_recall); the chain ends in `${p}topk` with
     * (query_id, neighbor_id, cos_sim, rank ≤ 10). */
-  private def ivfTopkCtes(nprobe: Int, p: String): String =
-    s"""${embCte(p)},
+  private def ivfTopkCtes(nprobe: Int, p: String): Sql =
+    sql"""${embCte(p)},
       |${ivfAsgnCtes(p, nprobe, s"${p}e e CROSS JOIN ${p}cents cents")},
       |${p}cand AS (
       |  SELECT DISTINCT q.query_id, c.neighbor_id
@@ -51,16 +51,16 @@ object SimilarityQueries {
       |  WHERE q.query_id <> c.neighbor_id),
       |${scoredCte(p, s"${p}cand cand")},
       |${p}topk AS (
-      |  ${topK(s"${p}scored")})""".stripMargin
+      |  ${topK(s"${p}scored")})"""
 
-  private def ivfOracleSql(nprobe: Int): String =
-    s"""WITH ${ivfTopkCtes(nprobe, "")}
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM topk""".stripMargin
+  private def ivfOracleSql(nprobe: Int): Sql =
+    sql"""WITH ${ivfTopkCtes(nprobe, "")}
+      |SELECT query_id, neighbor_id, cos_sim, rank FROM topk"""
 
   /** Brute-force top-10 CTE chain (the q_ann_brute query body), prefix
     * `p` as in [[ivfTopkCtes]]; ends in `${p}topk`. */
-  private def bruteTopkCtes(p: String): String =
-    s"""${p}q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+  private def bruteTopkCtes(p: String): Sql =
+    sql"""${p}q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
       |           FROM embeddings WHERE vec_id % 50 = 0),
       |${p}c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
       |${p}scored AS (
@@ -68,39 +68,39 @@ object SimilarityQueries {
       |         ${cosine("qv", "cv")} AS cos_sim
       |  FROM ${p}q, ${p}c WHERE query_id <> neighbor_id),
       |${p}topk AS (
-      |  ${topK(s"${p}scored")})""".stripMargin
+      |  ${topK(s"${p}scored")})"""
 
   /** SRP-LSH candidate chain over `tables` tables of 4-plane codes,
     * prefix `p`: the query rows (every 50th) join the corpus on any
     * shared (table, bucket) and the candidates are scored exactly; ends
     * in `<p>scored`. `multiprobe` also probes each query's 4 codes one
     * bit away (xor over the same interpolated hyperplanes). */
-  private def lshScoredCtes(p: String, tables: Int, multiprobe: Boolean = false): String = {
+  private def lshScoredCtes(p: String, tables: Int, multiprobe: Boolean = false): Sql = {
     val (qb, qSrc, qFilter) =
       if (multiprobe) (
-        """qb AS (SELECT vec_id, tbl,
+        sql"""qb AS (SELECT vec_id, tbl,
           |         unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4), xor(bucket, 8)]) AS bucket
           |       FROM b WHERE vec_id % 50 = 0),
-          |""".stripMargin, "qb", "")
+          |""", "qb", "")
       else ("", s"${p}b", "q.vec_id % 50 = 0 AND ")
-    s"""${embCte(p)},
+    sql"""${embCte(p)},
       |${srpBucketCtes(srpCodes(4, tables), tables, p)},
       |$qb${p}cand AS (
       |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
       |  FROM $qSrc q JOIN ${p}b c ON q.tbl = c.tbl AND q.bucket = c.bucket
       |  WHERE ${qFilter}q.vec_id <> c.vec_id),
-      |${scoredCte(p, if (p.isEmpty) "cand" else s"${p}cand cand")}""".stripMargin
+      |${scoredCte(p, if (p.isEmpty) "cand" else s"${p}cand cand")}"""
   }
 
   /** SRP near-dup pairs over `b`: pairs sharing a (table, bucket) at
     * exact cosine ≥ 0.4, as (id1 < id2) pairs or, for `ingest`, as
     * (corpus_id, new_id) pairs across the standing (vec_id % 10 < 8) and
     * batch sides. */
-  private def srpPairsSql(ingest: Boolean): String = {
+  private def srpPairsSql(ingest: Boolean): Sql = {
     val (id1, id2, pair) =
       if (ingest) ("corpus_id", "new_id", "\n  WHERE a.vec_id % 10 < 8 AND b2.vec_id % 10 >= 8")
       else ("id1", "id2", " AND a.vec_id < b2.vec_id")
-    s"""cand AS (
+    sql"""cand AS (
       |  SELECT DISTINCT a.vec_id AS $id1, b2.vec_id AS $id2
       |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket$pair)
       |SELECT $id1, $id2, cos_sim FROM (
@@ -108,7 +108,7 @@ object SimilarityQueries {
       |         ${cosine("qe.v", "ce.v")} AS cos_sim
       |  FROM cand JOIN e qe ON qe.vec_id = cand.$id1
       |            JOIN e ce ON ce.vec_id = cand.$id2)
-      |WHERE cos_sim >= 0.4""".stripMargin
+      |WHERE cos_sim >= 0.4"""
   }
 
   /** Shared PQ oracle CTEs: frozen-codebook assignment (score =
@@ -117,7 +117,7 @@ object SimilarityQueries {
     * sums in FIXED subspace order — the same ((cc0+cc1)+cc2)+cc3 fold
     * [[graft.operators.Pq.encode]] runs. */
   private val PqCtes =
-    s"""${embCte()},
+    sql"""${embCte()},
       |cb AS (${PqCodebooks.duckdbValues}),
       |sub AS (SELECT e.vec_id, t.m, list_slice(e.v, t.m*16+1, t.m*16+16) AS sv
       |        FROM e CROSS JOIN (VALUES (0), (1), (2), (3)) t(m)),
@@ -136,16 +136,16 @@ object SimilarityQueries {
       |         CAST(max(CASE WHEN m = 3 THEN code END) AS BIGINT) AS code_3,
       |         sqrt(((max(CASE WHEN m = 0 THEN cc END) + max(CASE WHEN m = 1 THEN cc END))
       |               + max(CASE WHEN m = 2 THEN cc END)) + max(CASE WHEN m = 3 THEN cc END)) AS recon_norm
-      |  FROM asgn GROUP BY vec_id)""".stripMargin
+      |  FROM asgn GROUP BY vec_id)"""
 
   /** ADC scoring CTEs on top of [[PqCtes]]: the norm of the `qFilter`
     * query rows (q) and the 4-lookup fixed-order score of every code row
     * `join`ed to a query `qa` and kept by `where` (adc) —
     * list_dot_product(q_sub, centroid) replays the engine's per-query
     * LUT entries exactly. */
-  private def pqAdcCtes(qFilter: String, join: String, where: String,
-                        qa: String = "q"): String =
-    s"""q AS (SELECT vec_id AS query_id, v AS qv, ${norm("v")} AS qnorm
+  private def pqAdcCtes(qFilter: String, join: Sql, where: String,
+                        qa: String = "q"): Sql =
+    sql"""q AS (SELECT vec_id AS query_id, v AS qv, ${norm("v")} AS qnorm
       |      FROM e WHERE $qFilter),
       |adc AS (
       |  SELECT $qa.query_id, x.vec_id AS neighbor_id,
@@ -159,17 +159,17 @@ object SimilarityQueries {
       |  JOIN cb b1 ON b1.m = 1 AND b1.code = x.code_1
       |  JOIN cb b2 ON b2.m = 2 AND b2.code = x.code_2
       |  JOIN cb b3 ON b3.m = 3 AND b3.code = x.code_3
-      |  WHERE $where)""".stripMargin
+      |  WHERE $where)"""
 
   /** [[PqCtes]] and the ADC score of every (query, other vector) pair. */
   private val PqSearchCtes =
-    s"""$PqCtes,
-      |${pqAdcCtes("vec_id % 50 = 0", " CROSS JOIN q", "x.vec_id <> q.query_id")}""".stripMargin
+    sql"""$PqCtes,
+      |${pqAdcCtes("vec_id % 50 = 0", sql" CROSS JOIN q", "x.vec_id <> q.query_id")}"""
 
   /** The ADC shortlist (top `shortlist` per query by adc_sim) re-ranked
     * by exact cosine to the top 10. */
-  private def pqRerankSql(shortlist: Int): String =
-    s"""short AS (
+  private def pqRerankSql(shortlist: Int): Sql =
+    sql"""short AS (
       |  SELECT query_id, neighbor_id FROM (
       |    SELECT query_id, neighbor_id,
       |           row_number() OVER (PARTITION BY query_id ORDER BY adc_sim DESC, neighbor_id) AS rk
@@ -179,13 +179,13 @@ object SimilarityQueries {
       |  SELECT s.query_id, s.neighbor_id, ${cosine("qe.v", "ce.v")} AS cos_sim
       |  FROM short s JOIN e qe ON qe.vec_id = s.query_id
       |               JOIN e ce ON ce.vec_id = s.neighbor_id)
-      |${topK("rescored")}""".stripMargin
+      |${topK("rescored")}"""
 
   /** KMeansOps.lloydStep's fixed-point-exact per-dimension mean: integer
     * sums of floor(x · 2^30), then ONE IEEE division. */
   private val FixedPointMean =
-    """CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
-      |         / (CAST(count(*) AS DOUBLE) * 1073741824.0)""".stripMargin
+    sql"""CAST(SUM(CAST(floor(x * 1073741824.0) AS BIGINT)) AS DOUBLE)
+      |         / (CAST(count(*) AS DOUBLE) * 1073741824.0)"""
 
   /** `rounds` Lloyd updates from the frozen IVF centroids, unrolled one
     * round builder per round (KMeansOps.lloydIterate): round r assigns
@@ -193,32 +193,32 @@ object SimilarityQueries {
     * per dimension (`ex<tag(r)>`); every round but the last folds the
     * means into the next centroid table. The output is the last round's
     * means with their member counts. */
-  private def lloydOracleSql(rounds: Int, tag: Int => String): String = {
+  private def lloydOracleSql(rounds: Int, tag: Int => String): Sql = {
     val steps = (1 to rounds).map { r =>
       val (cents, t) = (s"cents${tag(r - 1)}", tag(r))
       val round =
-        s"""asgn$t AS ${cellRank("vec_id, v, cell", "= 1", s"e CROSS JOIN $cents", cents, carryV = true)},
+        sql"""asgn$t AS ${cellRank("vec_id, v, cell", "= 1", s"e CROSS JOIN $cents", cents, carryV = true)},
           |ex$t AS (
           |  SELECT cell,
           |         unnest([{'pos': i - 1, 'x': v[i]} for i in generate_series(1, 64)],
           |                recursive := true)
-          |  FROM asgn$t)""".stripMargin
+          |  FROM asgn$t)"""
       if (r == rounds) round
       else
-        s"""$round,
+        sql"""$round,
           |upd$t AS (
           |  SELECT cell, pos,
           |         $FixedPointMean AS c
           |  FROM ex$t GROUP BY cell, pos),
-          |cents$t AS (SELECT cell, list(c ORDER BY pos) AS c FROM upd$t GROUP BY cell)""".stripMargin
+          |cents$t AS (SELECT cell, list(c ORDER BY pos) AS c FROM upd$t GROUP BY cell)"""
     }.mkString(",\n")
-    s"""WITH ${embCte()},
+    sql"""WITH ${embCte()},
       |cents${tag(0)} AS (${IvfCentroids.duckdbValues}),
       |$steps
       |SELECT CAST(cell AS BIGINT) AS cell, CAST(pos AS BIGINT) AS pos,
       |       $FixedPointMean AS c_new,
       |       CAST(count(*) AS BIGINT) AS n
-      |FROM ex${tag(rounds)} GROUP BY cell, pos""".stripMargin
+      |FROM ex${tag(rounds)} GROUP BY cell, pos"""
   }
 
   /** The frozen >FlatAssignCeiling operating point for q_semdedup_hier:
@@ -233,27 +233,27 @@ object SimilarityQueries {
     * admits, minus the higher id of every intra-cell edge. A pair is a
     * candidate when ANY probed cell is shared; the duplicate pair a
     * shared-both-cells twin generates is absorbed by NOT IN. */
-  private def survivorSql(rank: String): String =
-    s"""edges AS ${cellEdges(" AND a.vec_id < b.vec_id")}
+  private def survivorSql(rank: String): Sql =
+    sql"""edges AS ${cellEdges(" AND a.vec_id < b.vec_id")}
       |SELECT vec_id, CAST(cell AS BIGINT) AS cell
       |FROM asgn
-      |WHERE ${rank}vec_id NOT IN (SELECT id2 FROM edges)""".stripMargin
+      |WHERE ${rank}vec_id NOT IN (SELECT id2 FROM edges)"""
 
   /** The ingest survivor rule on the batch side (vec_id % 10 >= 8) of a
     * probed `asgn`, ranked by column `rank`: a batch id is dropped on an
     * edge to ANY standing id or to a SMALLER batch id. */
-  private def ingestSurvivorSql(rank: String): String = {
+  private def ingestSurvivorSql(rank: String): Sql = {
     val intra = cellEdges(" AND a.vec_id < b.vec_id",
       "a.vec_id % 10 >= 8 AND b.vec_id % 10 >= 8\n    AND ")
     val cross = cellEdges("", "a.vec_id % 10 < 8 AND b.vec_id % 10 >= 8\n    AND ",
       "a.vec_id AS corpus_id, b.vec_id AS new_id")
-    s"""edges_int AS $intra,
+    sql"""edges_int AS $intra,
       |edges_corpus AS $cross
       |SELECT vec_id, CAST(cell AS BIGINT) AS cell
       |FROM asgn
       |WHERE $rank = 1 AND vec_id % 10 >= 8
       |  AND vec_id NOT IN (SELECT id2 FROM edges_int)
-      |  AND vec_id NOT IN (SELECT new_id FROM edges_corpus)""".stripMargin
+      |  AND vec_id NOT IN (SELECT new_id FROM edges_corpus)"""
   }
 
   /** DuckDB replay of the FULL hierarchical semantic-dedup chain:
@@ -276,8 +276,8 @@ object SimilarityQueries {
     * task 1): each id probes its top-2 fine cells and the survivor
     * output is the rank-1 assignment ([[survivorSql]]). */
   private val hierOracleSql =
-    s"""WITH $HierProbedCtes,
-      |${survivorSql("rank = 1 AND ")}""".stripMargin
+    sql"""WITH $HierProbedCtes,
+      |${survivorSql("rank = 1 AND ")}"""
 
   /** The hierarchical INGEST rule ([[SemDedup.dedupIngestHier]]): the
     * same quantizer rebuild + two-level probed assignment as
@@ -286,8 +286,8 @@ object SimilarityQueries {
     * one full assignment), then the ingest survivor rule on the batch
     * side ([[ingestSurvivorSql]]). */
   private val hierIngestOracleSql =
-    s"""WITH $HierProbedCtes,
-      |${ingestSurvivorSql("rank")}""".stripMargin
+    sql"""WITH $HierProbedCtes,
+      |${ingestSurvivorSql("rank")}"""
 
   /** DuckDB replay of the FROZEN hierarchical ANN SERVING path
     * (q_ann_ivf_hier — [[Similarity.ivfTopKFrozenHier]]): the same
@@ -297,8 +297,8 @@ object SimilarityQueries {
     * cosine, and the q_ann_ivf top-10 rank (cos DESC, neighbor
     * tie-break). The assignment CTEs are the exactness-critical part
     * and they are shared verbatim with the dedup-side oracle. */
-  private def hierAnnOracleSql(nprobe: Int): String =
-    s"""WITH ${embCte()},
+  private def hierAnnOracleSql(nprobe: Int): Sql =
+    sql"""WITH ${embCte()},
       |$HierQuantizerCtes,
       |${hierAssignCtes("c", "", 1)},
       |${hierAssignCtes("q", " WHERE e.vec_id % 50 = 0", nprobe)},
@@ -307,7 +307,7 @@ object SimilarityQueries {
       |  FROM qasgn q JOIN casgn c ON q.cell = c.cell
       |  WHERE q.vec_id <> c.vec_id),
       |${scoredCte("", "cand")}
-      |${topK("scored")}""".stripMargin
+      |${topK("scored")}"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -328,8 +328,8 @@ object SimilarityQueries {
           storedCodes, corpus, emb.filter(col("vec_id") % 13 === 0),
           "vec_id", "embedding", k = 10, shortlist = 50)
       },
-      s"""WITH $PqCtes,
-        |${pqAdcCtes("vec_id % 13 = 0", " CROSS JOIN q", "x.vec_id % 13 <> 0")},
+      sql"""WITH $PqCtes,
+        |${pqAdcCtes("vec_id % 13 = 0", sql" CROSS JOIN q", "x.vec_id % 13 <> 0")},
         |${pqRerankSql(50)}"""),
 
     // PQ codes for every vector — 64-dim float (256 B) → 4 nibbles
@@ -339,7 +339,7 @@ object SimilarityQueries {
     "q_pq_encode" -> QueryDef(
       (s, dir) => graft.operators.Pq.encode(
         Tables.embeddings(s, dir), "vec_id", "embedding"),
-      s"""WITH $PqCtes
+      sql"""WITH $PqCtes
         |SELECT vec_id, code_0, code_1, code_2, code_3,
         |       ((code_0 * 16 + code_1) * 16 + code_2) * 16 + code_3 AS pq_code,
         |       recon_norm
@@ -359,7 +359,7 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10)
       },
-      s"""WITH $PqSearchCtes
+      sql"""WITH $PqSearchCtes
         |${topK("adc", "adc_sim")}"""),
 
     // ADC shortlist-100 + exact cosine re-rank — the production IVFADC
@@ -372,7 +372,7 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10, shortlist = 100)
       },
-      s"""WITH $PqSearchCtes,
+      sql"""WITH $PqSearchCtes,
         |${pqRerankSql(100)}"""),
 
     // IVFADC — the production composition (FAISS's default server
@@ -389,11 +389,11 @@ object SimilarityQueries {
           "vec_id", "embedding", k = 10, nprobe = 8, shortlist = 100)
       },
       {
-        val cells = """
+        val cells = sql"""
           |  JOIN casgn c ON c.neighbor_id = x.vec_id
           |  JOIN qasgn qa ON qa.cell = c.cell
-          |  JOIN q ON q.query_id = qa.query_id""".stripMargin
-        s"""WITH $PqCtes,
+          |  JOIN q ON q.query_id = qa.query_id"""
+        sql"""WITH $PqCtes,
           |${ivfAsgnCtes("", 8, "e CROSS JOIN cents")},
           |${pqAdcCtes("vec_id % 50 = 0", cells, "x.vec_id <> qa.query_id", "qa")},
           |${pqRerankSql(100)}"""
@@ -408,7 +408,7 @@ object SimilarityQueries {
         q.select(col("vec_id"), col("maxabs"),
           array_join(transform(col("q8"), _.cast("string")), ",").as("q8"))
       },
-      """WITH m AS (
+      sql"""WITH m AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |         list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) AS maxabs
         |  FROM embeddings)
@@ -434,8 +434,8 @@ object SimilarityQueries {
         // product IS the output (same lesson as q_ann_pq)
         val cols = (0 until 8).map { j =>
           s"list_dot_product(v, ${m(j).map(c => s"'$c'::DOUBLE").mkString("[", ", ", "]")}) AS p$j"
-        }.mkString(",\n|       ")
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+        }.mkString(",\n       ")
+        sql"""WITH ${embCte()}
           |SELECT vec_id, $cols
           |FROM e"""
       }),
@@ -447,7 +447,7 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", k = 10)
       },
-      s"""WITH ${bruteTopkCtes("")}
+      sql"""WITH ${bruteTopkCtes("")}
         |SELECT query_id, neighbor_id, cos_sim, rank FROM topk"""),
 
     // Recall@10 of IVF(nprobe=4) against the brute-force ground truth —
@@ -466,7 +466,7 @@ object SimilarityQueries {
           Similarity.ivfTopKFrozen(emb, qs, "vec_id", "embedding", k = 10, nprobe = 4),
           qs, "vec_id", k = 10)
       },
-      s"""WITH ${bruteTopkCtes("b_")},
+      sql"""WITH ${bruteTopkCtes("b_")},
         |${ivfTopkCtes(4, "v_")},
         |hits AS (
         |  SELECT b.query_id, count(*) AS c
@@ -517,7 +517,7 @@ object SimilarityQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding", dim = 64,
         threshold = 0.4, planes = 4, tables = 16,
         maxBucketSize = Some(100000)),
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |${srpBucketCtes(srpCodes(4, 16), 16)},
         |${srpPairsSql(ingest = false)}"""),
 
@@ -544,7 +544,7 @@ object SimilarityQueries {
           batch, "vec_id", "embedding", dim = 64, threshold = 0.4,
           planes = 4, maxBucketSize = Some(100000))
       },
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |${srpBucketCtes(srpCodes(4, 16), 16)},
         |${srpPairsSql(ingest = true)}"""),
 
@@ -587,7 +587,7 @@ object SimilarityQueries {
             lit(-1L).as("corpus_id"), lit(m2.planes.toLong).as("new_id"),
             lit(mOld.planes.toDouble).as("cos_sim")))
       },
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |$StandingCountCte,
         |${srpPlanesCte("pold", "(st.n // 4)")},
         |${srpPlanesCte("pnew")},
@@ -641,7 +641,7 @@ object SimilarityQueries {
           .unionByName(s.range(1).select(
             lit(-1L).as("vec_id"), lit(m2.k.toLong).as("cell")))
       },
-      s"""WITH $SizedQuantizerCtes
+      sql"""WITH $SizedQuantizerCtes
         |SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
         |FROM asgn
         |WHERE crank = 1 AND vec_id % 10 >= 8
@@ -684,7 +684,7 @@ object SimilarityQueries {
             lit(-1L).as("id1"), lit(p.toLong).as("id2"),
             lit(n.toDouble).as("cos_sim")))
       },
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |pp AS (SELECT min(i) AS p FROM generate_series(1, 32) AS g(i)
         |       WHERE (SELECT count(*) FROM e) // (1::BIGINT << i) <= 128),
         |${srpBucketCtes(srpCodesSized("pp"), 16)},
@@ -702,7 +702,7 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", dim = 64, k = 10, planes = 4)
       },
-      s"""WITH ${lshScoredCtes("", 8)}
+      sql"""WITH ${lshScoredCtes("", 8)}
         |${topK("scored")}"""),
 
     // ANN ensemble fusion: the IVF(nprobe=4) and SRP-LSH(8 tables)
@@ -731,7 +731,7 @@ object SimilarityQueries {
             col("rank_0").as("ivf_rank"), col("rank_1").as("lsh_rank"),
             col("rrf_score"))
       },
-      s"""WITH ${ivfTopkCtes(4, "v_")},
+      sql"""WITH ${ivfTopkCtes(4, "v_")},
         |${lshScoredCtes("l_", 8)},
         |l_topk AS (
         |  ${topK("l_scored", keepScore = false)})
@@ -759,7 +759,7 @@ object SimilarityQueries {
           emb, emb.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", dim = 64, k = 10, planes = 4, tables = 16)
       },
-      s"""WITH ${lshScoredCtes("", 16)}
+      sql"""WITH ${lshScoredCtes("", 16)}
         |${topK("scored")}"""),
 
     // The high-recall serving endpoint: 8 tables + Hamming-1 multiprobe
@@ -777,7 +777,7 @@ object SimilarityQueries {
           "vec_id", "embedding", dim = 64, k = 10,
           planes = 4, tables = 8, probes = 4)
       },
-      s"""WITH ${lshScoredCtes("", 8, multiprobe = true)}
+      sql"""WITH ${lshScoredCtes("", 8, multiprobe = true)}
         |${topK("scored")}"""),
 
     // One Lloyd update step from the frozen quantizer — the TRAINING
@@ -819,7 +819,7 @@ object SimilarityQueries {
       (s, dir) => graft.operators.SemDedup.dedup(
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |cents AS (${IvfCentroids.duckdbValues}),
         |asgn AS ${cellRank("vec_id, cell", "= 1")},
         |${survivorSql("")}"""),
@@ -836,7 +836,7 @@ object SimilarityQueries {
       (s, dir) => graft.operators.SemDedup.dedupProbed(
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      s"""WITH $FlatProbedCtes,
+      sql"""WITH $FlatProbedCtes,
         |${survivorSql("crank = 1 AND ")}"""),
 
     // SemDedup.dedupIngest — the semantic tier's batch-vs-standing
@@ -859,7 +859,7 @@ object SimilarityQueries {
             batch, "vec_id", "embedding", threshold = 0.4)
           .select(col("vec_id"), col("cell").cast("long").as("cell"))
       },
-      s"""WITH $FlatProbedCtes,
+      sql"""WITH $FlatProbedCtes,
         |${ingestSurvivorSql("crank")}"""),
 
     // The >FlatAssignCeiling tier of semantic dedup, hash-gated end to
@@ -879,7 +879,7 @@ object SimilarityQueries {
         Tables.embeddings(s, dir), "vec_id", "embedding", threshold = 0.4,
         centroids = HierCentroids)
         .select(col("vec_id"), col("cell").cast("long").as("cell")),
-      hierOracleSql),
+      hierOracleSql, coalesceByBytes = true),
 
     // The hierarchical tier's INGEST gate: SemDedup.dedupIngestHier on
     // the same frozen k = 4100 > FlatAssignCeiling quantizer as
@@ -945,7 +945,7 @@ object SimilarityQueries {
             Quant.dequantDot(col("q"), col("q"), col("scale"), col("scale"))
               .as("approx_sq_norm"))
       },
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      sql"""WITH ${embCte()},
         |m AS (SELECT vec_id, v, list_max([abs(x) for x in v]) AS mx FROM e),
         |s AS (SELECT vec_id, v,
         |             CASE WHEN mx > 0 THEN CAST(127 AS DOUBLE) / mx ELSE CAST(0 AS DOUBLE) END AS scale

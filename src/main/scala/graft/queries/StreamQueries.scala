@@ -65,6 +65,18 @@ object StreamQueries {
   // one definition of the sessionize gap (µs) — oracle interpolates it
   private val GapUs = 1800000000L
 
+  // the streaming sketch gates' input: each event's portable user hash
+  private val UserHashCte =
+    sql"""h AS (
+      |  SELECT event_type, ${hash60("CAST(user_id AS VARCHAR)")} AS h FROM events)"""
+
+  // the stream-stream join gates' match window: same user, the right
+  // event within the 30 minutes after the left one
+  private val JoinWindow =
+    sql"""  ON l.user_id = r.user_id
+      | AND epoch_us(r.ts) >= epoch_us(l.ts)
+      | AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000"""
+
   // q_stream_cms probe: the point-queried user id, with its d bucket
   // indices precomputed from the SAME portable hash the processor uses
   // (interpolated into the oracle's VALUES relation). Declared before
@@ -394,11 +406,11 @@ object StreamQueries {
     * ∪ surv1 and itself. `liveCorpusEdge`, when set, further restricts
     * the corpus edges round 2 dedups against (q_stream_ingest_remove:
     * an edge from a removed id died with it). */
-  private def ingestFoldCtes(liveCorpusEdge: String = ""): String = {
+  private def ingestFoldCtes(liveCorpusEdge: String = ""): Sql = {
     val live =
       if (liveCorpusEdge.isEmpty) ""
-      else s"\n      |                         AND $liveCorpusEdge"
-    s"""surv1 AS MATERIALIZED (
+      else s"\n                         AND $liveCorpusEdge"
+    sql"""surv1 AS MATERIALIZED (
       |  SELECT vec_id FROM e WHERE vec_id % 10 = 8
       |    AND vec_id NOT IN (SELECT id2 FROM edges
       |                       WHERE id1 % 10 = 8 AND id2 % 10 = 8 AND id1 < id2)
@@ -411,18 +423,18 @@ object StreamQueries {
       |    AND vec_id NOT IN (SELECT id2 FROM edges
       |                       WHERE id2 % 10 = 9$live
       |                         AND (id1 % 10 < 8
-      |                              OR id1 IN (SELECT vec_id FROM surv1))))""".stripMargin
+      |                              OR id1 IN (SELECT vec_id FROM surv1))))"""
   }
 
   /** The cell-assigned ingest gates' emitted rows: the admitted ids of
     * [[ingestFoldCtes]] with their rank-1 cell (`rank` names the probed
     * assignment's rank column), less any row `drop` removes. */
-  private def admittedSql(rank: String, drop: String = ""): String =
-    s"""SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
+  private def admittedSql(rank: String, drop: String = ""): Sql =
+    sql"""SELECT asgn.vec_id, CAST(asgn.cell AS BIGINT) AS cell
       |FROM asgn
       |WHERE $rank = 1$drop
       |  AND (vec_id IN (SELECT vec_id FROM surv1)
-      |       OR vec_id IN (SELECT vec_id FROM surv2))""".stripMargin
+      |       OR vec_id IN (SELECT vec_id FROM surv2))"""
 
   /** The event-replay gates' shared slice: the full events table as
     * [[Ev]] rows, collected once per sf dir (seven gates replay exactly
@@ -539,19 +551,7 @@ object StreamQueries {
               col("session_end_us"), col("n_events"))
         }
       },
-      s"""WITH flagged AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |                OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > $GapUs
-        |              THEN 1 ELSE 0 END AS boundary
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), sessions AS (
-        |  SELECT user_id, ts_us,
-        |         CAST(sum(boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-        |  FROM flagged
-        |)
+      sql"""WITH ${sessionCtes(GapUs)}
         |SELECT user_id, min(ts_us) AS session_start_us, max(ts_us) AS session_end_us,
         |       count(*) AS n_events
         |FROM sessions GROUP BY user_id, session_idx"""),
@@ -580,23 +580,12 @@ object StreamQueries {
               col("hll_estimate"))
         }
       },
-      s"""WITH h AS (
-        |  SELECT event_type,
-        |         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h // 18014398509481984 AS reg,
-        |         CAST(CASE WHEN h % 18014398509481984 = 0 THEN 55
-        |              ELSE 55 - length(bin(h % 18014398509481984)) END AS BIGINT) AS rho
-        |  FROM h),
+      sql"""WITH $UserHashCte,
+        |${hllRegisterCte("event_type")},
         |m AS (SELECT event_type, reg, max(rho) AS mx FROM r GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |         CAST(count(*) AS BIGINT) AS regs_hit,
-        |         CAST(sum(1::BIGINT << CAST(55 - mx AS INT)) + (64 - count(*)) * (1::BIGINT << 55) AS BIGINT) AS harmonic
-        |  FROM m GROUP BY 1)
+        |${hllHarmonicCte("event_type")}
         |SELECT event_type, regs_hit, harmonic,
-        |       CAST('${graft.operators.Hll.EstNumerator.toString}' AS DOUBLE) / CAST(harmonic AS DOUBLE) AS hll_estimate
+        |       ${hllEstimate("harmonic")}
         |FROM s"""),
 
     // Streaming count-min sketch — the frequency face of the streaming
@@ -624,10 +613,7 @@ object StreamQueries {
               col("max_c"), col("probe_est"))
         }
       },
-      s"""WITH h AS (
-        |  SELECT event_type,
-        |         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM events),
+      sql"""WITH $UserHashCte,
         |seeds AS (SELECT unnest(generate_series(0, ${graft.operators.Cms.D - 1})) AS seed),
         |x AS (SELECT event_type, seed, (h >> (seed * 11)) % ${graft.operators.Cms.W} AS bucket
         |      FROM h CROSS JOIN seeds),
@@ -679,9 +665,9 @@ object StreamQueries {
               col("event_type"), col("n_events"), col("total_value"))
         }
       },
-      """SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
+      sql"""SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
         |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |       ${decimalSum("value", 2)} AS total_value
         |FROM events GROUP BY 1, 2"""),
 
     // The watermark DROP rule itself, driver-gated (r12 verdict task 2):
@@ -736,7 +722,7 @@ object StreamQueries {
           .unionByName(s.createDataset(Seq(("__dropped", "all", droppedN, 0.0)))
             .toDF("hour", "event_type", "n_events", "total_value"))
       },
-      """WITH ev AS (SELECT user_id, ts, event_type, value, epoch_us(ts) AS ts_us
+      sql"""WITH ev AS (SELECT user_id, ts, event_type, value, epoch_us(ts) AS ts_us
         |            FROM events),
         |wm AS (SELECT (max(ts_us) // 1000 - 3600000) * 1000 AS wm_us
         |       FROM ev WHERE user_id % 7 <> 0),
@@ -748,7 +734,7 @@ object StreamQueries {
         |    AND (ts_us // 3600000000 + 1) * 3600000000 > wm.wm_us)
         |SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
         |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |       ${decimalSum("value", 2)} AS total_value
         |FROM kept GROUP BY 1, 2
         |UNION ALL
         |SELECT '__dropped' AS hour, 'all' AS event_type,
@@ -756,7 +742,7 @@ object StreamQueries {
         |       CAST(0 AS DOUBLE) AS total_value
         |FROM ev, wm
         |WHERE user_id % 7 = 0
-        |  AND (ts_us // 3600000000 + 1) * 3600000000 <= wm.wm_us"""),
+        |  AND (ts_us // 3600000000 + 1) * 3600000000 <= wm.wm_us""", coalesceByBytes = true),
 
     // Watermarked stream-stream inner join (the impression→click
     // attribution shape): events joined to same-user events within the
@@ -793,12 +779,10 @@ object StreamQueries {
             .select(col("user_id"), col("l_event_id"), col("r_event_id"))
         }
       },
-      """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0)
+      sql"""WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0)
         |SELECT l.user_id, l.event_id AS l_event_id, r.event_id AS r_event_id
         |FROM half l JOIN half r
-        |  ON l.user_id = r.user_id
-        | AND epoch_us(r.ts) >= epoch_us(l.ts)
-        | AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000"""),
+        |$JoinWindow""", coalesceByBytes = true),
 
     // Watermarked stream-stream LEFT OUTER join — the watermark-EXPIRY
     // emission rule, the last distinct watermark behavior without a
@@ -869,14 +853,12 @@ object StreamQueries {
               coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
         }
       },
-      """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
+      sql"""WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
         |clk AS (SELECT * FROM half WHERE event_id % 3 = 0)
         |SELECT l.user_id, l.event_id AS l_event_id,
         |       CAST(coalesce(r.event_id, -1) AS BIGINT) AS r_event_id
         |FROM half l LEFT JOIN clk r
-        |  ON l.user_id = r.user_id
-        | AND epoch_us(r.ts) >= epoch_us(l.ts)
-        | AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000"""),
+        |$JoinWindow""", coalesceByBytes = true),
 
     // Watermarked stream-stream FULL OUTER join — BOTH sides' expiry
     // emissions in one gate: unmatched left rows AND unmatched right
@@ -924,16 +906,14 @@ object StreamQueries {
               coalesce(col("r_event_id"), lit(-1L)).as("r_event_id"))
         }
       },
-      """WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
+      sql"""WITH half AS (SELECT user_id, ts, event_id FROM events WHERE user_id % 4 = 0),
         |l AS (SELECT * FROM half WHERE event_id % 2 = 0),
         |r AS (SELECT * FROM half WHERE event_id % 3 = 0)
         |SELECT coalesce(l.user_id, r.user_id) AS user_id,
         |       CAST(coalesce(l.event_id, -1) AS BIGINT) AS l_event_id,
         |       CAST(coalesce(r.event_id, -1) AS BIGINT) AS r_event_id
         |FROM l FULL JOIN r
-        |  ON l.user_id = r.user_id
-        | AND epoch_us(r.ts) >= epoch_us(l.ts)
-        | AND epoch_us(r.ts) <= epoch_us(l.ts) + 1800000000"""),
+        |$JoinWindow""", coalesceByBytes = true),
 
     // Streaming exact dedup (dropDuplicatesWithinWatermark): the KEPT
     // row per key is arrival-order-dependent, but the kept KEY SET is
@@ -956,7 +936,7 @@ object StreamQueries {
           s.table("graft_stream_dedup").select(col("user_id"), col("event_type"))
         }
       },
-      """SELECT DISTINCT user_id, event_type FROM events"""),
+      sql"SELECT DISTINCT user_id, event_type FROM events"),
 
     // Streaming Misra–Gries heavy hitters (transformWithState): the
     // candidate SET is arrival-order-dependent inside the don't-care
@@ -1014,7 +994,7 @@ object StreamQueries {
             (col("n_candidates") <= mgK).cast("long").as("bounded_state"),
             (coalesce(col("n_missed"), lit(0L)) === 0L).cast("long").as("guarantee_holds"))
       },
-      """WITH collapsed AS (
+      sql"""WITH collapsed AS (
         |  SELECT event_type,
         |         CASE WHEN user_id % 3 <> 0 THEN -7 ELSE user_id END AS item
         |  FROM events)
@@ -1022,7 +1002,7 @@ object StreamQueries {
         |       CAST(1 AS BIGINT) AS n_matches_exact,
         |       CAST(1 AS BIGINT) AS bounded_state,
         |       CAST(1 AS BIGINT) AS guarantee_holds
-        |FROM collapsed GROUP BY event_type"""),
+        |FROM collapsed GROUP BY event_type""", coalesceByBytes = true),
 
     // foreachBatch SCD1 MERGE loop: the events table becomes an
     // upsert/delete changelog (op = 'D' on every 10th event_id), sliced
@@ -1080,7 +1060,7 @@ object StreamQueries {
           .select(col("user_id"), col("event_id"), col("ts_us"),
             col("event_type"), col("value"))
       },
-      """WITH ch AS (
+      sql"""WITH ch AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value,
         |         CASE WHEN event_id % 10 = 0 THEN 'D' ELSE 'U' END AS op
         |  FROM events),
@@ -1119,10 +1099,10 @@ object StreamQueries {
           SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH $FlatProbedCtes,
+      sql"""WITH $FlatProbedCtes,
         |$CellEdgesCte,
         |${ingestFoldCtes()}
-        |${admittedSql("crank")}"""),
+        |${admittedSql("crank")}""", coalesceByBytes = true),
 
     // The HIERARCHICAL tier's streaming ingest (r15 verdict task 3):
     // the same two-micro-batch fold as q_stream_ingest, but the
@@ -1150,10 +1130,10 @@ object StreamQueries {
           SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH $HierProbedCtes,
+      sql"""WITH $HierProbedCtes,
         |$CellEdgesCte,
         |${ingestFoldCtes()}
-        |${admittedSql("rank")}"""),
+        |${admittedSql("rank")}""", coalesceByBytes = true),
 
     // The SRP tier's streaming ingest — the third quantizer tier's
     // fold (beyond the 65536-cell ceiling, where a billion-vector
@@ -1191,7 +1171,7 @@ object StreamQueries {
         s.createDataset(out.toIndexedSeq).toDF("vec_id")
           .withColumn("planes", lit(m.planes.toLong))
       },
-      s"""WITH ${embCte()},
+      sql"""WITH ${embCte()},
         |$StandingCountCte,
         |${srpPlanesCte("pl")},
         |${srpBucketCtes(srpCodesSized("pl"), 16)},
@@ -1206,7 +1186,7 @@ object StreamQueries {
         |SELECT vec_id, CAST((SELECT p FROM pl) AS BIGINT) AS planes
         |FROM e
         |WHERE vec_id IN (SELECT vec_id FROM surv1)
-        |   OR vec_id IN (SELECT vec_id FROM surv2)"""),
+        |   OR vec_id IN (SELECT vec_id FROM surv2)""", coalesceByBytes = true),
 
     // TAKEDOWN mid-stream (r16): between the two micro-batches, every
     // id ≡ 0 or 8 (mod 20) is REMOVED from the standing store — seed
@@ -1234,10 +1214,10 @@ object StreamQueries {
           })(SemDedupIngest.dedupIngestStream(_, "vec_id", "embedding",
             threshold = 0.4, cents, _))(survivorCells(s, _))
       },
-      s"""WITH $FlatProbedCtes,
+      sql"""WITH $FlatProbedCtes,
         |$CellEdgesCte,
         |${ingestFoldCtes("id1 % 20 <> 0 AND id1 % 20 <> 8")}
-        |${admittedSql("crank", "\n  AND asgn.vec_id % 20 <> 0 AND asgn.vec_id % 20 <> 8")}"""),
+        |${admittedSql("crank", "\n  AND asgn.vec_id % 20 <> 0 AND asgn.vec_id % 20 <> 8")}""", coalesceByBytes = true),
 
     // The IN-STREAM REBUILD RECOVERY, end to end as one hash gate
     // (r16 verdict task 3 — the 3am path the scaladocs document,
@@ -1331,9 +1311,9 @@ object StreamQueries {
           .unionByName(s.range(1).select(
             lit(-1L).as("vec_id"), lit(m2.k.toLong).as("cell")))
       },
-      s"""WITH $SizedQuantizerCtes,
+      sql"""WITH $SizedQuantizerCtes,
         |${ingestFoldCtes()}
         |${admittedSql("crank")}
-        |$SizedKSentinel""")
+        |$SizedKSentinel""", coalesceByBytes = true)
   )
 }

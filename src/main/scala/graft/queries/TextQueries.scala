@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.TextFns
 import graft.operators.Dedup
+import OracleSql.hash60
 
 /** Text-analysis surface over the `documents` table: tokenization,
   * quality scoring, language ID, fingerprinting, exact dedup. Everything
@@ -65,7 +66,7 @@ object TextQueries {
   // n_terms) — shared by q_bm25 and q_hybrid_rrf so the two gates
   // replay ONE definition of the ranking function.
   private val Bm25CtesSql =
-    s"""${OracleSql.ToksCte}, dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+    sql"""${OracleSql.ToksCte}, dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
       |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_dl FROM dl),
       |tf AS (
       |  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
@@ -88,10 +89,19 @@ object TextQueries {
       |  FROM scored GROUP BY doc_id)"""
 
   private def langCase(sEn: String, sDe: String, sEs: String, sFr: String) =
-    s"""CASE WHEN $sEn >= $sDe AND $sEn >= $sEs AND $sEn >= $sFr THEN 'en'
+    sql"""CASE WHEN $sEn >= $sDe AND $sEn >= $sEs AND $sEn >= $sFr THEN 'en'
        |     WHEN $sDe >= $sEs AND $sDe >= $sFr THEN 'de'
        |     WHEN $sEs >= $sFr THEN 'es'
-       |     ELSE 'fr' END""".stripMargin
+       |     ELSE 'fr' END"""
+
+  /** Each document's adjacent token pairs over `toks` as
+    * `bg(<keep>w1, w2)`. */
+  private def bigramCte(keep: String): Sql =
+    sql"""bg AS (
+       |  SELECT ${keep}b[1] AS w1, b[2] AS w2
+       |  FROM (SELECT ${keep}unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
+       |        FROM toks WHERE len(t) >= 2)
+       |)"""
 
   private def sqlHits(vocab: Seq[String]): String =
     s"len(list_filter(toks, t -> t IN (${vocab.map(w => s"'$w'").mkString(",")})))"
@@ -113,7 +123,7 @@ object TextQueries {
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
         .groupBy(col("token"))
         .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("n_docs")),
-      s"""SELECT token, count(*) AS cnt, count(DISTINCT doc_id) AS n_docs
+      sql"""SELECT token, count(*) AS cnt, count(DISTINCT doc_id) AS n_docs
         |FROM (SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS token
         |      FROM documents)
         |GROUP BY token"""),
@@ -123,7 +133,7 @@ object TextQueries {
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"),
           size(TextFns.tokens(col("text"))).cast("long").as("n_tokens")),
-      s"""SELECT doc_id,
+      sql"""SELECT doc_id,
         |       CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_tokens
         |FROM documents"""),
 
@@ -139,7 +149,7 @@ object TextQueries {
         .select(col("event_id"),
           size(col("_t")).cast("long").as("n_bpe_tokens"),
           array_join(col("_t"), "|").as("bpe_tokens")),
-      s"""SELECT event_id,
+      sql"""SELECT event_id,
          |       CAST(len(regexp_extract_all(props, '${TextFns.BpePattern}')) AS BIGINT) AS n_bpe_tokens,
          |       array_to_string(regexp_extract_all(props, '${TextFns.BpePattern}'), '|') AS bpe_tokens
          |FROM events"""),
@@ -165,7 +175,7 @@ object TextQueries {
             (TextFns.vocabHits(toks, TextFns.EnStop).cast("double") /
               size(toks)).as("stopword_ratio"))
       },
-      s"""SELECT doc_id,
+      sql"""SELECT doc_id,
          |       CAST(length(text) AS BIGINT) AS n_chars_m,
          |       CAST(len(toks) AS BIGINT) AS n_tokens,
          |       CAST(length(regexp_replace(text, '\\s', '', 'g')) AS BIGINT) AS n_nonspace,
@@ -186,13 +196,13 @@ object TextQueries {
     "q_quality_classifier" -> QueryDef(
       (s, dir) => graft.operators.TextPipeline.qualityClassifier(
         Tables.documents(s, dir)),
-      s"""WITH toks AS (
+      sql"""WITH toks AS (
          |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS token
          |  FROM documents),
          |w AS (SELECT $QwListSql AS wl),
          |scored AS (
          |  SELECT doc_id,
-         |         CAST(sum(wl[(CAST(concat('0x', substr(md5(token), 1, 15)) AS BIGINT) % ${graft.functions.QualityWeights.D}) + 1]) AS BIGINT) AS score_fp,
+         |         CAST(sum(wl[(${hash60("token")} % ${graft.functions.QualityWeights.D}) + 1]) AS BIGINT) AS score_fp,
          |         CAST(count(*) AS BIGINT) AS n_tokens
          |  FROM toks CROSS JOIN w GROUP BY doc_id),
          |ids AS (SELECT DISTINCT doc_id FROM documents)
@@ -228,7 +238,7 @@ object TextQueries {
               .otherwise("fr").as("pred_lang"),
             en.cast("long").as("en_hits"))
       },
-      s"""SELECT doc_id,
+      sql"""SELECT doc_id,
          |       ${langCase(sqlHits(TextFns.EnStop), sqlHits(TextFns.DeStop),
                             sqlHits(TextFns.EsStop), sqlHits(TextFns.FrStop))} AS pred_lang,
          |       CAST(${sqlHits(TextFns.EnStop)} AS BIGINT) AS en_hits
@@ -265,7 +275,7 @@ object TextQueries {
           .select(col("lang"), col("pred_lang"), col("n"), col("label_total"),
             (col("n").cast("double") / col("label_total").cast("double")).as("share"))
       },
-      s"""WITH pred AS (
+      sql"""WITH pred AS (
          |  SELECT lang,
          |         ${langCase(sqlHits(TextFns.EnStop), sqlHits(TextFns.DeStop),
                               sqlHits(TextFns.EsStop), sqlHits(TextFns.FrStop))} AS pred_lang
@@ -306,11 +316,8 @@ object TextQueries {
           .select(col("w1"), col("w2"), col("cnt"),
             (col("cnt").cast("double") / col("w1_total")).as("p_cond"))
       },
-      s"""WITH ${OracleSql.ToksCte}, bg AS (
-        |  SELECT b[1] AS w1, b[2] AS w2
-        |  FROM (SELECT unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
-        |        FROM toks WHERE len(t) >= 2)
-        |), pair AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
+      sql"""WITH ${OracleSql.ToksCte}, ${bigramCte("")},
+        |pair AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
         |marg AS (SELECT w1, CAST(sum(cnt) AS BIGINT) AS w1_total FROM pair GROUP BY 1)
         |SELECT pair.w1, w2, cnt, CAST(cnt AS DOUBLE) / w1_total AS p_cond
         |FROM pair JOIN marg ON pair.w1 = marg.w1"""),
@@ -353,14 +360,10 @@ object TextQueries {
             ((col("n_xy") * col("n_total")).cast("double") /
               (col("n_x") * col("n_y")).cast("double")).as("lift"))
       },
-      s"""WITH ${OracleSql.ToksCte}, uni AS (SELECT unnest(t) AS w FROM toks),
+      sql"""WITH ${OracleSql.ToksCte}, uni AS (SELECT unnest(t) AS w FROM toks),
         |ucnt AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM uni GROUP BY w),
         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM uni),
-        |bg AS (
-        |  SELECT b[1] AS w1, b[2] AS w2
-        |  FROM (SELECT unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
-        |        FROM toks WHERE len(t) >= 2)
-        |), pair AS (
+        |${bigramCte("")}, pair AS (
         |  SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_xy FROM bg GROUP BY 1, 2
         |  HAVING count(*) >= 5)
         |SELECT w1, w2, n_xy, u1.n AS n_x, u2.n AS n_y,
@@ -405,11 +408,8 @@ object TextQueries {
             (col("pair_mass").cast("double") / col("prefix_mass").cast("double"))
               .as("lm_score"))
       },
-      s"""WITH ${OracleSql.ToksCte}, bg AS (
-        |  SELECT doc_id, b[1] AS w1, b[2] AS w2
-        |  FROM (SELECT doc_id, unnest([[t[i], t[i+1]] for i in generate_series(1, len(t) - 1)]) AS b
-        |        FROM toks WHERE len(t) >= 2)
-        |), pair AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
+      sql"""WITH ${OracleSql.ToksCte}, ${bigramCte("doc_id, ")},
+        |pair AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
         |marg AS (SELECT w1, CAST(sum(cnt) AS BIGINT) AS w1_total FROM pair GROUP BY 1)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
         |       CAST(sum(cnt) AS BIGINT) AS pair_mass,
@@ -443,7 +443,7 @@ object TextQueries {
           .filter(col("df") <= lit(0.9) * col("_n"))
           .drop("_n")
       },
-      s"""SELECT token AS term, count(*) AS df,
+      sql"""SELECT token AS term, count(*) AS df,
         |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
         |FROM (SELECT DISTINCT doc_id, unnest(${OracleSql.tokens("text")}) AS token
         |      FROM documents)
@@ -453,12 +453,12 @@ object TextQueries {
     "q_fingerprint" -> QueryDef(
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"), md5(col("text")).as("fingerprint")),
-      """SELECT doc_id, md5(text) AS fingerprint FROM documents"""),
+      sql"SELECT doc_id, md5(text) AS fingerprint FROM documents"),
 
     // Exact dedup: representative (min id) + multiplicity per text group.
     "q_dedup_exact" -> QueryDef(
       (s, dir) => Dedup.exact(Tables.documents(s, dir), "doc_id", Seq("text")),
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_copies
+      sql"""SELECT min(doc_id) AS doc_id, count(*) AS n_copies
         |FROM documents GROUP BY text"""),
 
     // TF-IDF term weighting: tf = per-doc term frequency, df = document
@@ -499,7 +499,7 @@ object TextQueries {
               (((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
                 (col("df").cast("double") + lit(0.5)))).as("tfidf"))
       },
-      s"""WITH tok AS (
+      sql"""WITH tok AS (
         |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS term
         |  FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -508,7 +508,7 @@ object TextQueries {
         |SELECT doc_id, term, tf, df,
         |       CAST(tf AS DOUBLE) *
         |         ((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) AS tfidf
-        |FROM tfdf CROSS JOIN n"""),
+        |FROM tfdf CROSS JOIN n""", coalesceByBytes = true),
 
     // BM25 keyword retrieval, top-20: the full ranking function in
     // bit-portable form. Exact-integer tf/df/dl/N; the idf is the
@@ -524,7 +524,7 @@ object TextQueries {
       (s, dir) => bm25DocScores(s, dir)
         .orderBy(col("bm25").desc, col("doc_id").asc)
         .limit(20),
-      s"""WITH $Bm25CtesSql
+      sql"""WITH $Bm25CtesSql
         |SELECT doc_id, bm25, n_terms FROM bm25doc
         |ORDER BY bm25 DESC, doc_id
         |LIMIT 20"""),
@@ -565,7 +565,7 @@ object TextQueries {
           .select(col("doc_id"), col("rank_0").as("kw_rank"),
             col("rank_1").as("vec_rank"), col("rrf_score"))
       },
-      s"""WITH $Bm25CtesSql,
+      sql"""WITH $Bm25CtesSql,
         |kw AS (
         |  SELECT doc_id, kw_rank FROM (
         |    SELECT doc_id, CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS kw_rank
@@ -597,12 +597,12 @@ object TextQueries {
     "q_split_hash" -> QueryDef(
       (s, dir) => graft.operators.Splits.assign(
         Tables.documents(s, dir).select(col("doc_id")), "doc_id", salt = "graft-v1"),
-      """SELECT doc_id, bucket,
+      sql"""SELECT doc_id, bucket,
         |       CASE WHEN bucket < 80 THEN 'train'
         |            WHEN bucket < 90 THEN 'valid'
         |            ELSE 'test' END AS split
         |FROM (SELECT doc_id,
-        |             CAST(concat('0x', substr(md5('graft-v1:' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
+        |             ${hash60("'graft-v1:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
         |      FROM documents)"""),
 
     // Heavy hitters, sketch-prefiltered but EXACT: pass 1 is a single
@@ -628,14 +628,14 @@ object TextQueries {
           .filter(col("cnt") * 30 > col("n"))
           .select(col("token"), col("cnt"))
       },
-      s"""WITH tok AS (
+      sql"""WITH tok AS (
         |  SELECT unnest(${OracleSql.tokens("text")}) AS token
         |  FROM documents),
         |tot AS (SELECT count(*) AS n FROM tok)
         |SELECT token, CAST(count(*) AS BIGINT) AS cnt
         |FROM tok CROSS JOIN tot
         |GROUP BY token, n
-        |HAVING count(*) * 30 > n"""),
+        |HAVING count(*) * 30 > n""", coalesceByBytes = true),
 
     // Grouped heavy hitters: the Misra–Gries sketch composes per group
     // — one MG aggregate PER LANGUAGE (32 counters per group per task,
@@ -659,7 +659,7 @@ object TextQueries {
           .filter(col("cnt") * 30 > col("n"))
           .select(col("lang"), col("token"), col("cnt"))
       },
-      s"""WITH tok AS (
+      sql"""WITH tok AS (
         |  SELECT lang, unnest(${OracleSql.tokens("text")}) AS token
         |  FROM documents),
         |tot AS (SELECT lang, count(*) AS n FROM tok GROUP BY lang)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.decimalSum
 
 /** TPC-H wave 3 — the remaining classic planner patterns expressible on
   * the driver schema (no partsupp table, no l_commitdate/l_receiptdate/
@@ -39,14 +40,14 @@ object TpchDeepQueries {
     * regenerates partsupp as a pure-SQL CTE (id arithmetic only), so the
     * hash match proves BOTH the generator parity and the query. */
   private val PartsuppCte =
-    """ps AS (
+    sql"""ps AS (
       |  SELECT p.p_partkey AS ps_partkey,
       |         CAST((p.p_partkey + i.i * (sc.s // 4)) % sc.s AS BIGINT) AS ps_suppkey,
       |         CAST(1 + (p.p_partkey * 7 + i.i * 13) % 9999 AS BIGINT) AS ps_availqty,
       |         CAST(1 + (p.p_partkey * 11 + i.i * 17) % 1000 AS BIGINT) AS ps_supplycost
       |  FROM part p
       |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) i
-      |  CROSS JOIN (SELECT count(*) AS s FROM supplier) sc)""".stripMargin
+      |  CROSS JOIN (SELECT count(*) AS s FROM supplier) sc)"""
 
   private val partsuppDefs: Seq[(String, QueryDef)] = Seq(
 
@@ -80,7 +81,7 @@ object TpchDeepQueries {
           .select(col("s_acctbal"), col("s_name"), col("n_name"),
             col("p_partkey"), col("p_brand"), col("ps_supplycost"))
       },
-      s"""WITH $PartsuppCte
+      sql"""WITH $PartsuppCte
         |SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_brand, ps.ps_supplycost
         |FROM part p
         |JOIN ps ON ps.ps_partkey = p.p_partkey
@@ -115,7 +116,7 @@ object TpchDeepQueries {
           .filter(col("value") * 200 > col("t"))
           .select(col("ps_partkey"), col("value"))
       },
-      s"""WITH $PartsuppCte,
+      sql"""WITH $PartsuppCte,
         |v AS (
         |  SELECT ps.ps_partkey, CAST(sum(ps.ps_supplycost * ps.ps_availqty) AS BIGINT) AS value
         |  FROM ps JOIN supplier s ON s.s_suppkey = ps.ps_suppkey
@@ -165,8 +166,8 @@ object TpchDeepQueries {
           .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
           .agg(moneySum(col("volume"), 4).as("revenue"))
       },
-      """SELECT supp_nation, cust_nation, l_year,
-        |       CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+      sql"""SELECT supp_nation, cust_nation, l_year,
+        |       ${decimalSum("volume", 4)} AS revenue
         |FROM (
         |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |         CAST(year(l_shipdate) AS BIGINT) AS l_year,
@@ -224,9 +225,9 @@ object TpchDeepQueries {
               .otherwise(lit(0.0)), 4) / moneySum(col("volume"), 4))
             .as("mkt_share"))
       },
-      """SELECT o_year,
-        |       CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_5' THEN volume ELSE CAST(0 AS DOUBLE) END AS DECIMAL(18,4))) AS DOUBLE)
-        |       / CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS mkt_share
+      sql"""SELECT o_year,
+        |       ${decimalSum("CASE WHEN supp_nation = 'NATION_5' THEN volume ELSE CAST(0 AS DOUBLE) END", 4)}
+        |       / ${decimalSum("volume", 4)} AS mkt_share
         |FROM (
         |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
         |         l_extendedprice * (1.0 - l_discount) AS volume,
@@ -244,7 +245,7 @@ object TpchDeepQueries {
         |    AND o_orderdate <  TIMESTAMP '1998-01-01'
         |    AND p_type = 'PROMO'
         |) all_nations
-        |GROUP BY o_year"""),
+        |GROUP BY o_year""", coalesceByBytes = true),
 
     // Q13 (customer order distribution): how many customers placed k
     // orders. The priority filter lives in the LEFT JOIN CONDITION — in
@@ -263,7 +264,7 @@ object TpchDeepQueries {
           .groupBy(col("c_count"))
           .agg(count(lit(1)).as("custdist"))
       },
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+      sql"""SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         |FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer
@@ -291,9 +292,9 @@ object TpchDeepQueries {
             (moneySum(when(col("p_type") === "PROMO", disc).otherwise(lit(0.0)), 4) /
              moneySum(disc, 4))).as("promo_revenue"))
       },
-      """SELECT CAST(100 AS DOUBLE) * (
-        |       CAST(sum(CAST(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1.0 - l_discount) ELSE CAST(0 AS DOUBLE) END AS DECIMAL(18,4))) AS DOUBLE)
-        |     / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)) AS promo_revenue
+      sql"""SELECT CAST(100 AS DOUBLE) * (
+        |       ${decimalSum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1.0 - l_discount) ELSE CAST(0 AS DOUBLE) END", 4)}
+        |     / ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)}) AS promo_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
         |  AND l_shipdate <  TIMESTAMP '1996-10-01'"""),
@@ -321,9 +322,9 @@ object TpchDeepQueries {
           .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
           .orderBy(col("s_suppkey"))
       },
-      """WITH revenue AS (
+      sql"""WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS total_revenue
+        |         ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS total_revenue
         |  FROM lineitem
         |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |    AND l_shipdate <  TIMESTAMP '1996-04-01'
@@ -356,12 +357,12 @@ object TpchDeepQueries {
           .agg((moneySum(col("l_extendedprice"), 2) / lit(7.0)).as("avg_yearly"),
             count(lit(1)).as("n_small"))
       },
-      """WITH pq AS (
+      sql"""WITH pq AS (
         |  SELECT l_partkey AS agg_partkey,
-        |         CAST(0.2 AS DOUBLE) * (CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*)) AS qty_thr
+        |         CAST(0.2 AS DOUBLE) * (${decimalSum("l_quantity", 2)} / count(*)) AS qty_thr
         |  FROM lineitem GROUP BY l_partkey
         |)
-        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / CAST(7.0 AS DOUBLE) AS avg_yearly,
+        |SELECT ${decimalSum("l_extendedprice", 2)} / CAST(7.0 AS DOUBLE) AS avg_yearly,
         |       CAST(count(*) AS BIGINT) AS n_small
         |FROM lineitem
         |JOIN part ON p_partkey = l_partkey
@@ -390,7 +391,7 @@ object TpchDeepQueries {
             .as("revenue"),
             count(lit(1)).as("n_lines"))
       },
-      """SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         |       CAST(count(*) AS BIGINT) AS n_lines
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity >= 1  AND l_quantity <= 11)
@@ -439,7 +440,7 @@ object TpchDeepQueries {
           .orderBy(col("numwait").desc, col("s_name").asc)
           .limit(20)
       },
-      """WITH l1 AS (
+      sql"""WITH l1 AS (
         |  SELECT l_orderkey, l_suppkey,
         |         (l_shipdate > o_orderdate + INTERVAL 60 DAY) AS late
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -483,15 +484,15 @@ object TpchDeepQueries {
           .agg(count(lit(1)).as("numcust"),
             moneySum(col("c_acctbal"), 2).as("totacctbal"))
       },
-      """WITH avg_bal AS (
-        |  SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS ab
+      sql"""WITH avg_bal AS (
+        |  SELECT ${decimalSum("c_acctbal", 2)} / count(*) AS ab
         |  FROM customer
         |  WHERE c_acctbal > CAST(0 AS DOUBLE)
         |    AND c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
         |)
         |SELECT c_nationkey AS cntrycode,
         |       CAST(count(*) AS BIGINT) AS numcust,
-        |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |       ${decimalSum("c_acctbal", 2)} AS totacctbal
         |FROM customer, avg_bal
         |WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
         |  AND c_acctbal > ab
@@ -529,9 +530,9 @@ object TpchDeepQueries {
             year(col("o_orderdate")).cast("long").as("o_year"))
           .agg(moneySum(profit, 4).as("sum_profit"))
       },
-      s"""WITH $PartsuppCte
+      sql"""WITH $PartsuppCte
         |SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) - ps_supplycost * l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount) - ps_supplycost * l_quantity", 4)} AS sum_profit
         |FROM lineitem
         |JOIN ps       ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
         |JOIN part     ON l_partkey = p_partkey
@@ -564,7 +565,7 @@ object TpchDeepQueries {
           .groupBy(col("p_brand"), col("p_type"), col("p_size"))
           .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
       },
-      s"""WITH $PartsuppCte
+      sql"""WITH $PartsuppCte
         |SELECT p_brand, p_type, p_size,
         |       count(DISTINCT ps_suppkey) AS supplier_cnt
         |FROM ps JOIN part ON ps_partkey = p_partkey
@@ -605,10 +606,10 @@ object TpchDeepQueries {
           .join(qual, col("s_suppkey") === col("ps_suppkey"))
           .select(col("s_suppkey"), col("s_name"))
       },
-      s"""WITH $PartsuppCte,
+      sql"""WITH $PartsuppCte,
         |shipped AS (
         |  SELECT l_partkey, l_suppkey,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |         ${decimalSum("l_quantity", 2)} AS qty
         |  FROM lineitem
         |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |    AND l_shipdate <  TIMESTAMP '1997-01-01'

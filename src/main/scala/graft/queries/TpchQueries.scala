@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.{Q5AsiaJoin, decimalSum}
 
 /** Join-heavy TPC-H-shaped analytics (Q3 / Q18 forms adapted to the
   * driver's schema — no o_shippriority/p_* columns here). These exist to
@@ -41,8 +42,8 @@ object TpchQueries {
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
             col("o_orderpriority"))
       },
-      """SELECT l_orderkey,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT l_orderkey,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         |       strftime(o_orderdate, '%Y-%m-%d') AS order_date, o_orderpriority
         |FROM customer
         |JOIN orders   ON c_custkey = o_custkey
@@ -74,14 +75,14 @@ object TpchQueries {
             (moneySum(col("l_discount"), 2) / count(lit(1))).as("avg_disc"),
             count(lit(1)).as("count_order"))
       },
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_price,
-        |       CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_disc,
+      sql"""SELECT l_returnflag, l_linestatus,
+        |       ${decimalSum("l_quantity", 2)} AS sum_qty,
+        |       ${decimalSum("l_extendedprice", 2)} AS sum_base_price,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS sum_disc_price,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)", 6)} AS sum_charge,
+        |       ${decimalSum("l_quantity", 2)} / count(*) AS avg_qty,
+        |       ${decimalSum("l_extendedprice", 2)} / count(*) AS avg_price,
+        |       ${decimalSum("l_discount", 2)} / count(*) AS avg_disc,
         |       count(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2001-05-01'
@@ -108,9 +109,9 @@ object TpchQueries {
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
           .limit(100)
       },
-      """WITH big AS (
+      sql"""WITH big AS (
         |  SELECT l_orderkey,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+        |         ${decimalSum("l_quantity", 2)} AS total_qty
         |  FROM lineitem GROUP BY l_orderkey
         |  HAVING total_qty > 300
         |)
@@ -121,7 +122,7 @@ object TpchQueries {
         |JOIN big      ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 100"""),
+        |LIMIT 100""", coalesceByBytes = true),
 
     // TPC-H Q5 shape (local-supplier volume): revenue per nation for one
     // region and one order year, where the supplier and the customer are
@@ -156,15 +157,9 @@ object TpchQueries {
             .as("revenue"))
           .select(col("n_name"), col("revenue"))
       },
-      """SELECT n_name,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation   ON c_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
+      sql"""SELECT n_name,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue
+        |$Q5AsiaJoin
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate <  TIMESTAMP '1997-01-01'
         |GROUP BY n_name"""),
@@ -183,7 +178,7 @@ object TpchQueries {
           col("l_quantity") < 24)
         .agg(moneySum(col("l_extendedprice") * col("l_discount"), 4).as("revenue"),
           count(lit(1)).as("n_items")),
-      """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+      sql"""SELECT ${decimalSum("l_extendedprice * l_discount", 4)} AS revenue,
         |       CAST(count(*) AS BIGINT) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -204,7 +199,7 @@ object TpchQueries {
           col("o_orderkey") === col("l_orderkey"), "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count")),
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+      sql"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
@@ -227,7 +222,7 @@ object TpchQueries {
             .otherwise(0L)).as("high_line_count"),
           sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
             .otherwise(1L)).as("low_line_count")),
-      """SELECT l_returnflag,
+      sql"""SELECT l_returnflag,
         |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -258,8 +253,8 @@ object TpchQueries {
           .orderBy(col("revenue").desc, col("c_custkey").asc)
           .limit(20)
       },
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+      sql"""SELECT c_custkey, c_name, c_acctbal, n_name,
+        |       ${decimalSum("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue
         |FROM lineitem
         |JOIN orders   ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey

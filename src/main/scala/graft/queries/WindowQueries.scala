@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{QueryDef, Tables}
 import graft.functions.ColFns._
+import OracleSql.decimalSum
 
 /** Window functions, global sort/limit, rollup, distinct aggregation and
   * plain filter/project — the rest of the relational surface.
@@ -28,7 +29,7 @@ object WindowQueries {
             col("l_partkey"), col("l_quantity"),
             date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"))
       },
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_partkey, l_quantity,
+      sql"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_partkey, l_quantity,
         |       strftime(l_shipdate, '%Y-%m-%d') AS ship_date
         |FROM lineitem
         |WHERE l_quantity >= 45.0
@@ -42,7 +43,7 @@ object WindowQueries {
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(10)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+      sql"""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""),
 
     // Per-key top-k on the native whole-operator path (custom logical
@@ -56,7 +57,7 @@ object WindowQueries {
         Tables.orders(s, dir)
           .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
         Seq("o_custkey"), "o_totalprice", Seq("o_orderkey"), k = 3),
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+      sql"""SELECT o_custkey, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |         row_number() OVER (PARTITION BY o_custkey
         |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
@@ -78,7 +79,7 @@ object WindowQueries {
             date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
             col("o_totalprice"), col("order_seq"), col("running_spend"))
       },
-      """SELECT o_custkey, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+      sql"""SELECT o_custkey, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
         |       o_totalprice,
         |       CAST(row_number() OVER w AS BIGINT) AS order_seq,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
@@ -92,9 +93,9 @@ object WindowQueries {
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_quantity")).as("sum_qty"),
           moneySum(col("l_extendedprice"), 2).as("sum_price")),
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_lines,
+      sql"""SELECT l_returnflag, l_linestatus, count(*) AS n_lines,
         |       sum(l_quantity) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |       ${decimalSum("l_extendedprice", 2)} AS sum_price
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""),
 
     // Explicit GROUPING SETS (arbitrary combos, unlike rollup/cube's
@@ -109,8 +110,8 @@ object WindowQueries {
         .agg(count(lit(1)).as("n"),
           moneySum(col("o_totalprice"), 2).as("total"),
           grouping_id().cast("long").as("gid")),
-      """SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+      sql"""SELECT o_orderpriority, o_orderstatus, count(*) AS n,
+        |       ${decimalSum("o_totalprice", 2)} AS total,
         |       CAST(GROUPING(o_orderpriority, o_orderstatus) AS BIGINT) AS gid
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
@@ -127,7 +128,7 @@ object WindowQueries {
             col("l_returnflag"), col("l_quantity"))
           .withColumn("quartile", ntile(4).over(w).cast("long"))
       },
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
+      sql"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
         |       l_returnflag, l_quantity,
         |       CAST(ntile(4) OVER (PARTITION BY l_returnflag
         |         ORDER BY l_quantity, l_orderkey, l_linenumber) AS BIGINT) AS quartile
@@ -148,7 +149,7 @@ object WindowQueries {
           .withColumn("prnk", percent_rank().over(w))
           .withColumn("cdist", cume_dist().over(w))
       },
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
+      sql"""SELECT o_orderkey, o_orderpriority, o_totalprice,
         |       CAST(rank() OVER w AS BIGINT) AS rnk,
         |       CAST(dense_rank() OVER w AS BIGINT) AS drnk,
         |       percent_rank() OVER w AS prnk,
@@ -170,7 +171,7 @@ object WindowQueries {
         date_format(last_day(col("o_orderdate")), "yyyy-MM-dd").as("month_end"),
         datediff(col("o_orderdate").cast("date"), lit("1995-01-01").cast("date"))
           .cast("long").as("days_since_epoch0")),
-      """SELECT o_orderkey,
+      sql"""SELECT o_orderkey,
         |       CAST(year(o_orderdate) AS BIGINT) AS yr,
         |       CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
         |       CAST(month(o_orderdate) AS BIGINT) AS mon,
@@ -189,7 +190,7 @@ object WindowQueries {
         length(col("p_name")).cast("long").as("name_len"),
         regexp_replace(col("p_name"), "[aeiou]", "").as("consonants"),
         levenshtein(col("p_type"), lit("STANDARD")).cast("long").as("type_dist")),
-      """SELECT p_partkey, upper(p_brand) AS brand_u,
+      sql"""SELECT p_partkey, upper(p_brand) AS brand_u,
         |       substring(p_name, 1, 8) AS name_prefix,
         |       CAST(length(p_name) AS BIGINT) AS name_len,
         |       regexp_replace(p_name, '[aeiou]', '', 'g') AS consonants,
@@ -203,7 +204,7 @@ object WindowQueries {
         .groupBy(col("l_linestatus"))
         .pivot("l_returnflag", Seq("A", "N", "R"))
         .agg(sum(col("l_quantity"))),
-      """SELECT l_linestatus,
+      sql"""SELECT l_linestatus,
         |       sum(l_quantity) FILTER (WHERE l_returnflag = 'A') AS A,
         |       sum(l_quantity) FILTER (WHERE l_returnflag = 'N') AS N,
         |       sum(l_quantity) FILTER (WHERE l_returnflag = 'R') AS R
@@ -219,7 +220,7 @@ object WindowQueries {
           percentile(col("l_quantity"), lit(0.5)).as("p50"),
           percentile(col("l_quantity"), lit(0.9)).as("p90"),
           count(lit(1)).as("n")),
-      """SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS p50,
+      sql"""SELECT l_returnflag, quantile_cont(l_quantity, 0.5) AS p50,
         |       quantile_cont(l_quantity, 0.9) AS p90, count(*) AS n
         |FROM lineitem GROUP BY l_returnflag"""),
 
@@ -233,7 +234,7 @@ object WindowQueries {
         .groupBy(col("l_partkey"))
         .agg(array_join(sort_array(collect_list(
           concat_ws(":", col("month"), col("qty")))), ",").as("month_series")),
-      """SELECT l_partkey,
+      sql"""SELECT l_partkey,
         |       array_to_string(list_sort(list(month || ':' || CAST(qty AS VARCHAR))), ',') AS month_series
         |FROM (SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS month,
         |             CAST(sum(l_quantity) AS BIGINT) AS qty
@@ -250,7 +251,7 @@ object WindowQueries {
           "sum_qty" -> sum(col("l_quantity")),
           "min_qty" -> min(col("l_quantity")),
           "max_qty" -> max(col("l_quantity")))),
-      """SELECT l_returnflag, count(*) AS count_lines, sum(l_quantity) AS sum_qty,
+      sql"""SELECT l_returnflag, count(*) AS count_lines, sum(l_quantity) AS sum_qty,
         |       min(l_quantity) AS min_qty, max(l_quantity) AS max_qty
         |FROM lineitem GROUP BY l_returnflag"""),
 
@@ -259,7 +260,7 @@ object WindowQueries {
       (s, dir) => Tables.lineitem(s, dir)
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_lines"), sum(col("l_quantity")).as("sum_qty")),
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_lines, sum(l_quantity) AS sum_qty
+      sql"""SELECT l_returnflag, l_linestatus, count(*) AS n_lines, sum(l_quantity) AS sum_qty
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"""),
 
     // Distinct aggregation — the BUILT-IN multi-distinct surface, kept
@@ -275,7 +276,7 @@ object WindowQueries {
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_orderkey")).as("n_orders"),
           count(lit(1)).as("n_lines")),
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
+      sql"""SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
         |       count(DISTINCT l_orderkey) AS n_orders, count(*) AS n_lines
         |FROM lineitem GROUP BY l_returnflag"""),
 
@@ -298,7 +299,7 @@ object WindowQueries {
           last(col("o_totalprice")).over(wFull).as("last_price"),
           nth_value(col("o_totalprice"), 2).over(wFull).as("second_price"))
       },
-      """SELECT o_custkey, o_orderkey, o_totalprice,
+      sql"""SELECT o_custkey, o_orderkey, o_totalprice,
         |       lead(o_totalprice, 1) OVER w AS next_price,
         |       lag(o_totalprice, 1) OVER w AS prev_price,
         |       first_value(o_totalprice) OVER wf AS first_price,
@@ -321,7 +322,7 @@ object WindowQueries {
           Array(col("l_orderkey"), col("l_linenumber")),
           Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
           "measure", "value"),
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, measure, value
+      sql"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, measure, value
         |FROM (
         |  SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
         |  UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
@@ -346,7 +347,7 @@ object WindowQueries {
           .withColumn("sum_1h",
             sum(col("value").cast(DecimalType(18, 2))).over(w).cast("double"))
       },
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
+      sql"""SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
         |       CAST(count(*) OVER w AS BIGINT) AS n_1h,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
         |FROM events
@@ -367,7 +368,7 @@ object WindowQueries {
             try_divide(col("l_extendedprice"), div).as("ratio"),
             coalesce(try_divide(col("l_extendedprice"), div), lit(0.0)).as("ratio0"))
       },
-      """SELECT l_orderkey, l_linenumber,
+      sql"""SELECT l_orderkey, l_linenumber,
         |       l_extendedprice / NULLIF(CAST(l_linenumber - 3 AS DOUBLE), 0) AS ratio,
         |       coalesce(l_extendedprice / NULLIF(CAST(l_linenumber - 3 AS DOUBLE), 0), CAST(0 AS DOUBLE)) AS ratio0
         |FROM lineitem""")

@@ -1,13 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SqlInterpolator
 
 /** Pins the rendered DuckDB oracle text of every registered query. The
   * oracles are assembled from shared builders (`queries/OracleSql`), so
   * a builder that leaks a margin bar, leaves an interpolation
   * unrendered or drops a parenthesis breaks many oracles at once; these
   * checks read the text alone and need no Spark session. Each check also
-  * runs on one broken sample, so it cannot pass vacuously.
+  * runs on one broken sample, so it cannot pass vacuously. The last
+  * tests pin the `sql` interpolator's margin rule on small literals.
   */
 class OracleSqlSpec extends AnyFunSuite {
 
@@ -17,8 +19,9 @@ class OracleSqlSpec extends AnyFunSuite {
   private def flagged(bad: String => Boolean): Seq[String] =
     oracles.collect { case (name, sql) if bad(sql) => name }.toSeq.sorted
 
+  /** A line that starts with a margin bar; SQL `||` is concatenation. */
   private def leakedMargin(sql: String): Boolean =
-    sql.linesIterator.exists(_.trim.startsWith("|"))
+    sql.linesIterator.map(_.trim).exists(l => l.startsWith("|") && !l.startsWith("||"))
 
   private def unrendered(sql: String): Boolean =
     sql.contains("${") || "\\$[A-Za-z]".r.findFirstIn(sql).isDefined
@@ -51,6 +54,7 @@ class OracleSqlSpec extends AnyFunSuite {
 
   test("no oracle line keeps a leading margin bar") {
     assert(leakedMargin("SELECT 1\n   |FROM t"))
+    assert(!leakedMargin("SELECT 'a'\n   || 'b'"))
     assert(flagged(leakedMargin).isEmpty)
   }
 
@@ -64,5 +68,29 @@ class OracleSqlSpec extends AnyFunSuite {
     assert(balanced("SELECT (1) -- (\nFROM t WHERE s = ')' AND r = 'it''s ('"))
     assert(!balanced("SELECT ((1) FROM t") && !balanced("SELECT 1) + (2"))
     assert(flagged(s => !balanced(s)).isEmpty)
+  }
+
+  test("a builder line that starts with || renders unchanged through two nesting levels") {
+    val inner = sql"""SELECT 'a'
+      |  || 'b' AS ab"""
+    val middle = sql"""WITH x AS (
+      |  $inner)"""
+    val outer = sql"""$middle
+      |SELECT ab FROM x"""
+    assert(inner.text == "SELECT 'a'\n  || 'b' AS ab")
+    assert(middle.text == "WITH x AS (\n  SELECT 'a'\n  || 'b' AS ab)")
+    assert(outer.text == "WITH x AS (\n  SELECT 'a'\n  || 'b' AS ab)\nSELECT ab FROM x")
+  }
+
+  test("an argument's own lines are inserted verbatim, bars included") {
+    val arg = "a,\n  | b"
+    assert(sql"""SELECT $arg
+      |FROM t""".text == "SELECT a,\n  | b\nFROM t")
+  }
+
+  test("a later literal part is stripped only after its first newline") {
+    val x = "x"
+    assert(sql"""SELECT $x |y
+      |  |z""".text == "SELECT x |y\n  |z")
   }
 }
