@@ -24,6 +24,9 @@ object PlanCheck {
           s"--formatted expects <dir>/<suffix>, got '${fmtOut.get}'")
         val (dir, suffix) = (fmtOut.get.substring(0, sep), fmtOut.get.substring(sep + 1))
         val df = fn(spark, sfDir)
+        // execute first, as --plan-exec does, so the dump is the AQE
+        // final plan (isFinalPlan=true), not the initial one
+        df.queryExecution.executedPlan.execute().count()
         val out = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

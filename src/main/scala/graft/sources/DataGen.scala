@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.SeededDraw
 
 /** Seeded, distributed billing-data generator — capability parity with
   * the reference's driver-side generator
@@ -18,6 +19,12 @@ import org.apache.spark.sql.functions._
   *  - fully deterministic from (seed, rowId) via xxhash64 — no RNG
   *    state, so any partitioning/retry yields identical data, and
   *    generation scales linearly with `spark.range(n)` parallelism.
+  *
+  * Each row is one codegen'd [[graft.functions.SeededDraw]] call over
+  * `spark.range`'s id: `basket_items` draws a basket's items, and
+  * `billing_line` renders a whole dialect-A or dialect-B line from the
+  * same draws, with no intermediate array. No generator plan carries a
+  * lambda (PlanAuditSpec).
   */
 object DataGen {
 
@@ -28,37 +35,37 @@ object DataGen {
   private def draw(bound: Int, tag: String, seed: Long) =
     pmod(xxhash64(col("billId"), lit(tag), lit(seed)), lit(bound.toLong))
 
-  /** Baskets as (billId, date DATE, items ARRAY<STRING>). */
-  def baskets(spark: SparkSession, n: Long, maxItems: Int = 10,
-              vocab: Seq[String] = DefaultVocab, seed: Long = 42L): DataFrame = {
+  private def requireBasketArgs(maxItems: Int, vocab: Seq[String]): Unit =
     require(maxItems >= 1 && vocab.nonEmpty,
       s"need maxItems >= 1 (got $maxItems) and a non-empty vocab " +
         "(pmod by zero would NULL every basket)")
-    val vocabCol = array(vocab.map(lit): _*)
+
+  /** Baskets as (billId, date DATE, items ARRAY<STRING>). */
+  def baskets(spark: SparkSession, n: Long, maxItems: Int = 10,
+              vocab: Seq[String] = DefaultVocab, seed: Long = 42L): DataFrame = {
+    requireBasketArgs(maxItems, vocab)
     spark.range(n).select(col("id").as("billId"))
-      .withColumn("day", draw(365, "day", seed)) // 2015 is not a leap year
-      .withColumn("size", greatest(draw(maxItems, "size", seed), lit(1L)))
-      .withColumn("items", array_distinct(transform(
-        sequence(lit(1), col("size")),
-        i => element_at(vocabCol,
-          (pmod(xxhash64(col("billId"), i, lit(seed)), lit(vocab.size.toLong)) + 1).cast("int")))))
       .select(col("billId"),
-        date_add(lit(java.sql.Date.valueOf("2015-01-01")), col("day").cast("int")).as("date"),
-        col("items"))
+        // 2015 is not a leap year
+        date_add(lit(java.sql.Date.valueOf("2015-01-01")), draw(365, "day", seed).cast("int")).as("date"),
+        SeededDraw.basketItems(col("billId"), vocab, maxItems, seed).as("items"))
+  }
+
+  private def lines(spark: SparkSession, n: Long, maxItems: Int, vocab: Seq[String],
+                    seed: Long, priced: Boolean): Dataset[String] = {
+    import spark.implicits._
+    requireBasketArgs(maxItems, vocab)
+    spark.range(n)
+      .select(SeededDraw.billingLine(col("id"), vocab, maxItems, seed, priced).as("line"))
+      .as[String]
   }
 
   /** Reference-format dialect-A text lines (`2015-3-7,pane,latte`) —
     * non-padded dates, basket items comma-joined. Round-trips through
     * BillingReader.dialectA. */
   def dialectALines(spark: SparkSession, n: Long, maxItems: Int = 10,
-                    vocab: Seq[String] = DefaultVocab, seed: Long = 42L): Dataset[String] = {
-    import spark.implicits._
-    baskets(spark, n, maxItems, vocab, seed)
-      .select(concat_ws(",",
-        concat_ws("-", year(col("date")), month(col("date")), dayofmonth(col("date"))),
-        concat_ws(",", col("items"))).as("line"))
-      .as[String]
-  }
+                    vocab: Seq[String] = DefaultVocab, seed: Long = 42L): Dataset[String] =
+    lines(spark, n, maxItems, vocab, seed, priced = false)
 
   /** Seeded synthetic document corpus with CONTROLLED duplicate
     * structure, for dedup benchmarking at arbitrary scale (the
@@ -73,10 +80,12 @@ object DataGen {
     * deterministic from (template, position, seed); length 30..89
     * tokens is template-keyed, so copies agree on length.
     *
-    * Mechanics mirror [[baskets]]: pure column expressions over
-    * `spark.range(n)` — no RNG state, no driver loop, identical data
-    * under any partitioning/retry, generation cost linear in n across
-    * however many tasks `range` plans.
+    * Mechanics mirror [[baskets]]: each doc's kind and template are
+    * column expressions over `spark.range(n)`, and its token text is
+    * one codegen'd `doc_text` call ([[graft.functions.SeededDraw]]) —
+    * no RNG state, no driver loop, identical data under any
+    * partitioning/retry, generation cost linear in n across however
+    * many tasks `range` plans.
     *
     * @return (doc_id BIGINT, kind STRING in {unique,exact,near}, text)
     */
@@ -98,33 +107,15 @@ object DataGen {
       .withColumn("_tpl",
         when(col("kind") === "unique", col("doc_id") + lit(n))
           .otherwise(pmod(h("tpl", col("doc_id")), lit(pool))))
-      .withColumn("_len", pmod(h("len", col("_tpl")), lit(60L)) + 30L)
-      .withColumn("text", array_join(transform(
-        sequence(lit(1L), col("_len")),
-        i => concat(lit("w"),
-          // near-dups substitute ~1 in 20 positions with a doc-local token
-          when(col("kind") === "near" && pmod(h("mut", col("doc_id"), i), lit(20L)) === 0L,
-            pmod(h("sub", col("doc_id"), i), lit(vocabSize.toLong)))
-            .otherwise(pmod(h("tok", col("_tpl"), i), lit(vocabSize.toLong)))
-            .cast("string"))), " "))
-      .select(col("doc_id"), col("kind"), col("text"))
+      .select(col("doc_id"), col("kind"),
+        SeededDraw.docText(col("doc_id"), col("_tpl"), col("kind") === "near", vocabSize, seed)
+          .as("text"))
   }
 
   /** Dialect-B priced lines (`2015-1-3,15 pane,12 uova`) — the reference
     * never shipped a generator for this dialect (SURVEY §1.1 ⚠); costs
     * are deterministic 1..20 per (billing, item). */
   def dialectBLines(spark: SparkSession, n: Long, maxItems: Int = 10,
-                    vocab: Seq[String] = DefaultVocab, seed: Long = 42L): Dataset[String] = {
-    import spark.implicits._
-    baskets(spark, n, maxItems, vocab, seed)
-      .select(col("billId"), col("date"), col("items"))
-      .withColumn("priced", transform(col("items"),
-        it => concat(
-          (pmod(xxhash64(col("billId"), it, lit(seed)), lit(20L)) + 1).cast("string"),
-          lit(" "), it)))
-      .select(concat_ws(",",
-        concat_ws("-", year(col("date")), month(col("date")), dayofmonth(col("date"))),
-        concat_ws(",", col("priced"))).as("line"))
-      .as[String]
-  }
+                    vocab: Seq[String] = DefaultVocab, seed: Long = 42L): Dataset[String] =
+    lines(spark, n, maxItems, vocab, seed, priced = true)
 }

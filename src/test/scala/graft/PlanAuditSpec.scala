@@ -16,22 +16,32 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("l_orderkey"), "scan reads columns the query never uses")
   }
 
-  test("BillingReader: both dialects parse with no lambda and no interpreted fallback") {
-    // lambdas (transform/filter) evaluate interpreted, and any non-leaf
-    // CodegenFallback keeps its whole projection out of whole-stage
-    // codegen (CollapseCodegenStages)
+  /** Lambdas (transform/filter) evaluate interpreted, and any non-leaf
+    * CodegenFallback keeps its whole projection out of whole-stage
+    * codegen (CollapseCodegenStages). */
+  private def assertNoLambdaNoFallback(name: String, df: org.apache.spark.sql.Dataset[_]): Unit = {
     import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, LeafExpression}
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val plan = df.queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(!exprs.exists(_.isInstanceOf[LambdaFunction]), s"$name runs a lambda:\n$plan")
+    val fallbacks = exprs.filter(e => e.isInstanceOf[CodegenFallback] && !e.isInstanceOf[LeafExpression])
+    assert(fallbacks.isEmpty, s"$name leaves whole-stage codegen: $fallbacks\n$plan")
+  }
+
+  test("BillingReader: both dialects parse with no lambda and no interpreted fallback") {
     import graft.sources.BillingReader
     val path = fixtureFile("billing.txt", "2015-1-3,15 pane,12 uova\n")
-    for ((name, df) <- Seq("dialectA" -> BillingReader.dialectA(spark, path),
-                           "dialectB" -> BillingReader.dialectB(spark, path))) {
-      val plan = df.queryExecution.optimizedPlan
-      val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
-      assert(!exprs.exists(_.isInstanceOf[LambdaFunction]), s"$name parses through a lambda:\n$plan")
-      val fallbacks = exprs.filter(e => e.isInstanceOf[CodegenFallback] && !e.isInstanceOf[LeafExpression])
-      assert(fallbacks.isEmpty, s"$name parse leaves whole-stage codegen: $fallbacks\n$plan")
-    }
+    assertNoLambdaNoFallback("dialectA", BillingReader.dialectA(spark, path))
+    assertNoLambdaNoFallback("dialectB", BillingReader.dialectB(spark, path))
+  }
+
+  test("DataGen: all four generators draw with no lambda and no interpreted fallback") {
+    import graft.sources.DataGen
+    assertNoLambdaNoFallback("baskets", DataGen.baskets(spark, 100))
+    assertNoLambdaNoFallback("dialectALines", DataGen.dialectALines(spark, 100))
+    assertNoLambdaNoFallback("dialectBLines", DataGen.dialectBLines(spark, 100))
+    assertNoLambdaNoFallback("documents", DataGen.documents(spark, 100))
   }
 
   test("q_top5_month: native two-phase heap top-k, no sorts after the agg") {

@@ -9,8 +9,9 @@ the directory ends with. Before comparing, each plan is normalized for
 what differs between two runs of the same code: expression ids
 (`col#123L`), exchange `plan_id`s, RDD ids (`MapPartitionsRDD[87]`),
 source line numbers (`Graph.scala:324`), lambda class names and object
-hash codes (`Foo$$$Lambda$6255/0x…@676d182d`), and the digits in temp
-and scratch-dir paths. Lists every query whose normalized plan differs (with
+hash codes (`Foo$$$Lambda$6255/0x…@676d182d`), the digits in temp
+and scratch-dir paths, and the codegen-stage and query-stage ids that
+adaptive execution numbers in stage-completion order. Lists every query whose normalized plan differs (with
 its first differing line) or that only one side has, and exits 1 on any
 difference; prints the number of equal plans and exits 0 otherwise.
 """
@@ -25,6 +26,10 @@ NORMALIZE = [
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{6,8}\b"), "@N"),
+    # labels AQE hands out in stage-completion order: codegen stage ids
+    # and query-stage ids
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"(QueryStage\n(?:Output \[\d+\]: .*\n)?Arguments: )\d+"), r"\1N"),
 ]
 SCRATCH = re.compile(r"(?:/dev/shm|/tmp|/var/tmp)/[^\s,\]\)]*")
 
