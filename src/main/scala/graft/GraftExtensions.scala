@@ -21,7 +21,6 @@ import graft.functions.{CosineSimilarity, PairsGenerator, PortableHash60, Sketch
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.registrations.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => graft.plans.FuseDotProduct)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughTopKPerKey)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
@@ -101,7 +100,7 @@ object GraftExtensions {
       }))
 
   /** Register on an already-built session (idempotent): SQL functions
-    * via the function registry, the optimizer rules via
+    * via the function registry, the top-k filter-pushdown rule via
     * experimental.extraOptimizations, and the TopKPerKey planner
     * strategy via experimental.extraStrategies (the post-build
     * counterparts of injectOptimizerRule / injectPlannerStrategy).
@@ -120,12 +119,10 @@ object GraftExtensions {
     registrations.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
-    val rules = Seq(graft.plans.FuseDotProduct, graft.plans.PushFilterThroughTopKPerKey)
-    rules.foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
+    val rule = graft.plans.PushFilterThroughTopKPerKey
+    if (!spark.experimental.extraOptimizations.contains(rule))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ rule
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -8,21 +9,35 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd dot product over two float/double array columns —
-  * the fused form of `aggregate(zip_with(a, b, (x, y) => x*y), 0.0,
-  * (acc, v) => acc + v)`, which [[graft.plans.FuseDotProduct]] rewrites
-  * into this expression automatically.
+  * the fused form of `aggregate(zip_with(a, b, (x, y) => double(x) *
+  * double(y)), 0.0, (acc, v) => acc + v)` (Similarity.dotHof), which
+  * [[graft.operators.Similarity.dot]] calls directly. Every engine
+  * caller passes float arrays: embedding slices and Pq's literal
+  * sub-centroids.
   *
-  * Exact HOF semantics are preserved so the rewrite is invisible:
-  *  - ascending-index accumulation (bit-identical result);
+  * Exact HOF semantics (DotProductSpec pins them):
+  *  - each element widened to double before the multiply, ascending-
+  *    index accumulation (bit-identical result);
   *  - a NULL element anywhere → NULL (zip_with's null product poisons
   *    the HOF fold);
   *  - length mismatch → NULL (zip_with pads the short side with nulls).
+  * Any input other than ARRAY<FLOAT|DOUBLE> fails analysis.
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(FloatType | DoubleType, _) => false
+      case _ => true
+    } match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(other) => TypeCheckResult.TypeCheckFailure(
+        s"dot_product requires ARRAY<FLOAT> or ARRAY<DOUBLE> inputs, got ${other.catalogString}")
+    }
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType

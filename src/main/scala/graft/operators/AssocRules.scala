@@ -97,18 +97,27 @@ object AssocRules {
     * self-join, no distinct pass; the only shuffles are the two keyed
     * aggregations. Preferred path when baskets are already arrays. */
   def rulesFromBasketArrays(baskets: DataFrame, itemsCol: String): DataFrame = {
+    val (itemCnt, pairCnt, total) = basketCounts(baskets, itemsCol)
+    finishRules(pairCnt, itemCnt.toDF("antecedent", "antecedent_cnt"), total)
+  }
+
+  /** ESERCIZIO 3's three counts over array-shaped baskets: per-item
+    * counts `(item, item_cnt)`, per-pair counts `(x, y, pair_cnt)` and
+    * the one-row `total_baskets`. Batch or streaming input alike (the
+    * streaming Q3 maintains exactly these three tables). */
+  def basketCounts(baskets: DataFrame, itemsCol: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.PairsGenerator.pairs
     val arr = array_distinct(col(itemsCol))
+    val itemCnt = baskets.select(explode(arr).as("item"))
+      .groupBy(col("item")).agg(count(lit(1)).as("item_cnt"))
+    // PairsGenerator sorts and dedups internally — no pre-distinct
+    val pairCnt = baskets.select(pairs(col(itemsCol)).as(Seq("x", "y")))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("pair_cnt"))
     // total = baskets with ≥1 item, matching rules()'s countDistinct over
     // exploded item rows (an empty basket can never contain a pair, so it
     // must not inflate the support denominator)
-    val total = baskets
-      .agg(count(when(size(arr) >= 1, lit(1))).as("total_baskets"))
-    val itemCnt = baskets.select(explode(arr).as("antecedent"))
-      .groupBy(col("antecedent")).agg(count(lit(1)).as("antecedent_cnt"))
-    val pairCnt = baskets.select(pairs(arr).as(Seq("x", "y")))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("pair_cnt"))
-    finishRules(pairCnt, itemCnt, total)
+    val total = baskets.agg(count(when(size(arr) >= 1, lit(1))).as("total_baskets"))
+    (itemCnt, pairCnt, total)
   }
 
   /** Shared tail: directed-rule expansion + antecedent-count join +

@@ -1076,6 +1076,9 @@ object Dedup {
     // endpoint outside the node set is dropped, so such an endpoint
     // neither appears in the output nor joins its neighbors — the
     // connectedComponents contract (its in-agg _old filter)
+    // LAZY, with no isEmpty probe (the connectedComponents r19 rule):
+    // round 1's set-diff probe materializes `e`, and an empty edge set
+    // converges there with a zero difference
     def inNodes(c: String): DataFrame = nodes.select(col(idCol).as(c))
     var e = edges.select(
         least(col("id1"), col("id2")).as("u"), greatest(col("id1"), col("id2")).as("v"))
@@ -1083,9 +1086,9 @@ object Dedup {
       .distinct()
       .join(inNodes("u"), Seq("u"), "left_semi")
       .join(inNodes("v"), Seq("v"), "left_semi")
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     var round = 0
-    var converged = e.isEmpty
+    var converged = false
     while (!converged && round < maxRounds) {
       // large-star over both edge directions. No intermediate distinct
       // (r19): the small-star min-agg below is duplicate-INSENSITIVE

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (ARRAY<FLOAT>), expressed entirely in Catalyst higher-order functions
-  * (zip_with / aggregate) so the dot products stay inside codegen — no
-  * UDF, no collect.
+  * (ARRAY<FLOAT>), expressed entirely in Catalyst expressions — the
+  * dot products run in codegen'd native kernels (DotProduct,
+  * CosineSimilarity, SrpCode) — no UDF, no collect.
   *
   * Two paths:
   *  - brute-force: broadcast the (small) query set against the corpus,
@@ -19,17 +19,24 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Double-precision dot product of two array columns (sequential fold —
-    * deterministic, engine-independent evaluation order). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+  /** Double-precision dot product of two float/double array columns:
+    * the codegen'd [[graft.functions.DotProduct]] kernel (sequential
+    * fold — deterministic, engine-independent evaluation order). */
+  def dot(a: Column, b: Column): Column = graft.functions.DotProduct(a, b)
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Composable-HOF dot product — reference semantics; interpreted
+    * (no codegen), an intermediate array per row. Kept for the
+    * native==HOF equality pin, same pattern as cosineHof. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   /** Composable-HOF cosine — reference semantics; three vector walks +
     * an intermediate array per row. Kept for the native==HOF equality pin. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
+  def cosineHof(a: Column, b: Column): Column =
+    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
   /** Native fused-loop cosine (custom codegen'd Expression) — same fold
     * order, bit-identical results, no per-row allocation. */
@@ -110,7 +117,7 @@ object Similarity {
     array((0 until tables).map { t =>
       (0 until planes).map { p =>
         val plane = array(hp(t)(p).map(lit): _*)
-        when(dot(vec, plane) >= 0.0, lit(1L << p)).otherwise(lit(0L))
+        when(dotHof(vec, plane) >= 0.0, lit(1L << p)).otherwise(lit(0L))
       }.reduce((a, b) => a.bitwiseOR(b))
     }: _*)
   }

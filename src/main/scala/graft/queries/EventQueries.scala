@@ -326,7 +326,7 @@ object EventQueries {
       sql"""SELECT event_id, user_id, epoch_us(ts) AS ts_us,
         |       (epoch_us(ts) - lag(epoch_us(ts)) OVER w) // 1000000 AS prev_gap_secs,
         |       count(*) OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS n_prior_10,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING) AS DOUBLE) AS val_prior_10
+        |       ${decimalSum("value", 2, "(w ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING)")} AS val_prior_10
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)"""),
 

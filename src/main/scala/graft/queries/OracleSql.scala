@@ -1,9 +1,10 @@
 package graft.queries
 
-import graft.operators.{Hll, IvfCentroids, Similarity}
+import graft.operators.{Cms, Hll, IvfCentroids, Similarity}
 
 /** DuckDB replay rules that more than one oracle registry states: the
-  * portable hash, the money sum, the TPC-H Q5 join, the HLL registers
+  * portable hash, the money sum (plain and windowed), the split label,
+  * the CMS bucket, the TPC-H Q5 join, the HLL registers
   * and harmonic, gap sessionization, the tokenizer and 3-gram shingles,
   * the exact cosine, the frozen-IVF cell rank, the SRP codes and bucket
   * explode, the hierarchical and the runtime-sized quantizer rebuilds,
@@ -31,9 +32,19 @@ private[queries] object OracleSql {
     s"CAST(concat('0x', substr(md5($x), 1, 15)) AS BIGINT)"
 
   /** ColFns.moneySum's replay: the exact sum of money-valued `x` as
-    * DECIMAL(18, scale), back to DOUBLE. */
-  def decimalSum(x: String, scale: Int): String =
-    s"CAST(sum(CAST($x AS DECIMAL(18,$scale))) AS DOUBLE)"
+    * DECIMAL(18, scale), back to DOUBLE; `over` (a window name or a
+    * parenthesized frame) makes it the windowed sum. */
+  def decimalSum(x: String, scale: Int, over: String = ""): String = {
+    val w = if (over.isEmpty) "" else s" OVER $over"
+    s"CAST(sum(CAST($x AS DECIMAL(18,$scale)))$w AS DOUBLE)"
+  }
+
+  /** Splits.assign's default label of its `bucket` (0..99) column. */
+  val SplitCase: String =
+    "CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'valid' ELSE 'test' END AS split"
+
+  /** Cms.counters' bucket of the 60-bit hash `h` in row `seed`. */
+  val CmsBucket: String = s"(h >> (seed * 11)) % ${Cms.W}"
 
   /** TPC-H Q5's six-table join of local suppliers (supplier and
     * customer in one nation) in region ASIA. */

@@ -75,6 +75,23 @@ object PipelineQueries {
   /** Decontamination against the `doc_id % mod = 0` reference slice:
     * each other document's shared 3-grams and the reference documents
     * they hit (column `refCol`). */
+  /** Redact.scrub's first two passes over `raw(<keep>, r)`: emails
+    * tokenized into r1, then IPv4s into r2, as `s2(<keep>, r, r1, r2)`;
+    * [[Scrubbed]] is the last pass, phones. */
+  private def redactCtes(keep: String): Sql =
+    sql"""s1 AS (SELECT $keep, r,
+      |              regexp_replace(r, '${Redact.EmailPattern}', '${Redact.EmailToken}', 'g') AS r1
+      |       FROM raw),
+      |s2 AS (SELECT *, regexp_replace(r1, '${Redact.Ipv4Pattern}', '${Redact.Ipv4Token}', 'g') AS r2 FROM s1)"""
+
+  private val Scrubbed = s"regexp_replace(r2, '${Redact.PhonePattern}', '${Redact.PhoneToken}', 'g')"
+
+  /** Redact.counts' replay over [[redactCtes]]: emails, IPv4s and
+    * phones, each counted in the text its pass rewrites. */
+  private val RedactCounts: Seq[String] =
+    Seq("r" -> Redact.EmailPattern, "r1" -> Redact.Ipv4Pattern, "r2" -> Redact.PhonePattern)
+      .map { case (c, p) => s"len(regexp_extract_all($c, '$p'))" }
+
   private def decontamSql(mod: Int, refCol: String): Sql =
     sql"""WITH $Shingle3Ctes
       |SELECT a.doc_id,
@@ -417,17 +434,12 @@ object PipelineQueries {
         |         ' ip 10.' || CAST(c_custkey % 256 AS VARCHAR) || '.' ||
         |         CAST(c_custkey % 100 AS VARCHAR) || '.' || CAST(c_custkey % 50 AS VARCHAR) AS r
         |  FROM customer),
-        |s1 AS (SELECT c_custkey, r,
-        |              regexp_replace(r, '${Redact.EmailPattern}', '${Redact.EmailToken}', 'g') AS r1
-        |       FROM raw),
-        |s2 AS (SELECT c_custkey, r, r1,
-        |              regexp_replace(r1, '${Redact.Ipv4Pattern}', '${Redact.Ipv4Token}', 'g') AS r2
-        |       FROM s1)
+        |${redactCtes("c_custkey")}
         |SELECT c_custkey,
-        |       regexp_replace(r2, '${Redact.PhonePattern}', '${Redact.PhoneToken}', 'g') AS scrubbed,
-        |       CAST(len(regexp_extract_all(r, '${Redact.EmailPattern}')) AS BIGINT) AS n_emails,
-        |       CAST(len(regexp_extract_all(r1, '${Redact.Ipv4Pattern}')) AS BIGINT) AS n_ips,
-        |       CAST(len(regexp_extract_all(r2, '${Redact.PhonePattern}')) AS BIGINT) AS n_phones
+        |       $Scrubbed AS scrubbed,
+        |       CAST(${RedactCounts(0)} AS BIGINT) AS n_emails,
+        |       CAST(${RedactCounts(1)} AS BIGINT) AS n_ips,
+        |       CAST(${RedactCounts(2)} AS BIGINT) AS n_phones
         |FROM s2"""),
 
     // Cross-corpus overlap against a reference TOO BIG to broadcast:
@@ -487,9 +499,7 @@ object PipelineQueries {
         |clusters AS (
         |  ${clusterIds("doc_id")})
         |SELECT doc_id, cluster_id, bucket,
-        |       CASE WHEN bucket < 80 THEN 'train'
-        |            WHEN bucket < 90 THEN 'valid'
-        |            ELSE 'test' END AS split
+        |       $SplitCase
         |FROM (SELECT doc_id, cluster_id,
         |             ${hash60("'graft-v1:' || CAST(cluster_id AS VARCHAR)")} % 100 AS bucket
         |      FROM clusters)"""),
@@ -680,15 +690,10 @@ object PipelineQueries {
         |  SELECT doc_id, source, lang,
         |         text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com 10.0.0.1 call 555-0042' AS r
         |  FROM documents),
-        |s1 AS (SELECT doc_id, source, lang, r,
-        |              regexp_replace(r, '${Redact.EmailPattern}', '${Redact.EmailToken}', 'g') AS r1
-        |       FROM raw),
-        |s2 AS (SELECT *, regexp_replace(r1, '${Redact.Ipv4Pattern}', '${Redact.Ipv4Token}', 'g') AS r2 FROM s1),
+        |${redactCtes("doc_id, source, lang")},
         |s3 AS (SELECT doc_id, source,
-        |              regexp_replace(r2, '${Redact.PhonePattern}', '${Redact.PhoneToken}', 'g') AS clean,
-        |              CAST(len(regexp_extract_all(r, '${Redact.EmailPattern}'))
-        |                 + len(regexp_extract_all(r1, '${Redact.Ipv4Pattern}'))
-        |                 + len(regexp_extract_all(r2, '${Redact.PhonePattern}')) AS BIGINT) AS n_redactions
+        |              $Scrubbed AS clean,
+        |              CAST(${RedactCounts.mkString(" + ")} AS BIGINT) AS n_redactions
         |       FROM s2
         |       WHERE lang IN ('en', 'de')),
         |tk AS (SELECT doc_id, source, n_redactions,

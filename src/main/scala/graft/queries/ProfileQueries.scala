@@ -139,12 +139,12 @@ object ProfileQueries {
         |hv AS (
         |  SELECT ${hash60("CAST(l_partkey AS VARCHAR)")} AS h
         |  FROM lineitem),
-        |hx AS (SELECT seed, (h >> (seed * 11)) % ${Cms.W} AS bucket FROM hv CROSS JOIN seeds),
+        |hx AS (SELECT seed, $CmsBucket AS bucket FROM hv CROSS JOIN seeds),
         |counters AS (SELECT seed, bucket, CAST(count(*) AS BIGINT) AS c FROM hx GROUP BY 1, 2),
         |items AS (SELECT DISTINCT l_partkey,
         |          ${hash60("CAST(l_partkey AS VARCHAR)")} AS h
         |          FROM lineitem),
-        |ib AS (SELECT l_partkey, seed, (h >> (seed * 11)) % ${Cms.W} AS bucket
+        |ib AS (SELECT l_partkey, seed, $CmsBucket AS bucket
         |       FROM items CROSS JOIN seeds),
         |est AS (
         |  SELECT l_partkey, CAST(min(COALESCE(c, 0)) AS BIGINT) AS cms_estimate

@@ -615,7 +615,7 @@ object StreamQueries {
       },
       sql"""WITH $UserHashCte,
         |seeds AS (SELECT unnest(generate_series(0, ${graft.operators.Cms.D - 1})) AS seed),
-        |x AS (SELECT event_type, seed, (h >> (seed * 11)) % ${graft.operators.Cms.W} AS bucket
+        |x AS (SELECT event_type, seed, $CmsBucket AS bucket
         |      FROM h CROSS JOIN seeds),
         |counters AS (SELECT event_type, seed, bucket, CAST(count(*) AS BIGINT) AS c
         |             FROM x GROUP BY 1, 2, 3),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.TextFns
 import graft.operators.Dedup
-import OracleSql.hash60
+import OracleSql.{SplitCase, hash60}
 
 /** Text-analysis surface over the `documents` table: tokenization,
   * quality scoring, language ID, fingerprinting, exact dedup. Everything
@@ -598,9 +598,7 @@ object TextQueries {
       (s, dir) => graft.operators.Splits.assign(
         Tables.documents(s, dir).select(col("doc_id")), "doc_id", salt = "graft-v1"),
       sql"""SELECT doc_id, bucket,
-        |       CASE WHEN bucket < 80 THEN 'train'
-        |            WHEN bucket < 90 THEN 'valid'
-        |            ELSE 'test' END AS split
+        |       $SplitCase
         |FROM (SELECT doc_id,
         |             ${hash60("'graft-v1:' || CAST(doc_id AS VARCHAR)")} % 100 AS bucket
         |      FROM documents)"""),

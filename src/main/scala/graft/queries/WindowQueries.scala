@@ -82,7 +82,7 @@ object WindowQueries {
       sql"""SELECT o_custkey, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
         |       o_totalprice,
         |       CAST(row_number() OVER w AS BIGINT) AS order_seq,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
+        |       ${decimalSum("o_totalprice", 2, "(w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")} AS running_spend
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)"""),
 
@@ -349,7 +349,7 @@ object WindowQueries {
       },
       sql"""SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
         |       CAST(count(*) OVER w AS BIGINT) AS n_1h,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
+        |       ${decimalSum("value", 2, "w")} AS sum_1h
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)"""),

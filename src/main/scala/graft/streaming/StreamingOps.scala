@@ -73,19 +73,8 @@ object StreamingOps {
     * two vocabulary-bounded count tables. Support/confidence are a
     * cheap batch projection over the maintained counts (the reference's
     * accumulator pre-pass becomes a third running count). */
-  def basketCounts(billings: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import graft.functions.PairsGenerator.pairs
-    val arr = array_distinct(col("items"))
-    val itemCnt = billings.select(explode(arr).as("item"))
-      .groupBy(col("item")).agg(count(lit(1)).as("item_cnt"))
-    // PairsGenerator sorts and dedups internally — no pre-distinct
-    val pairCnt = billings.select(pairs(col("items")).as(Seq("x", "y")))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("pair_cnt"))
-    // non-empty baskets only — same denominator rule as AssocRules
-    val total = billings.groupBy()
-      .agg(count(when(size(arr) >= 1, lit(1))).as("total_baskets"))
-    (itemCnt, pairCnt, total)
-  }
+  def basketCounts(billings: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    graft.operators.AssocRules.basketCounts(billings, "items")
 
   /** Watermarked stream-stream inner join: right events attributed to a
     * left event of the same key within `[leftTs, leftTs + within]` (the

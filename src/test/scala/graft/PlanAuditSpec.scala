@@ -325,6 +325,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Join"), s"PQ encode acquired a join:\n$p")
   }
 
+  test("PQ frames in a fresh session: dot_product kernel, no lambda, no interpreted fallback") {
+    // a new session has no extraOptimizations, so its plans are the ones
+    // every session gets, whatever ran before in the JVM; q_pq_encode is
+    // built first
+    val fresh = spark.newSession()
+    for (name <- Seq("q_pq_encode", "q_ann_pq")) {
+      val df = SparkEntry.queries(name)(fresh, sf001)
+      assert(df.queryExecution.optimizedPlan.toString.contains("dot_product"), name)
+      assertNoLambdaNoFallback(name, df)
+    }
+  }
+
   test("q_tpch_q21: stacked aggs, never a multi-distinct Expand over the fact join") {
     // the multi-countDistinct formulation plans an Expand (3× the
     // lineitem⋈orders rows through the shuffle); the stacked

@@ -8,7 +8,8 @@ explain("formatted") per query; the suffix is the one every file name in
 the directory ends with. Before comparing, each plan is normalized for
 what differs between two runs of the same code: expression ids
 (`col#123L`), exchange `plan_id`s, RDD ids (`MapPartitionsRDD[87]`),
-source line numbers (`Graph.scala:324`), lambda class names and object
+source line numbers (`Graph.scala:324`), the counter in lambda variable
+names (`lambda x_3034`), lambda class names and object
 hash codes (`Foo$$$Lambda$6255/0x…@676d182d`), the digits in temp
 and scratch-dir paths, and the codegen-stage and query-stage ids that
 adaptive execution numbers in stage-completion order. Lists every query whose normalized plan differs (with
@@ -21,6 +22,8 @@ import sys
 
 NORMALIZE = [
     (re.compile(r"#\d+L?\b"), "#N"),
+    # the functions API numbers lambda variables from a JVM-wide counter
+    (re.compile(r"(lambda \w+?)_\d+(?=#)"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
